@@ -746,7 +746,7 @@ def q_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver row checks both engines against their independent full oracles
     (round-5 VERDICT #1). Brute ties are deterministic by neighbor id; the
     IVF leg uses FIXED literal centroids so the whole plan is
-    SQL-mirrorable (k-means-lite training determinism is pinned in
+    SQL-mirrorable (learned-centroid training determinism is pinned in
     tests/test_similarity.py)."""
     from .operators.similarity import cosine_topk_brute, cosine_topk_ivf
 
@@ -1522,23 +1522,6 @@ def _ivf_centroids() -> list[tuple[int, list[float]]]:
     return [
         (j, [(((i + j) % 5) - 2) / 4.0 for i in range(64)]) for j in range(1, 5)
     ]
-
-
-def q_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN path (assign → probe → top-k) with FIXED literal centroids so
-    the whole plan is deterministic and SQL-mirrorable (round-2 VERDICT #5);
-    the k-means-lite *training* determinism is pinned in
-    tests/test_similarity.py."""
-    from .operators.similarity import cosine_topk_ivf
-
-    emb = _t(spark, sf_dir, "embeddings")
-    cents = spark.createDataFrame(
-        _ivf_centroids(), "centroid_id long, centroid array<double>"
-    )
-    out = cosine_topk_ivf(emb, emb.filter(F.col("vec_id") < 5), cents, k=3, n_probe=2)
-    return out.select(
-        "query_id", "neighbor_id", F.round("cosine", 4).alias("cosine"), "rank"
-    )
 
 
 def _ivf_topk_sql() -> str:

@@ -37,32 +37,3 @@ def cosine_expr(a: Column, b: Column) -> Column:
     """Cosine similarity; NULL when either vector has zero norm."""
     denom = norm_expr(a) * norm_expr(b)
     return F.when(denom > 0, dot_expr(a, b) / denom)
-
-
-def array_sum_expr(a: Column) -> Column:
-    """``hl.sum(arr)`` analog (``shared/variant_qc.py:275``)."""
-    return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double"))
-
-
-def _elementwise_agg(col: Column, dim: int, agg) -> Column:
-    # try_element_at: under Spark 4's default ANSI mode a plain
-    # element_at THROWS on any row whose array is shorter than dim,
-    # killing the whole aggregation for one ragged vector (round-6
-    # review); try_ yields NULL, which sum/avg skip
-    return F.array(
-        *[agg(F.try_element_at(col, F.lit(i + 1))).alias(f"c{i}") for i in range(dim)]
-    )
-
-
-def elementwise_agg_sum(col: Column, dim: int) -> Column:
-    """``hl.agg.array_sum`` analog: elementwise sum of array columns across
-    rows — expressed as an array of per-index sums so it stays a single
-    grouped aggregation."""
-    return _elementwise_agg(col, dim, F.sum)
-
-
-def elementwise_agg_mean(col: Column, dim: int) -> Column:
-    """Elementwise mean of array columns across rows (single grouped
-    aggregation) — the centroid-update kernel for IVF-style ANN
-    (:func:`~..operators.similarity.train_centroids_lite`)."""
-    return _elementwise_agg(col, dim, F.avg)

@@ -1,10 +1,9 @@
-"""S2 — blocklist removal: anti-join + substring rules.
+"""S2 — blocklist flags: anti-join + substring rules.
 
-Mirrors the reference's sample-removal stage exactly:
+Mirrors the reference's sample-removal stage:
 * anti-join against a removal list (``mt.anti_join_cols(rm_list)``,
   ``/root/reference/exome_qc/exome_qc.py:134-138``, J2) — here as a FLAG,
-  not a drop, to preserve the annotate-don't-drop invariant; an eager
-  ``remove_blocklisted`` variant gives the reference's dropping behavior;
+  not a drop, to preserve the annotate-don't-drop invariant;
 * substring removal (``--sample_removal_strings``,
   ``exome_qc/exome_qc.py:143-148``, P2) via a broadcast literal list,
   like ``hl.literal(list).contains(mt.s)`` (J3, ``:271,323``).
@@ -65,18 +64,3 @@ def flag_substring_matches(
         cond = cond | F.col(url_col).contains(s)
     return add_flags(df, flag_col, {"url_substring": cond})
 
-
-def remove_blocklisted(df: DataFrame, blocklist: DataFrame, url_col: str = "url") -> DataFrame:
-    """Eager anti-join variant (the reference's literal semantics, J2).
-
-    Matches url OR host, the same semantics as :func:`flag_blocklisted`
-    (round-6 review: the url-only anti-join let blocked-HOST docs survive
-    the eager removal path while the flag path caught them). Two chained
-    equi anti-joins — an OR-condition join would force a nested loop."""
-    bl = blocklist.select(F.col(blocklist.columns[0]).alias("__blocked")).distinct()
-    out = df.join(
-        F.broadcast(bl), df[url_col] == bl["__blocked"], "left_anti"
-    )
-    return out.withColumn("__host", host_expr(F.col(url_col))).join(
-        F.broadcast(bl), F.col("__host") == bl["__blocked"], "left_anti"
-    ).drop("__host")

@@ -39,7 +39,6 @@ from ..functions.hashing import (
     lsh_band_keys,
     minhash_signature,
     shingle_hashes,
-    simhash64,
     word_shingles,
 )
 
@@ -182,67 +181,6 @@ def _minhash_sig_batch(vals, a, b, chunk_hashes: int) -> list:
     return out
 
 
-def _minhash_sig_arrow_fn(num_perm: int, seed: int = 42):
-    """``mapInArrow`` signature stage: ``(k, hs: array<int|bigint>)``
-    batches → ``(k, sig: array<bigint>)`` batches with ZERO per-row Python
-    objects in either direction: the Arrow list buffers are consumed flat
-    (``flatten()``/``value_lengths()``, zero-copy) and the output list
-    array is assembled from one flat int64 values buffer + an arithmetic
-    offsets vector. Bit-identical to the pandas path (pinned in tests).
-
-    NOT the production default: measured equal-to-slightly-slower than the
-    column-form pandas UDF at 500k docs / 8 cores (BENCH.md round 5) —
-    the per-row boxing it eliminates (~7× cheaper output conversion in
-    isolation) is offset by shipping the key column through Python in both
-    directions, which the column UDF avoids. Retained, tested, because on
-    a real multi-executor cluster with wide keys the trade-off is
-    measurable again and the flat-buffer shape is the one to reach for."""
-    from ..functions.hashing import _mh_params
-
-    params = _mh_params(num_perm, seed)
-    a = np.array([p[0] for p in params], dtype=np.int64)[:, None]
-    b = np.array([p[1] for p in params], dtype=np.int64)[:, None]
-    chunk_hashes = max(1, 2_097_152 // num_perm)
-
-    def fn(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            key = batch.column(0)
-            la = batch.column(1)
-            n = len(la)
-            # value_lengths: null rows → null → 0; flatten(): skips null
-            # rows, includes empty extents — both orderings are row order,
-            # so the alignment guard below is exact
-            lens = la.value_lengths().to_numpy(zero_copy_only=False)
-            lens = np.nan_to_num(lens, nan=0).astype(np.int64)
-            flat = la.flatten().to_numpy(zero_copy_only=False)
-            if flat.size != int(lens.sum()):  # pragma: no cover — spec guard
-                raise AssertionError("list flatten misaligned with value_lengths")
-            nonempty = lens > 0
-            ne = np.nonzero(nonempty)[0]
-            if ne.size:
-                starts = np.zeros(ne.size + 1, dtype=np.int64)
-                np.cumsum(lens[ne], out=starts[1:])
-                sig_values = _minhash_sig_flat(
-                    flat.astype(np.int64, copy=False), starts, a, b, chunk_hashes
-                ).ravel()
-            else:
-                sig_values = np.empty(0, dtype=np.int64)
-            offs = np.zeros(n + 1, dtype=np.int64)
-            np.cumsum(np.where(nonempty, num_perm, 0), out=offs[1:])
-            sig_arr = pa.ListArray.from_arrays(
-                pa.array(offs.astype(np.int32), type=pa.int32()),
-                pa.array(sig_values, type=pa.int64()),
-                mask=pa.array(~nonempty),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [key, sig_arr], [batch.schema.names[0], "sig"]
-            )
-
-    return fn
-
-
 def capped_bucket_pairs(
     grouped: DataFrame, ks_col: str = "ks", dedup: bool = True
 ) -> DataFrame:
@@ -332,12 +270,11 @@ def minhash_candidate_pairs(
         sk = hs.select("k", minhash_signature(F.col("hs"), num_perm, seed).alias("sig"))
     else:
         # column-form pandas UDF, deliberately: the key column stays
-        # JVM-side (only the hash arrays cross the Arrow boundary). The
-        # boxing-free mapInArrow variant (_minhash_sig_arrow_fn) measured
-        # equal-to-slightly-slower at 500k docs because it ships the key
-        # through Python both ways; an array<int> downcast of the hashes
-        # also LOST (the element-wise cast pass costs more than the bytes
-        # it saves). Three-way A/B in BENCH.md round 5.
+        # JVM-side (only the hash arrays cross the Arrow boundary). A
+        # mapInArrow variant measured equal-to-slightly-slower at 500k docs
+        # because it ships the key through Python both ways; an array<int>
+        # downcast of the hashes also LOST (the element-wise cast pass
+        # costs more than the bytes it saves). A/B in BENCH.md round 5.
         sk = base.select(
             F.col(key_col).alias("k"),
             _minhash_sig_udf(num_perm, seed)(
@@ -643,24 +580,17 @@ def with_simhash(
     df: DataFrame,
     text_col: str = "text",
     out_col: str = "simhash",
-    kernel: str = "np",
 ) -> DataFrame:
     """NULL/blank text → NULL sketch (not the all-zero-vote 0 sketch, which
     would co-block every empty doc into one degenerate quarter block);
     ``simhash_pairs`` drops NULL sketches before blocking.
 
-    ``kernel="np"`` (default, round-6): shingle hashes stay JVM-side
-    (``xxhash64`` over the distinct word shingles), then ONE Arrow
-    shipment of the int64 arrays feeds the flattened numpy bit-vote
-    kernel — the same treatment the MinHash signature kernel got in r5.
-    ``kernel="expr"`` is the pure-expression twin (interpreted HOF:
-    O(shingles·64) per row — measured 8× slower at 500k docs, kept for
-    plan-portability and as the equality pin)."""
+    Shingle hashes stay JVM-side (``xxhash64`` over the distinct word
+    shingles), then ONE Arrow shipment of the int64 arrays feeds the
+    flattened numpy bit-vote kernel :func:`_simhash_votes_batch`. The
+    pure-expression :func:`~..functions.hashing.simhash64` is the reference
+    it is pinned against (measured 8× slower at 500k docs)."""
     has_text = F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
-    if kernel == "expr":
-        return df.withColumn(out_col, F.when(has_text, simhash64(F.col(text_col))))
-    if kernel != "np":
-        raise ValueError(f"unknown simhash kernel {kernel!r}: np|expr")
 
     @F.pandas_udf("long")
     def _votes(it: Iterator[pd.Series]) -> Iterator[pd.Series]:

@@ -4,22 +4,20 @@ Analog of ``hl.impute_sex`` — a per-record classifier derived from
 aggregate signals, thresholded into flags
 (``/root/reference/shared/samples_qc.py:539-562``, K2/K3 in SURVEY.md).
 
-Two interchangeable scorers:
+Two scorers, for two different jobs:
 
 * :func:`with_langid_expr` — **expression-based** stopword-density argmax
   (JVM-side, codegen'd, zero Python; also exactly mirrorable in the
-  DuckDB oracle). The scale path: at 10^12 docs this adds one projection.
-* :func:`with_langid_udf` — **fastText-style** hashed char-trigram
-  multinomial Naive Bayes as a vectorized iterator pandas UDF
-  (Arrow-batched; model built once per executor process — the
-  ``input_hint`` mandates vectorized UDFs for model scoring). The model
-  is trained at import time from the embedded lexicons: deterministic,
-  no external files (public-knowledge rule).
+  DuckDB oracle). Used by the streaming chain and the registry queries.
+* :func:`_score_batch` — **fastText-style** hashed char-trigram
+  multinomial Naive Bayes, the pipeline's production scorer. It runs
+  inside the fused s9 UDF :func:`~.perplexity.score_text_udf` (one Arrow
+  shipment of ``text`` for language-ID and perplexity; model built once
+  per executor process). The model is trained at import time from the
+  embedded lexicons: deterministic, no external files.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -129,23 +127,6 @@ def _score_batch(texts: pd.Series) -> pd.DataFrame:
         ids.append(langs[i])
         confs.append(float(p[i]))
     return pd.DataFrame({"lang_id": ids, "lang_conf": confs})
-
-
-def langid_udf() -> Column:
-    @F.pandas_udf("lang_id string, lang_conf double")
-    def _udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        _model()  # built once per executor process (iterator form)
-        for texts in it:
-            yield _score_batch(texts)
-
-    return _udf
-
-
-def with_langid_udf(df: DataFrame, text_col: str = "text") -> DataFrame:
-    s = langid_udf()(F.col(text_col))
-    return df.withColumn("__lid", s).withColumns(
-        {"lang_id": F.col("__lid.lang_id"), "lang_conf": F.col("__lid.lang_conf")}
-    ).drop("__lid")
 
 
 # ------------------------------------------------------------------- flags

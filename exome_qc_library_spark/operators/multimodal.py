@@ -6,9 +6,8 @@ ingest stage uses for HTML bytes. Round-2 upgrade (VERDICT.md #8): the
 default feature kernel is now REAL codec-free byte-level analysis
 (16-bucket byte histogram + Shannon entropy, vectorized numpy per Arrow
 batch) and the media type is sniffed from magic numbers with pure JVM
-expressions; only the actual image/audio *decode* remains a stub
-(``decode_media_features`` — the codec libraries are not in this
-container), clearly marked behind ``allow_stub``/``NotImplementedError``.
+expressions. Image/audio *decoding* is out of scope: the codec libraries
+are not dependencies of this package.
 
 Reference analog: the VEP external annotator pattern — an opaque
 per-record enrichment kernel invoked over every row with its own config
@@ -17,7 +16,6 @@ per-record enrichment kernel invoked over every row with its own config
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -595,8 +593,7 @@ def extract_byte_features(
 ) -> DataFrame:
     """Byte-level feature extraction via Arrow-batched ``mapInPandas``:
     entropy + 16-bucket histogram per payload (see :func:`byte_features`).
-    Row-local, no shuffle; the batch shape is the same one a real decoder
-    kernel would use."""
+    Row-local, no shuffle."""
     schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.DoubleType()), True)]
     )
@@ -611,61 +608,3 @@ def extract_byte_features(
 
     return df.mapInPandas(batches, schema=schema)
 
-
-def _fake_decoded_features(payload: bytes, dim: int) -> list[float]:
-    """Deterministic stand-in for a decoded-image feature vector: bytes of
-    iterated sha256, scaled to [0,1). Stable across platforms."""
-    out: list[float] = []
-    h = payload
-    while len(out) < dim:
-        h = hashlib.sha256(h).digest()
-        out.extend(x / 256.0 for x in h)
-    return out[:dim]
-
-
-def decode_media_features(
-    df: DataFrame,
-    bin_col: str = "html",
-    dim: int = 16,
-    allow_stub: bool = True,
-) -> DataFrame:
-    """Decode binary payloads to model feature vectors via mapInPandas.
-
-    THE one remaining stub (clearly marked, task-brief-sanctioned): real
-    deployments replace ``_fake_decoded_features`` with an actual decoder
-    (PIL/librosa/ffmpeg); the container lacks those libs, so without
-    ``allow_stub`` this raises ``NotImplementedError``. Batch shape, Arrow
-    transport, and schema are the production code path either way — and
-    the codec-free byte analysis lives in :func:`extract_byte_features`,
-    which is real.
-    """
-    if not allow_stub:
-        raise NotImplementedError(
-            "media decoding requires codec libraries not present in this container"
-        )
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField("media_features", T.ArrayType(T.DoubleType()), True)]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            pdf = pdf.copy()
-            pdf["media_features"] = pdf[bin_col].map(
-                lambda b: None if b is None else _fake_decoded_features(bytes(b), dim)
-            )
-            yield pdf
-
-    return df.mapInPandas(batches, schema=schema)
-
-
-def frame_sample_plan(df: DataFrame, bin_col: str, every_n: int = 30) -> DataFrame:
-    """Frame-sampling plumbing: emits (frame_index) rows per media payload
-    via posexplode of a planned index array; the decode itself is the
-    stubbed kernel above. Demonstrates the explode-shaped schema a video
-    pipeline needs without the codec. NULL payloads keep their row with a
-    NULL frame_index (explode_outer — annotate-don't-drop, round-6
-    review) so callers joining the plan back never lose docs."""
-    n_frames = (F.length(F.col(bin_col)) / F.lit(1000)).cast("int")  # fake duration proxy
-    idx = F.sequence(F.lit(0), F.greatest(n_frames, F.lit(0)), F.lit(every_n))
-    return df.withColumn("frame_index", F.explode_outer(idx))

@@ -91,8 +91,10 @@ def scrub_expr(text: Column, rules: tuple[ScrubRule, ...] = DEFAULT_RULES) -> Co
         # re-introduce a gated character mid-chain since nothing ran).
         # The gate is per-CHAIN, not per-rule: a per-rule when/otherwise
         # would reference the accumulated chain twice per rule and blow
-        # the expression tree up 2^rules-fold.
-        gate = "|".join(dict.fromkeys(gates))
+        # the expression tree up 2^rules-fold. Each gate is wrapped in its
+        # own group so an inline flag such as (?x) or (?i) stays scoped to
+        # the gate that carries it instead of leaking into later ones.
+        gate = "|".join(f"(?:{g})" for g in dict.fromkeys(gates))
         return F.when(text.rlike(gate), out).otherwise(text)
     return out
 

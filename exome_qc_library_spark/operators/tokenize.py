@@ -99,6 +99,3 @@ def quality_score_expr() -> Column:
         ),
     )
 
-
-def with_quality_score(df: DataFrame, out_col: str = "quality_score") -> DataFrame:
-    return df.withColumn(out_col, quality_score_expr())

@@ -94,13 +94,26 @@ class Stage:
     params: dict[str, Any] = field(default_factory=dict)
     # flag column(s) to snapshot accounting for (the reference's per-stage
     # count_failing reports, shared/variant_qc.py:638-723); only written
-    # when the stage materializes
+    # when the stage materializes. A single name or None is normalized to
+    # a tuple on construction.
     account_flags: str | tuple[str, ...] | None = None
     # materialize=False chains this stage lazily into the next checkpoint —
     # the reference checkpoints after EVERY step and flags the cost
     # ("constant checkpointing is expensive", variant_qc.py:783-784); here
     # cheap expression stages fuse into one codegen'd write
     materialize: bool = True
+
+    def __post_init__(self) -> None:
+        if isinstance(self.account_flags, str):
+            self.account_flags = (self.account_flags,)
+        else:
+            self.account_flags = tuple(self.account_flags or ())
+
+
+def _flag_counts_name(stage: str, i: int, col: str) -> str:
+    """Accounting checkpoint of the ``i``-th accounted column present in the
+    stage's output: the first takes the bare name, later ones a suffix."""
+    return f"{stage}__flag_counts" + ("" if i == 0 else f"_{col}")
 
 
 @dataclass
@@ -116,6 +129,15 @@ class Pipeline:
         self.stages = stages
         self.store = store
         self.results: list[StageResult] = []
+
+    def _write_flag_counts(self, st: Stage, i: int, col: str, counts: DataFrame) -> None:
+        self.store.write(
+            counts,
+            _flag_counts_name(st.name, i, col),
+            params={"of": st.name, "column": col},
+            parent=st.name,
+            count_rows=False,
+        )
 
     def _next_checkpoint_resumes(self, i: int, force_idx: int) -> bool:
         """True iff the next materialized stage at/after ``i`` will read its
@@ -145,6 +167,14 @@ class Pipeline:
         if from_stage is not None and from_stage not in names:
             raise ValueError(f"unknown stage {from_stage!r}")
         force_idx = names.index(from_stage) if from_stage is not None else len(names)
+        # row counting is one extra job per checkpoint; only the terminal
+        # stage needs it for the manifest (intermediate row counts are
+        # recoverable from parquet footers). Last MATERIALIZED stage by
+        # index (round-6 review: a name compare against stages[-1] was never
+        # True when the final stage is lazy, so no checkpoint recorded rows)
+        last_mat = max(
+            (j for j, s in enumerate(self.stages) if s.materialize), default=-1
+        )
         prev_name = None
         force = False
         pending_params: dict[str, Any] = {}
@@ -159,25 +189,10 @@ class Pipeline:
                 # the stage write and the flag-count writes (round-6
                 # review): resume would otherwise skip the stage and leave
                 # report() silently missing that stage's histograms forever
-                for ac_i, ac in enumerate(
-                    a
-                    for a in (
-                        (st.account_flags,)
-                        if isinstance(st.account_flags, str)
-                        else (st.account_flags or ())
-                    )
-                    if a in df.columns
-                ):
-                    suffix = "" if ac_i == 0 else f"_{ac}"
-                    cname = f"{st.name}__flag_counts{suffix}"
-                    if not self.store.exists(cname):
-                        self.store.write(
-                            flag_count_df(df, ac),
-                            cname,
-                            params={"of": st.name, "column": ac},
-                            parent=st.name,
-                            count_rows=False,
-                        )
+                acct_cols = tuple(ac for ac in st.account_flags if ac in df.columns)
+                for ac_i, ac in enumerate(acct_cols):
+                    if not self.store.exists(_flag_counts_name(st.name, ac_i, ac)):
+                        self._write_flag_counts(st, ac_i, ac, flag_count_df(df, ac))
                 self.results.append(
                     StageResult(st.name, True, time.monotonic() - t0, None)
                 )
@@ -192,37 +207,18 @@ class Pipeline:
             else:
                 out = st.fn(df)
                 if st.materialize:
-                    acct_cols = tuple(
-                        ac
-                        for ac in (
-                            (st.account_flags,)
-                            if isinstance(st.account_flags, str)
-                            else (st.account_flags or ())
-                        )
-                        if ac in out.columns
-                    )
+                    acct_cols = tuple(ac for ac in st.account_flags if ac in out.columns)
                     obs, obs_plan = None, {}
                     if acct_cols:
                         out, obs, obs_plan = _attach_accounting_observation(
                             out, acct_cols
                         )
-                    # row counting is one extra job per checkpoint; only the
-                    # terminal stage needs it for the manifest (intermediate
-                    # row counts are recoverable from parquet footers). Last
-                    # MATERIALIZED stage by index (round-6 review: a name
-                    # compare against stages[-1] was never True when the
-                    # final stage is lazy, so no checkpoint recorded rows)
-                    last_mat = max(
-                        (j for j, s in enumerate(self.stages) if s.materialize),
-                        default=-1,
-                    )
-                    is_last = i == last_mat
                     df = self.store.write(
                         out,
                         st.name,
                         params={**pending_params, st.name: st.params},
                         parent=prev_name,
-                        count_rows=is_last,
+                        count_rows=i == last_mat,
                     )
                     pending_params = {}
                     obs_metrics = obs.get if obs is not None else {}
@@ -234,14 +230,7 @@ class Pipeline:
                             )
                         if acct is None:
                             acct = flag_count_df(df, ac)
-                        suffix = "" if ac_i == 0 else f"_{ac}"
-                        self.store.write(
-                            acct,
-                            f"{st.name}__flag_counts{suffix}",
-                            params={"of": st.name, "column": ac},
-                            parent=st.name,
-                            count_rows=False,
-                        )
+                        self._write_flag_counts(st, ac_i, ac, acct)
                     man = self.store.manifest(st.name) or {}
                     rows = man.get("rows")
                 else:
@@ -306,21 +295,17 @@ class Pipeline:
                     "seconds": round(res.seconds, 3) if res else None,
                 }
             )
-            acct_cols = (
-                (st.account_flags,)
-                if isinstance(st.account_flags, str)
-                else (st.account_flags or ())
-            )
             # run() suffixes checkpoint names from the declared tuple FILTERED
             # to columns present in the stage output, so the name alone can't
             # say which column a checkpoint counts — trust the manifest's
             # recorded "column" param instead (falling back to the name-derived
             # guess for pre-param stores).
-            candidates = {f"{st.name}__flag_counts": acct_cols[0] if acct_cols else None}
-            for ac in acct_cols:
-                candidates[f"{st.name}__flag_counts_{ac}"] = ac
+            candidates = {
+                _flag_counts_name(st.name, i, ac): ac
+                for i, ac in enumerate(st.account_flags)
+            }
             for cname, name_guess in sorted(candidates.items()):
-                if name_guess is None or not self.store.exists(cname):
+                if not self.store.exists(cname):
                     continue
                 cman = self.store.manifest(cname) or {}
                 col = (cman.get("params") or {}).get("column") or name_guess

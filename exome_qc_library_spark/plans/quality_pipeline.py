@@ -56,9 +56,9 @@ from ..operators.hard_filters import (
     thresholds_metadata,
 )
 from ..operators.ingest import ingest_pages
-from ..operators.langid import flag_lang_mismatch, with_langid_expr
+from ..operators.langid import flag_lang_mismatch
 from ..operators.outliers import OUTLIER_MEASURES, flag_iterative_outliers
-from ..operators.perplexity import flag_high_perplexity, with_perplexity, with_text_scores
+from ..operators.perplexity import flag_high_perplexity, with_text_scores
 from ..operators.host_qc import flag_host_outliers
 from ..operators.segment_qc import flag_segment_outliers
 from ..operators.scrub import apply_scrub, with_pii_hits
@@ -81,9 +81,7 @@ def build_quality_pipeline(
     near_dup_threshold: float = 0.8,
     near_dup_algo: str = "minhash",
     near_dup_max_hamming: int = 3,
-    use_udf_langid: bool = True,
     keep_html: bool = False,
-    checkpoint_all: bool = False,
     outlier_k_sigma: float = 4.0,
     outlier_max_iter: int = 3,
     segment_k_sigma: float = 4.0,
@@ -99,10 +97,8 @@ def build_quality_pipeline(
     its sketch job reads the checkpoint directly (column-pruned to url/text)
     instead of re-running upstream flag stages; the cheap expression stages
     are lazy (``materialize=False``) and fuse into the next checkpoint —
-    4 materializations instead of 8. ``checkpoint_all=True`` restores the
-    reference's checkpoint-after-every-step behavior (finest-grained resume).
+    4 materializations instead of 8.
     """
-    mat = checkpoint_all
 
     def _ingest(df: DataFrame) -> DataFrame:
         out = ingest_pages(df)
@@ -124,7 +120,7 @@ def build_quality_pipeline(
                     enrich_with_host_metadata(df, host_metadata), max_spam_score
                 ),
                 {"max_spam_score": max_spam_score},
-                materialize=mat,
+                materialize=False,
             )
         )
     if blocklist is not None or url_substrings:
@@ -137,7 +133,7 @@ def build_quality_pipeline(
             return df
 
         stages.append(
-            Stage("s2_blocklist", _blk, {"substrings": list(url_substrings)}, materialize=mat)
+            Stage("s2_blocklist", _blk, {"substrings": list(url_substrings)}, materialize=False)
         )
     if decontamination_benchmark is not None:
         from ..operators.decontaminate import flag_contaminated
@@ -149,7 +145,7 @@ def build_quality_pipeline(
                     df, decontamination_benchmark, n=decontamination_ngram
                 ),
                 {"n": decontamination_ngram},
-                materialize=mat,
+                materialize=False,
             )
         )
 
@@ -181,7 +177,7 @@ def build_quality_pipeline(
                 "s2c_host_cap",
                 _host_cap,
                 {"max_rows": host_cap, "key": "host", "order": ["warc_ts"]},
-                materialize=mat,
+                materialize=False,
             )
         )
 
@@ -208,13 +204,13 @@ def build_quality_pipeline(
             "s3_hard_filters",
             lambda df: apply_hard_filters(df, "low_pass_failing_qc", low_pass),
             thresholds_metadata(low_pass),
-            materialize=mat,
+            materialize=False,
         ),
         Stage(
             "s4_exact_dedup",
             lambda df: flag_exact_duplicates(df),
             {},
-            materialize=mat,
+            materialize=False,
         ),
     ]
     if cross_doc_dup_lines:
@@ -231,7 +227,7 @@ def build_quality_pipeline(
                     df, max_shared_frac=max_shared_line_frac
                 ),
                 {"max_shared_frac": max_shared_line_frac},
-                materialize=mat,
+                materialize=False,
             )
         )
     if strip_boilerplate_min_docs is not None:
@@ -264,7 +260,7 @@ def build_quality_pipeline(
                 "s4c_strip_chrome",
                 _strip,
                 {"min_docs": strip_boilerplate_min_docs},
-                materialize=mat,
+                materialize=False,
             )
         )
     stages += [
@@ -272,9 +268,7 @@ def build_quality_pipeline(
             "s9_scoring",
             lambda df: flag_high_perplexity(
                 apply_hard_filters(
-                    flag_lang_mismatch(
-                        with_text_scores(df) if use_udf_langid else with_perplexity(with_langid_expr(df))
-                    ),
+                    flag_lang_mismatch(with_text_scores(df)),
                     "final_failing_qc",
                     final,
                     compute_metrics=False,
@@ -284,7 +278,7 @@ def build_quality_pipeline(
             dict(
                 thresholds_metadata(final),
                 max_perplexity=max_perplexity,
-                scorer="nb_trigram_v1" if use_udf_langid else "stopword_density_v1",
+                scorer="nb_trigram_v1",
             ),
             account_flags="final_failing_qc",
         ),
@@ -298,7 +292,7 @@ def build_quality_pipeline(
                 "k_sigma": outlier_k_sigma,
                 "max_iter": outlier_max_iter,
             },
-            materialize=mat,
+            materialize=False,
         ),
         Stage(
             "s10_segment_qc",
@@ -311,7 +305,7 @@ def build_quality_pipeline(
                 "k_sigma": segment_k_sigma,
                 "min_segment_n": segment_min_n,
             },
-            materialize=mat,
+            materialize=False,
         ),
         Stage(
             "s8_host_qc",
@@ -325,7 +319,7 @@ def build_quality_pipeline(
                 "k_sigma": 4.0,
                 "batch_col": "crawl_batch" if host_metadata is not None else None,
             },
-            materialize=mat,
+            materialize=False,
         ),
         Stage(
             "s11_verdict",
@@ -337,10 +331,6 @@ def build_quality_pipeline(
         ),
     ]
     return Pipeline(stages, store)
-
-
-def run_quality_pipeline(pages: DataFrame, store: CheckpointStore, **kwargs) -> DataFrame:
-    return build_quality_pipeline(store, **kwargs).run(pages)
 
 
 def summarize_verdicts(df: DataFrame) -> DataFrame:

@@ -4,15 +4,15 @@ The reference is a pure batch pipeline whose closest streaming analog is
 its resumable checkpointing (``/root/reference/README.md:54-55``;
 SURVEY.md §2.10). The target layout is append-only snapshots keyed by
 ``warc_ts`` — which makes the *same stage functions* runnable under
-``readStream``: every per-row stage (ingest, hard filters, langid UDF,
-scrub, verdict) is stateless, so it composes unchanged; only the
-cross-record stages (dedup, host QC) need batch barriers and run in
-``foreachBatch`` or stay in the batch plane.
+``readStream``: the per-row stages (ingest, hard filters, language ID,
+scrub, verdict) are stateless, so they compose unchanged; the
+cross-record stages (dedup, outliers, host QC) need batch barriers and
+run in ``foreachBatch`` or stay in the batch plane.
 
 Provided here:
 * :func:`stream_pages` — file-source stream over a pages directory;
-* :func:`streaming_quality_flags` — the stateless stage chain as a
-  streaming transformation;
+* :func:`streaming_quality_flags` — a stateless subset of the batch
+  stages as a streaming transformation;
 * :func:`windowed_flag_counts` — watermarked per-crawl-window flag
   accounting (late pages up to the watermark are folded in);
 * :func:`streaming_host_counters` — CUSTOM STATEFUL operator
@@ -48,8 +48,16 @@ def stream_pages(spark: SparkSession, path: str, max_files_per_trigger: int = 4)
 
 
 def streaming_quality_flags(pages: DataFrame) -> DataFrame:
-    """Stateless stage chain — identical code path as batch (the whole
-    point of keeping stages pure DataFrame → DataFrame)."""
+    """Stateless subset of the batch pipeline's stages.
+
+    s0 ingest and s3 hard filters are the batch stage functions, so
+    ``low_pass_failing_qc`` equals the cold pipeline's with s4's
+    ``exact_duplicate`` tags removed. The rest differs from batch:
+    language is scored by the expression scorer
+    (:func:`~..operators.langid.with_langid_expr`), not s9's NB UDF, so
+    ``lang_mismatch`` can disagree; and there is no s4 exact dedup, s5
+    near dedup, s9 perplexity/final thresholds, nor the cross-record
+    s6/s10/s8 outlier stages, so ``keep`` can differ from batch."""
     df = ingest_pages(pages)
     df = apply_hard_filters(df, "low_pass_failing_qc", LOW_PASS)
     df = with_langid_expr(df)

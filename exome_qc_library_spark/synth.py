@@ -255,7 +255,3 @@ def edge_case_pages(spark: SparkSession, start_id: int = 10_000_000) -> DataFram
     ]
     return spark.createDataFrame(rows, schema=PAGES_SCHEMA)
 
-
-def write_pages(spark: SparkSession, path: str, n_docs: int, seed: int = 42) -> str:
-    synthesize_pages(spark, n_docs=n_docs, seed=seed).write.mode("overwrite").parquet(path)
-    return path

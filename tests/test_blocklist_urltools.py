@@ -11,7 +11,6 @@ from exome_qc_library_spark.functions.urltools import (
 from exome_qc_library_spark.operators.blocklist import (
     flag_blocklisted,
     flag_substring_matches,
-    remove_blocklisted,
 )
 
 
@@ -84,9 +83,6 @@ def test_substring_flags_and_eager_removal(spark):
     out = {r["url"]: r["low_pass_failing_qc"] for r in flag_substring_matches(docs, ["casino"]).collect()}
     assert out["https://a.com/casino/win"] == ["url_substring"]
     assert out["https://b.com/news"] == []
-
-    bl = spark.createDataFrame([("https://a.com/casino/win",)], "url_or_host string")
-    assert remove_blocklisted(docs, bl).count() == 1
 
 
 def test_salted_repartition_runs(spark, pages):

@@ -8,6 +8,7 @@ import datetime
 
 import pyspark.sql.functions as F
 
+from exome_qc_library_spark.functions.hashing import simhash64
 from exome_qc_library_spark.operators.dedup import (
     connected_components_df,
     connected_components_driver,
@@ -105,50 +106,6 @@ def test_minhash_batch_kernel_matches_naive_per_row():
     for chunk in (1, 3, 8, 17, 10**9):  # chunk=1 forces the oversized-row path
         got = _minhash_sig_batch(np.array(vals, dtype=object), a, b, chunk)
         assert got == expected, f"chunk_hashes={chunk}"
-
-
-def test_minhash_arrow_stage_matches_pandas_udf(spark):
-    # the boxing-free mapInArrow signature stage (the documented alternative
-    # to the production pandas UDF) must emit EXACTLY the same signatures,
-    # including NULL for null/empty/whitespace docs and int32-shipped hashes
-    import pyspark.sql.functions as F
-
-    from exome_qc_library_spark.functions.hashing import shingle_hashes, word_shingles
-    from exome_qc_library_spark.operators.dedup import (
-        _minhash_sig_arrow_fn,
-        _minhash_sig_udf,
-    )
-
-    rows = [
-        ("u1", "the quick brown fox jumps over the lazy dog " * 3),
-        ("u2", None),
-        ("u3", ""),
-        ("u4", "   "),
-        ("u5", "two words"),
-        ("u6", "one"),
-        ("u7", "completely different content about spark engines " * 4),
-    ]
-    df = spark.createDataFrame(rows, "url string, text string").filter(
-        F.col("text").isNotNull() & (F.length("text") > 0)
-    )
-    hs = shingle_hashes(word_shingles(F.col("text"), 3))
-    via_pandas = {
-        r["k"]: r["sig"]
-        for r in df.select(
-            F.col("url").alias("k"), _minhash_sig_udf(64, 42)(hs).alias("sig")
-        ).collect()
-    }
-    via_arrow = {
-        r["k"]: r["sig"]
-        for r in df.select(
-            F.col("url").alias("k"), hs.cast("array<int>").alias("hs")
-        )
-        .mapInArrow(_minhash_sig_arrow_fn(64, 42), "k string, sig array<bigint>")
-        .collect()
-    }
-    assert via_arrow == via_pandas
-    assert via_arrow["u4"] is None  # whitespace-only → no shingles → NULL sig
-    assert len(via_arrow["u1"]) == 64
 
 
 def test_flag_near_duplicates_earliest_representative(spark):
@@ -556,8 +513,10 @@ def test_simhash_np_kernel_equals_expression(spark):
         ("f", "naïve café über emoji 🎉 mixed UNICODE text répété " * 3),
     ] + [(f"r{i}", f"w{i} " + " ".join(f"t{(i * 7 + k) % 97}" for k in range(60))) for i in range(50)]
     df = spark.createDataFrame(texts, "url string, text string")
-    ex = {r["url"]: r["s"] for r in with_simhash(df, out_col="s", kernel="expr").collect()}
-    np_ = {r["url"]: r["s"] for r in with_simhash(df, out_col="s", kernel="np").collect()}
+    has_text = F.col("text").isNotNull() & (F.trim("text") != "")
+    expr = df.withColumn("s", F.when(has_text, simhash64(F.col("text"))))
+    ex = {r["url"]: r["s"] for r in expr.collect()}
+    np_ = {r["url"]: r["s"] for r in with_simhash(df, out_col="s").collect()}
     assert ex == np_
     assert ex["d"] is None and ex["e"] is None
     assert any(v < 0 for v in ex.values() if v is not None)  # bit 63 exercised

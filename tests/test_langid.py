@@ -1,13 +1,14 @@
-"""Language-ID scorers: expression-based and NB pandas UDF agree on clear
-inputs; mismatch flags mirror imputed-vs-reported discordance."""
+"""Language-ID scorers: the expression scorer and the NB scorer inside the
+fused s9 UDF agree on clear inputs; mismatch flags mirror
+imputed-vs-reported discordance."""
 
 import pyspark.sql.functions as F
 
 from exome_qc_library_spark.operators.langid import (
     flag_lang_mismatch,
     with_langid_expr,
-    with_langid_udf,
 )
+from exome_qc_library_spark.operators.perplexity import with_text_scores
 
 SENTENCES = [
     ("en", "the cat is in the house and it was a good day for all of that"),
@@ -26,13 +27,13 @@ def test_expr_scorer_identifies_all(spark):
 
 def test_udf_scorer_identifies_all(spark):
     df = spark.createDataFrame(SENTENCES, "lang string, text string")
-    got = {r["lang"]: r["lang_id"] for r in with_langid_udf(df).collect()}
+    got = {r["lang"]: r["lang_id"] for r in with_text_scores(df).collect()}
     assert got == {lang: lang for lang, _ in SENTENCES}
 
 
 def test_null_and_empty_text(spark):
     df = spark.createDataFrame([("a", None), ("b", ""), ("c", "   ")], "id string, text string")
-    for impl in (with_langid_expr, with_langid_udf):
+    for impl in (with_langid_expr, with_text_scores):
         for r in impl(df).collect():
             assert r["lang_id"] is None and r["lang_conf"] is None
 

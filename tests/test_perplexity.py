@@ -1,8 +1,9 @@
-"""Perplexity UDF: lexicon-like text scores lower than symbol noise."""
+"""Perplexity, as scored by the fused s9 UDF: lexicon-like text scores
+lower than symbol noise."""
 
 import pyspark.sql.functions as F
 
-from exome_qc_library_spark.operators.perplexity import flag_high_perplexity, with_perplexity
+from exome_qc_library_spark.operators.perplexity import flag_high_perplexity, with_text_scores
 
 
 def test_ordering_and_nulls(spark):
@@ -15,7 +16,7 @@ def test_ordering_and_nulls(spark):
         ],
         "id string, text string",
     )
-    got = {r["id"]: r["perplexity"] for r in with_perplexity(df).collect()}
+    got = {r["id"]: r["perplexity"] for r in with_text_scores(df).collect()}
     assert got["null"] is None and got["tiny"] is None
     assert got["nat"] < got["junk"]
 
@@ -34,6 +35,6 @@ def test_deterministic_across_partitions(spark):
     texts = [(f"d{i}", "the and of to a in is was " * (i + 1)) for i in range(20)]
     df1 = spark.createDataFrame(texts, "id string, text string").repartition(1)
     df8 = spark.createDataFrame(texts, "id string, text string").repartition(8)
-    a = {r["id"]: r["perplexity"] for r in with_perplexity(df1).collect()}
-    b = {r["id"]: r["perplexity"] for r in with_perplexity(df8).collect()}
+    a = {r["id"]: r["perplexity"] for r in with_text_scores(df1).collect()}
+    b = {r["id"]: r["perplexity"] for r in with_text_scores(df8).collect()}
     assert a == b

@@ -4,7 +4,6 @@ import pyspark.sql.functions as F
 
 from exome_qc_library_spark.operators.multimodal import (
     byte_features,
-    decode_media_features,
     extract_byte_features,
     sniff_media_type,
     with_media_metadata,
@@ -40,20 +39,6 @@ def test_media_metadata_and_stub_decode(spark):
     meta = {r["url"]: r["media_meta"] for r in with_media_metadata(df).collect()}
     assert meta["u1"]["n_bytes"] == 8 and len(meta["u1"]["sha256"]) == 64
     assert meta["u2"] is None
-
-    out = {r["url"]: r["media_features"] for r in decode_media_features(df, dim=8).collect()}
-    assert len(out["u1"]) == 8 and all(0 <= x < 1 for x in out["u1"])
-    assert out["u2"] is None
-    # deterministic across invocations
-    out2 = {r["url"]: r["media_features"] for r in decode_media_features(df, dim=8).collect()}
-    assert out == out2
-
-
-def test_stub_gate_raises():
-    import pytest
-
-    with pytest.raises(NotImplementedError):
-        decode_media_features(None, allow_stub=False)
 
 
 def test_magic_number_sniffing(spark):
