@@ -921,10 +921,10 @@ FROM pairs p JOIN sig_t sa ON sa.k = p.a JOIN sig_t sb ON sb.k = p.b
 
 
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K5 SimHash sketch column, ORACLE-CHECKED via the 30-bit polynomial
-    variant (same shingle/vote/sign algorithm as the production
-    ``simhash64``, whose xxhash64 kernel + hamming blocking are pinned in
-    tests/test_dedup)."""
+    """K5 SimHash sketch column, ORACLE-CHECKED: the 30-bit polynomial
+    sign-vote sketch over word bigrams, computed by :func:`simhash_poly`
+    here and by its DuckDB mirror :func:`_simhash_sql` in the oracle.
+    The pipeline's near-dup stage uses MinHash, not this sketch."""
     from .functions.hashing import simhash_poly
 
     docs = _t(spark, sf_dir, "documents")

@@ -1,4 +1,4 @@
-"""S4/S5 — deduplication: exact, MinHash-LSH, SimHash, n-gram Jaccard.
+"""S4/S5 — deduplication: exact, MinHash-LSH, n-gram Jaccard.
 
 Web-text analog of the reference's relatedness stage
 (``/root/reference/shared/samples_qc.py:737-872``): an all-pairs
@@ -9,7 +9,7 @@ driver-side graph algorithm (``nx_algorithm``,
 the unfiltered table (annotate-don't-drop).
 
 Scale design (10^12 docs):
-* sketches (minhash signature / simhash / content hash) are **row-local
+* sketches (minhash signature / content hash) are **row-local
   expressions** — zero shuffle, one codegen projection;
 * candidate generation shuffles on the **(band, bucket) key only** —
   never the O(n²) pair space; bucket size is capped (``max_bucket``) the
@@ -35,7 +35,6 @@ from pyspark.sql import functions as F
 from ..functions.flags import add_flags
 from ..functions.hashing import (
     exact_content_hash,
-    hamming64,
     lsh_band_keys,
     minhash_signature,
     shingle_hashes,
@@ -186,10 +185,10 @@ def capped_bucket_pairs(
 ) -> DataFrame:
     """Expand each capped bucket's sorted member array into ordered pairs
     ``(a, b)`` with ``a < b`` — the shared self-pair kernel behind every
-    bucketed pair generator here (MinHash bands, SimHash quarters,
-    hyperplane sign buckets). Previously copy-pasted at each site, so the
-    round-2 sort-before-slice determinism fix had to be applied three
-    times by hand (round-6 review). The caller owns the cap contract
+    bucketed pair generator (MinHash bands here, hyperplane sign buckets
+    in ``similarity``). Previously copy-pasted at each site, so the
+    round-2 sort-before-slice determinism fix had to be applied by hand
+    at every one (round-6 review). The caller owns the cap contract
     (``slice(array_sort(collect_list(k)), 1, max_bucket)``); this helper
     only expands. ``dedup=False`` skips the cross-bucket dropDuplicates
     for generators whose rows live in exactly one bucket."""
@@ -402,44 +401,22 @@ def flag_near_duplicates(
     threshold: float = 0.8,
     num_perm: int = 64,
     bands: int = 16,
-    use_driver_cc: bool | None = None,
     max_driver_pairs: int = 5_000_000,
     prefer: list | None = None,
-    algo: str = "minhash",
-    max_hamming: int = 3,
 ) -> DataFrame:
-    """Full near-dup stage: sketch pairs → threshold → components →
-    representative per cluster → ``near_duplicate`` flags,
+    """Full near-dup stage: banded MinHash-LSH pairs (word shingles;
+    ``threshold``/``num_perm``/``bands`` apply) → threshold → components
+    → representative per cluster → ``near_duplicate`` flags,
     ``dup_cluster_id`` annotation. Row count preserved.
 
-    ``algo`` selects the pair generator (round-5 VERDICT #2 — the sketch
-    is the fattest pipeline cost, and the cheaper engine should be a
-    pipeline-reachable knob, not just a standalone operator):
-
-    * ``"minhash"`` (default) — banded MinHash-LSH over word shingles;
-      ``threshold``/``num_perm``/``bands`` apply. Highest recall on
-      reordered/partially-overlapping text.
-    * ``"simhash"`` — 64-bit SimHash with 16-bit quarter blocking and
-      exact Hamming verification ≤ ``max_hamming``; one 8-byte sketch per
-      doc instead of ``num_perm`` minima, so the sketch pass is several
-      times cheaper. Catches char-level near-identity; text with many
-      scattered word edits that MinHash still flags can fall outside the
-      Hamming ball (documented recall trade — see
-      tests/test_dedup.py::test_near_dup_algo_knob_agreement).
-
-    Everything downstream of pair generation (size-gated clustering,
-    representative election, flag semantics) is shared verbatim.
-
-    ``use_driver_cc=None`` (default) SIZE-GATES the clustering path
-    (round-4 VERDICT #1 — the last place where 100-TB safety depended on
-    a caller flag): the thresholded pair set is localCheckpoint'd (tiny
-    by LSH construction) and counted — one cheap job over pairs, never
-    docs — and the driver union-find is chosen only when the edge count
+    The clustering path is SIZE-GATED, never chosen by the caller
+    (round-4 VERDICT #1): the thresholded pair set is localCheckpoint'd
+    (tiny by LSH construction) and counted — one cheap job over pairs,
+    never docs — and the driver union-find runs only when the edge count
     fits ``max_driver_pairs``; above it the distributed min-label
-    propagation (:func:`connected_components_df`) runs instead. Explicit
-    ``True``/``False`` still overrides. The bound mirrors the
-    reference's own driver-boundary cap on its to_pandas→networkx step
-    (``shared/samples_qc.py:805-808``).
+    propagation (:func:`connected_components_df`) runs instead. The bound
+    mirrors the reference's own driver-boundary cap on its
+    to_pandas→networkx step (``shared/samples_qc.py:805-808``).
 
     ``prefer`` is the pluggable representative-preference rule (the
     reference's case-preferring independent set,
@@ -461,28 +438,14 @@ def flag_near_duplicates(
                 f"input already carries reserved column {reserved!r}; "
                 "drop or rename it before re-running near-dup flagging"
             )
-    if algo == "minhash":
-        pairs = minhash_candidate_pairs(
-            df, key_col=key_col, text_col=text_col, num_perm=num_perm, bands=bands
-        ).filter(F.col("jaccard_est") >= threshold)
-    elif algo == "simhash":
-        tmp = "__sh"
-        while tmp in df.columns:
-            tmp += "_"
-        pairs = simhash_pairs(
-            with_simhash(df, text_col=text_col, out_col=tmp),
-            key_col=key_col,
-            sim_col=tmp,
-            max_hamming=max_hamming,
-        ).select("a", "b")
-    else:
-        raise ValueError(f"unknown near-dup algo {algo!r}: minhash|simhash")
-    if use_driver_cc is None:
-        # materialize once so the gate count and the chosen CC path share
-        # the LSH work instead of recomputing the sketch pipeline twice
-        pairs = pairs.localCheckpoint()
-        use_driver_cc = pairs.count() <= max_driver_pairs
-    if use_driver_cc:
+    pairs = minhash_candidate_pairs(
+        df, key_col=key_col, text_col=text_col, num_perm=num_perm, bands=bands
+    ).filter(F.col("jaccard_est") >= threshold)
+    # materialize once so the gate count and the chosen CC path share the
+    # LSH work instead of recomputing the sketch pipeline twice
+    pairs = pairs.localCheckpoint()
+    on_driver = pairs.count() <= max_driver_pairs
+    if on_driver:
         mapping = connected_components_driver(pairs)
         if not mapping:
             return add_flags(
@@ -509,7 +472,7 @@ def flag_near_duplicates(
     # memory, so it broadcasts by construction); the distributed-CC path
     # exists precisely because the cluster mapping may NOT fit — there the
     # join is left to AQE, which shuffles or broadcasts on actual size
-    maybe_bcast = F.broadcast if use_driver_cc else (lambda d: d)
+    maybe_bcast = F.broadcast if on_driver else (lambda d: d)
     out = df.join(maybe_bcast(cdf), key_col, "left")
     # representative = preferred (pref..., key) min per cluster, computed on
     # the TINY clustered subset and joined back — NOT a window over the full
@@ -533,135 +496,6 @@ def flag_near_duplicates(
     out = out.join(maybe_bcast(reps), "dup_cluster_id", "left")
     is_dup = F.col("dup_cluster_id").isNotNull() & (F.col(key_col) != F.col("__rep"))
     return add_flags(out, flag_col, {"near_duplicate": is_dup}).drop("__rep")
-
-
-# --------------------------------------------------------------- SimHash
-
-
-def _simhash_votes_batch(col: pd.Series) -> pd.Series:
-    """Numpy SimHash bit-vote kernel over per-row shingle-hash arrays:
-    bit j of the sketch is set iff more than half the row's (distinct)
-    shingle hashes have bit j set — EXACTLY :func:`~..functions.hashing.
-    simhash64`'s vote>0 rule, so the two kernels are bit-identical
-    (pinned in tests). One flattened pass: 64 ``np.add.reduceat`` sweeps
-    over the batch's concatenated hashes, no per-row Python."""
-    n = len(col)
-    out = np.zeros(n, dtype=np.uint64)
-    valid = np.fromiter((v is not None for v in col), dtype=bool, count=n)
-    rows = [np.asarray(col.iloc[i], dtype=np.int64) for i in range(n) if valid[i]]
-    if rows:
-        lens = np.fromiter((len(r) for r in rows), dtype=np.int64, count=len(rows))
-        sk = np.zeros(len(rows), dtype=np.uint64)
-        # empty hash arrays stay sketch 0 (the no-shingle vote outcome, same
-        # as simhash64 on array()); reduceat with their start indices would
-        # crash on a trailing empty row and silently borrow the next row's
-        # first element otherwise (equal-indices rule)
-        ne = lens > 0
-        if ne.any():
-            starts = np.zeros(len(rows), dtype=np.int64)
-            np.cumsum(lens[:-1], out=starts[1:])
-            flat = np.concatenate(rows).view(np.uint64)
-            starts_ne = starts[ne]
-            lens_u = lens[ne].astype(np.uint64)
-            sk_ne = np.zeros(int(ne.sum()), dtype=np.uint64)
-            for j in range(64):
-                bitsum = np.add.reduceat(
-                    (flat >> np.uint64(j)) & np.uint64(1), starts_ne
-                )
-                sk_ne |= (2 * bitsum > lens_u).astype(np.uint64) << np.uint64(j)
-            sk[ne] = sk_ne
-        out[valid] = sk
-    res = pd.Series(out.view(np.int64), index=col.index, dtype="Int64")
-    res[~valid] = pd.NA
-    return res
-
-
-def with_simhash(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "simhash",
-) -> DataFrame:
-    """NULL/blank text → NULL sketch (not the all-zero-vote 0 sketch, which
-    would co-block every empty doc into one degenerate quarter block);
-    ``simhash_pairs`` drops NULL sketches before blocking.
-
-    Shingle hashes stay JVM-side (``xxhash64`` over the distinct word
-    shingles), then ONE Arrow shipment of the int64 arrays feeds the
-    flattened numpy bit-vote kernel :func:`_simhash_votes_batch`. The
-    pure-expression :func:`~..functions.hashing.simhash64` is the reference
-    it is pinned against (measured 8× slower at 500k docs)."""
-    has_text = F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
-
-    @F.pandas_udf("long")
-    def _votes(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for col in it:
-            yield _simhash_votes_batch(col)
-
-    hs = F.when(
-        has_text,
-        F.transform(word_shingles(F.col(text_col), 2), lambda s: F.xxhash64(s)),
-    )
-    return df.withColumn(out_col, _votes(hs))
-
-
-def simhash_pairs(
-    df: DataFrame,
-    key_col: str = "url",
-    sim_col: str = "simhash",
-    max_hamming: int = 3,
-    max_block: int = 200,
-) -> DataFrame:
-    """Near-dup candidates by SimHash: block on 16-bit quarters (a pair
-    within hamming ≤ 3 of a 64-bit hash shares at least one exact quarter
-    — pigeonhole), then verify the full distance. Shuffle key = quarter
-    value, never the pair space.
-
-    Degenerate blocks are capped at ``max_block`` members (round-2 VERDICT
-    #2): a hot quarter value shared by m docs — near-empty pages, a popular
-    template — would otherwise emit O(m²) join rows and OOM one reducer at
-    web scale. Same ``collect_list → slice`` guard as
-    :func:`minhash_candidate_pairs` (the reference caps every O(n²)-shaped
-    working set, ``shared/variant_qc.py:29-63``); keys are sorted first so
-    the kept subset is deterministic. Hashes are joined back onto the
-    (rare) candidate pairs for full-distance verification — the 8-byte
-    simhash never rides the exploded quarter shuffle.
-    """
-    if not 0 <= max_hamming <= 3:
-        # the recall guarantee is the pigeonhole over four 16-bit quarters:
-        # ≤3 differing bits cannot touch all 4 quarters. At max_hamming=4
-        # a pair with one flipped bit per quarter would silently never be
-        # generated as a candidate — fail loudly instead (round-6 review)
-        raise ValueError(
-            f"max_hamming must be in [0, 3] for 16-bit quarter blocking, "
-            f"got {max_hamming}"
-        )
-    sk = df.filter(F.col(sim_col).isNotNull()).select(
-        F.col(key_col).alias("k"), F.col(sim_col).alias("s")
-    )
-    quarters = F.array(
-        *[
-            F.struct(
-                F.lit(q).alias("q"),
-                F.shiftright(F.col("s"), q * 16).bitwiseAND(F.lit(0xFFFF)).alias("v"),
-            )
-            for q in range(4)
-        ]
-    )
-    blocked = sk.select("k", F.explode(quarters).alias("blk")).select(
-        "k", F.col("blk.q").alias("q"), F.col("blk.v").alias("v")
-    )
-    grouped = blocked.groupBy("q", "v").agg(
-        F.slice(F.array_sort(F.collect_list("k")), 1, max_block).alias("ks")
-    )
-    cand = capped_bucket_pairs(grouped)
-    siga = sk.select(F.col("k").alias("a"), F.col("s").alias("sa"))
-    sigb = sk.select(F.col("k").alias("b"), F.col("s").alias("sb"))
-    return (
-        cand.join(siga, "a")
-        .join(sigb, "b")
-        .select("a", "b", hamming64(F.col("sa"), F.col("sb")).alias("hamming"))
-        .filter(F.col("hamming") <= max_hamming)
-    )
 
 
 # ------------------------------------- cross-document duplicate lines

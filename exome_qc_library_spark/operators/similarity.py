@@ -399,10 +399,9 @@ def embedding_near_dup_pairs(
     share one sign pattern — every ``d > 0`` test fails → bucket 0 — so m
     co-bucketed rows would emit m²/2 join rows into one reducer at web
     scale. Same sorted ``collect_list → slice`` guard as
-    :func:`~..operators.dedup.minhash_candidate_pairs` and
-    :func:`~..operators.dedup.simhash_pairs` (the reference caps every
-    O(n²)-shaped working set, ``shared/variant_qc.py:29-63``); ids are
-    sorted first so the kept subset is deterministic, and the full
+    :func:`~..operators.dedup.minhash_candidate_pairs` (the reference
+    caps every O(n²)-shaped working set, ``shared/variant_qc.py:29-63``);
+    ids are sorted first so the kept subset is deterministic, and the full
     embedding arrays are joined back onto the (rare) candidate pairs for
     cosine verification instead of riding the bucket shuffle.
 

@@ -79,8 +79,6 @@ def build_quality_pipeline(
     final: QualityThresholds = FINAL,
     max_perplexity: float = DEFAULT_MAX_PERPLEXITY,
     near_dup_threshold: float = 0.8,
-    near_dup_algo: str = "minhash",
-    near_dup_max_hamming: int = 3,
     keep_html: bool = False,
     outlier_k_sigma: float = 4.0,
     outlier_max_iter: int = 3,
@@ -184,20 +182,8 @@ def build_quality_pipeline(
     stages += [
         Stage(
             "s5_near_dedup",
-            # near_dup_algo="simhash" swaps in the 8-byte sketch engine
-            # (round-5 VERDICT #2): same clustering/flags, cheaper sketch,
-            # documented recall trade on scattered word edits
-            lambda df: flag_near_duplicates(
-                df,
-                threshold=near_dup_threshold,
-                algo=near_dup_algo,
-                max_hamming=near_dup_max_hamming,
-            ),
-            {
-                "threshold": near_dup_threshold,
-                "algo": near_dup_algo,
-                "max_hamming": near_dup_max_hamming,
-            },
+            lambda df: flag_near_duplicates(df, threshold=near_dup_threshold),
+            {"threshold": near_dup_threshold, "algo": "minhash"},
             account_flags="final_failing_qc",
         ),
         Stage(

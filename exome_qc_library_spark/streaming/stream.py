@@ -183,7 +183,7 @@ def streaming_near_dup_matches(
     buckets as persistent state.
 
     The streaming plane of the batch
-    :func:`~..operators.dedup.minhash_pairs` →
+    :func:`~..operators.dedup.minhash_candidate_pairs` →
     :func:`~..operators.dedup.flag_near_duplicates` chain (the last
     curation operator without a streaming composition). Same sketch
     (same shingles / permutations / banding as batch, so candidates are

@@ -1,4 +1,4 @@
-"""Dedup family: exact, MinHash-LSH, SimHash, exact Jaccard, components.
+"""Dedup family: exact, MinHash-LSH, exact Jaccard, components.
 
 Near-dup analog of the reference's relatedness stage
 (shared/samples_qc.py:737-872); representative choice mirrors its
@@ -8,7 +8,6 @@ import datetime
 
 import pyspark.sql.functions as F
 
-from exome_qc_library_spark.functions.hashing import simhash64
 from exome_qc_library_spark.operators.dedup import (
     connected_components_df,
     connected_components_driver,
@@ -16,8 +15,6 @@ from exome_qc_library_spark.operators.dedup import (
     flag_near_duplicates,
     jaccard_pairs_exact,
     minhash_candidate_pairs,
-    simhash_pairs,
-    with_simhash,
 )
 
 
@@ -56,6 +53,20 @@ def test_minhash_finds_planted_pair(spark):
     assert ("u1", "u2") in pairs
     assert any({"u3"} & set(p) for p in pairs)  # near dup found
     assert not any("u4" in p for p in pairs)
+
+
+def test_minhash_degenerate_bucket_capped(spark):
+    # round-2 VERDICT #2: m identical docs share every band bucket and must
+    # NOT emit O(m²) pairs — each bucket keeps its max_bucket smallest keys
+    m, cap = 40, 5
+    df = spark.createDataFrame(
+        [(f"u{i:03d}", "the same page body repeated verbatim") for i in range(m)],
+        "url string, text string",
+    )
+    pairs = minhash_candidate_pairs(df, max_bucket=cap).collect()
+    assert len(pairs) == cap * (cap - 1) // 2  # C(cap,2), not C(m,2)
+    kept = {r["a"] for r in pairs} | {r["b"] for r in pairs}
+    assert kept == {f"u{i:03d}" for i in range(cap)}  # deterministic (sorted) subset
 
 
 def test_arithmetic_minhash_agrees_with_production(spark):
@@ -160,8 +171,9 @@ def test_connected_components_df_raises_when_unconverged(spark):
 
 
 def test_distributed_cc_path_matches_driver_path(spark):
-    # use_driver_cc=False (the does-not-fit-on-driver scale path, no forced
-    # broadcast) must produce identical flags and cluster membership
+    # max_driver_pairs=0 forces the does-not-fit-on-driver scale path (no
+    # forced broadcast); it must produce identical flags and cluster
+    # membership
     a = {
         r["url"]: (r["final_failing_qc"], r["dup_cluster_id"] is not None)
         for r in flag_near_duplicates(_docs(spark), threshold=0.5).collect()
@@ -169,17 +181,17 @@ def test_distributed_cc_path_matches_driver_path(spark):
     b = {
         r["url"]: (r["final_failing_qc"], r["dup_cluster_id"] is not None)
         for r in flag_near_duplicates(
-            _docs(spark), threshold=0.5, use_driver_cc=False
+            _docs(spark), threshold=0.5, max_driver_pairs=0
         ).collect()
     }
     assert a == b
 
 
 def test_near_dup_size_gate_auto_selects_path(spark, monkeypatch):
-    # round-4 VERDICT #1: with use_driver_cc unset the operator must COUNT
-    # the thresholded pair set and pick the path itself — driver union-find
-    # under the bound, distributed min-label propagation above it. The gate
-    # is proven by making the wrong path raise.
+    # round-4 VERDICT #1: the operator must COUNT the thresholded pair set
+    # and pick the path itself — driver union-find under the bound,
+    # distributed min-label propagation above it. The gate is proven by
+    # making the wrong path raise.
     import exome_qc_library_spark.operators.dedup as dd
 
     # planted pairs (3 edges) exceed max_driver_pairs=1 → distributed path;
@@ -196,13 +208,6 @@ def test_near_dup_size_gate_auto_selects_path(spark, monkeypatch):
         ).collect()
     }
     monkeypatch.undo()
-    explicit = {
-        r["url"]: (r["final_failing_qc"], r["dup_cluster_id"] is not None)
-        for r in dd.flag_near_duplicates(
-            _docs(spark), threshold=0.5, use_driver_cc=True
-        ).collect()
-    }
-    assert gated == explicit  # both paths agree on flags + membership
 
     # under the (default) bound the cheap driver path is selected
     monkeypatch.setattr(
@@ -210,10 +215,11 @@ def test_near_dup_size_gate_auto_selects_path(spark, monkeypatch):
             AssertionError("distributed CC path taken below max_driver_pairs")
         )
     )
-    small = dd.flag_near_duplicates(_docs(spark), threshold=0.5)
-    assert {
-        r["url"]: r["final_failing_qc"] for r in small.collect()
-    } == {u: f for u, (f, _) in explicit.items()}
+    default = {
+        r["url"]: (r["final_failing_qc"], r["dup_cluster_id"] is not None)
+        for r in dd.flag_near_duplicates(_docs(spark), threshold=0.5).collect()
+    }
+    assert gated == default  # both paths agree on flags + membership
 
 
 def test_exact_jaccard_agrees(spark):
@@ -224,44 +230,6 @@ def test_exact_jaccard_agrees(spark):
         ).collect()
     }
     assert ("u1", "u2") in pairs
-
-
-def test_simhash_pairs_hamming_blocking(spark):
-    # hand-planted 64-bit hashes: u1/u2 differ in 2 bits (≤3 → pair),
-    # u1/u3 share no 16-bit quarter (pigeonhole: never co-blocked),
-    # u4 is 5 bits from u1 (co-blocked but fails the hamming verify)
-    h1 = 0x1111_2222_3333_4444
-    rows = [
-        ("u1", h1),
-        ("u2", h1 ^ 0b11),  # hamming 2
-        ("u3", h1 ^ 0x0001_0001_0001_0001),  # one bit per quarter: hamming 4
-        ("u4", h1 ^ 0b1111111),  # hamming 7 from u1, 5 from u2; shares 3 quarters
-        ("u5", None),
-    ]
-    df = spark.createDataFrame(rows, "url string, simhash long")
-    got = {(r["a"], r["b"]): r["hamming"] for r in simhash_pairs(df).collect()}
-    assert got == {("u1", "u2"): 2}
-
-
-def test_simhash_pairs_degenerate_block_capped(spark):
-    # round-2 VERDICT #2: m identical simhashes must NOT emit O(m²) pairs —
-    # the quarter-block is capped like minhash max_bucket
-    m, cap = 40, 5
-    df = spark.createDataFrame(
-        [(f"u{i:03d}", 0x0123_4567_89AB_CDEF) for i in range(m)],
-        "url string, simhash long",
-    )
-    pairs = simhash_pairs(df, max_block=cap).collect()
-    assert len(pairs) == cap * (cap - 1) // 2  # C(cap,2), not C(m,2)
-    kept = {r["a"] for r in pairs} | {r["b"] for r in pairs}
-    assert kept == {f"u{i:03d}" for i in range(cap)}  # deterministic (sorted) subset
-
-
-def test_with_simhash_roundtrip(spark):
-    out = with_simhash(_docs(spark))
-    vals = {r["url"]: r["simhash"] for r in out.collect()}
-    assert vals["u1"] == vals["u2"]  # identical text → identical sketch
-    assert vals["u5"] is None
 
 
 def _boiler_docs(spark):
@@ -428,17 +396,13 @@ def test_strip_boilerplate_null_key_passes_through_unstripped(spark):
 
 
 def test_near_dup_algo_knob_agreement(spark):
-    """round-5 VERDICT #2: the simhash engine behind flag_near_duplicates
-    must agree with the minhash engine on star clusters at matched
-    thresholds — exact copies and single-word edits flagged by BOTH, the
-    unrelated doc and NULL text flagged by NEITHER, and the shared
-    downstream (representative election, cluster ids, row preservation)
-    identical. Fixture sized so the one-word edit lands inside the
-    default Hamming ball (≤3 — also the 4-quarter pigeonhole guarantee);
-    deterministic because both sketches are seeded expressions."""
+    """MinHash near-dup flagging on a star cluster: the exact copy and a
+    one-word edit are flagged, the earliest crawl is the representative,
+    the unrelated doc and NULL text are not flagged, and every row is
+    kept."""
     words = [f"w{i}" for i in range(400)]
     base = " ".join(words)
-    edit = " ".join(words[:200] + ["CHANGED"] + words[201:])  # hamming 3
+    edit = " ".join(words[:200] + ["CHANGED"] + words[201:])
     rows = [
         ("u1", _ts(1), base),
         ("u2", _ts(2), base),  # exact dup of u1
@@ -447,98 +411,13 @@ def test_near_dup_algo_knob_agreement(spark):
         ("u5", _ts(4), None),
     ]
     docs = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
-    out_mh = flag_near_duplicates(docs, threshold=0.5, algo="minhash")
-    out_sh = flag_near_duplicates(docs, threshold=0.5, algo="simhash", max_hamming=3)
-    for out in (out_mh, out_sh):
-        flags = {r["url"]: r["final_failing_qc"] for r in out.collect()}
-        assert flags["u1"] == ["near_duplicate"]  # later than u3's crawl
-        assert flags["u2"] == ["near_duplicate"]
-        assert flags["u3"] == []  # earliest crawl = representative
-        assert flags["u4"] == [] and flags["u5"] == []
-        assert out.count() == 5
-    # identical cluster structure on this corpus
-    cl = lambda out: {
-        r["url"]: r["dup_cluster_id"] for r in out.collect()
-    }  # noqa: E731
-    assert cl(out_mh) == cl(out_sh)
-    # no simhash sketch column leaks into the output
-    assert [c for c in out_sh.columns if c.startswith("__sh")] == []
-
-
-def test_near_dup_unknown_algo_raises(spark):
-    try:
-        flag_near_duplicates(_docs(spark), algo="phash")
-        raise AssertionError("expected ValueError")
-    except ValueError as e:
-        assert "phash" in str(e)
-
-
-def test_near_dup_simhash_documented_recall_trade(spark):
-    """Scattered word edits: every 10th word changed keeps shingle overlap
-    high enough for MinHash at a loose threshold but pushes the SimHash
-    Hamming distance past the ball — the documented recall trade, pinned
-    so a silent behavior change in either engine surfaces here."""
-    words = [f"w{i}" for i in range(120)]
-    a = " ".join(words)
-    scattered = " ".join(
-        (w if i % 10 else f"x{i}") for i, w in enumerate(words)
-    )
-    rows = [("a", _ts(1), a), ("b", _ts(2), scattered)]
-    docs = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
-    mh = flag_near_duplicates(docs, threshold=0.5, algo="minhash")
-    sh = flag_near_duplicates(docs, threshold=0.5, algo="simhash", max_hamming=3)
-    mh_flagged = {
-        r["url"]
-        for r in mh.filter(F.array_contains("final_failing_qc", "near_duplicate")).collect()
-    }
-    sh_flagged = {
-        r["url"]
-        for r in sh.filter(F.array_contains("final_failing_qc", "near_duplicate")).collect()
-    }
-    assert mh_flagged == {"b"}
-    assert sh_flagged == set()
-
-
-def test_simhash_np_kernel_equals_expression(spark):
-    """The vectorized (Arrow/numpy bit-vote) SimHash sketch must be
-    BIT-IDENTICAL to the pure-expression simhash64 — same distinct
-    shingles, same vote>0 rule, incl. NULL/blank rows, short docs
-    (single whole-text shingle), unicode, and the sign bit (bit 63)."""
-    texts = [
-        ("a", "the quick brown fox jumps over the lazy dog " * 8),
-        ("b", "one two"),
-        ("c", "single"),
-        ("d", None),
-        ("e", "   "),
-        ("f", "naïve café über emoji 🎉 mixed UNICODE text répété " * 3),
-    ] + [(f"r{i}", f"w{i} " + " ".join(f"t{(i * 7 + k) % 97}" for k in range(60))) for i in range(50)]
-    df = spark.createDataFrame(texts, "url string, text string")
-    has_text = F.col("text").isNotNull() & (F.trim("text") != "")
-    expr = df.withColumn("s", F.when(has_text, simhash64(F.col("text"))))
-    ex = {r["url"]: r["s"] for r in expr.collect()}
-    np_ = {r["url"]: r["s"] for r in with_simhash(df, out_col="s").collect()}
-    assert ex == np_
-    assert ex["d"] is None and ex["e"] is None
-    assert any(v < 0 for v in ex.values() if v is not None)  # bit 63 exercised
-
-
-def test_simhash_votes_batch_empty_rows():
-    """Round-6 review: an empty shingle-hash array must yield the
-    all-zero-vote sketch (0 — same as simhash64 over array()), not crash
-    np.add.reduceat on a trailing empty row, and a mid-batch empty row
-    must not silently borrow the next row's first element (reduceat's
-    equal-indices rule)."""
-    import pandas as pd
-
-    from exome_qc_library_spark.operators.dedup import _simhash_votes_batch
-
-    col = pd.Series([[-1], [], [3, 5, 3], None, []])
-    out = _simhash_votes_batch(col)
-    assert out.iloc[1] == 0 and out.iloc[4] == 0  # trailing empty incl.
-    assert pd.isna(out.iloc[3])  # NULL stays NULL
-    # neighbors of empties are unperturbed: match single-row references
-    assert out.iloc[0] == _simhash_votes_batch(pd.Series([[-1]])).iloc[0]
-    assert out.iloc[2] == _simhash_votes_batch(pd.Series([[3, 5, 3]])).iloc[0]
+    out = flag_near_duplicates(docs, threshold=0.5)
+    flags = {r["url"]: r["final_failing_qc"] for r in out.collect()}
+    assert flags["u1"] == ["near_duplicate"]  # later than u3's crawl
+    assert flags["u2"] == ["near_duplicate"]
+    assert flags["u3"] == []  # earliest crawl = representative
+    assert flags["u4"] == [] and flags["u5"] == []
+    assert out.count() == 5
 
 
 def test_exact_dedup_null_order_col_never_wins(spark):
@@ -588,21 +467,13 @@ def test_near_dup_reserved_column_guard(spark):
 
 
 def test_pair_generator_parameter_guards(spark):
-    """num_perm must divide into bands; max_hamming > 3 breaks the
-    quarter-blocking recall guarantee — both must raise."""
+    """num_perm must divide into bands — a remainder would compute
+    permutations no band ever uses, so it must raise."""
     import pytest
-
-    from exome_qc_library_spark.operators.dedup import (
-        minhash_candidate_pairs,
-        simhash_pairs,
-    )
 
     df = spark.createDataFrame([("u1", "some text")], "url string, text string")
     with pytest.raises(ValueError, match="divisible"):
         minhash_candidate_pairs(df, num_perm=64, bands=10)
-    sk = spark.createDataFrame([("u1", 7)], "url string, simhash long")
-    with pytest.raises(ValueError, match="max_hamming"):
-        simhash_pairs(sk, max_hamming=4)
 
 
 def test_lsh_band_keys_drops_underfilled_bands(spark):

@@ -336,27 +336,6 @@ def test_strip_chrome_stage_optional(spark, pages):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_near_dup_algo_knob_reaches_s5(spark, pages):
-    """round-5 VERDICT #2: near_dup_algo='simhash' swaps the s5 pair
-    engine — the stage params record it, the run completes with
-    near_duplicate flags fired (synth pages contain verbatim dup
-    classes = hamming 0), and row count holds."""
-    root = tempfile.mkdtemp(prefix="ckpt_simhash_")
-    try:
-        store = CheckpointStore(spark, root)
-        pipe = build_quality_pipeline(store, near_dup_algo="simhash")
-        s5 = next(s for s in pipe.stages if s.name == "s5_near_dedup")
-        assert s5.params["algo"] == "simhash"
-        out = pipe.run(pages)
-        assert out.count() == pages.count()
-        n_near = out.filter(
-            F.array_contains("final_failing_qc", "near_duplicate")
-        ).count()
-        assert n_near > 0
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def test_run_report_artifact(pipeline_out):
     """round-5 VERDICT #5: one consolidated QC-report artifact per run —
     manifests + flag-count checkpoints + ONE bounded cube agg; golden-
