@@ -14,8 +14,8 @@ serializable/round-trippable so a deployment can pin or swap it.
 Scoring is word-memoized (natural text reuses a small working set of
 word types, so the per-word merge loop runs once per TYPE per executor,
 not once per token) and ships through the same iterator-pandas-UDF /
-Arrow pattern as every other Python-side scorer here — optionally fused
-into the single-text-shipment ``with_text_scores`` pass.
+Arrow pattern as every other Python-side scorer here; the one entry
+point is :func:`~..operators.tokenize.with_bpe_token_count`.
 """
 
 from __future__ import annotations

@@ -10,8 +10,9 @@ The reference accumulates per-record failure reasons into
 * the final keep decision is "flag array is empty"
   (``shared/samples_qc.py:76-77``);
 * per-flag accounting is logged after every stage
-  (``shared/variant_qc.py:638-723``) — here done in ONE aggregation
-  job instead of one full scan per flag.
+  (``shared/variant_qc.py:638-723``) — here :func:`flag_count_df`, one
+  explode + aggregate instead of one full scan per flag (the pipeline
+  runner folds it into the checkpoint write via observed metrics).
 
 All combinators are pure Column expressions: no UDFs, no shuffles.
 """
@@ -35,40 +36,6 @@ def with_flag_column(df: DataFrame, flag_col: str) -> DataFrame:
     if flag_col in df.columns:
         return df
     return df.withColumn(flag_col, empty_flags())
-
-
-def append_flag(flags: Column, tag: str, pred: Column) -> Column:
-    """``hl.cond(pred, arr.append(tag), arr)`` analog (variant_qc.py:568-571).
-
-    NULL predicate does NOT append (Hail ``missing_false`` semantics):
-    callers that need missing-awareness use :func:`append_flag_with_missing`.
-    """
-    return F.when(F.coalesce(pred, F.lit(False)), F.array_append(flags, F.lit(tag))).otherwise(
-        flags
-    )
-
-
-def append_flag_with_missing(
-    flags: Column, tag: str, pred: Column, inputs: Iterable[Column]
-) -> Column:
-    """Append ``tag`` when pred is true, or ``missing_<tag>`` when any input is NULL.
-
-    Mirrors the reference's explicit missing-measure tagging
-    (``shared/variant_qc.py:573-575``): NULL metric ⇒ ``missing_*`` flag,
-    never a silent pass.
-    """
-    inputs = list(inputs)
-    any_missing = None
-    for c in inputs:
-        cond = c.isNull()
-        any_missing = cond if any_missing is None else (any_missing | cond)
-    if any_missing is None:
-        return append_flag(flags, tag, pred)
-    return (
-        F.when(any_missing, F.array_append(flags, F.lit(f"missing_{tag}")))
-        .when(F.coalesce(pred, F.lit(False)), F.array_append(flags, F.lit(tag)))
-        .otherwise(flags)
-    )
 
 
 def flag_entry(tag: str, pred: Column, inputs: Iterable[Column] | None = None) -> Column:
@@ -157,27 +124,6 @@ def keep_expr(*flag_cols: str) -> Column:
     for c in flag_cols:
         out = out & (F.size(F.col(c)) == 0)
     return out
-
-
-def count_flags(df: DataFrame, flag_col: str, tags: Iterable[str] | None = None) -> dict[str, int]:
-    """Per-flag counts in a SINGLE job.
-
-    The reference's ``count_failing`` issues one full-scan aggregation per
-    flag ("Slow but useful", ``shared/variant_qc.py:119,129-160``); here all
-    tags are counted in one ``agg`` of many ``count_if`` expressions when the
-    tag set is known, else one explode+groupBy pass.
-    """
-    if tags is not None:
-        tags = list(tags)
-        aggs = [
-            F.count_if(F.array_contains(F.col(flag_col), t)).alias(t) for t in tags
-        ] + [F.count_if(F.size(F.col(flag_col)) == 0).alias("__passing__")]
-        row = df.agg(*aggs).collect()[0]
-        return {t: row[t] for t in tags} | {"__passing__": row["__passing__"]}
-    rows = (
-        df.select(F.explode(flag_col).alias("flag")).groupBy("flag").count().collect()
-    )
-    return {r["flag"]: r["count"] for r in rows}
 
 
 def flag_count_df(df: DataFrame, flag_col: str, group_cols: list[str] | None = None) -> DataFrame:

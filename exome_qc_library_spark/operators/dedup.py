@@ -29,7 +29,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.flags import add_flags
@@ -180,6 +180,41 @@ def _minhash_sig_batch(vals, a, b, chunk_hashes: int) -> list:
     return out
 
 
+def minhash_sketch(
+    df: DataFrame,
+    key_col: str = "url",
+    text_col: str = "text",
+    num_perm: int = 64,
+    shingle_n: int = 3,
+    seed: int = 42,
+    carry: tuple[Column, ...] = (),
+) -> DataFrame:
+    """The MinHash sketch table ``(k, *carry, sig)``: word shingles →
+    xxhash64 base hashes → vectorized signature UDF, one row per doc with
+    at least one shingle (NULL / empty text and shingle-less docs are
+    dropped). The one definition shared by batch s5
+    (:func:`minhash_candidate_pairs`) and streaming near-dup; ``carry``
+    adds columns such as an event time. No materialization barrier here —
+    the caller owns it.
+
+    Column-form pandas UDF, deliberately: the key column stays JVM-side
+    (only the hash arrays cross the Arrow boundary). A mapInArrow variant
+    measured equal-to-slightly-slower at 500k docs because it ships the
+    key through Python both ways; an array<int> downcast of the hashes
+    also LOST (the element-wise cast pass costs more than the bytes it
+    saves). A/B in BENCH.md round 5."""
+    base = df.filter(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
+    sk = base.select(
+        F.col(key_col).alias("k"),
+        *carry,
+        _minhash_sig_udf(num_perm, seed)(
+            shingle_hashes(word_shingles(F.col(text_col), shingle_n))
+        ).alias("sig"),
+    )
+    # shingle-less docs yield a NULL signature
+    return sk.filter(F.col("sig")[0].isNotNull())
+
+
 def capped_bucket_pairs(
     grouped: DataFrame, ks_col: str = "ks", dedup: bool = True
 ) -> DataFrame:
@@ -253,7 +288,6 @@ def minhash_candidate_pairs(
     # exactly once. localCheckpoint == the reference's checkpoint-after-
     # expensive-step (a parquet snapshot of the sketch table at cluster
     # scale).
-    base = df.filter(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
     if arithmetic:
         from ..functions.hashing import poly_shingle_hashes
 
@@ -262,30 +296,21 @@ def minhash_candidate_pairs(
         # same subtree, and interpreted HOFs get no common-subexpression
         # elimination — without the barrier the shingle fold re-runs
         # num_perm times per row (measured 62s → ~3s at 500 docs)
-        hs = base.select(
-            F.col(key_col).alias("k"),
-            poly_shingle_hashes(word_shingles(F.col(text_col), shingle_n)).alias("hs"),
-        ).localCheckpoint(eager=False)
-        sk = hs.select("k", minhash_signature(F.col("hs"), num_perm, seed).alias("sig"))
-    else:
-        # column-form pandas UDF, deliberately: the key column stays
-        # JVM-side (only the hash arrays cross the Arrow boundary). A
-        # mapInArrow variant measured equal-to-slightly-slower at 500k docs
-        # because it ships the key through Python both ways; an array<int>
-        # downcast of the hashes also LOST (the element-wise cast pass
-        # costs more than the bytes it saves). A/B in BENCH.md round 5.
-        sk = base.select(
-            F.col(key_col).alias("k"),
-            _minhash_sig_udf(num_perm, seed)(
-                shingle_hashes(word_shingles(F.col(text_col), shingle_n))
-            ).alias("sig"),
+        hs = (
+            df.filter(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
+            .select(
+                F.col(key_col).alias("k"),
+                poly_shingle_hashes(word_shingles(F.col(text_col), shingle_n)).alias("hs"),
+            )
+            .localCheckpoint(eager=False)
         )
-    sk = (
-        # drop shingle-less docs: UDF path yields sig NULL, expression path
-        # yields an array of NULL slots — sig[0] IS NULL catches both
-        sk.filter(F.col("sig")[0].isNotNull())
-        .localCheckpoint(eager=False)
-    )
+        # shingle-less docs yield an array of NULL slots here
+        sk = hs.select(
+            "k", minhash_signature(F.col("hs"), num_perm, seed).alias("sig")
+        ).filter(F.col("sig")[0].isNotNull())
+    else:
+        sk = minhash_sketch(df, key_col, text_col, num_perm, shingle_n, seed)
+    sk = sk.localCheckpoint(eager=False)
     # Band on the KEY only — the 8·num_perm-byte signature must not ride
     # through the bands-way exploded shuffle (at 50k docs that is ~450 MB of
     # shuffle for 26 MB of signatures; at 10^12 docs it is the bottleneck).

@@ -76,36 +76,14 @@ def _ppl_batch(texts: pd.Series, max_bytes: int = 4000) -> pd.Series:
     return pd.Series(out, dtype="float64")
 
 
-def score_text_udf(with_tokens: bool = False) -> Column:
+def score_text_udf() -> Column:
     """Combined model-scoring kernel: ONE Arrow transport of ``text`` for
     both language-ID (NB trigram, :func:`~.langid._score_batch`) and
     perplexity (:func:`_ppl_batch`). At 50k docs two separate UDFs cost
-    two full text shipments (~10s); combined, one (~7s).
-
-    ``with_tokens=True`` additionally emits ``n_tokens_bpe`` — the real
-    subword count from the deterministic embedded BPE (round-5 VERDICT
-    #6) — riding the SAME shipment, so token-budget mixing / sequence
-    packing get an honest weight column for free when asked."""
+    two full text shipments (~10s); combined, one (~7s)."""
     from .langid import _model as _lid_model, _score_batch as _lid_score
 
-    schema = "lang_id string, lang_conf double, perplexity double"
-    if with_tokens:
-        from ..functions.bpe import _ranks, count_tokens_batch
-
-        @F.pandas_udf(schema + ", n_tokens_bpe long")
-        def _udf_tok(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-            _lid_model()
-            _model()
-            _ranks()  # merge table once per executor process
-            for texts in it:
-                lid = _lid_score(texts)
-                lid["perplexity"] = _ppl_batch(texts)
-                lid["n_tokens_bpe"] = count_tokens_batch(texts)
-                yield lid
-
-        return _udf_tok
-
-    @F.pandas_udf(schema)
+    @F.pandas_udf("lang_id string, lang_conf double, perplexity double")
     def _udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
         _lid_model()
         _model()
@@ -117,26 +95,21 @@ def score_text_udf(with_tokens: bool = False) -> Column:
     return _udf
 
 
-def with_text_scores(
-    df: DataFrame, text_col: str = "text", with_tokens: bool = False, spread: bool = True
-) -> DataFrame:
-    if spread:
-        # the ArrowEvalPython scorer fuses into the scan stage; a scan whose
-        # parquet layout yields fewer row groups than cores would run the
-        # whole model pass on one core (no-op at real scale — see
-        # sources.readers.spread_scan). Hash on the text itself: always
-        # present, high-cardinality, deterministic under retry.
-        from ..sources.readers import spread_scan
+def with_text_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+    # the ArrowEvalPython scorer fuses into the scan stage; a scan whose
+    # parquet layout yields fewer row groups than cores would run the
+    # whole model pass on one core (no-op at real scale — see
+    # sources.readers.spread_scan). Hash on the text itself: always
+    # present, high-cardinality, deterministic under retry.
+    from ..sources.readers import spread_scan
 
-        df = spread_scan(df, text_col)
-    s = score_text_udf(with_tokens=with_tokens)(F.col(text_col))
+    df = spread_scan(df, text_col)
+    s = score_text_udf()(F.col(text_col))
     cols = {
         "lang_id": F.col("__sc.lang_id"),
         "lang_conf": F.col("__sc.lang_conf"),
         "perplexity": F.col("__sc.perplexity"),
     }
-    if with_tokens:
-        cols["n_tokens_bpe"] = F.col("__sc.n_tokens_bpe")
     return df.withColumn("__sc", s).withColumns(cols).drop("__sc")
 
 

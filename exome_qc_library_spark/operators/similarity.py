@@ -6,9 +6,10 @@ Target analog of the reference's PCA/projection linear algebra
 ``array<float>`` columns, expressed with ``zip_with``/``aggregate``
 higher-order functions (JVM-side, deterministic fold order).
 
-* :func:`cosine_topk_brute` — exact baseline: broadcast the (small) query
-  set, score every row, per-query top-k via window. One pass over the
-  corpus; the corpus is never self-joined.
+* :func:`cosine_topk_brute` — the one exact path (the ``embedding_topk``
+  query and its DuckDB oracle): broadcast the (small) query set, score
+  every row, per-query top-k via window. One pass over the corpus; the
+  corpus is never self-joined.
 * :func:`ivf_assign` / :func:`cosine_topk_ivf` — scale path: a learned
   k-means centroid table (:func:`train_centroids_kmeans`); each row scored
   only against its nearest-centroid bucket (inverted-file ANN), cutting
@@ -56,123 +57,6 @@ def cosine_topk_brute(
     )
 
 
-def cosine_topk_brute_np(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """BLAS-vectorized exact top-k: the PRODUCTION brute path.
-
-    Same semantics as :func:`cosine_topk_brute` (the oracle-mirrorable
-    expression form), but the per-row HOF cosine fold — interpreted, O(q·d)
-    expression nodes per corpus row — becomes one normalized matrix
-    multiply per Arrow batch (``C @ Qᵀ``). Queries are driver-collected
-    (small by contract — same bound as the broadcast in the expression
-    path). Per batch only the local top-k per query is emitted, so the
-    final shuffle carries ≤ batches·q·k candidate rows instead of N·q
-    scored rows; a per-query window reduces candidates to the global
-    top-k. Measured at 200k×64-d corpus, local[32]: 2.3× the expression
-    path at 8 queries, 6.7× at 64 (3.3→4.0 s numpy vs 7.5→26.7 s
-    expression — the numpy side is nearly query-count-free, so the gap
-    keeps widening). Ties break (cosine desc, neighbor_id asc) in both
-    the in-batch lexsort and the final window, matching the expression
-    path exactly.
-    """
-    q_rows = queries.select(id_col, vec_col).collect()
-    if not q_rows:
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
-        )
-    qids = np.array([r[id_col] for r in q_rows], dtype=np.int64)
-    # NULL / zero-norm query embeddings → cosine NULL against every
-    # neighbor (cosine_expr semantics); keep a validity mask instead of
-    # crashing on list(None) (round-6 review)
-    q_vecs = [r[vec_col] for r in q_rows]
-    q_valid = np.array(
-        [v is not None and float(np.linalg.norm(np.asarray(list(v)))) > 0.0 for v in q_vecs],
-        dtype=bool,
-    )
-    dim = next((len(list(v)) for v in q_vecs if v is not None), 1)
-    Q = np.array(
-        [list(v) if v is not None else [0.0] * dim for v in q_vecs], dtype=np.float64
-    )
-    Qn = Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-300)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vecs = list(pdf[vec_col])
-            c_valid = np.array([v is not None for v in vecs], dtype=bool)
-            if c_valid.any():
-                C = np.array(
-                    [list(vecs[i]) for i in np.flatnonzero(c_valid)], dtype=np.float64
-                )
-                norms = np.linalg.norm(C, axis=1, keepdims=True)
-                c_valid[np.flatnonzero(c_valid)[norms[:, 0] == 0.0]] = False
-                Cn = C[norms[:, 0] > 0.0] / norms[norms[:, 0] > 0.0]
-                vids = ids[c_valid]
-                S = Cn @ Qn.T  # (valid batch rows × queries) cosine matrix
-            else:
-                vids = np.empty(0, dtype=np.int64)
-                S = np.empty((0, len(qids)))
-            # invalid rows (NULL embedding or zero norm) carry cosine NULL
-            # in the expression path — NULLS LAST under desc, tie-broken by
-            # id asc — so emit the k smallest-id invalid rows as NULL
-            # candidates and let the final window merge them behind every
-            # scored row, matching cosine_expr exactly
-            nulls_ids = np.sort(ids[~c_valid])
-            out_q: list[int] = []
-            out_n: list[int] = []
-            out_c: list[float | None] = []
-            for j in range(len(qids)):
-                if q_valid[j]:
-                    col = S[:, j]
-                    order = np.lexsort((vids, -col))  # cosine desc, id asc
-                    taken = 0
-                    for i in order:
-                        if vids[i] == qids[j]:
-                            continue
-                        out_q.append(int(qids[j]))
-                        out_n.append(int(vids[i]))
-                        out_c.append(float(col[i]))
-                        taken += 1
-                        if taken >= k:
-                            break
-                    null_pool = nulls_ids
-                else:
-                    # invalid query: EVERY neighbor scores NULL
-                    null_pool = np.sort(ids)
-                taken = 0
-                for nid in null_pool:
-                    if nid == qids[j]:
-                        continue
-                    out_q.append(int(qids[j]))
-                    out_n.append(int(nid))
-                    out_c.append(None)
-                    taken += 1
-                    if taken >= k:
-                        break
-            out = pd.DataFrame({"query_id": out_q, "neighbor_id": out_n})
-            # nullable Float64 → Arrow nulls (plain float64 would turn None
-            # into NaN, which sorts FIRST under desc in Spark — wrong side)
-            out["cosine"] = pd.array(out_c, dtype="Float64")
-            yield out
-
-    cand = corpus.select(id_col, vec_col).mapInPandas(
-        batches, schema="query_id long, neighbor_id long, cosine double"
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
-
-
 def ivf_assign(
     df: DataFrame,
     centroids: DataFrame,
@@ -201,8 +85,7 @@ def ivf_assign(
       zero shuffle, zero window, zero Python.
     * larger models — Arrow-batched ``mapInPandas`` with one normalized
       matrix multiply per batch against the broadcast-by-closure centroid
-      matrix (same pattern as :func:`cosine_topk_brute_np`); still
-      row-local with no Exchange/Window.
+      matrix; still row-local with no Exchange/Window.
 
     Both paths break ties to the smallest centroid id; rows whose vector
     is NULL or zero-norm assign to the smallest id (all similarities

@@ -54,9 +54,8 @@ def with_bpe_token_count(
     (``functions.bpe`` — round-5 VERDICT #6): the honest weight column
     for ``token_budget_sample`` / ``assign_packing_bins``, as opposed to
     the regex estimates above. Iterator pandas UDF, merge table built
-    once per executor, word-type-memoized encode. Also reachable fused
-    into the single-text-shipment scorer via
-    ``with_text_scores(..., with_tokens=True)``."""
+    once per executor, word-type-memoized encode. The one way to get
+    ``n_tokens_bpe``."""
     from ..functions.bpe import _ranks, count_tokens_batch
 
     @F.pandas_udf("long")

@@ -18,7 +18,6 @@ from __future__ import annotations
 import math
 import os
 import shutil
-from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -85,24 +84,6 @@ class CheckpointStore:
             manifest["rows"] = out.count()
             self.fmt.update_manifest(path, manifest)
         return out
-
-    def stage(
-        self,
-        name: str,
-        fn: Callable[[DataFrame], DataFrame],
-        upstream: DataFrame,
-        params: dict[str, Any] | None = None,
-        parent: str | None = None,
-        partition_by: list[str] | None = None,
-    ) -> DataFrame:
-        """Run-or-resume: if the checkpoint exists, read it and skip the
-        computation (the reference's per-stage gating loop,
-        ``exome_qc/exome_qc.py:116-117``)."""
-        if self.exists(name):
-            return self.read(name)
-        return self.write(
-            fn(upstream), name, params=params, parent=parent, partition_by=partition_by
-        )
 
     def compact(
         self, stage: str, target_file_bytes: int = 128 * 1024 * 1024

@@ -16,7 +16,9 @@ Parity targets (SURVEY.md §2.1):
 
 from __future__ import annotations
 
+import hashlib
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,9 +68,14 @@ def read_testdata_table(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-# (files tuple) → row-group count, counted only up to the cores it must
-# cover; footer reads are driver-side metadata, cached per file set
-_SCAN_UNITS_CACHE: dict[tuple[str, ...], int] = {}
+# (file-list digest, cores) → row-group count, counted only up to the
+# cores it must cover; footer reads are driver-side metadata, cached per
+# file set under a fixed-size key
+_SCAN_UNITS_CACHE: dict[tuple[str, int], int] = {}
+# footers read per scan at most: a table with more files than this is
+# production-shaped, and probing every footer would cost a driver-side
+# round-trip per file
+_MAX_PROBED_FILES = 256
 
 
 def _parquet_scan_units(files: tuple[str, ...], cap: int) -> int:
@@ -79,38 +86,43 @@ def _parquet_scan_units(files: tuple[str, ...], cap: int) -> int:
     so a table written as one file with one row group is read by ONE task
     regardless of ``maxPartitionBytes``. Only the file footers can reveal
     this — partition counts cannot (the empty byte-range splits still
-    exist)."""
+    exist).
+
+    ``files`` are the URIs ``inputFiles()`` returns, percent-encoded
+    (``file:///data/sp%20ace/part-0.parquet``); they are decoded before
+    the footer read. A list with any non-local URI, or with more than
+    ``_MAX_PROBED_FILES`` files, counts as adequately split (``cap``)
+    without reading a footer: a remote round-trip per file is not worth
+    it, and real deployments write many files and row groups."""
     import pyarrow.parquet as pq
 
+    if len(files) > _MAX_PROBED_FILES:
+        return cap
+    uris = [urlparse(f) for f in files]
+    if any(u.scheme not in ("", "file") or u.netloc for u in uris):
+        return cap
     total = 0
-    for f in files:
-        local = f[len("file:"):] if f.startswith("file:") else f
-        if "://" in local:
-            # non-local URI — footer probing is not worth a remote
-            # round-trip; treat as adequately split (real deployments
-            # write many files/row groups)
-            return cap
-        total += pq.ParquetFile(local).metadata.num_row_groups
+    for u in uris:
+        total += pq.ParquetFile(unquote(u.path)).metadata.num_row_groups
         if total >= cap:
             break
     return total
 
 
-def spread_scan(
-    df: DataFrame, *key_cols: str, parallelism: int | None = None
-) -> DataFrame:
+def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     """Repartition a scan whose parquet layout under-parallelizes it.
 
     Scale-adaptive (guide §2.5 "input skew — one huge unsplittable file"):
     the decision derives from the input's actual layout, not a constant.
-    When the scan already yields at least ``parallelism`` row groups —
-    i.e. any production-scale table — this is a NO-OP and no exchange is
-    added. Only when the layout would idle the cluster (fewer row groups
-    than cores, e.g. a single-row-group export) does it insert one hash
-    repartition on ``key_cols`` so every downstream projection fused into
-    the scan stage runs wide instead of on one core. Hash-on-a-key (vs
-    round-robin) avoids the sort-before-repartition local sort AND is
-    deterministic under task retry; pass a high-cardinality key.
+    When the scan already yields at least as many row groups as the
+    session's ``defaultParallelism`` — i.e. any production-scale table —
+    this is a NO-OP and no exchange is added. Only when the layout would
+    idle the cluster (fewer row groups than cores, e.g. a
+    single-row-group export) does it insert one hash repartition on
+    ``key_cols`` so every downstream projection fused into the scan stage
+    runs wide instead of on one core. Hash-on-a-key (vs round-robin)
+    avoids the sort-before-repartition local sort AND is deterministic
+    under task retry; pass a high-cardinality key.
 
     Use ONLY where heavy per-row work would otherwise fuse into the scan
     stage. A query whose first operation is already an exchange (groupBy,
@@ -119,14 +131,14 @@ def spread_scan(
     """
     if df.isStreaming:
         return df
-    n = parallelism or df.sparkSession.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     if n <= 1:
         return df
     try:
         files = tuple(sorted(df.inputFiles()))
         if not files:
             return df
-        key = (*files, str(n))
+        key = (hashlib.sha256("\n".join(files).encode()).hexdigest(), n)
         units = _SCAN_UNITS_CACHE.get(key)
         if units is None:
             units = _parquet_scan_units(files, n)

@@ -218,28 +218,22 @@ def streaming_near_dup_matches(
     standard dedup-window trade every streaming deduper makes, cf.
     ``dropDuplicatesWithinWatermark`` in
     :func:`streaming_exact_dedup`). Default ``None`` keeps the full
-    horizon (NoTimeout). The signature UDF is the batch kernel
-    (Arrow-vectorized); only band keys and the csv signature ride the
-    state store.
+    horizon (NoTimeout). The sketch is the batch one
+    (:func:`~..operators.dedup.minhash_sketch`, Arrow-vectorized); only
+    band keys and the csv signature ride the state store.
     """
     import numpy as np
 
-    from ..functions.hashing import lsh_band_keys, shingle_hashes, word_shingles
-    from ..operators.dedup import _minhash_sig_udf
+    from ..functions.hashing import lsh_band_keys
+    from ..operators.dedup import minhash_sketch
 
     if num_perm % bands != 0:
         # same guard as minhash_candidate_pairs: a remainder would leave
         # computed-but-never-banded signature slots (silent recall loss)
         raise ValueError(f"num_perm ({num_perm}) must be divisible by bands ({bands})")
     rows_per_band = num_perm // bands
-    base = pages.filter(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
-    sk = base.select(
-        F.col(key_col).alias("k"),
-        F.col(time_col).alias("ts"),
-        _minhash_sig_udf(num_perm, seed)(
-            shingle_hashes(word_shingles(F.col(text_col), shingle_n))
-        ).alias("sig"),
-    ).filter(F.col("sig")[0].isNotNull())
+    ts = F.col(time_col).alias("ts")
+    sk = minhash_sketch(pages, key_col, text_col, num_perm, shingle_n, seed, carry=(ts,))
     exploded = sk.select(
         "k",
         "ts",
@@ -257,7 +251,7 @@ def streaming_near_dup_matches(
         # a NULL event time reaches update() as NaT (int64-min), which
         # would compute a far-past timeout and kill the query when
         # setTimeoutTimestamp rejects it (round-5 ADVICE) — TTL mode
-        # requires an event time, mirroring the text-null filter above
+        # requires an event time, mirroring the sketch's text-null filter
         exploded = exploded.filter(F.col("ts").isNotNull()).withWatermark(
             "ts", watermark_delay
         )

@@ -8,7 +8,6 @@ import pyspark.sql.functions as F
 
 from exome_qc_library_spark.functions.flags import (
     add_flags,
-    count_flags,
     flag_count_df,
     keep_expr,
     with_flag_column,
@@ -62,10 +61,9 @@ def test_count_flags_single_pass(spark):
     df = add_flags(
         _df(spark), "fl", {"big": F.col("metric") > 50, "tiny": F.col("metric") < 8}
     )
-    counts = count_flags(df, "fl", tags=["big", "tiny"])
-    assert counts == {"big": 1, "tiny": 1, "__passing__": 2}
-    generic = count_flags(df, "fl")
-    assert generic == {"big": 1, "tiny": 1}
+    counts = {r["flag"]: r["n"] for r in flag_count_df(df, "fl").collect()}
+    # per-tag counts plus the flagless rows under the NULL flag
+    assert counts == {"big": 1, "tiny": 1, None: 2}
 
 
 def test_flag_count_df_grouped(spark):

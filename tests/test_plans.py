@@ -138,3 +138,33 @@ def test_embedding_topk_registry_legs(spark, sf):
         .collect()
     }
     assert legs == {"brute": (15, 5), "ivf": (15, 5)}
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_media_dims_registry_legs(spark, sf):
+    """The registry's ``media_dims`` row is a union of 7
+    payload kinds, each parsed by its own leg. Every kind must have rows,
+    and each of its rows non-NULL values in the fields its parser fills,
+    so a dropped leg cannot hide behind a green oracle row."""
+    own = {
+        "png": ("width", "height"),
+        "jpeg": ("width", "height"),
+        "gif": ("width", "height"),
+        "webp_vp8": ("width", "height"),
+        "webp_vp8l": ("width", "height"),
+        "wav": ("sample_rate", "channels"),
+        "mp4": ("timescale", "duration_ms"),
+    }
+    fields = sorted({f for fs in own.values() for f in fs})
+    df = q("media_dims", spark, os.path.join(os.path.dirname(SF), sf))
+    legs = {
+        r["kind"]: r
+        for r in df.groupBy("kind")
+        .agg(F.count(F.lit(1)).alias("n"), *[F.count(f).alias(f) for f in fields])
+        .collect()
+    }
+    assert set(legs) == set(own)
+    for kind, kind_fields in own.items():
+        assert legs[kind]["n"] > 0, kind
+        for f in kind_fields:
+            assert legs[kind][f] == legs[kind]["n"], (kind, f)

@@ -4,7 +4,6 @@ import pyspark.sql.functions as F
 
 from exome_qc_library_spark.operators.similarity import (
     cosine_topk_brute,
-    cosine_topk_brute_np,
     cosine_topk_ivf,
     embedding_near_dup_pairs,
     ivf_assign,
@@ -30,29 +29,6 @@ def test_brute_topk(spark):
     assert got[0][0] == 1  # closest to e1 is the slightly rotated e1
     assert len(got) == 2
     assert all(-1.0001 <= r["cosine"] <= 1.0001 for r in out)
-
-
-def test_numpy_brute_matches_expression_brute(spark):
-    # the BLAS production path must return the same neighbors/ranks as the
-    # oracle-mirrorable expression path (ties broken identically)
-    df = _vecs(spark)
-    q = df.filter("vec_id < 3")
-    a = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], round(r["cosine"], 9))
-        for r in cosine_topk_brute(df, q, k=3).collect()
-    }
-    b = {
-        (r["query_id"], r["rank"]): (r["neighbor_id"], round(r["cosine"], 9))
-        for r in cosine_topk_brute_np(df, q, k=3).collect()
-    }
-    assert {k: v[0] for k, v in a.items()} == {k: v[0] for k, v in b.items()}
-    for key in a:
-        assert abs(a[key][1] - b[key][1]) < 1e-9
-
-
-def test_numpy_brute_empty_queries(spark):
-    out = cosine_topk_brute_np(_vecs(spark), _vecs(spark).filter("vec_id < 0"), k=3)
-    assert out.count() == 0
 
 
 def test_ivf_matches_brute_on_separated_clusters(spark):
@@ -272,10 +248,9 @@ def test_kmeans_ivf_recall(spark):
 
 
 def test_numpy_brute_matches_expression_with_null_and_zero_vectors(spark):
-    """Round-6 review: the BLAS path crashed on NULL embeddings and gave
-    zero-norm vectors cosine 0.0 where cosine_expr gives NULL. Both paths
-    must agree row-for-row with NULL embeddings, zero-norm vectors (both
-    sides), and k larger than the valid-neighbor count (NULL fill-in)."""
+    """NULL embeddings, zero-norm vectors (both sides) and
+    k larger than the valid-neighbor count (NULL fill-in) must follow
+    cosine_expr semantics: NULL cosine, NULLS LAST, ties by id."""
     rows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
         (1, [-1.0, 0.0, 0.0, 0.0]),   # opposite the query: cosine -1
@@ -292,20 +267,7 @@ def test_numpy_brute_matches_expression_with_null_and_zero_vectors(spark):
         )
         for r in cosine_topk_brute(df, q, k=4).collect()
     }
-    b = {
-        (r["query_id"], r["rank"]): (
-            r["neighbor_id"],
-            None if r["cosine"] is None else round(r["cosine"], 9),
-        )
-        for r in cosine_topk_brute_np(df, q, k=4).collect()
-    }
-    assert set(a) == set(b)
-    for key in a:
-        assert a[key][0] == b[key][0], (key, a[key], b[key])
-        av, bv = a[key][1], b[key][1]
-        assert (av is None) == (bv is None)
-        if av is not None:
-            assert abs(av - bv) < 1e-9
+    assert set(a) == {(qid, r) for qid in (0, 2, 3) for r in (1, 2, 3, 4)}
     # the adversarial case from the review: for query 0 the zero-norm row
     # must NOT be promoted by a spurious 0.0 — valid neighbors (orthogonal
     # 0.0, then opposite -1.0) rank first, NULL-cosine rows (2, 3) fill
@@ -316,6 +278,9 @@ def test_numpy_brute_matches_expression_with_null_and_zero_vectors(spark):
         (2, None),
         (3, None),
     ]
+    # zero-norm and NULL queries: every neighbor scores NULL, ranked by id
+    assert [a[(2, r)] for r in (1, 2, 3, 4)] == [(0, None), (1, None), (3, None), (4, None)]
+    assert [a[(3, r)] for r in (1, 2, 3, 4)] == [(0, None), (1, None), (2, None), (4, None)]
 
 
 def test_kmeans_centroids_tolerate_null_embedding(spark):

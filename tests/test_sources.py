@@ -7,11 +7,14 @@ import tempfile
 
 import pyspark.sql.functions as F
 
+from exome_qc_library_spark.plans.pipeline import Pipeline, Stage
 from exome_qc_library_spark.sources.checkpoint import CheckpointStore
+from exome_qc_library_spark.sources import readers
 from exome_qc_library_spark.sources.readers import (
     import_delimited,
     interval_join,
     read_removal_list,
+    spread_scan,
 )
 
 
@@ -40,6 +43,64 @@ def test_interval_join(spark):
     assert out == {1: "low", 2: "mid", 3: None}
 
 
+def _one_row_group_table(spark, path):
+    """A 100-row table written as one file with one row group."""
+    spark.range(100).coalesce(1).write.parquet(str(path))
+    return spark.read.parquet(str(path))
+
+
+def test_spread_scan_repartitions_single_row_group_to_core_count(spark, tmp_path):
+    df = _one_row_group_table(spark, tmp_path / "t")
+    out = spread_scan(df, "id")
+    assert out is not df
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+    assert sorted(r["id"] for r in out.collect()) == list(range(100))
+
+
+def test_spread_scan_decodes_percent_encoded_paths(spark, tmp_path):
+    # inputFiles() returns file:///.../sp%20ace/part-...; the footer probe
+    # must read the decoded path instead of giving up on the scan
+    df = _one_row_group_table(spark, tmp_path / "sp ace" / "t")
+    assert any("%20" in f for f in df.inputFiles())
+    out = spread_scan(df, "id")
+    assert out is not df
+    assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def test_spread_scan_well_split_input_is_unchanged(spark, tmp_path):
+    n = spark.sparkContext.defaultParallelism
+    spark.range(1000).repartition(n).write.parquet(str(tmp_path / "t"))
+    df = spark.read.parquet(str(tmp_path / "t"))
+    assert spread_scan(df, "id") is df
+
+
+def test_spread_scan_no_input_files_or_streaming_is_unchanged(spark, tmp_path):
+    df = spark.range(10)
+    assert df.inputFiles() == []
+    assert spread_scan(df, "id") is df
+    _one_row_group_table(spark, tmp_path / "t")
+    stream = spark.readStream.schema("id long").parquet(str(tmp_path / "t"))
+    assert spread_scan(stream, "id") is stream
+
+
+def test_spread_scan_non_local_files_count_as_split(spark, tmp_path):
+    df = _one_row_group_table(spark, tmp_path / "t")
+    local = df.inputFiles()
+    for files in (["s3a://bucket/t/part-0.parquet"], [*local, "s3a://bucket/t/part-0.parquet"]):
+        df.inputFiles = lambda files=files: files
+        assert spread_scan(df, "id") is df
+        # no footer is read: the remote one could not be
+        assert readers._parquet_scan_units(tuple(files), 4) == 4
+
+
+def test_spread_scan_footer_probe_stops_at_file_bound(monkeypatch):
+    # past the bound the files count as split without a footer read (the
+    # paths below do not exist, so any read would raise)
+    monkeypatch.setattr(readers, "_MAX_PROBED_FILES", 2)
+    files = tuple(f"file:///nonexistent/part-{i}.parquet" for i in range(3))
+    assert readers._parquet_scan_units(files, 8) == 8
+
+
 def test_checkpoint_store_roundtrip(spark):
     root = tempfile.mkdtemp()
     store = CheckpointStore(spark, root)
@@ -51,14 +112,14 @@ def test_checkpoint_store_roundtrip(spark):
     assert man["rows"] == 2 and man["params"] == {"k": 1} and man["stage"] == "st1"
     assert {r["id"] for r in store.read("st1").collect()} == {1, 2}
 
-    # stage() resumes instead of recomputing
+    # a pipeline rerun resumes instead of recomputing
     calls = []
 
     def fn(d):
         calls.append(1)
         return d
 
-    store.stage("st1", fn, df)
+    Pipeline([Stage("st1", fn)], store).run(df)
     assert calls == []  # skipped — existence-gated
 
 
@@ -94,7 +155,7 @@ def test_compact_rewrites_small_files_and_preserves_content(spark):
     assert store.exists("stc")
     # resume path still short-circuits over the compacted snapshot
     calls = []
-    store.stage("stc", lambda d: calls.append(1) or d, df)
+    Pipeline([Stage("stc", lambda d: calls.append(1) or d)], store).run(df)
     assert calls == []
     # second compaction is a no-op
     rec2 = store.compact("stc", target_file_bytes=1 << 30)
