@@ -1247,7 +1247,7 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stable, overwritten, session-scoped + atexit-cleaned scratch root
     store = CheckpointStore(spark, _session_scratch(spark, "compact_store"))
     store.vacuum()  # clear any crash leftovers from a previous sweep
-    store.write(docs.repartition(16), "docs", count_rows=False)
+    store.write(docs.repartition(16), "docs")
     rec = store.compact("docs", target_file_bytes=1 << 30)
     if not (rec.get("compacted") and rec["files_after"] < rec["files_before"]):
         # explicit raise, not `assert`: the gate must survive python -O

@@ -12,7 +12,8 @@ The reference accumulates per-record failure reasons into
 * per-flag accounting is logged after every stage
   (``shared/variant_qc.py:638-723``) — here :func:`flag_count_df`, one
   explode + aggregate instead of one full scan per flag (the pipeline
-  runner folds it into the checkpoint write via observed metrics).
+  runner folds it into the checkpoint write via observed metrics and
+  records the counts in the stage's checkpoint manifest).
 
 All combinators are pure Column expressions: no UDFs, no shuffles.
 """
@@ -130,8 +131,9 @@ def flag_count_df(df: DataFrame, flag_col: str, group_cols: list[str] | None = N
     """Distributed per-flag (optionally per-group) accounting table.
 
     Analog of the per-stage ``count_failing`` reports
-    (``shared/variant_qc.py:638-723``), returned as a DataFrame so it can
-    be snapshotted next to the stage checkpoint.
+    (``shared/variant_qc.py:638-723``). The pipeline runner records the
+    same multiset in each stage's checkpoint manifest, scanning with this
+    table only when the observed counts cannot be used.
     """
     group_cols = group_cols or []
     return (

@@ -19,7 +19,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.flags import flag_count_df, flag_vocab
 from ..sources.checkpoint import CheckpointStore
@@ -35,6 +34,8 @@ def _attach_accounting_observation(out: DataFrame, acct_cols: tuple[str, ...]):
     scan per column afterwards. At 100 TB that removes two terminal-table
     scans per stage; on the bench it removes the accounting jobs + their
     driver gaps from the serial tail (round-5 job census, BENCH.md).
+    :func:`_flag_counts` turns the observed sums into the counts that the
+    stage's manifest records.
 
     Returns ``(observed_df, observation, plan)`` where ``plan`` maps each
     column to its (tag → metric alias) table, or ``(out, None, {})`` when
@@ -65,26 +66,27 @@ def _attach_accounting_observation(out: DataFrame, acct_cols: tuple[str, ...]):
     return out.observe(obs, *aggs), obs, plan
 
 
-def _accounting_df_from_metrics(
-    df: DataFrame, metrics: dict, ci: int, tag_alias: dict[str, str]
-) -> DataFrame | None:
-    """Rebuild the ``flag_count_df`` table from observed metrics; None when
-    the per-tag sums don't reconcile with the observed occurrence total
-    (an out-of-vocabulary tag slipped in → caller reruns the scan path)."""
-    counts = {t: int(metrics.get(a) or 0) for t, a in tag_alias.items()}
-    if sum(counts.values()) != int(metrics.get(f"c{ci}_total") or 0):
-        return None
-    rows = [(t, n) for t, n in counts.items() if n > 0]
-    empty = int(metrics.get(f"c{ci}_empty") or 0)
-    if empty > 0:
-        rows.append((None, empty))  # explode_outer's NULL row for flagless docs
-    schema = T.StructType(
-        [
-            T.StructField("flag", T.StringType(), True),
-            T.StructField("n", T.LongType(), False),
-        ]
-    )
-    return df.sparkSession.createDataFrame(rows, schema)
+def _flag_counts(written: DataFrame, col: str, obs, plan: dict) -> dict[str, int]:
+    """``{tag | "__none__": n}`` for ``col`` — the ``flag_count_df``
+    multiset, ``"__none__"`` counting flagless docs. Built from the
+    observation ``obs`` when the column has a vocabulary and the per-tag
+    sums reconcile with the observed occurrence total; otherwise (no
+    vocabulary, or an out-of-vocabulary tag slipped in) by scanning
+    ``written``."""
+    if col in plan:
+        ci, tag_alias = plan[col]
+        observed = obs.get
+        counts = {t: int(observed.get(a) or 0) for t, a in tag_alias.items()}
+        if sum(counts.values()) == int(observed.get(f"c{ci}_total") or 0):
+            out = {t: n for t, n in counts.items() if n > 0}
+            empty = int(observed.get(f"c{ci}_empty") or 0)
+            if empty > 0:
+                out["__none__"] = empty
+            return out
+    return {
+        (r["flag"] if r["flag"] is not None else "__none__"): r["n"]
+        for r in flag_count_df(written, col).collect()
+    }
 
 
 @dataclass
@@ -92,10 +94,10 @@ class Stage:
     name: str
     fn: Callable[[DataFrame], DataFrame]
     params: dict[str, Any] = field(default_factory=dict)
-    # flag column(s) to snapshot accounting for (the reference's per-stage
-    # count_failing reports, shared/variant_qc.py:638-723); only written
-    # when the stage materializes. A single name or None is normalized to
-    # a tuple on construction.
+    # flag column(s) whose per-tag counts the stage's manifest records (the
+    # reference's per-stage count_failing reports, shared/variant_qc.py:
+    # 638-723); only when the stage materializes. A single name or None is
+    # normalized to a tuple on construction.
     account_flags: str | tuple[str, ...] | None = None
     # materialize=False chains this stage lazily into the next checkpoint —
     # the reference checkpoints after EVERY step and flags the cost
@@ -108,12 +110,6 @@ class Stage:
             self.account_flags = (self.account_flags,)
         else:
             self.account_flags = tuple(self.account_flags or ())
-
-
-def _flag_counts_name(stage: str, i: int, col: str) -> str:
-    """Accounting checkpoint of the ``i``-th accounted column present in the
-    stage's output: the first takes the bare name, later ones a suffix."""
-    return f"{stage}__flag_counts" + ("" if i == 0 else f"_{col}")
 
 
 @dataclass
@@ -129,15 +125,6 @@ class Pipeline:
         self.stages = stages
         self.store = store
         self.results: list[StageResult] = []
-
-    def _write_flag_counts(self, st: Stage, i: int, col: str, counts: DataFrame) -> None:
-        self.store.write(
-            counts,
-            _flag_counts_name(st.name, i, col),
-            params={"of": st.name, "column": col},
-            parent=st.name,
-            count_rows=False,
-        )
 
     def _next_checkpoint_resumes(self, i: int, force_idx: int) -> bool:
         """True iff the next materialized stage at/after ``i`` will read its
@@ -167,14 +154,6 @@ class Pipeline:
         if from_stage is not None and from_stage not in names:
             raise ValueError(f"unknown stage {from_stage!r}")
         force_idx = names.index(from_stage) if from_stage is not None else len(names)
-        # row counting is one extra job per checkpoint; only the terminal
-        # stage needs it for the manifest (intermediate row counts are
-        # recoverable from parquet footers). Last MATERIALIZED stage by
-        # index (round-6 review: a name compare against stages[-1] was never
-        # True when the final stage is lazy, so no checkpoint recorded rows)
-        last_mat = max(
-            (j for j, s in enumerate(self.stages) if s.materialize), default=-1
-        )
         prev_name = None
         force = False
         pending_params: dict[str, Any] = {}
@@ -182,67 +161,54 @@ class Pipeline:
             if i >= force_idx:
                 force = True
             t0 = time.monotonic()
+            resumed = True
             if st.materialize and not force and self.store.exists(st.name):
                 df = self.store.read(st.name)
                 pending_params = {}
-                # backfill accounting checkpoints lost to a crash between
-                # the stage write and the flag-count writes (round-6
-                # review): resume would otherwise skip the stage and leave
-                # report() silently missing that stage's histograms forever
-                acct_cols = tuple(ac for ac in st.account_flags if ac in df.columns)
-                for ac_i, ac in enumerate(acct_cols):
-                    if not self.store.exists(_flag_counts_name(st.name, ac_i, ac)):
-                        self._write_flag_counts(st, ac_i, ac, flag_count_df(df, ac))
-                self.results.append(
-                    StageResult(st.name, True, time.monotonic() - t0, None)
-                )
             elif not st.materialize and self._next_checkpoint_resumes(i, force_idx):
                 # a lazy stage feeding a checkpoint that will be read back is
                 # a guaranteed no-op — skip fn entirely (stage functions may
                 # fire driver-side jobs at build time, e.g. the iterative
                 # outlier loop's per-round stats)
-                self.results.append(
-                    StageResult(st.name, True, time.monotonic() - t0, None)
-                )
+                pass
             else:
+                resumed = False
                 out = st.fn(df)
                 if st.materialize:
                     acct_cols = tuple(ac for ac in st.account_flags if ac in out.columns)
-                    obs, obs_plan = None, {}
+                    metrics = None
                     if acct_cols:
-                        out, obs, obs_plan = _attach_accounting_observation(
-                            out, acct_cols
-                        )
+                        out, obs, plan = _attach_accounting_observation(out, acct_cols)
+
+                        # called by store.write before it returns, between
+                        # the data write and the manifest commit
+                        def metrics(written: DataFrame) -> dict[str, Any]:
+                            return {
+                                "flag_counts": {
+                                    ac: _flag_counts(written, ac, obs, plan)
+                                    for ac in acct_cols
+                                }
+                            }
+
                     df = self.store.write(
                         out,
                         st.name,
                         params={**pending_params, st.name: st.params},
                         parent=prev_name,
-                        count_rows=i == last_mat,
+                        metrics=metrics,
                     )
                     pending_params = {}
-                    obs_metrics = obs.get if obs is not None else {}
-                    for ac_i, ac in enumerate(acct_cols):
-                        acct = None
-                        if ac in obs_plan:
-                            acct = _accounting_df_from_metrics(
-                                df, obs_metrics, *obs_plan[ac]
-                            )
-                        if acct is None:
-                            acct = flag_count_df(df, ac)
-                        self._write_flag_counts(st, ac_i, ac, acct)
-                    man = self.store.manifest(st.name) or {}
-                    rows = man.get("rows")
                 else:
                     # lazy stage: params fold into the next checkpoint's manifest
                     df = out
                     pending_params[st.name] = st.params
-                    rows = None
-                self.results.append(
-                    StageResult(st.name, False, time.monotonic() - t0, rows)
-                )
+            rows = None
             if st.materialize:
+                rows = (self.store.manifest(st.name) or {}).get("rows")
                 prev_name = st.name
+            self.results.append(
+                StageResult(st.name, resumed, time.monotonic() - t0, rows)
+            )
         return df
 
     def report(
@@ -263,10 +229,10 @@ class Pipeline:
         489-495``), emitted as ONE JSON artifact per pipeline run
         (round-5 VERDICT #5).
 
-        Cost contract: NO new table scans. Per-stage rows/params come from
-        the checkpoint manifests; per-stage flag histograms from the tiny
-        ``__flag_counts`` accounting checkpoints already written by
-        :meth:`run`; keep-rates by group and metric quantiles from ONE
+        Cost contract: NO new table scans and no reads of accounting
+        tables. Per-stage rows, params and flag histograms come from the
+        checkpoint manifests, where :meth:`run` committed them with each
+        stage's data; keep-rates by group and metric quantiles from ONE
         bounded ``cube`` aggregation over the terminal checkpoint
         (``grouping_id`` disambiguates cube margins from genuinely-NULL
         group values, e.g. the NULL ``lang_id`` of empty docs). Columns
@@ -295,24 +261,9 @@ class Pipeline:
                     "seconds": round(res.seconds, 3) if res else None,
                 }
             )
-            # run() suffixes checkpoint names from the declared tuple FILTERED
-            # to columns present in the stage output, so the name alone can't
-            # say which column a checkpoint counts — trust the manifest's
-            # recorded "column" param instead (falling back to the name-derived
-            # guess for pre-param stores).
-            candidates = {
-                _flag_counts_name(st.name, i, ac): ac
-                for i, ac in enumerate(st.account_flags)
-            }
-            for cname, name_guess in sorted(candidates.items()):
-                if not self.store.exists(cname):
-                    continue
-                cman = self.store.manifest(cname) or {}
-                col = (cman.get("params") or {}).get("column") or name_guess
-                flag_counts.setdefault(st.name, {})[col] = {
-                    (r["flag"] if r["flag"] is not None else "__none__"): r["n"]
-                    for r in self.store.read(cname).collect()
-                }
+            counts = (man.get("metrics") or {}).get("flag_counts")
+            if counts:
+                flag_counts[st.name] = counts
         df = self.store.read(term)
         gcols = [c for c in group_cols if c in df.columns]
         mcols = [c for c in metric_cols if c in df.columns]

@@ -9,8 +9,12 @@ already exists (``exome_qc/exome_qc.py:73,116-117,124,169`` +
 completed stage.
 
 Each checkpoint carries a manifest with stage id, parameters, parent
-stage (lineage), row count and optional per-flag metrics — the Spark
-replacement for Hail globals (``shared/variant_qc.py:775-781``).
+stage (lineage), row count and optional metrics such as the stage's
+per-flag counts — the Spark replacement for Hail globals
+(``shared/variant_qc.py:775-781``). All of them are observed by, or
+computed right after, the data write and committed with it in one
+manifest write, so a stage's recorded facts can never outlive or lag the
+data they describe.
 """
 
 from __future__ import annotations
@@ -18,9 +22,11 @@ from __future__ import annotations
 import math
 import os
 import shutil
+from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .table_format import ParquetManifestFormat, default_format
 
@@ -59,30 +65,41 @@ class CheckpointStore:
         stage: str,
         params: dict[str, Any] | None = None,
         parent: str | None = None,
-        metrics: dict[str, Any] | None = None,
+        metrics: Callable[[DataFrame], dict[str, Any]] | None = None,
         partition_by: list[str] | None = None,
-        count_rows: bool = True,
     ) -> DataFrame:
         """Materialize + manifest, then return the re-read DataFrame
-        (write-read barrier = lineage cut, exactly ``mt.checkpoint``)."""
+        (write-read barrier = lineage cut, exactly ``mt.checkpoint``).
+
+        The row count is a ``count(1)`` observation on the write job itself
+        (no extra job). ``metrics(written_df)``, when given, runs after the
+        data write and before the manifest commit, on the table as read
+        back; the dict it returns is stored as the manifest's ``metrics``.
+        The returned DataFrame is that same read-back (one read per write)."""
         path = self.path(stage)
-        meta: dict[str, Any] = {
-            "stage": stage,
-            "params": params or {},
-            "parent": parent,
-            "schema": df.schema.jsonValue(),
-        }
-        if metrics:
-            meta["metrics"] = metrics
-        # keep the dict write() returned: it carries the format-owned fields
-        # (format/path/partition_by) that must survive the row-count rewrite
-        # (round-1 ADVICE: rewriting from the pre-write meta dropped them)
-        manifest = self.fmt.write(df, path, metadata=meta, partition_by=partition_by)
-        out = self.fmt.read(self.spark, path)
-        if count_rows:
-            # cheap on parquet (footer statistics); recorded for accounting
-            manifest["rows"] = out.count()
-            self.fmt.update_manifest(path, manifest)
+        obs = Observation()
+        out: DataFrame | None = None
+
+        def manifest() -> dict[str, Any]:
+            nonlocal out
+            out = self.fmt.read(self.spark, path)
+            meta: dict[str, Any] = {
+                "stage": stage,
+                "params": params or {},
+                "parent": parent,
+                "schema": df.schema.jsonValue(),
+                "rows": obs.get["rows"],
+            }
+            if metrics is not None:
+                meta["metrics"] = metrics(out)
+            return meta
+
+        self.fmt.write(
+            df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            path,
+            metadata=manifest,
+            partition_by=partition_by,
+        )
         return out
 
     def compact(

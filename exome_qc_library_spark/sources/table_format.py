@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,29 +36,30 @@ class ParquetManifestFormat:
         self,
         df: DataFrame,
         path: str,
-        metadata: dict[str, Any] | None = None,
+        metadata: Callable[[], dict[str, Any]],
         partition_by: list[str] | None = None,
     ) -> dict[str, Any]:
+        """Write the data, then resolve ``metadata()`` and commit it as the
+        manifest. ``metadata`` runs after the data write and before the
+        commit, so facts observed by the write job (row count, flag counts)
+        land in the manifest's single write: manifest present ⇔ data
+        complete and its facts recorded."""
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
-        manifest = dict(metadata or {})
+        manifest = dict(metadata())
         manifest.setdefault("format", "parquet+manifest")
         manifest["path"] = path
         if partition_by:
             manifest["partition_by"] = partition_by
-        tmp = os.path.join(path, MANIFEST_NAME + ".tmp")
-        final = os.path.join(path, MANIFEST_NAME)
-        with open(tmp, "w") as f:
-            json.dump(manifest, f, indent=2, sort_keys=True, default=str)
-        os.replace(tmp, final)  # manifest presence == commit marker
+        self.update_manifest(path, manifest)  # manifest presence == commit marker
         return manifest
 
     def update_manifest(self, path: str, manifest: dict[str, Any]) -> None:
-        """Atomically rewrite the manifest (post-write enrichment, e.g. row
-        counts). Callers must pass the dict :meth:`write` returned so the
-        format-owned fields (format/path/partition_by) survive the rewrite."""
+        """Atomically (re)write the manifest. Callers rewriting a committed
+        manifest (``CheckpointStore.compact``) pass the dict read back, so
+        the format-owned fields (format/path/partition_by) survive."""
         tmp = os.path.join(path, MANIFEST_NAME + ".tmp")
         final = os.path.join(path, MANIFEST_NAME)
         with open(tmp, "w") as f:
@@ -112,22 +114,24 @@ class IcebergFormat:
     def _table(self, path: str) -> str:
         return path if "." in path else f"{self.catalog}.default.{path}"
 
-    def write(self, df, path, metadata=None, partition_by=None):
+    def write(self, df, path, metadata, partition_by=None):
+        """Two steps: ``createOrReplace`` commits the data, then the
+        resolved ``metadata()`` (which may read the new table) lands as
+        ``engine.*`` table properties via :meth:`update_manifest`."""
         self._spark = df.sparkSession
         writer = df.writeTo(self._table(path)).using("iceberg")
-        for k, v in (metadata or {}).items():
-            writer = writer.tableProperty(f"engine.{k}", json.dumps(v, default=str))
         writer.createOrReplace()
-        return dict(metadata or {}, format="iceberg", table=self._table(path))
+        manifest = dict(metadata(), format="iceberg", table=self._table(path))
+        self.update_manifest(path, manifest)
+        return manifest
 
     def read(self, spark, path):
         self._spark = spark
         return spark.read.format("iceberg").load(self._table(path))
 
     def update_manifest(self, path, manifest):
-        """Post-write enrichment (e.g. row counts) lands as ALTER TABLE SET
-        TBLPROPERTIES — keeps the manifest round-trip contract the pipeline
-        runner relies on (``Pipeline.run`` reads ``rows`` back)."""
+        """Manifest fields land as ALTER TABLE SET TBLPROPERTIES (the
+        format-owned ``format``/``table`` keys are derived, not stored)."""
         spark = self._session()
         if spark is None:
             return

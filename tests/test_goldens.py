@@ -1,6 +1,7 @@
 """Golden-fixture regression (FIXTURES.md §5, BASELINE.md targets):
-keep/drop F1 ≥ 0.99 and byte-identical scrubbed text per url vs the
-pinned run frozen by tools/freeze_goldens.py."""
+keep/drop F1 ≥ 0.99, byte-identical scrubbed text per url and the
+terminal stage's recorded flag counts vs the pinned run frozen by
+tools/freeze_goldens.py."""
 
 import os
 import shutil
@@ -13,16 +14,23 @@ GOLD = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 
 
 @pytest.fixture(scope="module")
-def fresh_run(spark, pages):
+def fresh_store(spark, pages):
+    """The checkpoint store of one cold pipeline run, and its output."""
     from exome_qc_library_spark.plans.quality_pipeline import build_quality_pipeline
     from exome_qc_library_spark.sources.checkpoint import CheckpointStore
 
     ck = tempfile.mkdtemp(prefix="gold_ck_")
-    out = build_quality_pipeline(CheckpointStore(spark, ck)).run(pages)
+    store = CheckpointStore(spark, ck)
+    out = build_quality_pipeline(store).run(pages)
     out = out.cache()
     out.count()
-    yield out
+    yield store, out
     shutil.rmtree(ck, ignore_errors=True)
+
+
+@pytest.fixture(scope="module")
+def fresh_run(fresh_store):
+    return fresh_store[1]
 
 
 def test_keep_f1_vs_golden(spark, fresh_run):
@@ -63,3 +71,15 @@ def test_scrubbed_text_byte_identical(spark, fresh_run):
         )
     ).count()
     assert mism == 0
+
+
+def test_flag_counts_match_golden(spark, fresh_store):
+    """The terminal manifest's ``low_pass_failing_qc`` counts (the observed
+    accounting path) equal the frozen ``flag_count_df`` multiset exactly."""
+    store, _ = fresh_store
+    gold = {
+        (r["flag"] if r["flag"] is not None else "__none__"): r["n"]
+        for r in spark.read.parquet(os.path.join(GOLD, "flag_counts.parquet")).collect()
+    }
+    recorded = store.manifest("s11_verdict")["metrics"]["flag_counts"]
+    assert recorded["low_pass_failing_qc"] == gold

@@ -5,6 +5,7 @@
 4. per-flag accounting is consistent.
 """
 
+import os
 import shutil
 import tempfile
 
@@ -16,6 +17,12 @@ from exome_qc_library_spark.plans.quality_pipeline import (
     summarize_verdicts,
 )
 from exome_qc_library_spark.sources.checkpoint import CheckpointStore
+
+
+def _recorded_counts(store, stage, col):
+    """The ``{tag | "__none__": n}`` counts of ``col`` that ``stage``'s
+    manifest records."""
+    return store.manifest(stage)["metrics"]["flag_counts"][col]
 
 
 @pytest.fixture(scope="module")
@@ -96,7 +103,7 @@ def test_s6_s10_stages_wired(pipeline_out):
 def test_s6_s10_flags_reach_final_accounting(spark, pages):
     # aggressive thresholds so both new stages actually fire on the synth
     # fixture; their tags must land in final_failing_qc AND in the terminal
-    # flag-count accounting checkpoint
+    # checkpoint manifest's flag counts
     root = tempfile.mkdtemp(prefix="ckpt_s6s10_")
     try:
         store = CheckpointStore(spark, root)
@@ -113,8 +120,7 @@ def test_s6_s10_flags_reach_final_accounting(spark, pages):
         }
         assert "metric_outlier" in fired
         assert "segment_outlier" in fired
-        acct = store.read("s11_verdict__flag_counts_final_failing_qc")
-        acct_flags = {r["flag"] for r in acct.collect()}
+        acct_flags = set(_recorded_counts(store, "s11_verdict", "final_failing_qc"))
         assert {"metric_outlier", "segment_outlier"} <= acct_flags
         # annotate-don't-drop still holds through the new stages
         assert out.count() == pages.count()
@@ -125,7 +131,7 @@ def test_s6_s10_flags_reach_final_accounting(spark, pages):
 def test_host_cap_and_cross_doc_line_stages_optional(spark, pages):
     # round-3 VERDICT #3: the curation operators are wire-able as pipeline
     # stages — with the knobs on, their tags land in the flag arrays AND
-    # in the terminal low_pass accounting checkpoint; row count holds
+    # in the terminal manifest's low_pass flag counts; row count holds
     root = tempfile.mkdtemp(prefix="ckpt_curation_")
     try:
         store = CheckpointStore(spark, root)
@@ -145,8 +151,9 @@ def test_host_cap_and_cross_doc_line_stages_optional(spark, pages):
         # copy anchor content verbatim (cross-doc shared lines fire)
         assert "host_over_cap" in fired
         assert "cross_doc_dup_lines" in fired
-        acct = store.read("s11_verdict__flag_counts")
-        acct_flags = {r["flag"] for r in acct.collect()}
+        acct_flags = set(
+            _recorded_counts(store, "s11_verdict", "low_pass_failing_qc")
+        )
         assert {"host_over_cap", "cross_doc_dup_lines"} <= acct_flags
         assert out.count() == pages.count()  # annotate-don't-drop
         # off by default: the baseline pipeline has neither stage
@@ -227,14 +234,24 @@ def test_observation_accounting_matches_scan_and_falls_back(spark, pages):
     # round-5: per-stage flag accounting rides the checkpoint-write job as
     # observed metrics when the column carries a flag_vocab (no second
     # scan); an out-of-vocabulary tag breaks reconciliation and the runner
-    # falls back to the explode+groupBy scan — both paths must emit the
-    # exact flag_count_df multiset, including the NULL row for flagless docs
+    # falls back to the explode+groupBy scan — both paths must record in
+    # the stage manifest the exact flag_count_df multiset, including the
+    # NULL ("__none__") row for flagless docs
     from exome_qc_library_spark.functions.flags import add_flags, flag_count_df
     from exome_qc_library_spark.plans.pipeline import Pipeline, Stage
 
     def _counts(df):
         return sorted(
             ((r["flag"], r["n"]) for r in df.collect()),
+            key=lambda t: (t[0] is None, t[0]),
+        )
+
+    def _recorded(store):
+        return sorted(
+            (
+                (None if f == "__none__" else f, n)
+                for f, n in _recorded_counts(store, "obs", "fl").items()
+            ),
             key=lambda t: (t[0] is None, t[0]),
         )
 
@@ -255,8 +272,7 @@ def test_observation_accounting_matches_scan_and_falls_back(spark, pages):
         store = CheckpointStore(spark, root)
         pipe = Pipeline([Stage("obs", _flag_stage, account_flags="fl")], store)
         out = pipe.run(pages)
-        acct = store.read("obs__flag_counts")
-        assert _counts(acct) == _counts(flag_count_df(out, "fl"))
+        assert _recorded(store) == _counts(flag_count_df(out, "fl"))
 
         # rogue append bypasses add_flags → vocab incomplete → reconcile
         # fails → scan fallback still records the rogue tag (twice per doc,
@@ -273,10 +289,11 @@ def test_observation_accounting_matches_scan_and_falls_back(spark, pages):
 
         store2 = CheckpointStore(spark, root + "_rogue")
         out2 = Pipeline([Stage("obs", _rogue, account_flags="fl")], store2).run(pages)
-        acct2 = store2.read("obs__flag_counts")
         expect2 = _counts(flag_count_df(out2, "fl"))
-        assert _counts(acct2) == expect2
-        assert ("rogue", next(n for f, n in expect2 if f == "rogue")) in _counts(acct2)
+        assert _recorded(store2) == expect2
+        assert ("rogue", next(n for f, n in expect2 if f == "rogue")) in _recorded(
+            store2
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
         shutil.rmtree(root + "_rogue", ignore_errors=True)
@@ -338,10 +355,9 @@ def test_strip_chrome_stage_optional(spark, pages):
 
 def test_run_report_artifact(pipeline_out):
     """round-5 VERDICT #5: one consolidated QC-report artifact per run —
-    manifests + flag-count checkpoints + ONE bounded cube agg; golden-
-    pinned on the deterministic fixture corpus."""
+    stage manifests + ONE bounded cube agg; golden-pinned on the
+    deterministic fixture corpus."""
     import json
-    import os
 
     pipe, out = pipeline_out["pipe"], pipeline_out["out"]
     rep = pipe.report()
@@ -352,6 +368,10 @@ def test_run_report_artifact(pipeline_out):
     # per-stage section covers every stage in order; terminal carries rows
     assert [s["name"] for s in rep["stages"]] == [s.name for s in pipe.stages]
     assert rep["stages"][-1]["rows"] == n
+    # every materialized stage's manifest records its own row count
+    for s in rep["stages"]:
+        if s["materialized"]:
+            assert s["rows"] == pipe.store.read(s["name"]).count(), s["name"]
     # keep-rate breakdown by language: every lang_id present incl. the
     # genuinely-NULL group (empty docs), disambiguated from cube margins
     langs = {
@@ -360,7 +380,7 @@ def test_run_report_artifact(pipeline_out):
     }
     assert set(rep["by"]["lang_id"]) == langs
     assert sum(b["rows"] for b in rep["by"]["lang_id"].values()) == n
-    # flag histograms come from the accounting checkpoints, not a rescan:
+    # flag histograms come from the stage manifests, not a rescan:
     # verdict stage accounts BOTH arrays
     v = rep["flag_counts"]["s11_verdict"]
     assert set(v) == {"low_pass_failing_qc", "final_failing_qc"}
@@ -378,11 +398,10 @@ def test_run_report_artifact(pipeline_out):
 
 
 def test_report_flag_counts_attribution_with_absent_declared_column(spark, pages):
-    """Round-6 review: run() suffixes flag-count checkpoint names from the
-    declared account_flags tuple FILTERED to columns present in the stage
-    output, so when a declared column is absent the unsuffixed checkpoint
-    holds the OTHER column's histogram. report() must attribute counts by
-    the manifest's recorded "column" param, never by tuple position."""
+    """Round-6 review: a declared account_flags column may be absent from
+    the stage output. Only the columns present are counted, and the
+    manifest keys each histogram by its column, so report() must never
+    attribute one column's counts to another by tuple position."""
     from exome_qc_library_spark.functions.flags import add_flags
     from exome_qc_library_spark.plans.pipeline import Pipeline, Stage
 
@@ -406,6 +425,87 @@ def test_report_flag_counts_attribution_with_absent_declared_column(spark, pages
         assert set(fc) == {"fl"}  # never misattributed to "ghost"
         n_short = out.filter(F.array_contains("fl", "short")).count()
         assert fc["fl"]["short"] == n_short
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_report_counts_follow_forced_rerun(spark, pages):
+    """A forced rerun of a stage replaces its recorded flag counts: run 1
+    emits columns a and b, the rerun only b with another threshold, and
+    report() must show exactly the rerun's b counts. The counts live in
+    the stage's own manifest, so no earlier run's counts outlive the data
+    they describe."""
+    from exome_qc_library_spark.functions.flags import add_flags, flag_count_df
+    from exome_qc_library_spark.plans.pipeline import Pipeline, Stage
+
+    def _both(df):
+        df = add_flags(df.select("url", "text"), "a", {"short": F.length("text") < 40})
+        return add_flags(df, "b", {"long": F.length("text") > 2000})
+
+    def _only_b(df):
+        return add_flags(
+            df.select("url", "text"), "b", {"long": F.length("text") > 1000}
+        )
+
+    root = tempfile.mkdtemp(prefix="ckpt_rerun_")
+    try:
+        store = CheckpointStore(spark, root)
+        Pipeline([Stage("obs", _both, account_flags=("a", "b"))], store).run(pages)
+        pipe = Pipeline([Stage("obs", _only_b, account_flags=("a", "b"))], store)
+        out = pipe.run(pages, from_stage="obs")
+        expect = {
+            (r["flag"] if r["flag"] is not None else "__none__"): r["n"]
+            for r in flag_count_df(out, "b").collect()
+        }
+        assert pipe.report(write_json=False)["flag_counts"]["obs"] == {"b": expect}
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_accounting_and_row_counts_add_no_jobs(spark, pages):
+    """Flag accounting and the manifest row count are observed by the
+    checkpoint's write job: a stage with accounted flags runs as many
+    Spark jobs as the same stage without, and ``store.write`` as many as a
+    plain parquet write plus the read back."""
+    from exome_qc_library_spark.functions.flags import add_flags
+    from exome_qc_library_spark.plans.pipeline import Pipeline, Stage
+
+    sc = spark.sparkContext
+
+    def n_jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land async
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def _stage(df):
+        return add_flags(df.select("url", "text"), "fl", {"short": F.length("text") < 40})
+
+    root = tempfile.mkdtemp(prefix="ckpt_jobs_")
+    try:
+
+        def run(acct):
+            store = CheckpointStore(spark, os.path.join(root, f"acct_{len(acct)}"))
+            Pipeline([Stage("obs", _stage, account_flags=acct)], store).run(pages)
+
+        assert n_jobs("acct_jobs_on", lambda: run(("fl",))) == n_jobs(
+            "acct_jobs_off", lambda: run(())
+        )
+
+        df = pages.select("url", "text")
+        store = CheckpointStore(spark, os.path.join(root, "store"))
+        plain = os.path.join(root, "plain")
+
+        def write_read():
+            df.write.parquet(plain)
+            spark.read.parquet(plain)
+
+        assert n_jobs("store_write", lambda: store.write(df, "x")) == n_jobs(
+            "plain_write", write_read
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

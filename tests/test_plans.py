@@ -141,6 +141,26 @@ def test_embedding_topk_registry_legs(spark, sf):
 
 
 @pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+def test_union_ops_registry_legs(spark, sf):
+    """The registry's ``union_ops`` row stacks an ``en`` and an ``fr``
+    slice of the ``union_cols`` recombination. Both legs must have rows,
+    no other language may leak in, and the overlapping column's ``_r``
+    copy must equal the original on every row."""
+    df = q("union_ops", spark, os.path.join(os.path.dirname(SF), sf))
+    legs = {
+        r["lang"]: (r["n"], r["n_diff"])
+        for r in df.groupBy("lang")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_if(~F.col("n_chars").eqNullSafe(F.col("n_chars_r"))).alias("n_diff"),
+        )
+        .collect()
+    }
+    assert set(legs) == {"en", "fr"}
+    assert all(n > 0 and n_diff == 0 for n, n_diff in legs.values()), legs
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
 def test_media_dims_registry_legs(spark, sf):
     """The registry's ``media_dims`` row is a union of 7
     payload kinds, each parsed by its own leg. Every kind must have rows,

@@ -270,7 +270,8 @@ def test_iceberg_backend_contract(spark):
 
     Pinned semantics: write→exists→read round-trip, createOrReplace
     overwrite, manifest round-trip through engine.* table properties
-    (incl. the post-write rows enrichment Pipeline.run relies on), and
+    (incl. the write-observed rows, set after createOrReplace by ALTER
+    TABLE, that Pipeline.run reads back), and
     compact() delegating to the catalog procedure via
     NotImplementedError."""
     import pytest

@@ -2,8 +2,9 @@
 
 Writes tests/goldens/{verdicts,scrubbed,flag_counts}.parquet from the
 deterministic synth pages table (seed 42, 300 docs — same fixture the
-test suite uses). tests/test_goldens.py asserts keep/drop F1 >= 0.99 and
-byte-identical scrubbed text per url against these.
+test suite uses). tests/test_goldens.py asserts keep/drop F1 >= 0.99,
+byte-identical scrubbed text per url and the s11_verdict manifest's
+low_pass_failing_qc flag counts against these.
 
 Regenerate ONLY on an intentional semantic change:
     PYTHONPATH=/root/repo python tools/freeze_goldens.py
