@@ -9,8 +9,14 @@ Headline workloads:
 * a set of operator queries from the driver contract run at
   ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1).
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default 32),
-SPARK_GRAFT_BENCH_DOCS (default 50000).
+Executor CPU (``pipeline_cpu_sec``) and the per-stage Spark work
+(``pipeline_stage_telemetry``: each stage's ``StageResult.telemetry``)
+are read from Spark's in-process status store through
+``exome_qc_library_spark.telemetry``, so the Spark UI stays off.
+
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (cores, default: the
+host's, as ``session.default_parallelism``), SPARK_GRAFT_BENCH_DOCS
+(default 50000).
 
 For the N-vs-4N scaling study (BASELINE.md protocol) run
 ``tools/bench_scaling.py`` which invokes this at two parallelism levels.
@@ -28,10 +34,9 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 BENCH_DOCS = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "50000"))
 # host kernel-storm classifier threshold (sys-cores over the pipeline
-# window) — keep in sync with tools/bench_scaling._is_storm
+# window); tools/bench_scaling.py reads the emitted ``storm`` field
 STORM_SYS_CORES = 4.0
 
 BENCH_QUERIES = [
@@ -65,31 +70,6 @@ def _text_scores_workload(spark, sf_dir):
 EXTRA_WORKLOADS = {"text_scores": _text_scores_workload}
 
 
-def _executor_cpu_seconds(spark) -> float | None:
-    """Cumulative executor CPU seconds across all completed stages, via the
-    local Spark UI REST API (round-4 VERDICT #2): task CPU time is what the
-    co-tenant scheduler CANNOT inflate — a task waiting for a stolen core
-    burns wall-clock, not CPU — so deltas of this counter give a
-    work-conservation estimator for the scaling study that shared-box
-    noise cannot fake. Returns None when the UI is unavailable."""
-    try:
-        import json as _json
-        import urllib.request
-
-        base = spark.sparkContext.uiWebUrl
-        if not base:
-            return None
-        with urllib.request.urlopen(f"{base}/api/v1/applications", timeout=5) as r:
-            app_id = _json.load(r)[0]["id"]
-        with urllib.request.urlopen(
-            f"{base}/api/v1/applications/{app_id}/stages", timeout=10
-        ) as r:
-            stages = _json.load(r)
-        return sum(st.get("executorCpuTime", 0) for st in stages) / 1e9
-    except Exception:  # noqa: BLE001 — bench must not die on a UI hiccup
-        return None
-
-
 def _host_cpu_jiffies() -> dict[str, int] | None:
     """Aggregate host CPU jiffies by kind from ``/proc/stat``. Deltas around
     the pipeline classify each run in place: a healthy run is user-dominated;
@@ -106,20 +86,15 @@ def _host_cpu_jiffies() -> dict[str, int] | None:
 
 
 def main() -> None:
+    from exome_qc_library_spark import telemetry
     from exome_qc_library_spark.entry_queries import QUERIES
     from exome_qc_library_spark.plans.quality_pipeline import build_quality_pipeline
-    from exome_qc_library_spark.session import build_session
+    from exome_qc_library_spark.session import build_session, default_parallelism
     from exome_qc_library_spark.sources.checkpoint import CheckpointStore
     from exome_qc_library_spark.synth import synthesize_pages
 
-    # the UI is off by default (session.py) — bench turns it on (ephemeral
-    # port) because the REST stage counters are where executor CPU time
-    # (the co-tenant-immune scaling estimator) is read from
-    spark = build_session(
-        app_name="bench",
-        parallelism=CPUS,
-        extra_conf={"spark.ui.enabled": "true", "spark.ui.port": "0"},
-    )
+    cores = default_parallelism()
+    spark = build_session(app_name="bench", parallelism=cores)
     timings: dict[str, float] = {}
 
     if os.environ.get("SPARK_GRAFT_WARMUP", "1") == "1":
@@ -165,21 +140,21 @@ def main() -> None:
         def run_pipeline() -> dict:
             ckpt_dir = tempfile.mkdtemp(prefix="bench_ckpt_")  # fresh: no resume
             try:
-                cpu0 = _executor_cpu_seconds(spark)
+                # executor CPU seconds of the window's jobs (round-4
+                # VERDICT #2): a task waiting for a stolen core burns
+                # wall-clock, not CPU, so co-tenant noise cannot fake it
+                window = telemetry.mark(spark)
                 host0 = _host_cpu_jiffies()
                 t0 = time.monotonic()
                 pipe = build_quality_pipeline(CheckpointStore(spark, ckpt_dir))
                 out = pipe.run(pages)
                 n_docs = out.count()
                 pipeline_sec = time.monotonic() - t0
-                cpu1 = _executor_cpu_seconds(spark)
                 host1 = _host_cpu_jiffies()
                 r = {
                     "pipeline_sec": pipeline_sec,
                     "n_docs": n_docs,
-                    "pipeline_cpu": round(cpu1 - cpu0, 3)
-                    if cpu0 is not None and cpu1 is not None
-                    else None,
+                    "pipeline_cpu": telemetry.since(spark, window)["cpu_s"],
                     "host_cpu": None,
                     "storm": None,
                     # stage-level breakdown (round-3 VERDICT #6): lazy stages
@@ -190,15 +165,15 @@ def main() -> None:
                     "stage_secs": {
                         s.name: round(s.seconds, 3) for s in pipe.results
                     },
+                    "stage_telemetry": {s.name: s.telemetry for s in pipe.results},
                 }
                 if host0 is not None and host1 is not None:
                     tick = os.sysconf("SC_CLK_TCK") or 100
                     r["host_cpu"] = {
                         k: round((host1[k] - host0[k]) / tick, 1) for k in host0
                     }
-                    # same classifier as tools/bench_scaling._is_storm: the
-                    # box's bimodal kernel-storm mode shows >4 sys-cores over
-                    # the run window; such a run measures the storm, not the
+                    # the box's bimodal kernel-storm mode shows >4 sys-cores
+                    # over the run window; such a run measures the storm, not the
                     # engine (round-5 VERDICT #7 — BENCH_r05's own headline
                     # was storm-classified but had no retry)
                     r["storm"] = (
@@ -241,6 +216,7 @@ def main() -> None:
                 "unit": "sec",
                 "queries": timings,
                 "pipeline_stages": res["stage_secs"],
+                "pipeline_stage_telemetry": res["stage_telemetry"],
                 "sf": SF_DIR.rstrip("/").split("sf")[-1],
                 "pipeline_docs": res["n_docs"],
                 "pipeline_docs_per_sec": round(res["n_docs"] / res["pipeline_sec"], 1),
@@ -248,7 +224,7 @@ def main() -> None:
                 "host_cpu_sec": res["host_cpu"],
                 "storm": res["storm"],
                 "storm_retried": storm_retried,
-                "parallelism": CPUS,
+                "parallelism": cores,
             }
         )
     )

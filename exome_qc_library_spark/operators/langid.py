@@ -50,16 +50,20 @@ def langid_expr(text: Column) -> Column:
     is the NB pandas UDF anyway (3.4× faster than either, see perplexity
     module); this expression form exists for the SQL oracle and small data.
     """
-    best = F.struct(
-        lang_density_expr(text, LANGS[0]).alias("lang_conf"),
-        F.lit(LANGS[0]).alias("lang_id"),
+    # max of (density, -position) is the argmax with earlier-wins ties;
+    # each density appears once, so the tree is linear in len(LANGS)
+    best = F.array_max(
+        F.array(
+            *[
+                F.struct(
+                    lang_density_expr(text, lang).alias("lang_conf"),
+                    F.lit(-i).alias("rank"),
+                    F.lit(lang).alias("lang_id"),
+                )
+                for i, lang in enumerate(LANGS)
+            ]
+        )
     )
-    for lang in LANGS[1:]:
-        d = lang_density_expr(text, lang)
-        best = F.when(
-            d > F.coalesce(best["lang_conf"], F.lit(-1.0)),
-            F.struct(d.alias("lang_conf"), F.lit(lang).alias("lang_id")),
-        ).otherwise(best)
     # no signal at all (empty/NULL text) → NULL prediction
     return F.when(
         best["lang_conf"].isNotNull(),

@@ -5,8 +5,11 @@ The Spark re-expression of the reference's driver loop
 stage gated on ``check_exists(stage_output)`` (``shared/utils.py:227-247``)
 — skip if present, else compute from the previous checkpoint and
 materialize. Stages are pure ``DataFrame → DataFrame`` functions;
-the runner owns materialization, manifests (params/lineage/metrics)
-and accounting, so stage code stays declarative for Catalyst.
+the runner owns materialization, manifests (params/lineage/metrics),
+accounting and telemetry, so stage code stays declarative for Catalyst.
+Telemetry is the Spark work of the jobs between a stage's start and end,
+folded from the status store by :mod:`~exome_qc_library_spark.telemetry`
+(no UI, no extra job) and committed with the data as ``metrics.telemetry``.
 """
 
 from __future__ import annotations
@@ -20,6 +23,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import telemetry
 from ..functions.flags import flag_count_df, flag_vocab
 from ..sources.checkpoint import CheckpointStore
 
@@ -118,6 +122,8 @@ class StageResult:
     resumed: bool
     seconds: float
     rows: int | None
+    # the Spark work of the stage's window of jobs (telemetry.FIELDS)
+    telemetry: dict[str, Any] | None = None
 
 
 class Pipeline:
@@ -149,6 +155,10 @@ class Pipeline:
         manifest to record its params in — they are visible only in the
         returned DataFrame's lineage. Keep the terminal stage materialized
         when the manifest record matters.
+
+        ``StageResult.telemetry`` covers a window of job ids; the runner
+        sets no job group, so callers' groups stay intact. A computed lazy
+        stage reports only the jobs its ``fn`` fires at build time.
         """
         names = [s.name for s in self.stages]
         if from_stage is not None and from_stage not in names:
@@ -157,10 +167,13 @@ class Pipeline:
         prev_name = None
         force = False
         pending_params: dict[str, Any] = {}
+        spark = self.store.spark
         for i, st in enumerate(self.stages):
             if i >= force_idx:
                 force = True
             t0 = time.monotonic()
+            window = telemetry.mark(spark)
+            tel: dict[str, Any] | None = None
             resumed = True
             if st.materialize and not force and self.store.exists(st.name):
                 df = self.store.read(st.name)
@@ -176,19 +189,21 @@ class Pipeline:
                 out = st.fn(df)
                 if st.materialize:
                     acct_cols = tuple(ac for ac in st.account_flags if ac in out.columns)
-                    metrics = None
                     if acct_cols:
                         out, obs, plan = _attach_accounting_observation(out, acct_cols)
 
-                        # called by store.write before it returns, between
-                        # the data write and the manifest commit
-                        def metrics(written: DataFrame) -> dict[str, Any]:
-                            return {
-                                "flag_counts": {
-                                    ac: _flag_counts(written, ac, obs, plan)
-                                    for ac in acct_cols
-                                }
+                    # called by store.write between the data write and the
+                    # manifest commit; folds last, so a fallback scan counts
+                    def metrics(written: DataFrame) -> dict[str, Any]:
+                        nonlocal tel
+                        m: dict[str, Any] = {}
+                        if acct_cols:
+                            m["flag_counts"] = {
+                                ac: _flag_counts(written, ac, obs, plan)
+                                for ac in acct_cols
                             }
+                        tel = m["telemetry"] = telemetry.since(spark, window)
+                        return m
 
                     df = self.store.write(
                         out,
@@ -206,8 +221,10 @@ class Pipeline:
             if st.materialize:
                 rows = (self.store.manifest(st.name) or {}).get("rows")
                 prev_name = st.name
+            if tel is None:
+                tel = telemetry.since(spark, window)
             self.results.append(
-                StageResult(st.name, resumed, time.monotonic() - t0, rows)
+                StageResult(st.name, resumed, time.monotonic() - t0, rows, tel)
             )
         return df
 
@@ -232,10 +249,13 @@ class Pipeline:
         Cost contract: NO new table scans and no reads of accounting
         tables. Per-stage rows, params and flag histograms come from the
         checkpoint manifests, where :meth:`run` committed them with each
-        stage's data; keep-rates by group and metric quantiles from ONE
-        bounded ``cube`` aggregation over the terminal checkpoint
-        (``grouping_id`` disambiguates cube margins from genuinely-NULL
-        group values, e.g. the NULL ``lang_id`` of empty docs). Columns
+        stage's data; per-stage ``telemetry`` is this run's
+        :attr:`StageResult.telemetry` from the status store (no scan, no
+        job; ``None`` for a stage that did not run); keep-rates by group
+        and metric quantiles from ONE bounded ``cube`` aggregation over
+        the terminal checkpoint (``grouping_id`` disambiguates cube margins
+        from genuinely-NULL group values, e.g. the NULL ``lang_id`` of
+        empty docs). Columns
         named in ``group_cols``/``metric_cols`` that the terminal table
         lacks are skipped, so the report composes with any stage list.
 
@@ -259,6 +279,7 @@ class Pipeline:
                     "params": st.params,
                     "resumed": res.resumed if res else None,
                     "seconds": round(res.seconds, 3) if res else None,
+                    "telemetry": res.telemetry if res else None,
                 }
             )
             counts = (man.get("metrics") or {}).get("flag_counts")

@@ -31,6 +31,19 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM``, else half of ``MemTotal`` capped at 48g.
+    In local mode the driver heap IS the executor heap (an 8g heap at
+    local[32] GC-thrashed on a 128 GiB host); the other half is left to the
+    Python workers (a fixed 48g heap on a 15 GiB host was OOM-killed)."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    with open("/proc/meminfo") as f:
+        kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(kib // 2 // 1024, 48 * 1024)}m"
+
+
 def build_session(
     app_name: str = "exome_qc_library_spark",
     parallelism: int | None = None,
@@ -55,10 +68,7 @@ def build_session(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # large text values → keep Arrow batches bounded (SURVEY.md §4.3)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # local mode: the driver heap IS the executor heap — size it to the
-        # box (128 GiB here). An 8g heap at local[32] GC-thrashes: measured
-        # SLOWER than local[8] on a 200k-doc run before this was raised.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         # checkpoint/export parquet codec. Text-heavy tables are where the
         # bytes are; on a bandwidth-bound host a denser codec trades cheap
         # CPU for the scarce resource (measured A/B in BENCH.md round 5).

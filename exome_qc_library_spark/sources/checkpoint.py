@@ -87,7 +87,9 @@ class CheckpointStore:
                 "stage": stage,
                 "params": params or {},
                 "parent": parent,
-                "schema": df.schema.jsonValue(),
+                # as read back: a resumed read uses it, so it sees exactly
+                # what this run's read-back saw (nullability, partition types)
+                "schema": out.schema.jsonValue(),
                 "rows": obs.get["rows"],
             }
             if metrics is not None:

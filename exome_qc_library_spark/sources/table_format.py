@@ -25,6 +25,7 @@ from collections.abc import Callable
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 MANIFEST_NAME = "_manifest.json"
 
@@ -67,7 +68,14 @@ class ParquetManifestFormat:
         os.replace(tmp, final)
 
     def read(self, spark: SparkSession, path: str) -> DataFrame:
-        return spark.read.parquet(path)
+        """The snapshot's data. A committed snapshot is read with the schema
+        its manifest records, which skips Spark's footer-inference job, so
+        resuming a stage runs no Spark job."""
+        man = self.read_manifest(path)
+        reader = spark.read
+        if man and "schema" in man:
+            reader = reader.schema(StructType.fromJson(man["schema"]))
+        return reader.parquet(path)
 
     def read_manifest(self, path: str) -> dict[str, Any] | None:
         p = os.path.join(path, MANIFEST_NAME)

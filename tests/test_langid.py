@@ -20,9 +20,27 @@ SENTENCES = [
 
 
 def test_expr_scorer_identifies_all(spark):
-    df = spark.createDataFrame(SENTENCES, "lang string, text string")
-    got = {r["lang"]: r["lang_id"] for r in with_langid_expr(df).collect()}
-    assert got == {lang: lang for lang, _ in SENTENCES}
+    # "der the": one German and one English stopword, an exact density tie
+    # that the earlier LANGS entry ("de" before "en") wins
+    tie = ("tie", "der the")
+    df = spark.createDataFrame(SENTENCES + [tie], "lang string, text string")
+    got = {r["lang"]: (r["lang_id"], r["lang_conf"]) for r in with_langid_expr(df).collect()}
+    assert got.pop("tie") == ("de", 0.5)
+    assert {k: v[0] for k, v in got.items()} == {lang: lang for lang, _ in SENTENCES}
+
+
+def test_langid_expr_grows_linearly_with_languages(spark, monkeypatch):
+    """Each language's density appears once in the expression tree: a
+    chain that references the running best twice per level doubles the
+    tree with every language (5 languages were ~44x one)."""
+    from exome_qc_library_spark.functions.lexicons import LANGS
+    from exome_qc_library_spark.operators import langid
+
+    def size(k):
+        monkeypatch.setattr(langid, "LANGS", LANGS[:k])
+        return len(str(langid.langid_expr(F.col("text"))))
+
+    assert size(5) <= 6 * size(1)
 
 
 def test_udf_scorer_identifies_all(spark):

@@ -5,6 +5,7 @@
 4. per-flag accounting is consistent.
 """
 
+import functools
 import os
 import shutil
 import tempfile
@@ -25,14 +26,37 @@ def _recorded_counts(store, stage, col):
     return store.manifest(stage)["metrics"]["flag_counts"][col]
 
 
+def _jobs_in_group(spark, group, fn):
+    """Run ``fn`` with every job it submits tagged ``group``; return the
+    number of jobs so tagged."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land async
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="module")
 def pipeline_out(spark, pages):
     root = tempfile.mkdtemp(prefix="ckpt_")
     store = CheckpointStore(spark, root)
     pipe = build_quality_pipeline(store)
-    out = pipe.run(pages)
+    runs = []  # the cold run, under a job group of the test's own
+    group_jobs = _jobs_in_group(spark, "cold", lambda: runs.append(pipe.run(pages)))
+    out = runs[0]
     out.cache().count()
-    yield {"out": out, "root": root, "pipe": pipe, "pages": pages, "spark": spark}
+    yield {
+        "out": out,
+        "root": root,
+        "pipe": pipe,
+        "pages": pages,
+        "spark": spark,
+        "group_jobs": group_jobs,
+        "cold_results": list(pipe.results),
+    }
     shutil.rmtree(root, ignore_errors=True)
 
 
@@ -68,8 +92,30 @@ def test_resume_reproduces_cold_run(pipeline_out):
     out2 = pipe2.run(pages.limit(0))
     mat = {s.name for s in pipe2.stages if s.materialize}
     assert all(r.resumed for r in pipe2.results if r.name in mat)
+    # resumed stages and the lazy stages they supersede run no Spark job
+    assert [r.telemetry["jobs"] for r in pipe2.results] == [0] * len(pipe2.stages)
     cols = ["url", "keep", "low_pass_failing_qc", "final_failing_qc", "scrubbed_text"]
     assert out.select(cols).exceptAll(out2.select(cols)).count() == 0
+
+
+def test_stage_telemetry_attributes_every_job(pipeline_out):
+    """A stage's telemetry folds the jobs submitted from its start to its
+    end, so the stages' job counts add up to every job of the cold run.
+    The fixture ran it under its own job group: the runner leaves callers'
+    groups alone and drops no job. Every computed materialized stage
+    commits its telemetry with its data."""
+    from exome_qc_library_spark.telemetry import FIELDS
+
+    results = pipeline_out["cold_results"]
+    assert pipeline_out["group_jobs"] > 0
+    assert sum(r.telemetry["jobs"] for r in results) == pipeline_out["group_jobs"]
+    assert all(set(r.telemetry) == set(FIELDS) for r in results)
+    pipe = pipeline_out["pipe"]
+    for st in pipe.stages:
+        if st.materialize:
+            tel = pipe.store.manifest(st.name)["metrics"]["telemetry"]
+            assert set(tel) == set(FIELDS), st.name
+            assert tel["jobs"] >= 1 and tel["cpu_s"] > 0, st.name
 
 
 def test_keep_rate_sane(pipeline_out):
@@ -367,6 +413,10 @@ def test_run_report_artifact(pipeline_out):
     assert rep["terminal_stage"] == "s11_verdict"
     # per-stage section covers every stage in order; terminal carries rows
     assert [s["name"] for s in rep["stages"]] == [s.name for s in pipe.stages]
+    # and every stage ran, so every one carries its telemetry
+    from exome_qc_library_spark.telemetry import FIELDS
+
+    assert all(set(s["telemetry"]) == set(FIELDS) for s in rep["stages"])
     assert rep["stages"][-1]["rows"] == n
     # every materialized stage's manifest records its own row count
     for s in rep["stages"]:
@@ -394,7 +444,9 @@ def test_run_report_artifact(pipeline_out):
     # artifact persisted next to the stage dirs and JSON-round-trips
     path = os.path.join(pipe.store.root, "report.json")
     with open(path) as fh:
-        assert json.load(fh)["totals"]["rows"] == n
+        saved = json.load(fh)
+    assert saved["totals"]["rows"] == n
+    assert [s["telemetry"] for s in saved["stages"]] == [s["telemetry"] for s in rep["stages"]]
 
 
 def test_report_flag_counts_attribution_with_absent_declared_column(spark, pages):
@@ -466,20 +518,13 @@ def test_accounting_and_row_counts_add_no_jobs(spark, pages):
     """Flag accounting and the manifest row count are observed by the
     checkpoint's write job: a stage with accounted flags runs as many
     Spark jobs as the same stage without, and ``store.write`` as many as a
-    plain parquet write plus the read back."""
+    plain parquet write plus the read back. The runner's stage telemetry
+    is read from the status store: a one-stage ``Pipeline.run`` runs as
+    many jobs as ``store.write`` of the stage's output."""
     from exome_qc_library_spark.functions.flags import add_flags
     from exome_qc_library_spark.plans.pipeline import Pipeline, Stage
 
-    sc = spark.sparkContext
-
-    def n_jobs(group, fn):
-        sc.setJobGroup(group, group)
-        try:
-            fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events land async
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+    n_jobs = functools.partial(_jobs_in_group, spark)
 
     def _stage(df):
         return add_flags(df.select("url", "text"), "fl", {"short": F.length("text") < 40})
@@ -505,6 +550,14 @@ def test_accounting_and_row_counts_add_no_jobs(spark, pages):
 
         assert n_jobs("store_write", lambda: store.write(df, "x")) == n_jobs(
             "plain_write", write_read
+        )
+
+        def one_stage_run():
+            run_store = CheckpointStore(spark, os.path.join(root, "run"))
+            Pipeline([Stage("y", _stage)], run_store).run(pages)
+
+        assert n_jobs("one_stage_run", one_stage_run) == n_jobs(
+            "direct_write", lambda: store.write(_stage(pages), "y")
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -1,7 +1,8 @@
 """N-vs-4N scaling study (BASELINE.md protocol, north-rule evidence).
 
-Runs bench.py as a subprocess at two parallelism levels (default 8 and
-32) on identical input + seeds, reports throughput at both and the
+Runs bench.py as a subprocess at two parallelism levels (default a
+quarter of the host's cores and all of them, e.g. 1 and 4 on a 4-core
+host) on identical input + seeds, reports throughput at both and the
 scaling efficiency  eff = (T_N / T_4N) / (4N / N), and verifies the
 determinism gate (pipeline output identical at both levels) separately
 in tests/test_pipeline.py.
@@ -18,14 +19,21 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-# N and 4N parallelism levels. The default 8→32 uses the whole 32-vCPU
-# socket at the top level; SPARK_GRAFT_LEVELS="4,16" runs the same
-# protocol at half envelope — on THIS single-socket box 32 threads share
+sys.path.insert(0, REPO)
+from exome_qc_library_spark.session import default_parallelism  # noqa: E402
+
+# N and 4N parallelism levels. The default uses every host core at the
+# top level; SPARK_GRAFT_LEVELS="4,16" on a 32-vCPU host runs the same
+# protocol at half envelope — on a single-socket box 32 threads share
 # one memory bus (the r5 CPU-inflation finding), whereas the north
 # rule's real topology (N → 4N executors) scales sockets and bandwidth
-# together, which the 4→16 variant models more faithfully.
+# together, which the half-envelope variant models more faithfully.
+_CORES = default_parallelism()
 LEVELS = tuple(
-    int(x) for x in os.environ.get("SPARK_GRAFT_LEVELS", "8,32").split(",")
+    int(x)
+    for x in os.environ.get(
+        "SPARK_GRAFT_LEVELS", f"{max(1, _CORES // 4)},{_CORES}"
+    ).split(",")
 )
 if len(LEVELS) != 2 or LEVELS[0] >= LEVELS[1]:
     # fail BEFORE the hour of benching, not at the `n, m = LEVELS` report.
@@ -80,7 +88,7 @@ def _synth_token() -> str:
 def synth_pages_once(docs: int) -> str:
     """Pre-synthesize the scaling corpus ONCE and return its parquet path:
     each level run then starts its timed section within seconds of launch
-    instead of after a ~1-2 min synth+write, so a whole 8/32 pair has a
+    instead of after a ~1-2 min synth+write, so a whole N/4N pair has a
     fighting chance of fitting inside one co-tenant valley. The path is
     keyed on (doc count, synthesizer-source hash) so a generator change
     can never silently benchmark against a stale corpus."""
@@ -94,7 +102,7 @@ import sys
 sys.path.insert(0, {REPO!r})
 from exome_qc_library_spark.session import build_session
 from exome_qc_library_spark.synth import synthesize_pages
-spark = build_session(parallelism=32, app_name="synth_scaling")
+spark = build_session(app_name="synth_scaling")
 synthesize_pages(spark, n_docs={docs}, seed=42, with_edge_cases=False).write.mode("overwrite").parquet({path!r})
 spark.stop()
 """
@@ -180,11 +188,6 @@ def _storm_cores(r: dict) -> float | None:
     return host.get("system", 0.0) / wall
 
 
-def _is_storm(r: dict, threshold: float = 4.0) -> bool | None:
-    c = _storm_cores(r)
-    return None if c is None else c > threshold
-
-
 def main() -> None:
     # this sandbox shares the machine with other tenants (observed 5×
     # run-to-run swings); interleaved repeats + per-level MINIMUM
@@ -220,7 +223,7 @@ def main() -> None:
                             if _storm_cores(r) is not None
                             else None
                         ),
-                        "storm": _is_storm(r),
+                        "storm": r.get("storm"),
                         "load_at_start": round(load0, 2),
                         "load_now": round(os.getloadavg()[0], 2),
                     }
@@ -231,7 +234,7 @@ def main() -> None:
     # a kernel storm measures the storm, not the engine); fall back to all
     # legs so the report never goes empty on an all-storm campaign
     def _clean(rs: list[dict]) -> list[dict]:
-        ok = [r for r in rs if _is_storm(r) is not True]
+        ok = [r for r in rs if r.get("storm") is not True]
         return ok or rs
 
     results = {
@@ -333,9 +336,9 @@ def main() -> None:
                 f"checkpoints); per-level minimum reported — this sandbox is "
                 f"shared with other tenants and single runs swing up to 5×. "
                 f"Each pair fires the instant 1-min load < "
-                f"{os.environ.get('SPARK_GRAFT_QUIET_LOAD', '3.0')}. Legs whose "
-                f"/proc/stat delta shows > 4 cores of kernel time are marked "
-                f"storm-afflicted and excluded from the minima when a clean leg "
+                f"{os.environ.get('SPARK_GRAFT_QUIET_LOAD', '3.0')}. Legs that "
+                f"bench.py classifies as kernel storms (its `storm` field) are "
+                f"excluded from the minima when a clean leg "
                 f"exists (all_sys_cores lists the per-leg kernel-time cores). "
                 f"All pipeline seconds:\n"
             )
