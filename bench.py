@@ -62,8 +62,10 @@ def _text_scores_workload(spark, sf_dir):
     import os as _os
 
     from exome_qc_library_spark.operators.perplexity import with_text_scores
+    from exome_qc_library_spark.sources.readers import spread_scan
 
     docs = spark.read.parquet(_os.path.join(sf_dir, "documents.parquet"))
+    docs = spread_scan(docs, "doc_id")
     return with_text_scores(docs).select("doc_id", "lang_id", "lang_conf", "perplexity")
 
 

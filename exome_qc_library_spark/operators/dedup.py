@@ -191,11 +191,17 @@ def minhash_sketch(
 ) -> DataFrame:
     """The MinHash sketch table ``(k, *carry, sig)``: word shingles →
     xxhash64 base hashes → vectorized signature UDF, one row per doc with
-    at least one shingle (NULL / empty text and shingle-less docs are
+    at least one shingle (NULL, empty and ASCII-whitespace-only text is
     dropped). The one definition shared by batch s5
     (:func:`minhash_candidate_pairs`) and streaming near-dup; ``carry``
     adds columns such as an event time. No materialization barrier here —
     the caller owns it.
+
+    The filter runs BEFORE the UDF, on the text: ``words_expr`` splits on
+    Java ``\\s+``, so a doc has a shingle iff its text has a non-``\\s``
+    character. A filter on the UDF's output instead would be inlined by
+    the optimizer (the UDF is deterministic), and the executed plan would
+    run the whole shingle + Arrow + kernel pass twice.
 
     Column-form pandas UDF, deliberately: the key column stays JVM-side
     (only the hash arrays cross the Arrow boundary). A mapInArrow variant
@@ -203,16 +209,13 @@ def minhash_sketch(
     key through Python both ways; an array<int> downcast of the hashes
     also LOST (the element-wise cast pass costs more than the bytes it
     saves). A/B in BENCH.md round 5."""
-    base = df.filter(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
-    sk = base.select(
+    return df.filter(F.col(text_col).rlike(r"\S")).select(
         F.col(key_col).alias("k"),
         *carry,
         _minhash_sig_udf(num_perm, seed)(
             shingle_hashes(word_shingles(F.col(text_col), shingle_n))
         ).alias("sig"),
     )
-    # shingle-less docs yield a NULL signature
-    return sk.filter(F.col("sig")[0].isNotNull())
 
 
 def capped_bucket_pairs(
@@ -283,11 +286,14 @@ def minhash_candidate_pairs(
     # ONE materialization barrier: the sketch table is reused three times
     # (banding + the two signature join-backs); WITHOUT the barrier
     # Catalyst's CollapseProject would inline the signature into every
-    # consumer — multiplicative recompute on long docs. The shingle-hash
-    # array needs no barrier of its own: the signature UDF consumes it
-    # exactly once. localCheckpoint == the reference's checkpoint-after-
-    # expensive-step (a parquet snapshot of the sketch table at cluster
-    # scale).
+    # consumer — multiplicative recompute on long docs. The barrier is
+    # EAGER: a lazy localCheckpoint is filled by whichever job completes
+    # first, and AQE submits the banding shuffle and both join-back
+    # shuffles as concurrent jobs, so each of them would compute the
+    # sketch. The shingle-hash array needs no barrier of its own: the
+    # signature UDF consumes it exactly once. localCheckpoint == the
+    # reference's checkpoint-after-expensive-step (a parquet snapshot of
+    # the sketch table at cluster scale).
     if arithmetic:
         from ..functions.hashing import poly_shingle_hashes
 
@@ -295,14 +301,15 @@ def minhash_candidate_pairs(
         # fan-out: each of the num_perm array_min branches references the
         # same subtree, and interpreted HOFs get no common-subexpression
         # elimination — without the barrier the shingle fold re-runs
-        # num_perm times per row (measured 62s → ~3s at 500 docs)
+        # num_perm times per row (measured 62s → ~3s at 500 docs); eager
+        # for the same concurrent-job reason as the sketch barrier below
         hs = (
             df.filter(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
             .select(
                 F.col(key_col).alias("k"),
                 poly_shingle_hashes(word_shingles(F.col(text_col), shingle_n)).alias("hs"),
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
         # shingle-less docs yield an array of NULL slots here
         sk = hs.select(
@@ -310,7 +317,7 @@ def minhash_candidate_pairs(
         ).filter(F.col("sig")[0].isNotNull())
     else:
         sk = minhash_sketch(df, key_col, text_col, num_perm, shingle_n, seed)
-    sk = sk.localCheckpoint(eager=False)
+    sk = sk.localCheckpoint()
     # Band on the KEY only — the 8·num_perm-byte signature must not ride
     # through the bands-way exploded shuffle (at 50k docs that is ~450 MB of
     # shuffle for 26 MB of signatures; at 10^12 docs it is the bottleneck).

@@ -96,14 +96,10 @@ def score_text_udf() -> Column:
 
 
 def with_text_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
-    # the ArrowEvalPython scorer fuses into the scan stage; a scan whose
-    # parquet layout yields fewer row groups than cores would run the
-    # whole model pass on one core (no-op at real scale — see
-    # sources.readers.spread_scan). Hash on the text itself: always
-    # present, high-cardinality, deterministic under retry.
-    from ..sources.readers import spread_scan
-
-    df = spread_scan(df, text_col)
+    # the ArrowEvalPython scorer fuses into its input's stage; the caller
+    # owns that stage's width (the pipeline's checkpoint reads are core-wide
+    # — sources.checkpoint.CheckpointStore.read; a raw table scan goes
+    # through sources.readers.spread_scan first)
     s = score_text_udf()(F.col(text_col))
     cols = {
         "lang_id": F.col("__sc.lang_id"),

@@ -28,7 +28,12 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from .readers import spread_scan
 from .table_format import ParquetManifestFormat, default_format
+
+
+def _core_wide(df: DataFrame) -> DataFrame:
+    return spread_scan(df, "url") if "url" in df.columns else df
 
 
 class CheckpointStore:
@@ -54,7 +59,12 @@ class CheckpointStore:
         return self.fmt.exists(self.spark, self.path(stage))
 
     def read(self, stage: str) -> DataFrame:
-        return self.fmt.read(self.spark, self.path(stage))
+        """The stage's snapshot, at core width: the store owns scan width,
+        so a snapshot written as fewer files than cores (small stages,
+        which AQE coalesces to one partition) is hash-spread on ``url``,
+        the record key every stage keeps, before the next stage's work
+        fuses into its scan. A table without ``url`` comes back as read."""
+        return _core_wide(self.fmt.read(self.spark, self.path(stage)))
 
     def manifest(self, stage: str) -> dict[str, Any] | None:
         return self.fmt.read_manifest(self.path(stage))
@@ -75,7 +85,8 @@ class CheckpointStore:
         (no extra job). ``metrics(written_df)``, when given, runs after the
         data write and before the manifest commit, on the table as read
         back; the dict it returns is stored as the manifest's ``metrics``.
-        The returned DataFrame is that same read-back (one read per write)."""
+        The returned DataFrame is that same read-back (one read per write),
+        at core width as :meth:`read` returns it."""
         path = self.path(stage)
         obs = Observation()
         out: DataFrame | None = None
@@ -102,7 +113,7 @@ class CheckpointStore:
             metadata=manifest,
             partition_by=partition_by,
         )
-        return out
+        return _core_wide(out)
 
     def compact(
         self, stage: str, target_file_bytes: int = 128 * 1024 * 1024

@@ -12,6 +12,7 @@ import tempfile
 
 import pyspark.sql.functions as F
 import pytest
+from py4j.protocol import Py4JJavaError
 
 from exome_qc_library_spark.plans.quality_pipeline import (
     build_quality_pipeline,
@@ -116,6 +117,97 @@ def test_stage_telemetry_attributes_every_job(pipeline_out):
             tel = pipe.store.manifest(st.name)["metrics"]["telemetry"]
             assert set(tel) == set(FIELDS), st.name
             assert tel["jobs"] >= 1 and tel["cpu_s"] > 0, st.name
+
+
+@pytest.fixture(scope="module")
+def single_file_cold(spark, tmp_path_factory):
+    """A cold run over a one-file input, as perfbench feeds it; the status
+    store facts of its s5 window are read right after the run, before later
+    jobs can evict them."""
+    from exome_qc_library_spark import telemetry
+    from exome_qc_library_spark.synth import synthesize_pages
+
+    tmp = tmp_path_factory.mktemp("single_file")
+    synthesize_pages(spark, n_docs=500, seed=7).coalesce(1).write.parquet(str(tmp / "pages"))
+    store = CheckpointStore(spark, str(tmp / "ckpt"))
+    pipe = build_quality_pipeline(store)
+    mark = telemetry.mark(spark)
+    pipe.run(spark.read.parquet(str(tmp / "pages")))
+    # the stages' job windows are consecutive ranges of job ids
+    first = mark + 1
+    for r in pipe.results:
+        if r.name == "s5_near_dedup":
+            s5_jobs = set(range(first, first + r.telemetry["jobs"]))
+            break
+        first += r.telemetry["jobs"]
+    status = spark.sparkContext._jsc.sc().statusStore()
+    stage_ids = set()
+    for j in s5_jobs:
+        ids = status.job(j).stageIds()
+        stage_ids.update(ids.apply(k) for k in range(ids.size()))
+    s5_input_rows = 0
+    for sid in stage_ids:
+        try:
+            s5_input_rows += status.lastStageAttempt(sid).inputRecords()
+        except Py4JJavaError:  # a skipped stage (no records) evicted from the store
+            pass
+    # the signature UDF's rows, per ArrowEvalPython node of s5's SQL executions
+    sql = spark._jsparkSession.sharedState().statusStore()
+    udf_rows = []
+    execs = sql.executionsList()
+    for i in range(execs.size()):
+        ex = execs.apply(i)
+        if not any(ex.jobs().contains(j) for j in s5_jobs):
+            continue
+        values = sql.executionMetrics(ex.executionId())
+        nodes = sql.planGraph(ex.executionId()).allNodes()
+        for k in range(nodes.size()):
+            node = nodes.apply(k)
+            if node.name() == "ArrowEvalPython":
+                ms = node.metrics()
+                for q in range(ms.size()):
+                    if ms.apply(q).name() == "number of output rows":
+                        v = values.get(ms.apply(q).accumulatorId())
+                        udf_rows.append(int(v.get()) if v.isDefined() else None)
+    s0 = store.read("s0_ingest")
+    return {
+        "s0_rows": store.manifest("s0_ingest")["rows"],
+        "non_blank_rows": s0.filter(F.col("text").rlike(r"\S")).count(),
+        "s5_input_rows": s5_input_rows,
+        "udf_rows": udf_rows,
+        "s0_parts": s0.rdd.getNumPartitions(),
+        "s5_parts": store.read("s5_near_dedup").rdd.getNumPartitions(),
+        "s5_files": len(store.fmt.data_files(store.path("s5_near_dedup"))),
+    }
+
+
+def test_s5_computes_sketch_once(single_file_cold):
+    """s5's sketch runs in one eager barrier job whose plan holds the
+    signature UDF once: s5's SQL executions hold exactly one
+    ArrowEvalPython, and it returns one row per doc with non-blank text.
+    A lazy barrier ran the sketch inside its consumers' jobs, and a filter
+    on the UDF's output put a second ArrowEvalPython in the plan.
+
+    Σ inputRecords over s5's Spark stages, as a multiple of the s0 rows:
+    the sketch pass reads s0 once, its two consumers (banding and the
+    signature join-back) read the checkpointed sketch, the gate count and
+    the driver union-find read the checkpointed pairs, and the output
+    write reads s0 twice (the flagged table and its representatives)."""
+    run = single_file_cold
+    assert run["udf_rows"] == [run["non_blank_rows"]]
+    assert round(run["s5_input_rows"] / run["s0_rows"], 3) == 5.207
+
+
+def test_checkpoint_reads_are_core_wide(spark, single_file_cold):
+    """A one-file input gives one-file s0 and s5 snapshots; the store reads
+    every snapshot back at core width, so the stages fused into a scan of
+    it run on every core, and s5, written from the wide s0 read, is written
+    as that many files."""
+    run = single_file_cold
+    n = spark.sparkContext.defaultParallelism
+    assert run["s0_parts"] == n
+    assert run["s5_parts"] == n
+    assert run["s5_files"] == n
 
 
 def test_keep_rate_sane(pipeline_out):

@@ -73,6 +73,35 @@ def test_lsh_pairs_no_cartesian(spark):
     assert "HashAggregate" in plan or "SortAggregate" in plan  # bucket cap agg
 
 
+def test_minhash_sketch_has_one_arrow_eval(spark):
+    # the shingle-less filter runs on the text BEFORE the signature UDF; a
+    # filter on the UDF's output is inlined by the optimizer, and the plan
+    # then runs the whole shingle + Arrow + kernel pass twice
+    from exome_qc_library_spark.functions.hashing import shingle_hashes, word_shingles
+    from exome_qc_library_spark.operators.dedup import _minhash_sig_udf, minhash_sketch
+
+    texts = [None, "", "   ", "\t\n \r", "\u3000", "\u3000 \u3000", "a", " x ",
+             "the quick brown fox", "the quick brown fox", "one two\u3000three four"]
+    df = spark.createDataFrame(list(enumerate(texts)), "url long, text string")
+    sk = minhash_sketch(df)
+    got = sorted(tuple(r) for r in sk.collect())
+    assert _plan(sk).count("ArrowEvalPython") == 1
+    # the previous form: a length filter before the UDF, a NULL-signature
+    # filter after it
+    old = (
+        df.filter(F.col("text").isNotNull() & (F.length("text") > 0))
+        .select(
+            F.col("url").alias("k"),
+            _minhash_sig_udf(64, 42)(shingle_hashes(word_shingles(F.col("text"), 3))).alias(
+                "sig"
+            ),
+        )
+        .filter(F.col("sig")[0].isNotNull())
+    )
+    assert got == sorted(tuple(r) for r in old.collect())
+    assert [k for k, _ in got] == [4, 5, 6, 7, 8, 9, 10]
+
+
 def test_exact_dedup_pipeline_form_is_aggregate_not_window(spark):
     # the PIPELINE exact-dedup (sha2 groupBy min-struct) — scale shape
     from exome_qc_library_spark.operators.dedup import flag_exact_duplicates

@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from exome_qc_library_spark.functions.hashing import word_shingles
 from exome_qc_library_spark.operators.hard_filters import apply_hard_filters
 from exome_qc_library_spark.operators.scrub import scrub_expr
 from exome_qc_library_spark.functions.textmetrics import with_text_metrics
@@ -68,3 +69,33 @@ def test_scrub_idempotent_and_null_preserving(spark, batch):
     assert a == b  # replacement tokens never re-match any pattern
     for i, t in enumerate(batch):
         assert (a[i] is None) == (t is None)
+
+
+# ASCII whitespace (Java \s) and Unicode spaces it does not cover
+_SPACES = " \t\n\r\x0b\x0c\u3000\u00a0\u2003\u2028\u0085"
+_spacey = st.lists(
+    st.one_of(st.sampled_from(_SPACES), st.text(max_size=3)), max_size=12
+).map("".join)
+
+
+@given(
+    st.lists(
+        st.one_of(st.none(), st.just(""), _spacey, st.text(max_size=40)), min_size=1, max_size=40
+    )
+)
+@SLOW
+def test_non_blank_text_iff_it_has_a_shingle(spark, batch):
+    # minhash_sketch drops docs on rlike('\S') before its UDF instead of
+    # on the UDF's NULL signature after it; both select the same docs
+    rows = (
+        _df(spark, batch)
+        .select(
+            "id",
+            F.col("text").rlike(r"\S").alias("non_blank"),
+            (F.size(word_shingles(F.col("text"), 3)) > 0).alias("has_shingle"),
+        )
+        .collect()
+    )
+    assert len(rows) == len(batch)
+    for r in rows:
+        assert bool(r["non_blank"]) == bool(r["has_shingle"]), batch[r["id"]]

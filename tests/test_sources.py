@@ -9,7 +9,6 @@ import pyspark.sql.functions as F
 
 from exome_qc_library_spark.plans.pipeline import Pipeline, Stage
 from exome_qc_library_spark.sources.checkpoint import CheckpointStore
-from exome_qc_library_spark.sources import readers
 from exome_qc_library_spark.sources.readers import (
     import_delimited,
     interval_join,
@@ -58,8 +57,8 @@ def test_spread_scan_repartitions_single_row_group_to_core_count(spark, tmp_path
 
 
 def test_spread_scan_decodes_percent_encoded_paths(spark, tmp_path):
-    # inputFiles() returns file:///.../sp%20ace/part-...; the footer probe
-    # must read the decoded path instead of giving up on the scan
+    # inputFiles() returns file:///.../sp%20ace/part-...; the decision must
+    # not depend on reading those paths
     df = _one_row_group_table(spark, tmp_path / "sp ace" / "t")
     assert any("%20" in f for f in df.inputFiles())
     out = spread_scan(df, "id")
@@ -83,22 +82,24 @@ def test_spread_scan_no_input_files_or_streaming_is_unchanged(spark, tmp_path):
     assert spread_scan(stream, "id") is stream
 
 
-def test_spread_scan_non_local_files_count_as_split(spark, tmp_path):
-    df = _one_row_group_table(spark, tmp_path / "t")
-    local = df.inputFiles()
-    for files in (["s3a://bucket/t/part-0.parquet"], [*local, "s3a://bucket/t/part-0.parquet"]):
-        df.inputFiles = lambda files=files: files
-        assert spread_scan(df, "id") is df
-        # no footer is read: the remote one could not be
-        assert readers._parquet_scan_units(tuple(files), 4) == 4
+def test_spread_scan_splits_small_multi_row_group_file(spark, tmp_path):
+    # Spark splits by bytes and packs a file under openCostInBytes (4 MB)
+    # into one split whatever its row-group count: 8 row groups read as 1
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-
-def test_spread_scan_footer_probe_stops_at_file_bound(monkeypatch):
-    # past the bound the files count as split without a footer read (the
-    # paths below do not exist, so any read would raise)
-    monkeypatch.setattr(readers, "_MAX_PROBED_FILES", 2)
-    files = tuple(f"file:///nonexistent/part-{i}.parquet" for i in range(3))
-    assert readers._parquet_scan_units(files, 8) == 8
+    n = spark.sparkContext.defaultParallelism
+    path = tmp_path / "t"
+    path.mkdir()
+    pq.write_table(
+        pa.table({"id": list(range(6000))}), str(path / "part-0.parquet"), row_group_size=750
+    )
+    assert pq.ParquetFile(str(path / "part-0.parquet")).metadata.num_row_groups == 8
+    df = spark.read.parquet(str(path))
+    assert df.rdd.getNumPartitions() == 1
+    out = spread_scan(df, "id")
+    assert out.rdd.getNumPartitions() == n
+    assert sorted(r["id"] for r in out.collect()) == list(range(6000))
 
 
 def test_checkpoint_store_roundtrip(spark):
