@@ -286,13 +286,11 @@ def minhash_candidate_pairs(
     # ONE materialization barrier: the sketch table is reused three times
     # (banding + the two signature join-backs); WITHOUT the barrier
     # Catalyst's CollapseProject would inline the signature into every
-    # consumer — multiplicative recompute on long docs. The barrier is
-    # EAGER: a lazy localCheckpoint is filled by whichever job completes
-    # first, and AQE submits the banding shuffle and both join-back
-    # shuffles as concurrent jobs, so each of them would compute the
-    # sketch. The shingle-hash array needs no barrier of its own: the
-    # signature UDF consumes it exactly once. localCheckpoint == the
-    # reference's checkpoint-after-expensive-step (a parquet snapshot of
+    # consumer — multiplicative recompute on long docs. EAGER: AQE runs the
+    # banding and both join-back shuffles as concurrent jobs, and each would
+    # compute a lazy barrier. The shingle-hash array needs no barrier of its
+    # own: the signature UDF consumes it exactly once. localCheckpoint ==
+    # the reference's checkpoint-after-expensive-step (a parquet snapshot of
     # the sketch table at cluster scale).
     if arithmetic:
         from ..functions.hashing import poly_shingle_hashes

@@ -96,10 +96,8 @@ def score_text_udf() -> Column:
 
 
 def with_text_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
-    # the ArrowEvalPython scorer fuses into its input's stage; the caller
-    # owns that stage's width (the pipeline's checkpoint reads are core-wide
-    # — sources.checkpoint.CheckpointStore.read; a raw table scan goes
-    # through sources.readers.spread_scan first)
+    # the ArrowEvalPython scorer fuses into its input's stage, whose width the
+    # caller owns (CheckpointStore.read is core-wide; raw scans use spread_scan)
     s = score_text_udf()(F.col(text_col))
     cols = {
         "lang_id": F.col("__sc.lang_id"),

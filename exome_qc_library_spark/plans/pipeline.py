@@ -285,7 +285,8 @@ class Pipeline:
             counts = (man.get("metrics") or {}).get("flag_counts")
             if counts:
                 flag_counts[st.name] = counts
-        df = self.store.read(term)
+        # as written: the cube below starts with its own exchange
+        df = self.store.fmt.read(self.store.spark, self.store.path(term))
         gcols = [c for c in group_cols if c in df.columns]
         mcols = [c for c in metric_cols if c in df.columns]
         qs = list(quantiles)

@@ -95,10 +95,8 @@ def build_quality_pipeline(
     its sketch job reads the checkpoint directly (column-pruned to url/text)
     instead of re-running upstream flag stages; the cheap expression stages
     are lazy (``materialize=False``) and fuse into the next checkpoint —
-    4 materializations instead of 8. Every checkpoint is read back at core
-    width (:meth:`CheckpointStore.read`), so the work fused into a scan of
-    a one-file snapshot (s5's sketch, s3/s4 ahead of the s9 write) runs on
-    every core; no stage spreads its own input.
+    4 materializations instead of 8. Checkpoints read back at core width
+    (:meth:`CheckpointStore.read`); no stage spreads its own input.
     """
 
     def _ingest(df: DataFrame) -> DataFrame:

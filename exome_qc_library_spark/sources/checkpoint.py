@@ -59,11 +59,9 @@ class CheckpointStore:
         return self.fmt.exists(self.spark, self.path(stage))
 
     def read(self, stage: str) -> DataFrame:
-        """The stage's snapshot, at core width: the store owns scan width,
-        so a snapshot written as fewer files than cores (small stages,
-        which AQE coalesces to one partition) is hash-spread on ``url``,
-        the record key every stage keeps, before the next stage's work
-        fuses into its scan. A table without ``url`` comes back as read."""
+        """The stage's snapshot at core width: the store owns scan width, so
+        one written as fewer files than cores is hash-spread on ``url`` (the
+        record key every stage keeps; a table without it comes back as read)."""
         return _core_wide(self.fmt.read(self.spark, self.path(stage)))
 
     def manifest(self, stage: str) -> dict[str, Any] | None:

@@ -17,6 +17,7 @@ Parity targets (SURVEY.md §2.1):
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,33 +67,63 @@ def read_testdata_table(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
+# footers read per scan at most: a table with more files than this is
+# production-shaped, and probing every footer would cost a driver-side
+# round-trip per file
+_MAX_PROBED_FILES = 256
+
+
+def _parquet_scan_units(files: tuple[str, ...], cap: int) -> int:
+    """Count parquet row groups across ``files``, stopping at ``cap``.
+
+    A row group is the minimum scan-split unit: Spark hands out byte-range
+    splits, but only the split containing a row group's midpoint produces
+    rows, so a file written with one row group is read by ONE task
+    however many splits Spark plans for it. Only the file footers can
+    reveal this — partition counts cannot (the empty byte-range splits
+    still exist).
+
+    ``files`` are the URIs ``inputFiles()`` returns, percent-encoded
+    (``file:///data/sp%20ace/part-0.parquet``); they are decoded before
+    the footer read. A list with any non-local URI, or with more than
+    ``_MAX_PROBED_FILES`` files, counts as adequately split (``cap``)
+    without reading a footer: a remote round-trip per file is not worth
+    it, and real deployments write many files and row groups."""
+    import pyarrow.parquet as pq
+
+    if len(files) > _MAX_PROBED_FILES:
+        return cap
+    uris = [urlparse(f) for f in files]
+    if any(u.scheme not in ("", "file") or u.netloc for u in uris):
+        return cap
+    total = 0
+    for u in uris:
+        total += pq.ParquetFile(unquote(u.path)).metadata.num_row_groups
+        if total >= cap:
+            break
+    return total
+
+
 def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Repartition a scan that Spark plans as fewer splits than cores.
+    """Repartition a scan that fewer tasks than cores would read.
 
     Scale-adaptive (guide §2.5 "input skew — one huge unsplittable file"):
     the decision derives from the input's actual layout, not a constant.
-    When the scan is already planned as at least ``defaultParallelism``
-    splits — i.e. any production-scale table — this is a NO-OP and no
-    exchange is added. Only when the layout would idle the cluster does
-    it insert one hash repartition on ``key_cols`` so every downstream
-    projection fused into the scan stage runs wide instead of on one
-    core. Hash-on-a-key (vs round-robin) avoids the
-    sort-before-repartition local sort AND is deterministic under task
-    retry; pass a high-cardinality key.
+    A scan is read by no more tasks than its row groups
+    (:func:`_parquet_scan_units`) nor than the splits Spark plans (it
+    packs a file under ``openCostInBytes`` into one split whatever its row
+    groups; ``getNumPartitions`` plans them without a job). When both reach
+    ``defaultParallelism`` — any production-scale table — this is a
+    NO-OP. Otherwise it inserts one hash repartition on ``key_cols`` so
+    the work fused into the scan stage runs wide instead of on one core.
+    Hash-on-a-key (vs round-robin) avoids the sort-before-repartition
+    local sort AND is deterministic under task retry; pass a
+    high-cardinality key.
 
-    The split count is the one Spark plans (``getNumPartitions`` on the
-    scan plans it without running a job), not the file's row groups:
-    Spark splits by bytes, and packs a file smaller than
-    ``openCostInBytes`` into one split whatever its row-group count.
-    Spark's own writers cut row groups at ``parquet.block.size``, which
-    equals ``maxPartitionBytes``, so each planned split of their files
-    holds rows.
-
-    Use ONLY on a plain scan (on a plan with an exchange, counting its
-    partitions would run that exchange) whose heavy per-row work would
-    otherwise fuse into the scan stage. A query whose first operation is already
-    an exchange (groupBy, window) gains nothing — its post-shuffle work
-    is already wide — and would just pay an extra shuffle.
+    Use ONLY on a plain scan whose heavy per-row work would otherwise fuse
+    into the scan stage. A query whose first operation is already an
+    exchange (groupBy, window) gains nothing and would just pay an extra
+    shuffle.
     """
     if df.isStreaming:
         return df
@@ -100,7 +131,11 @@ def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     if n <= 1:
         return df
     try:
-        if df.rdd.getNumPartitions() >= n:
+        files = tuple(sorted(df.inputFiles()))
+        if not files:
+            return df
+        # footers first: a local probe is ~0.1 ms a file, planning the scan 30-60 ms
+        if _parquet_scan_units(files, n) >= n and df.rdd.getNumPartitions() >= n:
             return df
     except Exception:  # noqa: BLE001 — layout probing must never break a read
         return df

@@ -1,6 +1,7 @@
 """Sources: delimited import (S4), removal list, interval join (J5),
 checkpoint store manifest/resume semantics (S6/S11)."""
 
+import contextlib
 import os
 import shutil
 import tempfile
@@ -9,6 +10,7 @@ import pyspark.sql.functions as F
 
 from exome_qc_library_spark.plans.pipeline import Pipeline, Stage
 from exome_qc_library_spark.sources.checkpoint import CheckpointStore
+from exome_qc_library_spark.sources import readers
 from exome_qc_library_spark.sources.readers import (
     import_delimited,
     interval_join,
@@ -57,8 +59,8 @@ def test_spread_scan_repartitions_single_row_group_to_core_count(spark, tmp_path
 
 
 def test_spread_scan_decodes_percent_encoded_paths(spark, tmp_path):
-    # inputFiles() returns file:///.../sp%20ace/part-...; the decision must
-    # not depend on reading those paths
+    # inputFiles() returns file:///.../sp%20ace/part-...; the footer probe
+    # must read the decoded path instead of giving up on the scan
     df = _one_row_group_table(spark, tmp_path / "sp ace" / "t")
     assert any("%20" in f for f in df.inputFiles())
     out = spread_scan(df, "id")
@@ -80,6 +82,57 @@ def test_spread_scan_no_input_files_or_streaming_is_unchanged(spark, tmp_path):
     _one_row_group_table(spark, tmp_path / "t")
     stream = spark.readStream.schema("id long").parquet(str(tmp_path / "t"))
     assert spread_scan(stream, "id") is stream
+
+
+@contextlib.contextmanager
+def _byte_splits(spark, nbytes):
+    """Spark plans scans in ``nbytes`` splits, however small the file."""
+    keys = ("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    old = [spark.conf.get(k) for k in keys]
+    for k in keys:
+        spark.conf.set(k, nbytes)
+    try:
+        yield
+    finally:
+        for k, v in zip(keys, old):
+            spark.conf.set(k, v)
+
+
+def test_spread_scan_non_local_files_count_as_split(spark, tmp_path):
+    _one_row_group_table(spark, tmp_path / "t")
+    with _byte_splits(spark, 64):
+        # planned as many splits, so the footer count decides
+        df = spark.read.parquet(str(tmp_path / "t"))
+        assert df.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+        local = df.inputFiles()
+        for files in (["s3a://bucket/t/part-0.parquet"], [*local, "s3a://bucket/t/part-0.parquet"]):
+            df.inputFiles = lambda files=files: files
+            assert spread_scan(df, "id") is df
+            # no footer is read: the remote one could not be
+            assert readers._parquet_scan_units(tuple(files), 4) == 4
+
+
+def test_spread_scan_footer_probe_stops_at_file_bound(monkeypatch):
+    # past the bound the files count as split without a footer read (the
+    # paths below do not exist, so any read would raise)
+    monkeypatch.setattr(readers, "_MAX_PROBED_FILES", 2)
+    files = tuple(f"file:///nonexistent/part-{i}.parquet" for i in range(3))
+    assert readers._parquet_scan_units(files, 8) == 8
+
+
+def test_spread_scan_splits_single_row_group_file_of_many_splits(spark, tmp_path):
+    # a file with one row group that Spark plans as many byte splits is
+    # still read by one task: only the split holding the row group's
+    # midpoint reads rows
+    n = spark.sparkContext.defaultParallelism
+    _one_row_group_table(spark, tmp_path / "t")
+    with _byte_splits(spark, 64):
+        df = spark.read.parquet(str(tmp_path / "t"))
+        assert df.rdd.getNumPartitions() >= n
+        assert df.rdd.glom().map(len).filter(bool).count() == 1
+        out = spread_scan(df, "id")
+        assert out.rdd.getNumPartitions() == n
+        assert sorted(r["id"] for r in out.collect()) == list(range(100))
 
 
 def test_spread_scan_splits_small_multi_row_group_file(spark, tmp_path):
