@@ -16,7 +16,9 @@ are read from Spark's in-process status store through
 
 Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (cores, default: the
 host's, as ``session.default_parallelism``), SPARK_GRAFT_BENCH_DOCS
-(default 50000).
+(default 50000). The 50k-doc and sf0.1 defaults target round 7's 32-core
+host (BENCH.md); ``perfbench/`` (``BENCHMARK.json``) is the measured
+reference on a 4-core host.
 
 For the N-vs-4N scaling study (BASELINE.md protocol) run
 ``tools/bench_scaling.py`` which invokes this at two parallelism levels.

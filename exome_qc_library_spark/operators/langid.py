@@ -6,9 +6,9 @@ aggregate signals, thresholded into flags
 
 Two scorers, for two different jobs:
 
-* :func:`with_langid_expr` — **expression-based** stopword-density argmax
+* :func:`langid_expr` — **expression-based** stopword-density argmax
   (JVM-side, codegen'd, zero Python; also exactly mirrorable in the
-  DuckDB oracle). Used by the streaming chain and the registry queries.
+  DuckDB oracle). Used by the registry queries only.
 * :func:`_score_batch` — **fastText-style** hashed char-trigram
   multinomial Naive Bayes, the pipeline's production scorer. It runs
   inside the fused s9 UDF :func:`~.perplexity.score_text_udf` (one Arrow
@@ -69,11 +69,6 @@ def langid_expr(text: Column) -> Column:
         best["lang_conf"].isNotNull(),
         F.struct(best["lang_id"].alias("lang_id"), best["lang_conf"].alias("lang_conf")),
     )
-
-
-def with_langid_expr(df: DataFrame, text_col: str = "text") -> DataFrame:
-    s = langid_expr(F.col(text_col))
-    return df.withColumns({"lang_id": s["lang_id"], "lang_conf": s["lang_conf"]})
 
 
 # ----------------------------------------------------------------- NB model

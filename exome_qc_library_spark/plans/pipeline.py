@@ -108,6 +108,8 @@ class Stage:
     # ("constant checkpointing is expensive", variant_qc.py:783-784); here
     # cheap expression stages fuse into one codegen'd write
     materialize: bool = True
+    # each output row depends on its input row only, so streaming can run fn
+    stateless: bool = False
 
     def __post_init__(self) -> None:
         if isinstance(self.account_flags, str):

@@ -69,8 +69,7 @@ from .pipeline import Pipeline, Stage
 DEFAULT_MAX_PERPLEXITY = 5000.0
 
 
-def build_quality_pipeline(
-    store: CheckpointStore,
+def quality_stages(
     blocklist: DataFrame | None = None,
     host_metadata: DataFrame | None = None,
     max_spam_score: float = 0.8,
@@ -90,13 +89,18 @@ def build_quality_pipeline(
     cross_doc_dup_lines: bool = False,
     max_shared_line_frac: float = 0.6,
     strip_boilerplate_min_docs: int | None = None,
-) -> Pipeline:
-    """Stage order puts the near-dup stage right after the ingest snapshot so
-    its sketch job reads the checkpoint directly (column-pruned to url/text)
-    instead of re-running upstream flag stages; the cheap expression stages
-    are lazy (``materialize=False``) and fuse into the next checkpoint —
-    4 materializations instead of 8. Checkpoints read back at core width
+) -> list[Stage]:
+    """The stage list that :func:`build_quality_pipeline` runs. Stage order
+    puts the near-dup stage right after the ingest snapshot so its sketch
+    job reads the checkpoint directly (column-pruned to url/text) instead
+    of re-running upstream flag stages; the cheap expression stages are
+    lazy (``materialize=False``) and fuse into the next checkpoint — 4
+    materializations instead of 8. Checkpoints read back at core width
     (:meth:`CheckpointStore.read`); no stage spreads its own input.
+
+    The per-row stages s0, s3, s9 and s11 are ``stateless``, so streaming
+    runs them too (:func:`~..streaming.stream.streaming_quality_flags`);
+    the optional stages are not marked (streaming runs the defaults).
     """
 
     def _ingest(df: DataFrame) -> DataFrame:
@@ -107,7 +111,12 @@ def build_quality_pipeline(
         return out if keep_html else out.drop("html")
 
     stages: list[Stage] = [
-        Stage("s0_ingest", _ingest, {"extractor": "body_p_v1", "keep_html": keep_html}),
+        Stage(
+            "s0_ingest",
+            _ingest,
+            {"extractor": "body_p_v1", "keep_html": keep_html},
+            stateless=True,
+        ),
     ]
     if host_metadata is not None:
         from ..operators.enrich import enrich_with_host_metadata, flag_spam_hosts
@@ -192,6 +201,7 @@ def build_quality_pipeline(
             lambda df: apply_hard_filters(df, "low_pass_failing_qc", low_pass),
             thresholds_metadata(low_pass),
             materialize=False,
+            stateless=True,
         ),
         Stage(
             "s4_exact_dedup",
@@ -268,6 +278,7 @@ def build_quality_pipeline(
                 scorer="nb_trigram_v1",
             ),
             account_flags="final_failing_qc",
+            stateless=True,
         ),
         Stage(
             "s6_iterative_outliers",
@@ -315,9 +326,15 @@ def build_quality_pipeline(
             # final accounting covers BOTH flag arrays so the S6/S10/S8
             # final_failing_qc tags show up in the terminal report
             account_flags=("low_pass_failing_qc", "final_failing_qc"),
+            stateless=True,
         ),
     ]
-    return Pipeline(stages, store)
+    return stages
+
+
+def build_quality_pipeline(store: CheckpointStore, **kw) -> Pipeline:
+    """``kw`` are :func:`quality_stages`' options."""
+    return Pipeline(quality_stages(**kw), store)
 
 
 def summarize_verdicts(df: DataFrame) -> DataFrame:

@@ -4,14 +4,14 @@ The reference is a pure batch pipeline whose closest streaming analog is
 its resumable checkpointing (``/root/reference/README.md:54-55``;
 SURVEY.md §2.10). The target layout is append-only snapshots keyed by
 ``warc_ts`` — which makes the *same stage functions* runnable under
-``readStream``: the per-row stages (ingest, hard filters, language ID,
-scrub, verdict) are stateless, so they compose unchanged; the
-cross-record stages (dedup, outliers, host QC) need batch barriers and
-run in ``foreachBatch`` or stay in the batch plane.
+``readStream``: the batch stages declared ``stateless`` (s0 ingest, s3
+hard filters, s9 scoring, s11 verdict and scrub) compose unchanged; the
+cross-record stages (dedup, outliers, host QC) need state (the operators
+below) or ``foreachBatch`` barriers, or stay in the batch plane.
 
 Provided here:
 * :func:`stream_pages` — file-source stream over a pages directory;
-* :func:`streaming_quality_flags` — a stateless subset of the batch
+* :func:`streaming_quality_flags` — the batch pipeline's stateless
   stages as a streaming transformation;
 * :func:`windowed_flag_counts` — watermarked per-crawl-window flag
   accounting (late pages up to the watermark are folded in);
@@ -31,11 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.hard_filters import LOW_PASS, apply_hard_filters
-from ..operators.ingest import ingest_pages
-from ..operators.langid import with_langid_expr, flag_lang_mismatch
-from ..operators.scrub import apply_scrub
-from ..operators.verdict import with_verdict
+from ..plans.quality_pipeline import quality_stages
 from ..synth import PAGES_SCHEMA
 
 
@@ -48,22 +44,18 @@ def stream_pages(spark: SparkSession, path: str, max_files_per_trigger: int = 4)
 
 
 def streaming_quality_flags(pages: DataFrame) -> DataFrame:
-    """Stateless subset of the batch pipeline's stages.
+    """The default pipeline's ``stateless`` stages (s0, s3, s9, s11), folded
+    in order over ``pages``.
 
-    s0 ingest and s3 hard filters are the batch stage functions, so
-    ``low_pass_failing_qc`` equals the cold pipeline's with s4's
-    ``exact_duplicate`` tags removed. The rest differs from batch:
-    language is scored by the expression scorer
-    (:func:`~..operators.langid.with_langid_expr`), not s9's NB UDF, so
-    ``lang_mismatch`` can disagree; and there is no s4 exact dedup, s5
-    near dedup, s9 perplexity/final thresholds, nor the cross-record
-    s6/s10/s8 outlier stages, so ``keep`` can differ from batch."""
-    df = ingest_pages(pages)
-    df = apply_hard_filters(df, "low_pass_failing_qc", LOW_PASS)
-    df = with_langid_expr(df)
-    df = flag_lang_mismatch(df)
-    df = with_verdict(df, flag_cols=("low_pass_failing_qc", "final_failing_qc"))
-    return apply_scrub(df)
+    Each url's ``lang_id``, ``lang_conf``, ``perplexity`` and ``pii_hits``
+    equal the cold pipeline's, and so do both flag arrays once the
+    cross-record stages' tags are removed (s4 ``exact_duplicate``, s5
+    ``near_duplicate``, s6, s10 and s8 outliers); ``keep`` and
+    ``scrubbed_text`` differ from batch only where those tags do."""
+    for st in quality_stages():
+        if st.stateless:
+            pages = st.fn(pages)
+    return pages
 
 
 def windowed_flag_counts(
@@ -321,32 +313,3 @@ def streaming_near_dup_matches(
             else GroupStateTimeout.NoTimeout
         ),
     )
-
-
-def run_stream_to_memory(
-    spark: SparkSession,
-    src_path: str,
-    name: str = "stream_out",
-    output_mode: str = "complete",
-) -> DataFrame:
-    """Drive a bounded file stream to completion synchronously (test/demo).
-
-    Default ``output_mode="complete"``: on a BOUNDED run, append mode
-    would permanently withhold every window within the watermark horizon
-    of the max event time (the watermark never advances past
-    max_event_time − delay, so those windows stay in state and the
-    returned counts silently miss the newest hours of data — round-6
-    review). Complete mode emits all windows, finalized or not; the
-    append+watermark behavior remains available via
-    ``output_mode="append"`` for demonstrating late-data finalization."""
-    q = (
-        windowed_flag_counts(streaming_quality_flags(stream_pages(spark, src_path)))
-        .writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return spark.sql(f"SELECT * FROM {name}")

@@ -4,10 +4,7 @@ imputed-vs-reported discordance."""
 
 import pyspark.sql.functions as F
 
-from exome_qc_library_spark.operators.langid import (
-    flag_lang_mismatch,
-    with_langid_expr,
-)
+from exome_qc_library_spark.operators.langid import flag_lang_mismatch, langid_expr
 from exome_qc_library_spark.operators.perplexity import with_text_scores
 
 SENTENCES = [
@@ -17,6 +14,12 @@ SENTENCES = [
     ("es", "el gato es en la casa y es un buen dia por los amigos que no se"),
     ("zh", "wo shi ni hao ma ta zai you hen bu men zhe na ge shang xia lai qu"),
 ]
+
+
+def with_langid_expr(df):
+    """The registry's expression scorer as the s9 scorer's two columns."""
+    s = langid_expr(F.col("text"))
+    return df.withColumns({"lang_id": s["lang_id"], "lang_conf": s["lang_conf"]})
 
 
 def test_expr_scorer_identifies_all(spark):

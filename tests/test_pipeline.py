@@ -15,6 +15,7 @@ import pytest
 
 from exome_qc_library_spark.plans.quality_pipeline import (
     build_quality_pipeline,
+    quality_stages,
     summarize_verdicts,
 )
 from exome_qc_library_spark.sources.checkpoint import CheckpointStore
@@ -295,6 +296,37 @@ def test_host_cap_and_cross_doc_line_stages_optional(spark, pages):
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_stateless_stages_are_the_per_row_ones(spark, tmp_path):
+    """The streaming chain runs the stages marked ``stateless``: a
+    cross-record stage marked so would fail under ``readStream`` or judge
+    each micro-batch alone (dedupe per batch). Builds the lists only."""
+    per_row = ["s0_ingest", "s3_hard_filters", "s9_scoring", "s11_verdict"]
+    table = spark.range(0)  # a DataFrame argument; never read
+    optional = {
+        "host_metadata": table,
+        "blocklist": table,
+        "url_substrings": ("casino",),
+        "decontamination_benchmark": table,
+        "host_cap": 2,
+        "cross_doc_dup_lines": True,
+        "strip_boilerplate_min_docs": 3,
+    }
+    every = quality_stages(**optional)
+    assert {
+        "s1_enrich",
+        "s2_blocklist",
+        "s2b_decontaminate",
+        "s2c_host_cap",
+        "s4b_cross_doc_lines",
+        "s4c_strip_chrome",
+    } <= {s.name for s in every}
+    for stages in (quality_stages(), every):
+        assert [s.name for s in stages if s.stateless] == per_row
+    # build_quality_pipeline runs this same list
+    pipe = build_quality_pipeline(CheckpointStore(spark, str(tmp_path)), **optional)
+    assert [s.name for s in pipe.stages] == [s.name for s in every]
 
 
 def test_decontamination_stage_optional(spark, pages):

@@ -6,19 +6,41 @@ import shutil
 import tempfile
 
 
+def _run_stream_to_memory(spark, src_path, name):
+    """Drive a bounded file stream through the windowed flag counts to
+    completion. Complete mode, not append: on a BOUNDED run the watermark
+    never advances past max_event_time − delay, so append mode would
+    withhold every window within that horizon and the counts would miss
+    the newest hours of data (round-6 review)."""
+    from exome_qc_library_spark.streaming.stream import (
+        stream_pages,
+        streaming_quality_flags,
+        windowed_flag_counts,
+    )
+
+    q = (
+        windowed_flag_counts(streaming_quality_flags(stream_pages(spark, src_path)))
+        .writeStream.outputMode("complete")
+        .format("memory")
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.processAllAvailable()
+    q.stop()
+    return spark.sql(f"SELECT * FROM {name}")
+
+
 def test_stream_pipeline_counts(spark, pages):
     import pyspark.sql.functions as F
 
-    from exome_qc_library_spark.streaming.stream import (
-        run_stream_to_memory,
-        streaming_quality_flags,
-    )
+    from exome_qc_library_spark.streaming.stream import streaming_quality_flags
 
     src = tempfile.mkdtemp(prefix="stream_src_")
     try:
         fixture = pages.limit(100)
         fixture.repartition(4).write.mode("overwrite").parquet(src)
-        out = run_stream_to_memory(spark, src, name="t_stream")
+        out = _run_stream_to_memory(spark, src, name="t_stream")
         rows = out.collect()
         assert len(rows) > 0
         flags = {r["flag"] for r in rows}
@@ -278,32 +300,54 @@ def test_streaming_exact_dedup_survives_restart(spark):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_streaming_matches_batch_flags(spark, pages):
-    """The streaming chain runs the batch s0/s3 stage functions, so each
-    url's ``low_pass_failing_qc`` equals the cold pipeline's once s4's
-    exact-dedup tags (a cross-record stage streaming lacks) are removed."""
-    from collections import Counter
+# the tags the default pipeline's cross-record stages emit: s4, s5, s6, s10
+# and s8 compare a doc with other docs, so the streaming chain has no such
+# stage
+CROSS_RECORD_TAGS = {
+    "exact_duplicate",
+    "near_duplicate",
+    "metric_outlier",
+    "segment_outlier",
+    "missing_segment_outlier",
+    "host_outlier",
+}
 
+
+def test_streaming_matches_batch_flags(spark, pages):
+    """The streaming chain runs the batch pipeline's stateless stages, so
+    per url it scores, counts PII and flags exactly as the cold pipeline
+    does once the cross-record stages' tags are removed, and a url that
+    carries none of those tags gets the cold run's verdict and scrub."""
     from exome_qc_library_spark.plans.quality_pipeline import build_quality_pipeline
     from exome_qc_library_spark.sources.checkpoint import CheckpointStore
     from exome_qc_library_spark.streaming.stream import streaming_quality_flags
 
+    flag_cols = ("low_pass_failing_qc", "final_failing_qc")
+    cols = ("url", "lang_id", "lang_conf", "perplexity", "pii_hits", *flag_cols)
+    cols += ("keep", "scrubbed_text")
     root = tempfile.mkdtemp(prefix="stream_vs_batch_")
     try:
         cold = build_quality_pipeline(CheckpointStore(spark, root)).run(pages)
-        batch = Counter(
-            (r["url"], tuple(f for f in r["low_pass_failing_qc"] if f != "exact_duplicate"))
-            for r in cold.select("url", "low_pass_failing_qc").collect()
-        )
+        batch = {r["url"]: r for r in cold.select(*cols).collect()}
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    stream = Counter(
-        (r["url"], tuple(r["low_pass_failing_qc"]))
-        for r in streaming_quality_flags(pages).select("url", "low_pass_failing_qc").collect()
-    )
-    assert stream == batch
-    assert sum(stream.values()) == pages.count()
-    assert any(flags for _, flags in stream)  # the comparison covers real tags
+    stream = {r["url"]: r for r in streaming_quality_flags(pages).select(*cols).collect()}
+    assert set(stream) == set(batch) and len(stream) == pages.count()
+    crossed = 0
+    for url, s in stream.items():
+        b = batch[url]
+        for c in ("lang_id", "lang_conf", "perplexity", "pii_hits"):
+            assert s[c] == b[c], (url, c)
+        for c in flag_cols:
+            assert s[c] == [f for f in b[c] if f not in CROSS_RECORD_TAGS], (url, c)
+        if CROSS_RECORD_TAGS.isdisjoint(b[flag_cols[0]] + b[flag_cols[1]]):
+            assert (s["keep"], s["scrubbed_text"]) == (b["keep"], b["scrubbed_text"]), url
+        else:
+            crossed += 1
+    # the comparison covers real tags of both arrays and of both kinds
+    assert 0 < crossed < len(stream)
+    assert all(any(s[c] for s in stream.values()) for c in flag_cols)
+    assert any("perplexity" in s["final_failing_qc"] for s in stream.values())
 
 
 def test_streaming_decontamination_matches_batch(spark, pages):
