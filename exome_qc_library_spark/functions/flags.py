@@ -114,11 +114,6 @@ def add_flags(
     return out.withMetadata(flag_col, md)
 
 
-def passes(flag_col: str) -> Column:
-    """``hl.len(failing)==0`` analog (samples_qc.py:76-77)."""
-    return F.size(F.col(flag_col)) == 0
-
-
 def keep_expr(*flag_cols: str) -> Column:
     """Final verdict: conjunction of empty flag arrays (README.md:51-53 invariant)."""
     out = F.lit(True)

@@ -1,20 +1,18 @@
-"""URL canonicalization + host/salt expressions.
+"""Host and salt expressions.
 
-Analog of the reference's liftover coordinate normalization
-(``/root/reference/vcf_import/import_vcf_vep_annotate.py:157-169`` → K9
-in SURVEY.md §2.9) and of the batch/stratification keys used for
-per-batch sample QC (``shared/samples_qc.py:408-430``).
+Analog of the batch/stratification keys used for per-batch sample QC
+(``shared/samples_qc.py:408-430``).
 
 Skew handling (BASELINE.json: "skew from domain-heavy hosts is handled
-with salted repartitioning and AQE"): ``salted_repartition`` adds a
-bounded salt derived from the full url so one hot host fans out over K
-partitions while host-level aggregates remain exact after a second
-(tiny) reduce over the salted partials.
+with salted repartitioning and AQE"): ``salt_expr`` is a bounded salt
+derived from the full url; ``host_qc`` aggregates on (host, salt) first,
+so one hot host fans out over K groups, and host-level aggregates stay
+exact after a second (tiny) reduce over the salted partials.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -25,52 +23,7 @@ def host_expr(url: Column) -> Column:
     )
 
 
-def canonical_url_expr(url: Column) -> Column:
-    """Deterministic canonical form: lowercase scheme+authority, strip
-    fragment, strip trailing slash, drop default ports.
-
-    Default ports are scheme-PAIRED (round-6 review): only ``:80`` is
-    default for http and only ``:443`` for https — ``http://h:443`` is a
-    genuinely different endpoint than ``http://h`` and must keep its
-    port, or URL-level dedup merges distinct documents. Schemeless URLs
-    lowercase their authority too (they previously skipped lowercasing
-    entirely, so case variants of one site got different canonical keys
-    while host_expr agreed they were the same host)."""
-    no_frag = F.regexp_replace(url, r"#.*$", "")
-    no_port = F.regexp_replace(no_frag, r"(?i)^(http://[^/:?#]+):80(?=[/?]|$)", r"$1")
-    no_port = F.regexp_replace(no_port, r"(?i)^(https://[^/:?#]+):443(?=[/?]|$)", r"$1")
-    with_scheme = F.concat(
-        F.lower(F.regexp_extract(no_port, r"^([a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*)", 1)),
-        F.regexp_extract(no_port, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*(.*)$", 1),
-    )
-    schemeless = F.concat(
-        F.lower(F.regexp_extract(no_port, r"^([^/?#]*)", 1)),
-        F.regexp_extract(no_port, r"^[^/?#]*(.*)$", 1),
-    )
-    lowered = F.when(
-        no_port.rlike(r"^[a-zA-Z][a-zA-Z0-9+.-]*://"), with_scheme
-    ).otherwise(schemeless)
-    return F.regexp_replace(lowered, r"(?<=[^/])/$", "")
-
-
-def with_host(df: DataFrame, url_col: str = "url", out: str = "host") -> DataFrame:
-    return df.withColumn(out, host_expr(F.col(url_col)))
-
-
 def salt_expr(url: Column, buckets: int) -> Column:
     """Stable salt in [0, buckets) from the record key (NOT random — results
     must be identical at local[8] and local[32], FIXTURES.md §7.5)."""
     return F.pmod(F.xxhash64(url), F.lit(buckets)).cast("int")
-
-
-def salted_repartition(
-    df: DataFrame, hot_key_col: str, key_col: str = "url", buckets: int = 16
-) -> DataFrame:
-    """Repartition by (hot_key, salt(key)) so domain-heavy hosts spread over
-    ``buckets`` partitions. Downstream per-host aggregates do a partial agg
-    on (host, salt) then a final agg on host — two cheap shuffles instead of
-    one skewed one. AQE skew-join handles the join side.
-    """
-    return df.withColumn("__salt", salt_expr(F.col(key_col), buckets)).repartition(
-        F.col(hot_key_col), F.col("__salt")
-    )

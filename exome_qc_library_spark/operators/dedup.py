@@ -1,4 +1,4 @@
-"""S4/S5 — deduplication: exact, MinHash-LSH, n-gram Jaccard.
+"""S4/S5 — deduplication: exact, MinHash-LSH, cross-doc lines.
 
 Web-text analog of the reference's relatedness stage
 (``/root/reference/shared/samples_qc.py:737-872``): an all-pairs
@@ -192,10 +192,10 @@ def minhash_sketch(
     """The MinHash sketch table ``(k, *carry, sig)``: word shingles →
     xxhash64 base hashes → vectorized signature UDF, one row per doc with
     at least one shingle (NULL, empty and ASCII-whitespace-only text is
-    dropped). The one definition shared by batch s5
-    (:func:`minhash_candidate_pairs`) and streaming near-dup; ``carry``
-    adds columns such as an event time. No materialization barrier here —
-    the caller owns it.
+    dropped). The one sketch definition, called by s5's
+    :func:`minhash_candidate_pairs`; ``carry`` adds columns that ride
+    next to the key, such as a representative order column. No
+    materialization barrier here — the caller owns it.
 
     The filter runs BEFORE the UDF, on the text: ``words_expr`` splits on
     Java ``\\s+``, so a doc has a shingle iff its text has a non-``\\s``
@@ -432,7 +432,6 @@ def flag_near_duplicates(
     num_perm: int = 64,
     bands: int = 16,
     max_driver_pairs: int = 5_000_000,
-    prefer: list | None = None,
 ) -> DataFrame:
     """Full near-dup stage: banded MinHash-LSH pairs (word shingles;
     ``threshold``/``num_perm``/``bands`` apply) → threshold → components
@@ -448,12 +447,11 @@ def flag_near_duplicates(
     mirrors the reference's own driver-boundary cap on its
     to_pandas→networkx step (``shared/samples_qc.py:805-808``).
 
-    ``prefer`` is the pluggable representative-preference rule (the
-    reference's case-preferring independent set,
-    ``shared/samples_qc.py:691-713``): a list of Columns the winner
-    minimizes lexicographically before the key tiebreak. Default
-    ``[F.col(order_col)]`` = earliest-crawl-wins; e.g.
-    ``prefer=[-F.col("quality_score")]`` keeps the highest-quality copy.
+    The representative of a cluster is its smallest ``(order_col, key)``
+    (the reference's preferring independent set,
+    ``shared/samples_qc.py:691-713``): the default ``warc_ts`` is
+    earliest-crawl-wins; a derived column such as ``-quality_score``
+    keeps the highest-quality copy. NULL ``order_col`` values never win.
     Keeping exactly one representative per connected component guarantees
     the kept set induces an edgeless subgraph (every above-threshold pair
     lies within one component — the reference's nx-independent-set sanity
@@ -504,23 +502,22 @@ def flag_near_duplicates(
     # join is left to AQE, which shuffles or broadcasts on actual size
     maybe_bcast = F.broadcast if on_driver else (lambda d: d)
     out = df.join(maybe_bcast(cdf), key_col, "left")
-    # representative = preferred (pref..., key) min per cluster, computed on
-    # the TINY clustered subset and joined back — NOT a window over the full
+    # representative = (order_col, key) min per cluster, computed on the
+    # TINY clustered subset and joined back — NOT a window over the full
     # table (a window with NULL cluster for 99% of rows funnels the whole
-    # table into one straggler partition)
-    pref = prefer if prefer is not None else [F.col(order_col)]
-    # NULL preference values sort LAST (is-null flag precedes each pref
-    # column in the struct): bare struct ordering would put NULL first,
-    # letting e.g. a timestamp-less copy beat every dated crawl
-    pref_fields = [
-        c
-        for i, p in enumerate(pref)
-        for c in (p.isNull().alias(f"pn{i}"), p.alias(f"p{i}"))
-    ]
+    # table into one straggler partition). NULL order values sort LAST
+    # (the is-null flag precedes the order column in the struct): bare
+    # struct ordering would put NULL first, letting e.g. a timestamp-less
+    # copy beat every dated crawl
+    order = F.col(order_col)
     reps = (
         out.filter(F.col("dup_cluster_id").isNotNull())
         .groupBy("dup_cluster_id")
-        .agg(F.min(F.struct(*pref_fields, F.col(key_col))).alias("w"))
+        .agg(
+            F.min(
+                F.struct(order.isNull().alias("pn0"), order.alias("p0"), F.col(key_col))
+            ).alias("w")
+        )
         .select("dup_cluster_id", F.col("w")[key_col].alias("__rep"))
     )
     out = out.join(maybe_bcast(reps), "dup_cluster_id", "left")
@@ -708,49 +705,4 @@ def strip_boilerplate_lines(
         F.when(F.col(key_col).isNull(), F.col(text_col)).when(
             F.col(text_col).isNotNull(), F.coalesce(F.col(out_col), F.lit(""))
         ),
-    )
-
-
-# ------------------------------------------------------- n-gram Jaccard
-
-
-def jaccard_pairs_exact(
-    df: DataFrame,
-    key_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    threshold: float = 0.5,
-    block_col: str | None = None,
-    allow_unblocked: bool = False,
-) -> DataFrame:
-    """Exact n-gram Jaccard similarity join (baseline / verifier for LSH).
-
-    O(n²) within a block — use ``block_col`` (e.g. host or LSH bucket) to
-    bound n. The unblocked form is the small-data oracle baseline ONLY and
-    must be requested explicitly with ``allow_unblocked=True`` so pipeline
-    code can never reach the full cross product by accident (the reference
-    caps every O(n²)-shaped working set, ``shared/variant_qc.py:29-63``).
-    """
-    if block_col is None and not allow_unblocked:
-        raise ValueError(
-            "jaccard_pairs_exact without block_col is O(n²) over the whole "
-            "table; pass block_col (host / LSH bucket) or allow_unblocked=True "
-            "for a small-data baseline"
-        )
-    sh = df.select(
-        F.col(key_col).alias("k"),
-        (F.col(block_col) if block_col else F.lit(1)).alias("blk"),
-        word_shingles(F.col(text_col), shingle_n).alias("sh"),
-    ).filter(F.size("sh") > 0)
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
-    return (
-        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.k") < F.col("b.k")))
-        .select(
-            F.col("a.k").alias("a"),
-            F.col("b.k").alias("b"),
-            (inter / union.cast("double")).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
     )

@@ -168,61 +168,3 @@ def call_denovo_content(
         ),
         [family_col, fingerprint_col],
     )
-
-
-def denovo_over_pages(
-    pages: DataFrame,
-    panel_af: DataFrame | None = None,
-    *,
-    text_col: str = "text",
-    ext_n: int = DEFAULT_EXT_N,
-) -> DataFrame:
-    """Standalone de-novo analysis over a pages table — the analog of the
-    reference running ``find_denovo_variants.py`` as its own script over
-    the QC'd matrix table, not as an ``exome_qc.py`` stage.
-
-    Families = host (from the url); snapshot windows = the three equal
-    ``warc_ts`` tertiles of the observed crawl span (window 0/1 = the two
-    parent crawls, window 2 = the newest = child) — pure expressions off
-    a broadcast single-row min/max, so the assignment is deterministic at
-    any parallelism. ``panel_af`` defaults to the reference-population
-    pattern used by the ``denovo_content`` query: the fingerprint
-    frequencies of the ``lang='en'`` sub-population (requires a ``lang``
-    column), mirroring how the reference derives its prior table from a
-    filtered view of the corpus (``find_denovo_variants.py:169-199``).
-    """
-    from ..functions.urltools import host_expr
-
-    rows = pages.filter(F.col(text_col).isNotNull() & F.col("warc_ts").isNotNull())
-    bounds = rows.agg(
-        F.min(F.unix_timestamp("warc_ts")).alias("ts_min"),
-        F.max(F.unix_timestamp("warc_ts")).alias("ts_max"),
-    )
-    span = F.col("ts_max") - F.col("ts_min") + F.lit(1)
-    base = (
-        rows.crossJoin(F.broadcast(bounds))
-        .select(
-            F.col("url").alias("doc_id"),
-            host_expr(F.col("url")).alias("family"),
-            F.least(
-                F.floor(
-                    (F.unix_timestamp("warc_ts") - F.col("ts_min")) * 3 / span
-                ),
-                F.lit(2),
-            )
-            .cast("int")
-            .alias("snapshot"),
-            F.sha2(F.col(text_col), 256).alias("fingerprint"),
-        )
-    )
-    if panel_af is None:
-        en = rows.filter(F.col("lang") == "en")
-        panel_af = (
-            en.groupBy(F.sha2(F.col(text_col), 256).alias("fingerprint"))
-            .agg(F.count(F.lit(1)).alias("k"))
-            .crossJoin(F.broadcast(en.agg(F.count(F.lit(1)).alias("n_en"))))
-            .select(
-                "fingerprint", F.round(F.col("k") / F.col("n_en"), 9).alias("panel_af")
-            )
-        )
-    return call_denovo_content(base, panel_af, ext_n=ext_n)

@@ -24,14 +24,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("media_type", T.StringType(), True),
-        T.StructField("n_bytes", T.LongType(), True),
-        T.StructField("sha256", T.StringType(), True),
-    ]
-)
-
 # (((hex-prefix, offset-in-hex-chars), ...), media type) — standard public
 # magic numbers; every (prefix, offset) condition in an entry must match.
 # List order = precedence (earlier wins), so the RIFF format-tag entries

@@ -10,10 +10,11 @@ higher-order functions (JVM-side, deterministic fold order).
   query and its DuckDB oracle): broadcast the (small) query set, score
   every row, per-query top-k via window. One pass over the corpus; the
   corpus is never self-joined.
-* :func:`ivf_assign` / :func:`cosine_topk_ivf` — scale path: a learned
-  k-means centroid table (:func:`train_centroids_kmeans`); each row scored
-  only against its nearest-centroid bucket (inverted-file ANN), cutting
-  the scan by the bucket fan-out. Centroids are a broadcast table.
+* :func:`ivf_assign` / :func:`cosine_topk_ivf` — scale path (the
+  ``embedding_topk`` query's IVF leg): a ``(centroid_id, centroid)``
+  table; each row scored only against its nearest-centroid bucket
+  (inverted-file ANN), cutting the scan by the bucket fan-out. Centroids
+  are a broadcast table.
 * :func:`embedding_near_dup_pairs` — random-hyperplane LSH (SimHash for
   vectors): bucket on sign-pattern, verify cosine within buckets.
 """
@@ -159,64 +160,6 @@ def ivf_assign(
             yield pdf[out_cols]
 
     return df.mapInPandas(batches, schema=schema)
-
-
-def train_centroids_kmeans(
-    df: DataFrame,
-    n_centroids: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 20,
-) -> DataFrame:
-    """LEARNED IVF centroids via ``pyspark.ml.clustering.KMeans`` (round-5
-    VERDICT #4). k-means|| init + proper convergence places centroids where
-    the data density is, which is what holds recall@k up at a given
-    ``n_probe``. The fitted centers are a tiny driver-side model,
-    returned in the same ``(centroid_id, centroid array<double>)`` shape
-    every IVF entry point here consumes (ids 1-based). Deterministic for a
-    fixed seed and input."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    # pyspark.ml KMeans NPEs on a null vector exactly like fit_pca (which
-    # filters for the same reason) — drop NULL embeddings before assembly
-    vecs = df.filter(F.col(vec_col).isNotNull()).select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    )
-    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(vecs)
-    rows = [
-        (i + 1, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
-    ]
-    return df.sparkSession.createDataFrame(
-        rows, "centroid_id long, centroid array<double>"
-    )
-
-
-def ann_recall_at_k(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-    n_probe: int = 2,
-) -> float:
-    """recall@k of the IVF path against the exact brute-force ground
-    truth — the honest ANN quality number (round-5 VERDICT #4): fraction
-    of true top-k (query, neighbor) pairs the probe-limited search
-    returns. Both searches share tie-breaking (cosine desc, neighbor id),
-    so the metric is deterministic. Driver returns a float; both inputs
-    are bounded (|queries|·k pairs)."""
-    truth = cosine_topk_brute(
-        corpus, queries, id_col=id_col, vec_col=vec_col, k=k
-    ).select("query_id", "neighbor_id")
-    approx = cosine_topk_ivf(
-        corpus, queries, centroids, id_col=id_col, vec_col=vec_col, k=k, n_probe=n_probe
-    ).select("query_id", "neighbor_id")
-    truth = truth.localCheckpoint(eager=True)  # one brute pass, reused below
-    hit = truth.join(approx, ["query_id", "neighbor_id"], "left_semi").count()
-    total = truth.count()
-    return hit / total if total else 1.0
 
 
 def cosine_topk_ivf(

@@ -1,20 +1,16 @@
-"""Text analysis utilities: token counting, fingerprints, quality score.
+"""Text analysis expressions: token counts and a composite quality score.
 
-Training-data-pipeline operators beyond the reference's own surface
-(task brief): token counting (whitespace + a BPE-ish regex), document
-fingerprinting (rolling hash), and a composite quality score — all pure
-JVM expressions.
+Training-data-pipeline operators beyond the reference's own surface:
+token counting (whitespace + a BPE-ish regex, the ``token_counts``
+query) and a composite quality score (the ``quality_score`` query) —
+all pure JVM expressions.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ..functions.hashing import rolling_fingerprint
 from ..functions.textmetrics import words_expr
 
 # GPT-2-style pretokenizer shape (public pattern): contractions, letter
@@ -35,42 +31,6 @@ def bpe_ish_token_count(text: Column) -> Column:
             F.size(F.regexp_extract_all(text, F.lit(f"({BPE_ISH_PATTERN})"), 1)), F.lit(0)
         ).cast("long"),
     )
-
-
-def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
-    t = F.col(text_col)
-    return df.withColumns(
-        {
-            "ws_tokens": whitespace_token_count(t),
-            "bpe_tokens": bpe_ish_token_count(t),
-        }
-    )
-
-
-def with_bpe_token_count(
-    df: DataFrame, text_col: str = "text", out_col: str = "n_tokens_bpe"
-) -> DataFrame:
-    """REAL subword token count from the deterministic embedded BPE
-    (``functions.bpe`` — round-5 VERDICT #6): the honest weight column
-    for ``token_budget_sample`` / ``assign_packing_bins``, as opposed to
-    the regex estimates above. Iterator pandas UDF, merge table built
-    once per executor, word-type-memoized encode. The one way to get
-    ``n_tokens_bpe``."""
-    from ..functions.bpe import _ranks, count_tokens_batch
-
-    @F.pandas_udf("long")
-    def _udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        _ranks()
-        for texts in it:
-            yield count_tokens_batch(texts)
-
-    return df.withColumn(out_col, _udf(F.col(text_col)))
-
-
-def with_fingerprint(df: DataFrame, text_col: str = "text", out_col: str = "fingerprint") -> DataFrame:
-    """Order-sensitive rolling-hash fingerprint (docs equal ⇔ same words in
-    same order, modulo case/whitespace) — cheap pre-filter for dedup."""
-    return df.withColumn(out_col, rolling_fingerprint(F.col(text_col)))
 
 
 def quality_score_expr() -> Column:
@@ -97,4 +57,3 @@ def quality_score_expr() -> Column:
             + 0.25 * clamp(1.0 - F.col("dup_line_frac"))
         ),
     )
-

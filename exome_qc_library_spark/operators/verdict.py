@@ -10,20 +10,12 @@ fail-flag accumulator is empty (``hl.len(mt.failing)==0`` filters,
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.flags import keep_expr
 
 FLAG_COLS: tuple[str, ...] = ("low_pass_failing_qc", "final_failing_qc")
 
 
-def with_verdict(df: DataFrame, flag_cols: tuple[str, ...] = FLAG_COLS) -> DataFrame:
-    present = [c for c in flag_cols if c in df.columns]
+def with_verdict(df: DataFrame) -> DataFrame:
+    present = [c for c in FLAG_COLS if c in df.columns]
     return df.withColumn("keep", keep_expr(*present))
-
-
-def keepers(df: DataFrame, flag_cols: tuple[str, ...] = FLAG_COLS) -> DataFrame:
-    """The export view: filter applied only at the terminal sink."""
-    if "keep" not in df.columns:
-        df = with_verdict(df, flag_cols)
-    return df.filter(F.col("keep"))

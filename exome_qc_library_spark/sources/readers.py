@@ -1,4 +1,4 @@
-"""External-resource readers: delimited files, removal lists, interval tables.
+"""External-resource readers: delimited files, pages tables, interval joins.
 
 Parity targets (SURVEY.md §2.1):
 
@@ -7,9 +7,9 @@ Parity targets (SURVEY.md §2.1):
   no-header variant ``exome_qc/exome_qc.py:135``) →
   :func:`import_delimited`.
 * S1/S12 — pages-table scans with projection/filter pushdown →
-  :func:`read_pages` / :func:`read_testdata_table`.
+  :func:`read_pages`; :func:`spread_scan` spreads a scan to core width.
 * S5 — locus-interval import + point-in-interval annotation
-  (``find_denovo_variants.py:280-283``) → :func:`read_intervals` +
+  (``find_denovo_variants.py:280-283``) → :func:`import_delimited` +
   :func:`interval_join` (broadcast range join — interval sets are small,
   so Spark executes a broadcast-nested-loop, which is the right plan).
 """
@@ -55,16 +55,6 @@ def import_delimited(
         # the columns — renaming would clobber it (round-6 review)
         df = df.toDF(*[f"f{i}" for i in range(len(df.columns))])
     return df
-
-
-def read_removal_list(spark: SparkSession, path: str) -> DataFrame:
-    """One url-or-host per line, no header — ``--sample_removal_list`` analog
-    (``exome_qc/exome_qc.py:134-138``)."""
-    return import_delimited(spark, path, header=False, impute=False).toDF("url_or_host")
-
-
-def read_testdata_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 # footers read per scan at most: a table with more files than this is
@@ -157,11 +147,6 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     if looks_like_path:
         return spark.read.parquet(path)
     return spark.read.table(path)
-
-
-def read_intervals(spark: SparkSession, path: str, delimiter: str = "\t") -> DataFrame:
-    """Interval file ``key, lo, hi`` (e.g. host, size band) → typed table."""
-    return import_delimited(spark, path, delimiter=delimiter, header=True)
 
 
 def interval_join(

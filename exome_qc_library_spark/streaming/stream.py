@@ -6,8 +6,9 @@ SURVEY.md §2.10). The target layout is append-only snapshots keyed by
 ``warc_ts`` — which makes the *same stage functions* runnable under
 ``readStream``: the batch stages declared ``stateless`` (s0 ingest, s3
 hard filters, s9 scoring, s11 verdict and scrub) compose unchanged; the
-cross-record stages (dedup, outliers, host QC) need state (the operators
-below) or ``foreachBatch`` barriers, or stay in the batch plane.
+cross-record stages need state (the two stateful operators below) or
+``foreachBatch`` barriers; near-dup, outliers and host QC stay in the
+batch plane.
 
 Provided here:
 * :func:`stream_pages` — file-source stream over a pages directory;
@@ -19,7 +20,9 @@ Provided here:
   (``applyInPandasWithState``): per-host running QC counters maintained
   across micro-batches — the streaming analog of the batch
   ``host_metrics`` aggregation, with host-keyed state instead of a
-  shuffle-per-batch recompute.
+  shuffle-per-batch recompute;
+* :func:`streaming_exact_dedup` — cross-micro-batch exact dedup on the
+  content hash, state bounded by the event-time watermark.
 """
 
 from __future__ import annotations
@@ -155,161 +158,4 @@ def streaming_exact_dedup(
         .withWatermark(time_col, watermark)
         .dropDuplicatesWithinWatermark([tmp])
         .drop(tmp)
-    )
-
-
-def streaming_near_dup_matches(
-    pages: DataFrame,
-    threshold: float = 0.8,
-    num_perm: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    text_col: str = "text",
-    key_col: str = "url",
-    time_col: str = "warc_ts",
-    seed: int = 42,
-    state_ttl_minutes: float | None = None,
-    watermark_delay: str = "0 seconds",
-) -> DataFrame:
-    """Cross-micro-batch NEAR-dup detection: MinHash-LSH with the band
-    buckets as persistent state.
-
-    The streaming plane of the batch
-    :func:`~..operators.dedup.minhash_candidate_pairs` →
-    :func:`~..operators.dedup.flag_near_duplicates` chain (the last
-    curation operator without a streaming composition). Same sketch
-    (same shingles / permutations / banding as batch, so candidates are
-    identical), but instead of a per-corpus band shuffle the band bucket
-    is the ``applyInPandasWithState`` grouping key: state holds the
-    bucket's REPRESENTATIVE (first-arrived doc id + its signature), and
-    each later arrival in the bucket emits a match row
-    ``(key, rep, jaccard_est)`` when its signature agrees with the
-    representative's on ≥ ``threshold`` of slots. A doc is near-dup iff
-    it appears in the match stream (it may appear once per matching
-    band — consumers take ``distinct``).
-
-    Semantics vs batch: first-arrived ≡ earliest-``warc_ts`` cluster
-    representative under time-ordered ingest, and the flag sets agree
-    exactly on star-shaped clusters (every dup within ``threshold`` of
-    the representative — the overwhelming near-dup shape). A transitive
-    CHAIN (A~B~C with A≁C) is clustered together by the batch
-    union-find but C is not matched here — the documented
-    approximation, inherent to single-pass streaming.
-
-    Scale shape: each micro-batch shuffles once on the uniform 8-byte
-    band-bucket key; state is one (id, signature) row per non-empty
-    bucket — ``bands``/doc worst case. ``state_ttl_minutes`` bounds it
-    BY TIME instead of by corpus: with a TTL set, the stream is
-    watermarked on ``time_col`` (lateness tolerance =
-    ``watermark_delay``) and each bucket's representative carries an
-    event-time timer at last-activity + TTL. Spark's timeout contract
-    applies: a bucket is evicted in the first micro-batch where the
-    watermark has passed its timer AND no new rows arrived for it; a
-    duplicate arriving after eviction re-seeds the bucket as a fresh
-    representative (bounded recall loss at the TTL horizon — the
-    standard dedup-window trade every streaming deduper makes, cf.
-    ``dropDuplicatesWithinWatermark`` in
-    :func:`streaming_exact_dedup`). Default ``None`` keeps the full
-    horizon (NoTimeout). The sketch is the batch one
-    (:func:`~..operators.dedup.minhash_sketch`, Arrow-vectorized); only
-    band keys and the csv signature ride the state store.
-    """
-    import numpy as np
-
-    from ..functions.hashing import lsh_band_keys
-    from ..operators.dedup import minhash_sketch
-
-    if num_perm % bands != 0:
-        # same guard as minhash_candidate_pairs: a remainder would leave
-        # computed-but-never-banded signature slots (silent recall loss)
-        raise ValueError(f"num_perm ({num_perm}) must be divisible by bands ({bands})")
-    rows_per_band = num_perm // bands
-    ts = F.col(time_col).alias("ts")
-    sk = minhash_sketch(pages, key_col, text_col, num_perm, shingle_n, seed, carry=(ts,))
-    exploded = sk.select(
-        "k",
-        "ts",
-        F.concat_ws(",", F.col("sig")).alias("sig_csv"),
-        F.explode(lsh_band_keys(F.col("sig"), bands, rows_per_band)).alias("bk"),
-    ).select(
-        "k",
-        "ts",
-        "sig_csv",
-        F.concat_ws(":", F.col("bk.band"), F.col("bk.bucket")).alias("bucket"),
-    )
-    ttl_ms = None
-    if state_ttl_minutes is not None:
-        ttl_ms = int(state_ttl_minutes * 60_000)
-        # a NULL event time reaches update() as NaT (int64-min), which
-        # would compute a far-past timeout and kill the query when
-        # setTimeoutTimestamp rejects it (round-5 ADVICE) — TTL mode
-        # requires an event time, mirroring the sketch's text-null filter
-        exploded = exploded.filter(F.col("ts").isNotNull()).withWatermark(
-            "ts", watermark_delay
-        )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # watermark passed last-activity + TTL with no new rows for
-            # this bucket: evict the representative, emit nothing
-            state.remove()
-            return
-        if state.exists:
-            rep_k, rep_csv = state.get
-            rep_sig = np.fromiter(
-                (int(x) for x in rep_csv.split(",")), dtype=np.int64
-            )
-        else:
-            rep_k, rep_csv, rep_sig = None, None, None
-        out_k, out_rep, out_est = [], [], []
-        max_ts_ms = None
-        # concat BEFORE sorting: a bucket whose micro-batch rows span
-        # multiple Arrow chunks must still seed the earliest-(ts, k) row
-        # as representative — a per-chunk sort would pick the first
-        # chunk's local minimum (memory stays bounded by the group size,
-        # which the chunk iterator already implied)
-        chunks = [pdf for pdf in pdfs if len(pdf)]
-        rows = (
-            pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-        )
-        if len(rows):
-            for r in rows.sort_values(["ts", "k"]).itertuples():
-                if ttl_ms is not None:
-                    ts_ms = int(r.ts.value // 1_000_000)
-                    max_ts_ms = ts_ms if max_ts_ms is None else max(max_ts_ms, ts_ms)
-                sig = np.fromiter(
-                    (int(x) for x in r.sig_csv.split(",")), dtype=np.int64
-                )
-                if rep_sig is None:
-                    rep_k, rep_csv, rep_sig = r.k, r.sig_csv, sig
-                    continue
-                if r.k == rep_k:
-                    continue
-                est = float((sig == rep_sig).mean())
-                if est >= threshold:
-                    out_k.append(r.k)
-                    out_rep.append(rep_k)
-                    out_est.append(est)
-        if rep_k is not None:
-            state.update((rep_k, rep_csv))
-            if ttl_ms is not None and max_ts_ms is not None:
-                # sliding event-time TTL: rows older than the watermark
-                # never reach a stateful operator, so this timestamp is
-                # always > the current watermark as setTimeoutTimestamp
-                # requires
-                state.setTimeoutTimestamp(max_ts_ms + ttl_ms)
-        yield pd.DataFrame({"k": out_k, "rep": out_rep, "jaccard_est": out_est})
-
-    return exploded.groupBy("bucket").applyInPandasWithState(
-        update,
-        outputStructType="k string, rep string, jaccard_est double",
-        stateStructType="rep_k string, rep_csv string",
-        outputMode="update",
-        timeoutConf=(
-            GroupStateTimeout.EventTimeTimeout
-            if ttl_ms is not None
-            else GroupStateTimeout.NoTimeout
-        ),
     )

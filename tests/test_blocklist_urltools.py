@@ -1,13 +1,8 @@
-"""S2 blocklist (anti-join/substring) + url canonicalization/salting."""
+"""S2 blocklist (anti-join/substring) + url host/salt expressions."""
 
 import pyspark.sql.functions as F
 
-from exome_qc_library_spark.functions.urltools import (
-    canonical_url_expr,
-    host_expr,
-    salt_expr,
-    salted_repartition,
-)
+from exome_qc_library_spark.functions.urltools import host_expr, salt_expr
 from exome_qc_library_spark.operators.blocklist import (
     flag_blocklisted,
     flag_substring_matches,
@@ -25,17 +20,6 @@ def test_host_extraction(spark):
     )
     got = [r["h"] for r in df.select(host_expr(F.col("url")).alias("h")).collect()]
     assert got == ["sub.example.com", "host.org", "example.net"]
-
-
-def test_canonical_url(spark):
-    cases = [
-        ("HTTPS://Example.com:443/Path/#frag", "https://example.com/Path"),
-        ("http://a.com:80/x/", "http://a.com/x"),
-        ("https://a.com/x?q=1#y", "https://a.com/x?q=1"),
-    ]
-    df = spark.createDataFrame([(u,) for u, _ in cases], "url string")
-    got = [r["c"] for r in df.select(canonical_url_expr(F.col("url")).alias("c")).collect()]
-    assert got == [want for _, want in cases]
 
 
 def test_salt_stable_and_bounded(spark):
@@ -83,10 +67,3 @@ def test_substring_flags_and_eager_removal(spark):
     out = {r["url"]: r["low_pass_failing_qc"] for r in flag_substring_matches(docs, ["casino"]).collect()}
     assert out["https://a.com/casino/win"] == ["url_substring"]
     assert out["https://b.com/news"] == []
-
-
-def test_salted_repartition_runs(spark, pages):
-    from exome_qc_library_spark.functions.urltools import with_host
-
-    df = salted_repartition(with_host(pages.limit(50)), "host")
-    assert df.count() == 50

@@ -1,4 +1,5 @@
-"""Dedup family: exact, MinHash-LSH, exact Jaccard, components.
+"""Dedup family: exact, MinHash-LSH, components; exact n-gram Jaccard
+is the LSH reference and lives here.
 
 Near-dup analog of the reference's relatedness stage
 (shared/samples_qc.py:737-872); representative choice mirrors its
@@ -8,12 +9,12 @@ import datetime
 
 import pyspark.sql.functions as F
 
+from exome_qc_library_spark.functions.hashing import word_shingles
 from exome_qc_library_spark.operators.dedup import (
     connected_components_df,
     connected_components_driver,
     flag_exact_duplicates,
     flag_near_duplicates,
-    jaccard_pairs_exact,
     minhash_candidate_pairs,
 )
 
@@ -32,6 +33,42 @@ def _docs(spark):
         ("u5", _ts(4), None),
     ]
     return spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
+
+
+def jaccard_pairs_exact(
+    df,
+    key_col,
+    text_col,
+    shingle_n=3,
+    threshold=0.5,
+    block_col=None,
+    allow_unblocked=False,
+):
+    """Exact n-gram Jaccard similarity join: the O(n²) reference MinHash-LSH
+    recall is checked against. Unblocked only on explicit opt-in."""
+    if block_col is None and not allow_unblocked:
+        raise ValueError(
+            "jaccard_pairs_exact without block_col is O(n²) over the whole "
+            "table; pass block_col (host / LSH bucket) or allow_unblocked=True "
+            "for a small-data baseline"
+        )
+    sh = df.select(
+        F.col(key_col).alias("k"),
+        (F.col(block_col) if block_col else F.lit(1)).alias("blk"),
+        word_shingles(F.col(text_col), shingle_n).alias("sh"),
+    ).filter(F.size("sh") > 0)
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
+    union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
+    return (
+        a.join(b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.k") < F.col("b.k")))
+        .select(
+            F.col("a.k").alias("a"),
+            F.col("b.k").alias("b"),
+            (inter / union.cast("double")).alias("jaccard"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+    )
 
 
 def test_exact_dedup_earliest_wins(spark):
@@ -130,11 +167,12 @@ def test_flag_near_duplicates_earliest_representative(spark):
 
 
 def test_near_dup_pluggable_preference(spark):
-    # prefer=[-quality] keeps the highest-quality copy instead of earliest
+    # order_col on a derived -quality column keeps the highest-quality copy
+    # instead of the earliest
     df = _docs(spark).withColumn(
-        "q", F.when(F.col("url") == "u2", 9.0).otherwise(1.0)
+        "neg_q", -F.when(F.col("url") == "u2", 9.0).otherwise(1.0)
     )
-    out = flag_near_duplicates(df, threshold=0.5, prefer=[-F.col("q")])
+    out = flag_near_duplicates(df, threshold=0.5, order_col="neg_q")
     flags = {r["url"]: r["final_failing_qc"] for r in out.collect()}
     assert flags["u2"] == []  # highest quality wins
     assert flags["u1"] == ["near_duplicate"] and flags["u3"] == ["near_duplicate"]

@@ -116,42 +116,3 @@ def test_plan_has_no_cartesian_and_broadcasts_family_stats(spark):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-
-
-def test_denovo_over_pages_windows_and_determinism(spark, pages):
-    from exome_qc_library_spark.operators.denovo import denovo_over_pages
-
-    out = denovo_over_pages(pages)
-    rows = out.collect()
-    # every call is a child-window doc whose fingerprint no parent-window
-    # doc of the same host carries — re-derive the windows independently
-    import pyspark.sql.functions as SF
-
-    ts = pages.filter("text IS NOT NULL AND warc_ts IS NOT NULL").agg(
-        SF.min(SF.unix_timestamp("warc_ts")).alias("lo"),
-        SF.max(SF.unix_timestamp("warc_ts")).alias("hi"),
-    ).first()
-    span = ts.hi - ts.lo + 1
-    from exome_qc_library_spark.functions.urltools import host_expr
-
-    ref = {
-        (r.host, r.fp): r.snap
-        for r in pages.filter("text IS NOT NULL AND warc_ts IS NOT NULL")
-        .select(
-            host_expr(SF.col("url")).alias("host"),
-            SF.sha2("text", 256).alias("fp"),
-            SF.least(
-                SF.floor((SF.unix_timestamp("warc_ts") - SF.lit(ts.lo)) * 3 / SF.lit(span)),
-                SF.lit(2),
-            ).alias("snap"),
-        )
-        .collect()
-    }
-    for r in rows:
-        assert ref[(r.family, r.fingerprint)] == 2  # called docs are child-window
-        assert r.confidence in ("HIGH", "MEDIUM", "LOW")
-    # layout independence: same calls after a repartition
-    again = sorted(
-        (r.doc_id, r.p_denovo) for r in denovo_over_pages(pages.repartition(13)).collect()
-    )
-    assert again == sorted((r.doc_id, r.p_denovo) for r in rows)

