@@ -218,41 +218,6 @@ def minhash_sketch(
     )
 
 
-def capped_bucket_pairs(
-    grouped: DataFrame, ks_col: str = "ks", dedup: bool = True
-) -> DataFrame:
-    """Expand each capped bucket's sorted member array into ordered pairs
-    ``(a, b)`` with ``a < b`` — the shared self-pair kernel behind every
-    bucketed pair generator (MinHash bands here, hyperplane sign buckets
-    in ``similarity``). Previously copy-pasted at each site, so the
-    round-2 sort-before-slice determinism fix had to be applied by hand
-    at every one (round-6 review). The caller owns the cap contract
-    (``slice(array_sort(collect_list(k)), 1, max_bucket)``); this helper
-    only expands. ``dedup=False`` skips the cross-bucket dropDuplicates
-    for generators whose rows live in exactly one bucket."""
-    cand = (
-        grouped.filter(F.size(ks_col) > 1)
-        .select(
-            F.explode(
-                F.filter(
-                    F.flatten(
-                        F.transform(
-                            F.col(ks_col),
-                            lambda x: F.transform(
-                                F.col(ks_col),
-                                lambda y: F.struct(x.alias("x"), y.alias("y")),
-                            ),
-                        )
-                    ),
-                    lambda p: p["x"] < p["y"],
-                )
-            ).alias("p")
-        )
-        .select(F.col("p.x").alias("a"), F.col("p.y").alias("b"))
-    )
-    return cand.dropDuplicates(["a", "b"]) if dedup else cand
-
-
 def minhash_candidate_pairs(
     df: DataFrame,
     key_col: str = "url",
@@ -330,7 +295,29 @@ def minhash_candidate_pairs(
     grouped = banded.groupBy("band", "bucket").agg(
         F.slice(F.array_sort(F.collect_list("k")), 1, max_bucket).alias("ks")
     )
-    cand = capped_bucket_pairs(grouped)
+    # expand each capped bucket's sorted members into pairs (a, b), a < b;
+    # a pair that shares several bands is emitted once
+    cand = (
+        grouped.filter(F.size("ks") > 1)
+        .select(
+            F.explode(
+                F.filter(
+                    F.flatten(
+                        F.transform(
+                            F.col("ks"),
+                            lambda x: F.transform(
+                                F.col("ks"),
+                                lambda y: F.struct(x.alias("x"), y.alias("y")),
+                            ),
+                        )
+                    ),
+                    lambda p: p["x"] < p["y"],
+                )
+            ).alias("p")
+        )
+        .select(F.col("p.x").alias("a"), F.col("p.y").alias("b"))
+        .dropDuplicates(["a", "b"])
+    )
     siga = sk.select(F.col("k").alias("a"), F.col("sig").alias("siga"))
     sigb = sk.select(F.col("k").alias("b"), F.col("sig").alias("sigb"))
     pairs = (

@@ -38,11 +38,10 @@ Scale shape (100 TB): one shuffle keyed by the uniform composite
 (family, fingerprint) computes child/parent presence with map-side
 combine; global fingerprint counts are a second uniform-key aggregate;
 per-family parent exposure is a #families-row table whose join is
-AQE-decided (families = hosts = 10^8+ at web scale — the broadcast hint
-is opt-in via ``broadcast_families``, same gate pattern as the
-decontamination hit set); the single-row corpus total rides a broadcast
-cross-join (same pattern as ``host_qc.py``); the panel join is likewise
-AQE-decided. Candidates are rare, so the final join back onto child
+never hinted (families = hosts = 10^8+ at web scale — AQE decides, as
+for the decontamination hit set); the single-row corpus total rides a
+broadcast cross-join (same pattern as ``host_qc.py``); the panel join
+is likewise AQE-decided. Candidates are rare, so the final join back onto child
 docs moves only hits — no payload (text) ever rides a shuffle.
 """
 
@@ -69,7 +68,6 @@ def call_denovo_content(
     id_col: str = "doc_id",
     child_snapshot: int = 2,
     ext_n: int = DEFAULT_EXT_N,
-    broadcast_families: bool = False,
 ) -> DataFrame:
     """Call de-novo (original) content per child doc.
 
@@ -82,11 +80,10 @@ def call_denovo_content(
     (id, family, fingerprint, n_copies, site_freq_n, prior, p_denovo,
     confidence).
 
-    ``broadcast_families`` hints the per-family exposure table into a
-    broadcast join. OFF by default: families map to hosts, and a
-    web-scale corpus has 10^8+ of them — the same unbounded-broadcast
-    trap as the decontamination hit set (``decontaminate.py``), so AQE
-    decides unless the caller KNOWS the family universe is small.
+    The per-family exposure table is never hinted for broadcast:
+    families map to hosts, and a web-scale corpus has 10^8+ of them — the
+    same unbounded-broadcast trap as the decontamination hit set
+    (``decontaminate.py``), so AQE decides.
     """
     present = docs.filter(
         F.col(family_col).isNotNull() & F.col(snapshot_col).isNotNull()
@@ -116,8 +113,6 @@ def call_denovo_content(
         F.sum(F.when(F.col(snapshot_col) == 1, 1).otherwise(0)).alias("n_parent_b"),
     )
 
-    if broadcast_families:
-        fam_stats = F.broadcast(fam_stats)
     candidates = (
         fam_fp.filter((F.col("child_count") > 0) & (F.col("parent_count") == 0))
         .join(fam_stats, family_col)

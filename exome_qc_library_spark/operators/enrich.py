@@ -7,8 +7,9 @@ batch label used downstream for stratified QC
 (``exome_qc/parse_arguments.py:137-139``).
 
 The metadata table (host, source, spam_score, crawl_batch — FIXTURES.md
-§2) is small relative to the corpus → broadcast left join; missing
-metadata is tolerated (NULL columns), and a ``spam_score`` threshold
+§2) is small relative to the corpus → always-hinted broadcast left join,
+keyed by a host that must be unique in the metadata; missing metadata
+is tolerated (NULL columns), and a ``spam_score`` threshold
 flags whole hosts the way chimeras/contamination % flags samples
 (``README.md:190-193``).
 """
@@ -27,15 +28,14 @@ def enrich_with_host_metadata(
     host_metadata: DataFrame,
     url_col: str = "url",
     host_col: str = "host",
-    broadcast_metadata: bool = True,
 ) -> DataFrame:
-    """Left join of per-host metadata onto the pages table.
+    """Left join of per-host metadata onto the pages table, with the
+    metadata hinted for broadcast (curated crawl-metadata tables are
+    dimension-sized).
 
-    Hinted broadcast by default (curated crawl-metadata tables are
-    dimension-sized); ``broadcast_metadata=False`` for a full-web host
-    table (10⁷–10⁸ rows × several columns — multi-GB, past broadcast
-    size), where the uniform host key makes the shuffle join safe and
-    AQE still broadcasts if the table actually fits."""
+    Row count is preserved: each non-NULL host may appear at most once in
+    ``host_metadata``, checked by one small job on that table before the
+    join. A repeated host would otherwise repeat every doc on it."""
     # fail fast on metadata columns already present in df (round-6 review:
     # a double enrich — stage re-run, resume — would otherwise produce
     # duplicate column names that die later as AMBIGUOUS_REFERENCE or
@@ -47,9 +47,25 @@ def enrich_with_host_metadata(
             f"enrich_with_host_metadata: metadata columns {sorted(clash)} "
             "already exist in the input; drop or rename them first"
         )
+    # a NULL host never matches the equi-join, so only non-NULL repeats
+    # multiply rows; the table is broadcast anyway, so its repeats fit
+    # on the driver
+    repeated = sorted(
+        r[0]
+        for r in host_metadata.filter(F.col(host_col).isNotNull())
+        .groupBy(host_col)
+        .count()
+        .filter(F.col("count") > 1)
+        .select(host_col)
+        .collect()
+    )
+    if repeated:
+        raise ValueError(
+            f"enrich_with_host_metadata: host_metadata repeats hosts {repeated}; "
+            "each host must appear once, or the join repeats every doc on it"
+        )
     out = df.withColumn(host_col, host_expr(F.col(url_col)))
-    meta = F.broadcast(host_metadata) if broadcast_metadata else host_metadata
-    return out.join(meta, host_col, "left")
+    return out.join(F.broadcast(host_metadata), host_col, "left")
 
 
 def union_cols(

@@ -19,7 +19,9 @@ Scale notes (round-2 rewrite, VERDICT.md finding #3):
   so it is now a plain ``groupBy(batch).agg()`` producing a tiny
   (#batches × measures) stats table that is **broadcast** back onto the
   host metrics — no window, no single-partition sort, two shuffles of
-  the small host table only, never the doc table.
+  the small host table only, never the doc table;
+* the outlier-host set is a k·σ tail, so it is always hinted for
+  broadcast back onto the docs.
 """
 
 from __future__ import annotations
@@ -117,7 +119,6 @@ def flag_host_outliers(
     measures: tuple[str, ...] = HOST_MEASURES,
     k_sigma: float = 4.0,
     flag_col: str = "final_failing_qc",
-    broadcast_outliers: bool = True,
 ) -> DataFrame:
     """Flag docs on hosts whose mean measure is > k·σ from the batch mean.
 
@@ -127,11 +128,8 @@ def flag_host_outliers(
 
     The outlier-host set is a k·σ TAIL of the host-mean distribution —
     ~1e-4 of hosts at the default k=4 under anything unimodal — so the
-    broadcast hint is on by default, unlike the decontamination hit set
-    (which can be a majority). ``broadcast_outliers=False`` drops the
-    hint for pathological distributions (bimodal host means at a small
-    ``k_sigma``) where the flagged set could grow past broadcast size;
-    the join key is the uniform host, so AQE then picks the strategy.
+    set is always hinted for broadcast, unlike the decontamination hit
+    set (which can be a majority).
 
     When ``batch_col`` is set, flagging is WITHIN-STRATUM: the outlier set
     keys on (host, batch) and docs join back on both, so a host that is an
@@ -174,9 +172,7 @@ def flag_host_outliers(
         .select(*bad_keys)
         .distinct()
     )
-    bad = bad_hosts.withColumn("__host_outlier", F.lit(True))
-    if broadcast_outliers:
-        bad = F.broadcast(bad)
+    bad = F.broadcast(bad_hosts.withColumn("__host_outlier", F.lit(True)))
     # join back on an INTERNAL derived-host column (round-6 review): the
     # outlier keys use host_expr normalization, so a caller-supplied
     # `host` column (possibly normalized differently) must be neither

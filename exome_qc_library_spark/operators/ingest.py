@@ -6,12 +6,13 @@ one raw page in → one canonical text record out, with a ``was_extracted``
 marker (mirrors ``was_split``), never dropping rows.
 
 Extraction contract (BASELINE.json input_hint): the extracted text must
-be **byte-identical per url** across runs, parallelism levels, and Arrow
-batch boundaries. The extractor is a deterministic byte-level state
-machine (strip tags, decode the body paragraph) implemented as a
-vectorized ``mapInPandas`` over Arrow batches — binary in, string out —
-with NO locale- or normalization-dependent calls (no ``str.strip``
-unicode tricks, no NFC normalization), so bytes survive untouched.
+be **byte-identical per url** across runs, parallelism levels, and
+partition boundaries. The extractor is a decode plus an anchored regexp
+over the body paragraph, in pure JVM expressions — binary in, string
+out — with NO locale- or normalization-dependent calls (no trimming, no
+NFC normalization), so bytes survive untouched. ``tests/test_ingest.py``
+holds a byte-level Python reference extractor and pins the two equal
+on valid UTF-8.
 
 Lineage columns (``source_file``, ``stage_id``) mirror
 ``annotate_cols(input_file=vcf)`` (``shared/utils.py:191``).
@@ -19,88 +20,39 @@ Lineage columns (``source_file``, ``stage_id``) mirror
 
 from __future__ import annotations
 
-import re
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# canonical body markers written by the synthesizer / upstream crawler;
-# DOTALL so embedded newlines survive byte-for-byte
-_BODY_RE = re.compile(rb"<p>(.*)</p>", re.DOTALL)
 
-
-def extract_text_bytes(html: bytes | None) -> str | None:
-    """Pure function: page bytes → extracted text (or None).
-
-    Deterministic and normalization-free: the matched byte span is UTF-8
-    decoded exactly once; no re-encoding round trip.
-    """
-    if html is None:
-        return None
-    m = _BODY_RE.search(html)
-    if m is None:
-        return None
-    return m.group(1).decode("utf-8", errors="replace")
-
-
-def ingest_pages(
-    df: DataFrame,
-    source_file: str = "pages",
-    stage_id: str = "S0",
-    use_udf: bool = False,
-) -> DataFrame:
+def ingest_pages(df: DataFrame) -> DataFrame:
     """Extract text from ``html`` where present; keep upstream ``text`` as
     the reference label column (used by the byte-identity invariant test).
 
-    Output adds: ``extracted_text``, ``was_extracted``, ``source_file``,
-    ``stage_id``. Row count and url set are preserved (annotate-don't-drop,
-    README.md:51-53).
+    Output adds: ``extracted_text``, ``was_extracted``, ``source_file``
+    (``"pages"``), ``stage_id`` (``"S0"``). Row count and url set are
+    preserved (annotate-don't-drop, README.md:51-53).
 
-    Two extraction paths with identical results on valid UTF-8 pages
-    (asserted by tests/test_ingest.py):
-
-    * default — pure JVM expressions (decode + anchored regexp), zero
-      Python/Arrow traffic: at 10^12 docs the extraction is part of the
-      scan's codegen stage. ~5× faster than the UDF path measured at 50k
-      docs because mapInPandas must round-trip EVERY column through Arrow.
-    * ``use_udf=True`` — the byte-level pandas extractor
-      (:func:`extract_text_bytes`), for payloads where byte-exactness on
-      invalid UTF-8 matters.
+    Zero Python/Arrow traffic: at 10^12 docs the extraction is part of
+    the scan's codegen stage. A ``mapInPandas`` extractor measured ~5×
+    slower at 50k docs, because it must round-trip EVERY column through
+    Arrow.
     """
-    if use_udf:
-        from pyspark.sql import types as T
-
-        schema = T.StructType(
-            list(df.schema.fields) + [T.StructField("extracted_text", T.StringType(), True)]
-        )
-
-        def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in it:
-                pdf = pdf.copy()
-                pdf["extracted_text"] = pdf["html"].map(extract_text_bytes)
-                yield pdf
-
-        out = df.mapInPandas(batches, schema=schema)
-    else:
-        # cast(binary AS string), NOT decode(..., 'UTF-8'): under Spark 4's
-        # default ANSI mode decode THROWS on any malformed byte, aborting
-        # the whole ingest stage for one bad crawl record (round-6 review,
-        # reproduced). The cast decodes identically on valid UTF-8 and
-        # substitutes U+FFFD on invalid sequences — the graceful
-        # degradation the use_udf path's byte-exactness caveat documents.
-        decoded = F.col("html").cast("string")
-        # rlike guard: regexp_extract returns '' on no-match, but a page
-        # without a body must be NULL (an empty <p></p> is a real "" text)
-        out = df.withColumn(
-            "extracted_text",
-            F.when(decoded.rlike("(?s)<p>.*</p>"), F.regexp_extract(decoded, r"(?s)<p>(.*)</p>", 1)),
-        )
+    # cast(binary AS string), NOT decode(..., 'UTF-8'): under Spark 4's
+    # default ANSI mode decode THROWS on any malformed byte, aborting
+    # the whole ingest stage for one bad crawl record (round-6 review,
+    # reproduced). The cast decodes identically on valid UTF-8 and
+    # substitutes U+FFFD on invalid sequences.
+    decoded = F.col("html").cast("string")
+    # rlike guard: regexp_extract returns '' on no-match, but a page
+    # without a body must be NULL (an empty <p></p> is a real "" text)
+    out = df.withColumn(
+        "extracted_text",
+        F.when(decoded.rlike("(?s)<p>.*</p>"), F.regexp_extract(decoded, r"(?s)<p>(.*)</p>", 1)),
+    )
     return out.withColumns(
         {
             "was_extracted": F.col("extracted_text").isNotNull(),
-            "source_file": F.lit(source_file),
-            "stage_id": F.lit(stage_id),
+            "source_file": F.lit("pages"),
+            "stage_id": F.lit("S0"),
         }
     )

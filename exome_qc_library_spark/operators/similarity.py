@@ -1,4 +1,4 @@
-"""Similarity search over embedding columns: brute-force + LSH/IVF paths.
+"""Similarity search over embedding columns: brute-force + IVF paths.
 
 Target analog of the reference's PCA/projection linear algebra
 (``hl.hwe_normalized_pca`` K6, ``pc_project`` K7 —
@@ -15,8 +15,6 @@ higher-order functions (JVM-side, deterministic fold order).
   table; each row scored only against its nearest-centroid bucket
   (inverted-file ANN), cutting the scan by the bucket fan-out. Centroids
   are a broadcast table.
-* :func:`embedding_near_dup_pairs` — random-hyperplane LSH (SimHash for
-  vectors): bucket on sign-pattern, verify cosine within buckets.
 """
 
 from __future__ import annotations
@@ -29,8 +27,7 @@ from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.arrays import cosine_expr, dot_expr
-from .dedup import capped_bucket_pairs
+from ..functions.arrays import cosine_expr
 
 
 def cosine_topk_brute(
@@ -196,92 +193,3 @@ def cosine_topk_ivf(
         .select("query_id", "neighbor_id", "cosine", "rank")
     )
 
-
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    min_cosine: float = 0.95,
-    seed: int = 42,
-    dim: int | None = None,
-    max_bucket: int = 200,
-    return_truncation: bool = False,
-) -> "DataFrame | tuple[DataFrame, DataFrame]":
-    """Random-hyperplane LSH: sign-pattern bucket key (one int), exact
-    cosine verification within buckets. Shuffle key = bucket, not pairs.
-
-    ``return_truncation=True`` returns ``(pairs, truncation)`` where
-    ``truncation`` is a lazy DataFrame of buckets the cap actually bit —
-    ``(bucket, n_members, kept)`` for every bucket larger than
-    ``max_bucket`` (round-4 ADVICE #2: the recall loss was silent; now a
-    caller can count/log exactly which buckets were truncated and by how
-    much, at zero extra cost when unrequested — the member count rides
-    the same grouped aggregation the cap uses).
-
-    Degenerate buckets are capped at ``max_bucket`` members (round-3
-    VERDICT #1 — this was the last uncapped O(m²) pair generator): all
-    zero/near-zero vectors, and any embedding-collapsed template cluster,
-    share one sign pattern — every ``d > 0`` test fails → bucket 0 — so m
-    co-bucketed rows would emit m²/2 join rows into one reducer at web
-    scale. Same sorted ``collect_list → slice`` guard as
-    :func:`~..operators.dedup.minhash_candidate_pairs` (the reference
-    caps every O(n²)-shaped working set, ``shared/variant_qc.py:29-63``);
-    ids are sorted first so the kept subset is deterministic, and the full
-    embedding arrays are joined back onto the (rare) candidate pairs for
-    cosine verification instead of riding the bucket shuffle.
-
-    Pass ``dim`` explicitly in pipelines (it is a dataset constant); the
-    ``limit(1)`` probe fallback exists for ad-hoc use only — it is one
-    tiny Spark job fired at plan-build time (VERDICT.md round-1 nit #5).
-    """
-    if not 1 <= n_planes <= 63:
-        # the sign pattern packs one bit per plane into a single signed
-        # 64-bit bucket key (2**j literals); bit 63 would overflow LongType
-        raise ValueError(f"n_planes must be in [1, 63], got {n_planes}")
-    if dim is None:
-        # probe the first NON-NULL embedding: size(NULL) is NULL and a
-        # None dim crashes the plane construction (round-6 review)
-        dim_probe = (
-            df.filter(F.col(vec_col).isNotNull())
-            .select(F.size(vec_col).alias("d"))
-            .limit(1)
-            .collect()
-        )
-        dim = dim_probe[0]["d"] if dim_probe else 0
-    import random
-
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
-    # sign pattern built over the RENAMED column (post-select scope)
-    sig = F.lit(0).cast("long")
-    for j, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        d = dot_expr(F.col("v"), plane)
-        sig = sig + F.when(d > 0, F.lit(2**j).cast("long")).otherwise(F.lit(0).cast("long"))
-    bucketed = df.select(F.col(id_col).alias("k"), F.col(vec_col).alias("v")).withColumn(
-        "bucket", sig
-    )
-    # bucket shuffle carries (k, bucket) only — Catalyst prunes the vector
-    # from this branch; each row lives in exactly ONE bucket so the pair
-    # set needs no cross-bucket dedup
-    grouped = bucketed.groupBy("bucket").agg(
-        F.count(F.lit(1)).alias("n_members"),
-        F.slice(F.array_sort(F.collect_list("k")), 1, max_bucket).alias("ks"),
-    )
-    # each row lives in exactly ONE sign bucket → no cross-bucket dup to drop
-    cand = capped_bucket_pairs(grouped, dedup=False)
-    va = bucketed.select(F.col("k").alias("a"), F.col("v").alias("va"))
-    vb = bucketed.select(F.col("k").alias("b"), F.col("v").alias("vb"))
-    pairs = (
-        cand.join(va, "a")
-        .join(vb, "b")
-        .select("a", "b", cosine_expr(F.col("va"), F.col("vb")).alias("cosine"))
-        .filter(F.col("cosine") >= min_cosine)
-    )
-    if return_truncation:
-        truncation = grouped.filter(F.col("n_members") > max_bucket).select(
-            "bucket", "n_members", F.lit(max_bucket).alias("kept")
-        )
-        return pairs, truncation
-    return pairs

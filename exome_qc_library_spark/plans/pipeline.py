@@ -27,6 +27,12 @@ from .. import telemetry
 from ..functions.flags import flag_count_df, flag_vocab
 from ..sources.checkpoint import CheckpointStore
 
+# What Pipeline.report breaks keep-rates down by and which metric
+# quantiles it reports; columns the terminal table lacks are skipped.
+REPORT_GROUP_COLS = ("source_file", "lang_id")
+REPORT_METRIC_COLS = ("perplexity", "word_count", "stopword_density", "symbol_ratio")
+REPORT_QUANTILES = (0.05, 0.25, 0.5, 0.75, 0.95)
+
 
 def _attach_accounting_observation(out: DataFrame, acct_cols: tuple[str, ...]):
     """Fold per-stage flag accounting into the checkpoint-write job.
@@ -230,18 +236,7 @@ class Pipeline:
             )
         return df
 
-    def report(
-        self,
-        group_cols: tuple[str, ...] = ("source_file", "lang_id"),
-        metric_cols: tuple[str, ...] = (
-            "perplexity",
-            "word_count",
-            "stopword_density",
-            "symbol_ratio",
-        ),
-        quantiles: tuple[float, ...] = (0.05, 0.25, 0.5, 0.75, 0.95),
-        write_json: bool = True,
-    ) -> dict[str, Any]:
+    def report(self) -> dict[str, Any]:
         """Consolidated end-of-run QC report — the engine's analog of the
         reference's per-stage distribution plots and histogram blocks
         (``exome_qc/exome_qc.py:186-194``, ``shared/samples_qc.py:348-359,
@@ -257,11 +252,11 @@ class Pipeline:
         and metric quantiles from ONE bounded ``cube`` aggregation over
         the terminal checkpoint (``grouping_id`` disambiguates cube margins
         from genuinely-NULL group values, e.g. the NULL ``lang_id`` of
-        empty docs). Columns
-        named in ``group_cols``/``metric_cols`` that the terminal table
-        lacks are skipped, so the report composes with any stage list.
+        empty docs). Columns named in ``REPORT_GROUP_COLS`` /
+        ``REPORT_METRIC_COLS`` that the terminal table lacks are skipped,
+        so the report composes with any stage list.
 
-        Returns the report dict; with ``write_json`` also persists it as
+        Returns the report dict. A dir-backed store also gets it as
         ``report.json`` in the store root, next to the stage dirs it
         summarizes."""
         term = next((s.name for s in reversed(self.stages) if s.materialize), None)
@@ -289,9 +284,9 @@ class Pipeline:
                 flag_counts[st.name] = counts
         # as written: the cube below starts with its own exchange
         df = self.store.fmt.read(self.store.spark, self.store.path(term))
-        gcols = [c for c in group_cols if c in df.columns]
-        mcols = [c for c in metric_cols if c in df.columns]
-        qs = list(quantiles)
+        gcols = [c for c in REPORT_GROUP_COLS if c in df.columns]
+        mcols = [c for c in REPORT_METRIC_COLS if c in df.columns]
+        qs = list(REPORT_QUANTILES)
         aggs: list = [F.count(F.lit(1)).alias("n")]
         if "keep" in df.columns:
             aggs.append(F.sum(F.when(F.col("keep"), 1).otherwise(0)).alias("n_keep"))
@@ -346,10 +341,8 @@ class Pipeline:
         }
         # only dir-backed stores have a local root to write next to; a
         # catalog-backed store's root may be empty or never created
-        if (
-            write_json
-            and hasattr(self.store.fmt, "data_files")
-            and os.path.isdir(getattr(self.store, "root", ""))
+        if hasattr(self.store.fmt, "data_files") and os.path.isdir(
+            getattr(self.store, "root", "")
         ):
             import json
 

@@ -6,33 +6,21 @@ SURVEY.md §2.10). The target layout is append-only snapshots keyed by
 ``warc_ts`` — which makes the *same stage functions* runnable under
 ``readStream``: the batch stages declared ``stateless`` (s0 ingest, s3
 hard filters, s9 scoring, s11 verdict and scrub) compose unchanged; the
-cross-record stages need state (the two stateful operators below) or
-``foreachBatch`` barriers; near-dup, outliers and host QC stay in the
-batch plane.
+cross-record stages (exact and near dedup, outliers, host QC) stay in
+the batch plane.
 
 Provided here:
 * :func:`stream_pages` — file-source stream over a pages directory;
 * :func:`streaming_quality_flags` — the batch pipeline's stateless
   stages as a streaming transformation;
 * :func:`windowed_flag_counts` — watermarked per-crawl-window flag
-  accounting (late pages up to the watermark are folded in);
-* :func:`streaming_host_counters` — CUSTOM STATEFUL operator
-  (``applyInPandasWithState``): per-host running QC counters maintained
-  across micro-batches — the streaming analog of the batch
-  ``host_metrics`` aggregation, with host-keyed state instead of a
-  shuffle-per-batch recompute;
-* :func:`streaming_exact_dedup` — cross-micro-batch exact dedup on the
-  content hash, state bounded by the event-time watermark.
+  accounting (late pages up to the watermark are folded in).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..plans.quality_pipeline import quality_stages
 from ..synth import PAGES_SCHEMA
@@ -72,90 +60,3 @@ def windowed_flag_counts(
         .agg(F.count(F.lit(1)).alias("n"))
     )
 
-
-def streaming_host_counters(flagged: DataFrame, flag_col: str = "low_pass_failing_qc") -> DataFrame:
-    """Per-host running (n_docs, n_flagged) counters across micro-batches.
-
-    The custom-stateful-operator pattern the target engine needs at 100 TB
-    ingest: state is partitioned by host (Spark's state store shuffles
-    each micro-batch by the grouping key once), each group's Arrow batches
-    fold into two integers, and the updated counter row is emitted per
-    trigger (``outputMode=update``). State never grows beyond one row per
-    host. ``GroupStateTimeout.NoTimeout`` — crawl hosts recur indefinitely;
-    a TTL deployment would use event-time timeout + watermark.
-    """
-    src = flagged.select(
-        F.col("host"), (F.size(flag_col) > 0).cast("int").alias("is_flagged")
-    )
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n_docs, n_flagged = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            n_docs += len(pdf)
-            n_flagged += int(pdf["is_flagged"].sum())
-        state.update((n_docs, n_flagged))
-        yield pd.DataFrame(
-            {"host": [key[0]], "n_docs": [n_docs], "n_flagged": [n_flagged]}
-        )
-
-    return src.groupBy("host").applyInPandasWithState(
-        update,
-        outputStructType="host string, n_docs long, n_flagged long",
-        stateStructType="n_docs long, n_flagged long",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def streaming_exact_dedup(
-    pages: DataFrame,
-    text_col: str = "text",
-    key_col: str = "url",
-    time_col: str = "warc_ts",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Cross-micro-batch EXACT dedup: keep the first-arrived copy of each
-    content hash, drop later arrivals — the streaming plane of the batch
-    :func:`~..operators.dedup.flag_exact_duplicates` (round-4 VERDICT #6:
-    dedup was the one curation operator with no streaming composition).
-
-    ``dropDuplicatesWithinWatermark`` keys the state store on the 256-bit
-    content hash; each micro-batch shuffles once on that uniform key and
-    state older than the event-time watermark is evicted, so state is
-    bounded by the watermark horizon × ingest rate — never the full
-    corpus (the property that matters at 10^12 docs; an unbounded
-    ``dropDuplicates`` would OOM the state store). First-arrived ≡ the
-    batch operator's earliest-``warc_ts`` winner whenever ingest is
-    time-ordered (the append-only snapshot layout this engine targets);
-    the equivalence is pinned in tests over a multi-file stream and
-    across a checkpointed restart. NULL-text rows are never deduplicated
-    (their state key falls back to the unique ``key_col``), matching the
-    batch operator's NULL handling.
-    """
-    from ..functions.hashing import exact_content_hash
-
-    # NULL-text rows fall back to the row key; when THAT is also NULL a
-    # per-row uuid keeps the state key unique — otherwise every
-    # NULL-text/NULL-key row would share the NULL-concat state key and
-    # all but the first would be dropped as "duplicates" (round-5 ADVICE)
-    state_key = F.when(
-        F.col(text_col).isNotNull(), exact_content_hash(F.col(text_col))
-    ).otherwise(
-        F.concat(
-            F.lit("__null__:"),
-            F.coalesce(F.col(key_col).cast("string"), F.expr("uuid()")),
-        )
-    )
-    # collision-safe temp name (round-4 ADVICE #4 convention): never
-    # clobber-and-drop a user column
-    tmp = "__chash"
-    while tmp in pages.columns:
-        tmp += "_"
-    return (
-        pages.withColumn(tmp, state_key)
-        .withWatermark(time_col, watermark)
-        .dropDuplicatesWithinWatermark([tmp])
-        .drop(tmp)
-    )

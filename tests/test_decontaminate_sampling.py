@@ -57,30 +57,12 @@ def test_decontaminate_hashed_matches_string_join(spark):
 
 
 def test_decontaminate_broadcast_hits_gate(spark):
-    # round-3 VERDICT #2: the hit-set broadcast is opt-in (data-dependent,
-    # unbounded set — AQE decides by default); both settings must agree
-    base = {
-        r["url"]: r["ff"]
-        for r in flag_contaminated(
-            _corpus(spark), _bench(spark), n=5, flag_col="ff"
-        ).collect()
-    }
-    forced = {
-        r["url"]: r["ff"]
-        for r in flag_contaminated(
-            _corpus(spark), _bench(spark), n=5, broadcast_hits=True, flag_col="ff"
-        ).collect()
-    }
-    assert base == forced
-    # the default plan carries no broadcast HINT on the hits side: only the
-    # (gated) benchmark gram set is hinted
-    plan = (
-        flag_contaminated(_corpus(spark), _bench(spark), n=5, flag_col="ff")
-        ._jdf.queryExecution()
-        .analyzed()
-        .toString()
-    )
-    assert plan.count("ResolvedHint") <= 1
+    # round-3 VERDICT #2: only the benchmark gram set is hinted; the hit
+    # set is data-dependent and unbounded, so AQE decides its join
+    out = flag_contaminated(_corpus(spark), _bench(spark), n=5, flag_col="ff")
+    flagged = {r["url"] for r in out.collect() if "contaminated" in r["ff"]}
+    assert flagged == {"d2", "d3"}
+    assert out._jdf.queryExecution().analyzed().toString().count("ResolvedHint") == 1
 
 
 def test_decontaminate_case_sensitivity_knob(spark):

@@ -1,6 +1,7 @@
 """S1 enrich: host-metadata broadcast join + spam flags (J1 analog)."""
 
 import pyspark.sql.functions as F
+import pytest
 
 from exome_qc_library_spark.operators.enrich import enrich_with_host_metadata, flag_spam_hosts
 
@@ -31,8 +32,7 @@ def test_join_is_broadcast(spark):
 
 
 def test_enrich_broadcast_gate(spark):
-    # broadcast_metadata=False (full-web host tables past broadcast size)
-    # must produce identical rows via the shuffle-join path
+    # the metadata side is always hinted: rows as expected, one hint
     docs = spark.createDataFrame(
         [("https://a.com/1",), ("https://c.com/1",)], "url string"
     )
@@ -40,13 +40,25 @@ def test_enrich_broadcast_gate(spark):
         [("a.com", "src1", 0.95, "b1")],
         "host string, source string, spam_score double, crawl_batch string",
     )
-    a = sorted(
-        map(tuple, enrich_with_host_metadata(docs, meta).collect())
+    out = enrich_with_host_metadata(docs, meta)
+    assert sorted(map(tuple, out.collect())) == [
+        ("a.com", "https://a.com/1", "src1", 0.95, "b1"),
+        ("c.com", "https://c.com/1", None, None, None),
+    ]
+    assert out._jdf.queryExecution().analyzed().toString().count("ResolvedHint") == 1
+
+
+def test_enrich_rejects_repeated_metadata_hosts(spark):
+    # a repeated host would repeat every doc on it (2 docs in, 3 out)
+    docs = spark.createDataFrame(
+        [("https://a.com/1",), ("https://b.com/1",)], "url string"
     )
-    b = sorted(
-        map(
-            tuple,
-            enrich_with_host_metadata(docs, meta, broadcast_metadata=False).collect(),
-        )
+    meta = spark.createDataFrame(
+        [("a.com", 0.1), ("a.com", 0.9), ("b.com", 0.2), (None, 0.3), (None, 0.4)],
+        "host string, spam_score double",
     )
-    assert a == b
+    with pytest.raises(ValueError, match=r"repeats hosts \['a\.com'\]"):
+        enrich_with_host_metadata(docs, meta)
+    # repeated NULL hosts never match the join, so they are allowed
+    ok = enrich_with_host_metadata(docs, meta.filter(F.col("spam_score") != 0.9))
+    assert ok.count() == 2

@@ -216,19 +216,12 @@ def test_segment_outliers(spark):
 
 
 def test_flag_host_outliers_broadcast_gate(spark):
-    # the outlier-host broadcast hint is gated (round-4 hardening, same
-    # class as the decontamination hit set): both settings must agree
-    a = {
-        (r["url"], tuple(r["final_failing_qc"]))
-        for r in flag_host_outliers(_docs(spark), k_sigma=2.0).collect()
-    }
-    b = {
-        (r["url"], tuple(r["final_failing_qc"]))
-        for r in flag_host_outliers(
-            _docs(spark), k_sigma=2.0, broadcast_outliers=False
-        ).collect()
-    }
-    assert a == b
+    # the outlier-host set is a k·σ tail, always hinted for broadcast
+    # next to the stats table
+    out = flag_host_outliers(_docs(spark), k_sigma=2.0)
+    flagged = {r["url"] for r in out.collect() if "host_outlier" in r["final_failing_qc"]}
+    assert flagged == {f"https://weird.com/p{i}" for i in range(6)}
+    assert out._jdf.queryExecution().analyzed().toString().count("ResolvedHint") == 2
 
 
 def test_iterative_outliers_near_constant_measure_not_mass_flagged(spark):

@@ -1,8 +1,28 @@
 """Byte-identity contract of the extraction stage (BASELINE.json input_hint)."""
 
+import re
+
 import pyspark.sql.functions as F
 
-from exome_qc_library_spark.operators.ingest import extract_text_bytes, ingest_pages
+from exome_qc_library_spark.operators.ingest import ingest_pages
+
+# canonical body markers written by the synthesizer / upstream crawler;
+# DOTALL so embedded newlines survive byte-for-byte
+_BODY_RE = re.compile(rb"<p>(.*)</p>", re.DOTALL)
+
+
+def extract_text_bytes(html: bytes | None) -> str | None:
+    """Byte-level reference extractor: page bytes → extracted text (or None).
+
+    Deterministic and normalization-free: the matched byte span is UTF-8
+    decoded exactly once; no re-encoding round trip.
+    """
+    if html is None:
+        return None
+    m = _BODY_RE.search(html)
+    if m is None:
+        return None
+    return m.group(1).decode("utf-8", errors="replace")
 
 
 def test_extract_pure_function():
@@ -42,3 +62,24 @@ def test_ingest_null_html(spark):
     )
     row = ingest_pages(df).collect()[0]
     assert row["extracted_text"] is None and row["was_extracted"] is False
+
+
+def test_ingest_matches_byte_reference(spark):
+    # the JVM extractor agrees with the byte-level reference on valid UTF-8
+    import unicodedata
+
+    nfc = unicodedata.normalize("NFC", "café résumé")
+    texts = (nfc, unicodedata.normalize("NFD", nfc), "emoji 😀🚀 text")
+    payloads = [
+        b"<html><body><p>hi there</p></body></html>",
+        b"<html>no body</html>",
+        b"<p></p>",
+        b"<p>a\nb</p>",
+        b"<p>x</p> tail <p>y</p>",
+        None,
+    ] + [f"<p>{s}</p>".encode("utf-8") for s in texts]
+    df = spark.createDataFrame(
+        [(f"u{i}", p) for i, p in enumerate(payloads)], "url string, html binary"
+    )
+    got = {r["url"]: r["extracted_text"] for r in ingest_pages(df).collect()}
+    assert got == {f"u{i}": extract_text_bytes(p) for i, p in enumerate(payloads)}

@@ -575,7 +575,7 @@ def test_report_flag_counts_attribution_with_absent_declared_column(spark, pages
             [Stage("obs", _stage, account_flags=("ghost", "fl"))], store
         )
         out = pipe.run(pages)
-        rep = pipe.report(write_json=False)
+        rep = pipe.report()
         fc = rep["flag_counts"]["obs"]
         assert set(fc) == {"fl"}  # never misattributed to "ghost"
         n_short = out.filter(F.array_contains("fl", "short")).count()
@@ -612,7 +612,7 @@ def test_report_counts_follow_forced_rerun(spark, pages):
             (r["flag"] if r["flag"] is not None else "__none__"): r["n"]
             for r in flag_count_df(out, "b").collect()
         }
-        assert pipe.report(write_json=False)["flag_counts"]["obs"] == {"b": expect}
+        assert pipe.report()["flag_counts"]["obs"] == {"b": expect}
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
@@ -681,7 +681,7 @@ def test_report_on_empty_terminal_checkpoint(spark, pages):
         )
         out = pipe.run(pages)
         assert out.count() == 0
-        rep = pipe.report(write_json=False)
+        rep = pipe.report()
         assert rep["totals"] == {"rows": 0}
         assert all(v is None for v in rep["metrics"].values())
         assert all(block == {} for block in rep["by"].values())

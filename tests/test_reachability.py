@@ -1,16 +1,17 @@
 """Package code that no production entry point reaches is dead weight.
 
-A generated census over the source AST, no Spark needed. The roots are
-every module-level statement of the package outside a def or class body
-(``QUERIES``, the stage list in ``quality_stages``, ...) plus the scripts
-that drive the engine: ``bench.py``, ``__spark_entry__.py``,
+A generated census over the source AST, no Spark needed. The defs are the
+package's top-level functions and classes, and its module-level constants:
+an assignment that binds only plain, non-dunder names. The roots are every
+other module-level statement of the package (imports, ``__all__``, ...)
+plus the scripts that drive the engine: ``bench.py``, ``__spark_entry__.py``,
 ``perfbench/*.py`` and ``tools/*.py``. A reference is a ``Name``, an
 ``Attribute``, an import alias, or a ``str`` constant that is a single
 identifier (dict keys and ``getattr`` lookups); docstrings and comments
-never count. References are followed transitively through def bodies.
-Tests are not roots, so a def that only ``tests/`` call is flagged: delete
-it, move it into the test that uses it as a reference, or put it on
-``ALLOWLIST`` with its reason.
+never count. References are followed transitively through def bodies and
+constant values. Tests are not roots, so a def or constant that only
+``tests/`` use is flagged: delete it, move it into the test that uses it
+as a reference, or put it on ``ALLOWLIST`` with its reason.
 """
 
 import ast
@@ -28,19 +29,6 @@ ALLOWLIST = {
     "import_delimited": "the only implementation of operator S4 (OPERATORS.md)",
     "export_tsv": "the only implementation of operator S7 (OPERATORS.md); "
     "_stringify_complex is reached through it",
-    # Test-only code kept because tier-1 still requires its tests; each goes
-    # together with its tests in one later change (ROADMAP D14).
-    "streaming_host_counters": "tier-1 still requires its only tests, test_streaming::"
-    "test_stateful_host_counters_accumulate_across_batches and "
-    "::test_stateful_counters_survive_query_restart",
-    "streaming_exact_dedup": "tier-1 still requires its only tests, "
-    "test_streaming::test_streaming_exact_dedup_* (three)",
-    "embedding_near_dup_pairs": "tier-1 still requires its only tests, "
-    "test_similarity::test_hyperplane_lsh_* (four)",
-    "byte_features": "tier-1 still requires its only tests, test_tokenize_multimodal::"
-    "test_byte_features_kernel and ::test_extract_byte_features_distributed",
-    "extract_byte_features": "tier-1 still requires its only test, "
-    "test_tokenize_multimodal::test_extract_byte_features_distributed",
 }
 
 
@@ -83,10 +71,31 @@ def _refs(nodes, docstrings):
 _DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
+def _constant_names(stmt):
+    """The names a module-level assignment binds when they are all plain,
+    non-dunder names (``X = ...``, ``A, B = ...``, ``X: T = ...``), else
+    ``[]`` and the statement is a root."""
+    if isinstance(stmt, ast.Assign):
+        targets = stmt.targets
+    elif isinstance(stmt, ast.AnnAssign) and stmt.value is not None:
+        targets = [stmt.target]
+    else:
+        return []
+    names = []
+    for target in targets:
+        elts = target.elts if isinstance(target, ast.Tuple) else [target]
+        if not all(isinstance(e, ast.Name) for e in elts):
+            return []
+        names += [e.id for e in elts]
+    if any(n.startswith("__") and n.endswith("__") for n in names):
+        return []
+    return names
+
+
 def _census(allowlist):
-    """Return ``(defs, reached)``: every top-level package def as
-    ``name -> [(relpath, line, node, docstrings)]`` and the names reached
-    from the roots, with the ``allowlist`` defs counted as roots."""
+    """Return ``(defs, reached)``: every top-level package def and constant
+    as ``name -> [(relpath, line, node, docstrings)]`` and the names
+    reached from the roots, with the ``allowlist`` defs counted as roots."""
     defs, frontier = {}, set(allowlist)
     for path in sorted(PACKAGE.rglob("*.py")):
         tree = _parse(path)
@@ -99,6 +108,9 @@ def _census(allowlist):
                 frontier |= _refs(stmt.decorator_list, docs)
                 if not isinstance(stmt, ast.ClassDef):
                     frontier |= _refs(stmt.args.defaults + stmt.args.kw_defaults, docs)
+            elif names := _constant_names(stmt):
+                for name in names:
+                    defs.setdefault(name, []).append((rel, stmt.lineno, stmt, docs))
             else:
                 frontier |= _refs([stmt], docs)
     for pattern in ROOT_SCRIPTS:
@@ -125,7 +137,8 @@ def test_every_package_def_is_reached_from_a_production_root():
         for rel, line, _node, _docs in sites
     )
     assert not unreached, (
-        f"{len(unreached)} package defs are reached only from tests/ or not at all; "
+        f"{len(unreached)} package defs or constants are reached only from tests/ "
+        "or not at all; "
         "delete them, move them into the test that uses them, or add them to ALLOWLIST "
         "with a reason:\n" + "\n".join(f"  {rel}:{line} {name}" for rel, line, name in unreached)
     )

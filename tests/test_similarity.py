@@ -1,12 +1,11 @@
-"""Similarity search: brute-force top-k, IVF ANN, hyperplane-LSH pairs. The
-k-means centroid trainer and recall@k below are the IVF-recall reference."""
+"""Similarity search: brute-force top-k and IVF ANN. The k-means centroid
+trainer and recall@k below are the IVF-recall reference."""
 
 import pyspark.sql.functions as F
 
 from exome_qc_library_spark.operators.similarity import (
     cosine_topk_brute,
     cosine_topk_ivf,
-    embedding_near_dup_pairs,
     ivf_assign,
 )
 
@@ -137,40 +136,6 @@ def test_ivf_assign_pandas_path_matches_inline(spark):
     assert inline[2] == 1 and inline[3] == 1 and inline[4] == 1  # smallest-cid ties
 
 
-def test_hyperplane_lsh_finds_near_pair(spark):
-    pairs = embedding_near_dup_pairs(_vecs(spark), n_planes=8, min_cosine=0.95)
-    got = {(r["a"], r["b"]) for r in pairs.collect()}
-    assert (0, 1) in got or (2, 3) in got  # same-bucket near pairs surface
-
-
-def test_hyperplane_lsh_caps_degenerate_bucket(spark):
-    # round-3 VERDICT #1: m identical sign patterns (here: m identical
-    # vectors plus zero vectors, which all fail every d > 0 test → bucket 0)
-    # must NOT emit m²/2 pairs — the sorted collect_list → slice cap bounds
-    # the bucket at max_bucket members, deterministically (smallest ids)
-    m = 30
-    rows = [(i, [1.0, 1.0, 0.0, 0.0]) for i in range(m)]
-    rows += [(100 + i, [0.0, 0.0, 0.0, 0.0]) for i in range(m)]  # degenerate zeros
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    pairs = embedding_near_dup_pairs(df, n_planes=8, min_cosine=0.95, max_bucket=5)
-    got = {(r["a"], r["b"]) for r in pairs.collect()}
-    # identical vectors: exactly C(5,2) pairs over the 5 smallest ids
-    expected = {(a, b) for a in range(5) for b in range(5) if a < b}
-    assert got == expected  # zero vectors have NULL cosine → filtered out
-    # and with the cap above the bucket size the full pair set surfaces
-    full = embedding_near_dup_pairs(df, n_planes=8, min_cosine=0.95, max_bucket=1000)
-    assert sum(1 for r in full.collect() if r["a"] < 100) == m * (m - 1) // 2
-
-
-def test_hyperplane_lsh_cap_noop_on_small_buckets(spark):
-    # capped and uncapped outputs are identical when no bucket exceeds the
-    # cap — the guard changes nothing for the normal case
-    small = embedding_near_dup_pairs(_vecs(spark), n_planes=8, min_cosine=0.5, max_bucket=200)
-    big = embedding_near_dup_pairs(_vecs(spark), n_planes=8, min_cosine=0.5, max_bucket=10**6)
-    key = lambda r: (r["a"], r["b"], round(r["cosine"], 9))  # noqa: E731
-    assert sorted(map(key, small.collect())) == sorted(map(key, big.collect()))
-
-
 def test_ivf_assign_reassignment_replaces_on_both_paths(spark):
     # round-3 ADVICE: a df that already carries centroid_id must be
     # RE-assigned (column replaced) identically on the inline and pandas
@@ -213,29 +178,6 @@ def test_ivf_assign_cent_id_position_matches_across_paths(spark):
         ivf_assign(_vecs(spark), cents).columns
         == ivf_assign(_vecs(spark), cents, max_inline=1).columns
     )
-
-
-def test_hyperplane_lsh_truncation_companion(spark):
-    # round-4 ADVICE #2: the bucket cap must be observable — oversized
-    # buckets are reported as (bucket, n_members, kept); no truncation →
-    # empty companion; pairs identical with/without the companion request
-    m = 30
-    df = spark.createDataFrame(
-        [(i, [1.0, 1.0, 0.0, 0.0]) for i in range(m)],
-        "vec_id long, embedding array<double>",
-    )
-    pairs, trunc = embedding_near_dup_pairs(
-        df, n_planes=8, min_cosine=0.95, max_bucket=5, return_truncation=True
-    )
-    t = trunc.collect()
-    assert len(t) == 1 and t[0]["n_members"] == m and t[0]["kept"] == 5
-    plain = embedding_near_dup_pairs(df, n_planes=8, min_cosine=0.95, max_bucket=5)
-    key = lambda r: (r["a"], r["b"])  # noqa: E731
-    assert sorted(map(key, pairs.collect())) == sorted(map(key, plain.collect()))
-    _, none_trunc = embedding_near_dup_pairs(
-        df, n_planes=8, min_cosine=0.95, max_bucket=1000, return_truncation=True
-    )
-    assert none_trunc.count() == 0
 
 
 def test_kmeans_ivf_recall(spark):

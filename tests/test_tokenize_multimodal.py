@@ -4,8 +4,6 @@ import pyspark.sql.functions as F
 
 from exome_qc_library_spark.functions.hashing import rolling_fingerprint
 from exome_qc_library_spark.operators.multimodal import (
-    byte_features,
-    extract_byte_features,
     sniff_media_type,
     with_media_metadata,
 )
@@ -86,33 +84,6 @@ def test_magic_number_sniffing(spark):
         "txt": "application/octet-stream",
         "none": None,
     }
-
-
-def test_byte_features_kernel():
-    # constant payload → zero entropy, all mass in one nibble bucket
-    f = byte_features(b"\x00" * 100)
-    assert f[0] == 0.0 and f[1] == 1.0 and sum(f[1:]) == 1.0
-    # uniform 0..255 → 8 bits/byte entropy, uniform nibble histogram
-    f = byte_features(bytes(range(256)))
-    assert abs(f[0] - 8.0) < 1e-9
-    assert all(abs(x - 1 / 16) < 1e-12 for x in f[1:])
-    assert byte_features(b"") == [0.0] * 17
-
-
-def test_extract_byte_features_distributed(spark):
-    df = spark.createDataFrame(
-        [("a", b"\x00" * 50), ("b", bytes(range(256))), ("c", None)],
-        "id string, payload binary",
-    )
-    got = {
-        r["id"]: r["media_features"]
-        for r in extract_byte_features(df, bin_col="payload").collect()
-    }
-    assert got["a"][0] == 0.0 and got["a"][1] == 1.0
-    assert abs(got["b"][0] - 8.0) < 1e-9
-    assert got["c"] is None
-    # distributed result ≡ local kernel
-    assert got["b"] == byte_features(bytes(range(256)))
 
 
 def _png_bytes(w: int, h: int) -> bytes:
