@@ -676,14 +676,14 @@ GROUP BY word ORDER BY n DESC, word ASC LIMIT 20
 
 def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5 point-in-interval annotation via broadcast range join."""
+    from .sources.readers import interval_join
+
     docs = _t(spark, sf_dir, "documents")
     bands = docs.sparkSession.createDataFrame(
         [("xs", 0, 100), ("s", 100, 250), ("m", 250, 400), ("l", 400, 1_000_000)],
         "band string, lo int, hi int",
     )
-    joined = docs.join(
-        F.broadcast(bands), (F.col("n_chars") >= F.col("lo")) & (F.col("n_chars") < F.col("hi")), "left"
-    )
+    joined = interval_join(docs, bands, F.col("n_chars"))
     return joined.groupBy("band").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -857,18 +857,14 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MH_ORACLE_PERM, _MH_ORACLE_BANDS = 32, 8
 
 
-def _minhash_sql(
-    num_perm: int = _MH_ORACLE_PERM,
-    bands: int = _MH_ORACLE_BANDS,
-    shingle_n: int = 3,
-    max_bucket: int = 200,
-    seed: int = 42,
-) -> str:
-    """DuckDB mirror of the arithmetic MinHash-LSH pipeline, generated from
-    the SAME permutation constants (``_mh_params``) the Spark side uses."""
+def _minhash_sql() -> str:
+    """DuckDB mirror of the arithmetic MinHash-LSH pipeline over word
+    3-shingles with buckets capped at 200 keys, generated from the SAME
+    permutation constants (``_mh_params``) the Spark side uses."""
     from .functions.hashing import _MH_PRIME, _mh_params, POLY_BASE, POLY_MOD
 
-    params = _mh_params(num_perm, seed)
+    num_perm, bands, shingle_n, max_bucket = _MH_ORACLE_PERM, _MH_ORACLE_BANDS, 3, 200
+    params = _mh_params(num_perm)
     rpb = num_perm // bands
     mins = ",\n    ".join(
         f"list_min(list_transform(hs, h -> (h*{a} + {b}) % {_MH_PRIME}))" for a, b in params
@@ -931,9 +927,10 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select("doc_id", simhash_poly(F.col("text")).alias("simhash"))
 
 
-def _simhash_sql(bits: int = 30) -> str:
+def _simhash_sql() -> str:
     from .functions.hashing import POLY_BASE, POLY_MOD
 
+    bits = 30
     return f"""
 WITH w AS (
   SELECT doc_id,

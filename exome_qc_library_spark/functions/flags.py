@@ -122,17 +122,16 @@ def keep_expr(*flag_cols: str) -> Column:
     return out
 
 
-def flag_count_df(df: DataFrame, flag_col: str, group_cols: list[str] | None = None) -> DataFrame:
-    """Distributed per-flag (optionally per-group) accounting table.
+def flag_count_df(df: DataFrame, flag_col: str) -> DataFrame:
+    """Distributed per-flag accounting table.
 
     Analog of the per-stage ``count_failing`` reports
     (``shared/variant_qc.py:638-723``). The pipeline runner records the
     same multiset in each stage's checkpoint manifest, scanning with this
     table only when the observed counts cannot be used.
     """
-    group_cols = group_cols or []
     return (
-        df.select(*group_cols, F.explode_outer(flag_col).alias("flag"))
-        .groupBy(*group_cols, "flag")
+        df.select(F.explode_outer(flag_col).alias("flag"))
+        .groupBy("flag")
         .agg(F.count(F.lit(1)).alias("n"))
     )

@@ -22,16 +22,12 @@ from pyspark.sql import functions as F
 from .textmetrics import words_expr
 
 
-def word_shingles(text: Column, n: int = 3, lowercase: bool = True) -> Column:
-    """Distinct word n-gram shingles of the document (array<string>).
+def word_shingles(text: Column, n: int = 3) -> Column:
+    """Distinct word n-gram shingles of the lower-cased document
+    (array<string>); case folds like the cross-doc-line normalization.
 
     Documents shorter than ``n`` words yield a single shingle of the whole
     text so short docs still participate in dedup.
-
-    ``lowercase=False`` keeps the original case (case-sensitive matching —
-    e.g. a benchmark whose decontamination contract demands exactness,
-    round-3 VERDICT #7); the default folds case like the cross-doc-line
-    normalization.
 
     IMPLEMENTATION NOTE (scale-critical): built as a chain of shifted
     ``zip_with``s, NOT ``transform(sequence(...), i -> slice(ws, i, n))``.
@@ -40,7 +36,7 @@ def word_shingles(text: Column, n: int = 3, lowercase: bool = True) -> Column:
     by Spark's higher-order-function interpreter, turning shingling into
     O(words²) on long documents. The zip_with chain is O(n · words).
     """
-    ws = words_expr(F.lower(text) if lowercase else text)
+    ws = words_expr(F.lower(text))
     k = F.size(ws)
     grams = ws
     for i in range(1, n):
@@ -71,7 +67,7 @@ def shingle_hashes(shingles: Column) -> Column:
     return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME)))
 
 
-def minhash_signature(base_hashes: Column, num_perm: int = 64, seed: int = 42) -> Column:
+def minhash_signature(base_hashes: Column, num_perm: int = 64) -> Column:
     """MinHash signature via universal hashing: sig_p = min((a_p·h + b_p) mod P).
 
     Row-local, O(perm × shingles) integer multiply-adds (no string ops).
@@ -84,7 +80,7 @@ def minhash_signature(base_hashes: Column, num_perm: int = 64, seed: int = 42) -
     return F.array(
         *[
             F.array_min(F.transform(base_hashes, affine(a, b)))
-            for a, b in _mh_params(num_perm, seed)
+            for a, b in _mh_params(num_perm)
         ]
     )
 
@@ -106,8 +102,7 @@ def lsh_band_keys(
     shared by every document, which would silently co-bucket the whole
     corpus in that band — an O(n²) cross product at scale. Misconfigured
     direct callers now just lose the uncovered bands' recall;
-    ``minhash_candidate_pairs``/the streaming variant reject such configs
-    outright.
+    ``minhash_candidate_pairs`` rejects such configs outright.
     """
 
     def bucket(b: int) -> Column:
@@ -134,14 +129,14 @@ POLY_BASE = 257
 POLY_MOD = 1_000_000_007
 
 
-def poly_hash_expr(s: Column, base: int = POLY_BASE, mod: int = POLY_MOD) -> Column:
-    """Char-code polynomial fold of a string → [0, mod).
+def poly_hash_expr(s: Column) -> Column:
+    """Char-code polynomial fold of a string → [0, POLY_MOD) in base ``POLY_BASE``.
 
     The SQL-reproducible hash primitive (plain modular arithmetic over
     codepoints — DuckDB mirrors it verbatim, unlike xxhash64), used by the
     oracle-checkable variants of fingerprint / MinHash / SimHash. Chars via
     sequence+substring (not split("")) so both engines index identically.
-    mod < 2^31 keeps every intermediate product inside int64.
+    POLY_MOD < 2^31 keeps every intermediate product inside int64.
     """
     return F.aggregate(
         F.transform(
@@ -149,7 +144,7 @@ def poly_hash_expr(s: Column, base: int = POLY_BASE, mod: int = POLY_MOD) -> Col
             lambda i: F.ascii(F.substring(s, i, F.lit(1))).cast("long"),
         ),
         F.lit(0).cast("long"),
-        lambda acc, c: (acc * base + c) % mod,
+        lambda acc, c: (acc * POLY_BASE + c) % POLY_MOD,
     )
 
 
@@ -159,7 +154,7 @@ def poly_shingle_hashes(shingles: Column) -> Column:
     return F.transform(shingles, lambda s: poly_hash_expr(s))
 
 
-def rolling_fingerprint(text: Column, base: int = POLY_BASE, mod: int = POLY_MOD) -> Column:
+def rolling_fingerprint(text: Column) -> Column:
     """Polynomial rolling-hash document fingerprint over words.
 
     fp = (hashless) fold: fp = (fp*base + word_poly(word)) % mod, with
@@ -170,18 +165,19 @@ def rolling_fingerprint(text: Column, base: int = POLY_BASE, mod: int = POLY_MOD
     return F.aggregate(
         ws,
         F.lit(0).cast("long"),
-        lambda acc, w: (acc * base + poly_hash_expr(w, base, mod)) % mod,
+        lambda acc, w: (acc * POLY_BASE + poly_hash_expr(w)) % POLY_MOD,
     )
 
 
-def simhash_poly(text: Column, ngram: int = 2, bits: int = 30) -> Column:
-    """SQL-reproducible SimHash sketch: ``bits``-wide sign-vote sketch over
-    word n-grams hashed with the polynomial primitive (< 2^31, so 30 usable
+def simhash_poly(text: Column) -> Column:
+    """SQL-reproducible SimHash sketch: 30-bit sign-vote sketch over word
+    bigrams hashed with the polynomial primitive (< 2^31, so 30 usable
     bits): for each bit j, sum +1/−1 over the shingles' bit j, then set bit
     j iff the sum is positive. The base hash is arithmetic so both engines
     compute it — the registry's ``simhash_sketch`` query and its DuckDB
     oracle are built on this function (VERDICT.md next-step #3)."""
-    sh = word_shingles(text, ngram)
+    bits = 30
+    sh = word_shingles(text, 2)
     hashes = F.transform(sh, lambda s: poly_hash_expr(s))
 
     def bit_votes(h: Column) -> Column:

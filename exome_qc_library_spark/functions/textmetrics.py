@@ -137,7 +137,7 @@ METRIC_NAMES: tuple[str, ...] = (
 )
 
 
-def with_text_metrics(df: DataFrame, text_col: str = "text", prefix: str = "") -> DataFrame:
-    """Annotate all metrics in ONE ``withColumns`` projection (annotate-don't-drop)."""
-    cols = {prefix + name: expr for name, expr in text_metrics(F.col(text_col)).items()}
-    return df.withColumns(cols)
+def with_text_metrics(df: DataFrame) -> DataFrame:
+    """Annotate all metrics of ``text`` in ONE ``withColumns`` projection
+    (annotate-don't-drop)."""
+    return df.withColumns(text_metrics(F.col("text")))

@@ -37,22 +37,11 @@ from ..functions.hashing import word_shingles
 from ..functions.textmetrics import words_expr
 
 
-def benchmark_ngrams(
-    benchmark: DataFrame,
-    text_col: str = "text",
-    n: int = 8,
-    hashed: bool = True,
-    lowercase: bool = True,
-) -> DataFrame:
-    """Distinct n-gram set of the benchmark corpus (the broadcast side).
-
-    ``lowercase=False`` matches case-sensitively (a benchmark whose
-    contract demands exactness — round-3 VERDICT #7); the default folds
-    case, the same normalization the cross-doc-line operator applies.
-    """
-    grams = benchmark.select(
-        F.explode(word_shingles(F.col(text_col), n, lowercase=lowercase)).alias("__gram")
-    )
+def benchmark_ngrams(benchmark: DataFrame, n: int, hashed: bool) -> DataFrame:
+    """Distinct n-gram set of the benchmark corpus's ``text`` (the
+    broadcast side). Case folds, the same normalization the cross-doc-line
+    operator applies."""
+    grams = benchmark.select(F.explode(word_shingles(F.col("text"), n)).alias("__gram"))
     if hashed:
         grams = grams.select(F.xxhash64("__gram").alias("__gram"))
     return grams.distinct()
@@ -62,16 +51,13 @@ def flag_contaminated(
     docs: DataFrame,
     benchmark: DataFrame,
     key_col: str = "url",
-    text_col: str = "text",
-    bench_text_col: str = "text",
     n: int = 8,
     hashed: bool = True,
-    lowercase: bool = True,
     flag_col: str = "final_failing_qc",
-    tag: str = "contaminated",
 ) -> DataFrame:
-    """Append ``tag`` to ``flag_col`` for every doc sharing an n-gram with
-    the benchmark. Row count and key set preserved (annotate-don't-drop).
+    """Append ``contaminated`` to ``flag_col`` for every doc whose ``text``
+    shares a case-folded n-gram with the benchmark's ``text``. Row count
+    and key set preserved (annotate-don't-drop).
 
     The benchmark gram set is always hinted for broadcast. The hit-set
     join-back is never hinted (round-3 VERDICT #2): the hit set is
@@ -80,14 +66,8 @@ def flag_contaminated(
     broadcast of an unbounded set is a driver/executor OOM at 10^12-doc
     scale. The join key is the uniform doc key, so AQE broadcasts exactly
     when the hit set actually fits.
-
-    ``lowercase=False`` makes the n-gram match case-sensitive on both
-    sides (round-3 VERDICT #7); hashed and string forms are pinned equal
-    for both settings in tests/test_decontaminate_sampling.py.
     """
-    bench = F.broadcast(
-        benchmark_ngrams(benchmark, bench_text_col, n, hashed, lowercase=lowercase)
-    )
+    bench = F.broadcast(benchmark_ngrams(benchmark, n, hashed))
     # benchmark items SHORTER than n words contribute one whole-text gram
     # of length < n (word_shingles' short-doc rule) — a gram the doc side's
     # n-shingling never emits, so a 6-word eval question quoted verbatim
@@ -96,22 +76,18 @@ def flag_contaminated(
     # actually contains: the length set is a tiny driver-side probe of the
     # (broadcast-small by contract) benchmark, and the common no-short-item
     # case costs nothing extra.
-    bench_words = words_expr(
-        F.lower(F.col(bench_text_col)) if lowercase else F.col(bench_text_col)
-    )
+    bench_words = words_expr(F.lower(F.col("text")))
     short_lens = sorted(
         r["L"]
-        for r in benchmark.filter(F.col(bench_text_col).isNotNull())
+        for r in benchmark.filter(F.col("text").isNotNull())
         .select(F.size(bench_words).alias("L"))
         .filter((F.col("L") > 0) & (F.col("L") < n))
         .distinct()
         .collect()
     )
-    doc_gram_expr = word_shingles(F.col(text_col), n, lowercase=lowercase)
+    doc_gram_expr = word_shingles(F.col("text"), n)
     for L in short_lens:
-        doc_gram_expr = F.array_union(
-            doc_gram_expr, word_shingles(F.col(text_col), L, lowercase=lowercase)
-        )
+        doc_gram_expr = F.array_union(doc_gram_expr, word_shingles(F.col("text"), L))
     doc_grams = docs.select(
         F.col(key_col).alias("__k"),
         F.explode(doc_gram_expr).alias("__gram"),
@@ -126,6 +102,6 @@ def flag_contaminated(
     )
     out = docs.join(hits, docs[key_col] == hits["__k"], "left").drop("__k")
     out = add_flags(
-        out, flag_col, {tag: F.coalesce(F.col("__contaminated"), F.lit(False))}
+        out, flag_col, {"contaminated": F.coalesce(F.col("__contaminated"), F.lit(False))}
     )
     return out.drop("__contaminated")

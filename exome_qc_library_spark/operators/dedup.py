@@ -29,7 +29,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.flags import add_flags
@@ -44,57 +44,50 @@ from ..functions.hashing import (
 # ------------------------------------------------------------- exact dedup
 
 
-def flag_exact_duplicates(
-    df: DataFrame,
-    key_col: str = "url",
-    text_col: str = "text",
-    order_col: str = "warc_ts",
-    flag_col: str = "low_pass_failing_qc",
-) -> DataFrame:
+def flag_exact_duplicates(df: DataFrame) -> DataFrame:
     """Exact dedup: hash-groupBy on sha2(text); keep the earliest
-    ``order_col`` (tie-break on key) per content group, flag the rest.
+    ``warc_ts`` (tie-break on ``url``) per content group, flag the rest as
+    ``exact_duplicate`` in ``low_pass_failing_qc``.
 
     One shuffle on the 256-bit content hash (uniform — no skew), map-side
     partial aggregation via min(struct). The winner choice mirrors the
     reference's independent-set preference rules (case-preferring,
     ``shared/samples_qc.py:691-713``) — here earliest-crawl-wins. A NULL
-    ``order_col`` sorts LAST (the is-null flag leads the struct): struct
+    ``warc_ts`` sorts LAST (the is-null flag leads the struct): struct
     ordering would otherwise put NULL first and a timestamp-less copy
     would beat every genuinely-dated crawl (round-6 review).
     """
-    h = exact_content_hash(F.col(text_col))
+    h = exact_content_hash(F.col("text"))
     with_h = df.withColumn("__chash", h)
     winners = (
-        with_h.filter(F.col(text_col).isNotNull())
+        with_h.filter(F.col("text").isNotNull())
         .groupBy("__chash")
         .agg(
             F.min(
                 F.struct(
-                    F.col(order_col).isNull().alias("o_missing"),
-                    F.col(order_col),
-                    F.col(key_col),
+                    F.col("warc_ts").isNull().alias("o_missing"),
+                    F.col("warc_ts"),
+                    F.col("url"),
                 )
             ).alias("w"),
             F.count(F.lit(1)).alias("n"),
         )
-        .select(
-            "__chash", F.col("w")[key_col].alias("__winner"), F.col("n").alias("__nsame")
-        )
+        .select("__chash", F.col("w")["url"].alias("__winner"), F.col("n").alias("__nsame"))
     )
     out = with_h.join(winners, "__chash", "left")
     is_dup = (
-        F.col(text_col).isNotNull()
+        F.col("text").isNotNull()
         & (F.col("__nsame") > 1)
-        & (F.col(key_col) != F.col("__winner"))
+        & (F.col("url") != F.col("__winner"))
     )
-    out = add_flags(out, flag_col, {"exact_duplicate": is_dup})
+    out = add_flags(out, "low_pass_failing_qc", {"exact_duplicate": is_dup})
     return out.drop("__chash", "__winner", "__nsame")
 
 
 # ----------------------------------------------------------- MinHash LSH
 
 
-def _minhash_sig_udf(num_perm: int, seed: int = 42):
+def _minhash_sig_udf(num_perm: int):
     """Vectorized signature kernel: per Arrow batch, ALL rows' base hashes
     are flattened into one array, the affine permutation family
     ((h·a + b) mod P) is applied to cache-sized chunks, and per-row minima
@@ -106,7 +99,7 @@ def _minhash_sig_udf(num_perm: int, seed: int = 42):
     Base hashes stay JVM-side (xxhash64)."""
     from ..functions.hashing import _MH_PRIME, _mh_params
 
-    params = _mh_params(num_perm, seed)
+    params = _mh_params(num_perm)
     a = np.array([p[0] for p in params], dtype=np.int64)[:, None]
     b = np.array([p[1] for p in params], dtype=np.int64)[:, None]
     # rows are processed in chunks of <= CHUNK_HASHES flattened hashes so the
@@ -180,22 +173,13 @@ def _minhash_sig_batch(vals, a, b, chunk_hashes: int) -> list:
     return out
 
 
-def minhash_sketch(
-    df: DataFrame,
-    key_col: str = "url",
-    text_col: str = "text",
-    num_perm: int = 64,
-    shingle_n: int = 3,
-    seed: int = 42,
-    carry: tuple[Column, ...] = (),
-) -> DataFrame:
-    """The MinHash sketch table ``(k, *carry, sig)``: word shingles →
+def minhash_sketch(df: DataFrame, key_col: str = "url", num_perm: int = 64) -> DataFrame:
+    """The MinHash sketch table ``(k, sig)``: word 3-shingles of ``text`` →
     xxhash64 base hashes → vectorized signature UDF, one row per doc with
     at least one shingle (NULL, empty and ASCII-whitespace-only text is
     dropped). The one sketch definition, called by s5's
-    :func:`minhash_candidate_pairs`; ``carry`` adds columns that ride
-    next to the key, such as a representative order column. No
-    materialization barrier here — the caller owns it.
+    :func:`minhash_candidate_pairs`. No materialization barrier here — the
+    caller owns it.
 
     The filter runs BEFORE the UDF, on the text: ``words_expr`` splits on
     Java ``\\s+``, so a doc has a shingle iff its text has a non-``\\s``
@@ -209,27 +193,22 @@ def minhash_sketch(
     key through Python both ways; an array<int> downcast of the hashes
     also LOST (the element-wise cast pass costs more than the bytes it
     saves). A/B in BENCH.md round 5."""
-    return df.filter(F.col(text_col).rlike(r"\S")).select(
+    return df.filter(F.col("text").rlike(r"\S")).select(
         F.col(key_col).alias("k"),
-        *carry,
-        _minhash_sig_udf(num_perm, seed)(
-            shingle_hashes(word_shingles(F.col(text_col), shingle_n))
-        ).alias("sig"),
+        _minhash_sig_udf(num_perm)(shingle_hashes(word_shingles(F.col("text")))).alias("sig"),
     )
 
 
 def minhash_candidate_pairs(
     df: DataFrame,
     key_col: str = "url",
-    text_col: str = "text",
     num_perm: int = 64,
     bands: int = 16,
-    shingle_n: int = 3,
     max_bucket: int = 200,
     arithmetic: bool = False,
-    seed: int = 42,
 ) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash.
+    """Candidate near-dup pairs via banded MinHash over word 3-shingles of
+    ``text``.
 
     Returns (a, b, jaccard_est) with a < b, deduplicated across bands.
     ``jaccard_est`` = fraction of matching signature slots.
@@ -267,19 +246,19 @@ def minhash_candidate_pairs(
         # num_perm times per row (measured 62s → ~3s at 500 docs); eager
         # for the same concurrent-job reason as the sketch barrier below
         hs = (
-            df.filter(F.col(text_col).isNotNull() & (F.length(text_col) > 0))
+            df.filter(F.col("text").isNotNull() & (F.length("text") > 0))
             .select(
                 F.col(key_col).alias("k"),
-                poly_shingle_hashes(word_shingles(F.col(text_col), shingle_n)).alias("hs"),
+                poly_shingle_hashes(word_shingles(F.col("text"))).alias("hs"),
             )
             .localCheckpoint()
         )
         # shingle-less docs yield an array of NULL slots here
-        sk = hs.select(
-            "k", minhash_signature(F.col("hs"), num_perm, seed).alias("sig")
-        ).filter(F.col("sig")[0].isNotNull())
+        sk = hs.select("k", minhash_signature(F.col("hs"), num_perm).alias("sig")).filter(
+            F.col("sig")[0].isNotNull()
+        )
     else:
-        sk = minhash_sketch(df, key_col, text_col, num_perm, shingle_n, seed)
+        sk = minhash_sketch(df, key_col, num_perm)
     sk = sk.localCheckpoint()
     # Band on the KEY only — the 8·num_perm-byte signature must not ride
     # through the bands-way exploded shuffle (at 50k docs that is ~450 MB of
@@ -335,8 +314,8 @@ def minhash_candidate_pairs(
     return pairs
 
 
-def connected_components_driver(pairs: DataFrame, a: str = "a", b: str = "b") -> dict[str, str]:
-    """Union-find over collected edges → {key: cluster_rep(min key)}.
+def connected_components_driver(pairs: DataFrame) -> dict[str, str]:
+    """Union-find over collected ``(a, b)`` edges → {key: cluster_rep(min key)}.
 
     Driver boundary deliberately bounded by the number of *pairs*, like
     the reference's to_pandas→networkx step (``shared/samples_qc.py:805``).
@@ -353,8 +332,8 @@ def connected_components_driver(pairs: DataFrame, a: str = "a", b: str = "b") ->
     # toLocalIterator() (one sequential job per partition): the edge set
     # is small by design but at web scale it is still 10⁵-10⁶ rows, and
     # this driver boundary is serial — Amdahl's s in the scaling study
-    pdf = pairs.select(a, b).toPandas()
-    for x, y in zip(pdf[a].tolist(), pdf[b].tolist()):
+    pdf = pairs.select("a", "b").toPandas()
+    for x, y in zip(pdf["a"].tolist(), pdf["b"].tolist()):
         parent.setdefault(x, x)
         parent.setdefault(y, y)
         rx, ry = find(x), find(y)
@@ -409,21 +388,15 @@ def connected_components_df(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     return labels.select(F.col("k"), F.col("c").alias("dup_cluster_id"))
 
 
-def flag_near_duplicates(
-    df: DataFrame,
-    key_col: str = "url",
-    text_col: str = "text",
-    order_col: str = "warc_ts",
-    flag_col: str = "final_failing_qc",
-    threshold: float = 0.8,
-    num_perm: int = 64,
-    bands: int = 16,
-    max_driver_pairs: int = 5_000_000,
-) -> DataFrame:
-    """Full near-dup stage: banded MinHash-LSH pairs (word shingles;
-    ``threshold``/``num_perm``/``bands`` apply) → threshold → components
-    → representative per cluster → ``near_duplicate`` flags,
-    ``dup_cluster_id`` annotation. Row count preserved.
+# the estimated Jaccard similarity at or above which two docs are near-dups
+NEAR_DUP_THRESHOLD = 0.8
+
+
+def flag_near_duplicates(df: DataFrame, max_driver_pairs: int = 5_000_000) -> DataFrame:
+    """Full near-dup stage: banded MinHash-LSH pairs over ``text`` →
+    ``NEAR_DUP_THRESHOLD`` → components → representative per cluster →
+    ``near_duplicate`` flags in ``final_failing_qc``, ``dup_cluster_id``
+    annotation. Row count preserved.
 
     The clustering path is SIZE-GATED, never chosen by the caller
     (round-4 VERDICT #1): the thresholded pair set is localCheckpoint'd
@@ -434,11 +407,10 @@ def flag_near_duplicates(
     mirrors the reference's own driver-boundary cap on its
     to_pandas→networkx step (``shared/samples_qc.py:805-808``).
 
-    The representative of a cluster is its smallest ``(order_col, key)``
+    The representative of a cluster is its smallest ``(warc_ts, url)``
     (the reference's preferring independent set,
-    ``shared/samples_qc.py:691-713``): the default ``warc_ts`` is
-    earliest-crawl-wins; a derived column such as ``-quality_score``
-    keeps the highest-quality copy. NULL ``order_col`` values never win.
+    ``shared/samples_qc.py:691-713``): earliest crawl wins, and a NULL
+    ``warc_ts`` never does.
     Keeping exactly one representative per connected component guarantees
     the kept set induces an edgeless subgraph (every above-threshold pair
     lies within one component — the reference's nx-independent-set sanity
@@ -453,9 +425,7 @@ def flag_near_duplicates(
                 f"input already carries reserved column {reserved!r}; "
                 "drop or rename it before re-running near-dup flagging"
             )
-    pairs = minhash_candidate_pairs(
-        df, key_col=key_col, text_col=text_col, num_perm=num_perm, bands=bands
-    ).filter(F.col("jaccard_est") >= threshold)
+    pairs = minhash_candidate_pairs(df).filter(F.col("jaccard_est") >= NEAR_DUP_THRESHOLD)
     # materialize once so the gate count and the chosen CC path share the
     # LSH work instead of recomputing the sketch pipeline twice
     pairs = pairs.localCheckpoint()
@@ -465,7 +435,7 @@ def flag_near_duplicates(
         if not mapping:
             return add_flags(
                 df.withColumn("dup_cluster_id", F.lit(None).cast("string")),
-                flag_col,
+                "final_failing_qc",
                 {"near_duplicate": F.lit(False)},
             )
         spark = df.sparkSession
@@ -474,42 +444,40 @@ def flag_near_duplicates(
         # DRIVER-SERIAL cost at web-scale pair counts (Amdahl: serial
         # driver work is what caps the N→4N scaling efficiency)
         cdf = spark.createDataFrame(
-            pd.DataFrame(
-                {key_col: list(mapping.keys()), "dup_cluster_id": list(mapping.values())}
-            ),
-            schema=f"{key_col} string, dup_cluster_id string",
+            pd.DataFrame({"url": list(mapping.keys()), "dup_cluster_id": list(mapping.values())}),
+            schema="url string, dup_cluster_id string",
         )
     else:
         cdf = connected_components_df(pairs).withColumnsRenamed(
-            {"k": key_col, "dup_cluster_id": "dup_cluster_id"}
+            {"k": "url", "dup_cluster_id": "dup_cluster_id"}
         )
     # broadcast ONLY on the driver path (the mapping already fit in driver
     # memory, so it broadcasts by construction); the distributed-CC path
     # exists precisely because the cluster mapping may NOT fit — there the
     # join is left to AQE, which shuffles or broadcasts on actual size
     maybe_bcast = F.broadcast if on_driver else (lambda d: d)
-    out = df.join(maybe_bcast(cdf), key_col, "left")
-    # representative = (order_col, key) min per cluster, computed on the
+    out = df.join(maybe_bcast(cdf), "url", "left")
+    # representative = (warc_ts, url) min per cluster, computed on the
     # TINY clustered subset and joined back — NOT a window over the full
     # table (a window with NULL cluster for 99% of rows funnels the whole
     # table into one straggler partition). NULL order values sort LAST
     # (the is-null flag precedes the order column in the struct): bare
     # struct ordering would put NULL first, letting e.g. a timestamp-less
     # copy beat every dated crawl
-    order = F.col(order_col)
+    order = F.col("warc_ts")
     reps = (
         out.filter(F.col("dup_cluster_id").isNotNull())
         .groupBy("dup_cluster_id")
         .agg(
             F.min(
-                F.struct(order.isNull().alias("pn0"), order.alias("p0"), F.col(key_col))
+                F.struct(order.isNull().alias("pn0"), order.alias("p0"), F.col("url"))
             ).alias("w")
         )
-        .select("dup_cluster_id", F.col("w")[key_col].alias("__rep"))
+        .select("dup_cluster_id", F.col("w")["url"].alias("__rep"))
     )
     out = out.join(maybe_bcast(reps), "dup_cluster_id", "left")
-    is_dup = F.col("dup_cluster_id").isNotNull() & (F.col(key_col) != F.col("__rep"))
-    return add_flags(out, flag_col, {"near_duplicate": is_dup}).drop("__rep")
+    is_dup = F.col("dup_cluster_id").isNotNull() & (F.col("url") != F.col("__rep"))
+    return add_flags(out, "final_failing_qc", {"near_duplicate": is_dup}).drop("__rep")
 
 
 # ------------------------------------- cross-document duplicate lines
@@ -518,11 +486,10 @@ def flag_near_duplicates(
 def cross_doc_dup_line_stats(
     docs: DataFrame,
     key_col: str = "url",
-    text_col: str = "text",
     min_line_chars: int = 10,
     hashed: bool = True,
 ) -> DataFrame:
-    """Per-doc (n_lines, n_shared): how many of the doc's distinct eligible
+    """Per-doc (n_lines, n_shared) over ``text``: how many of the doc's distinct eligible
     lines also appear in at least one OTHER document — the cross-corpus
     boilerplate signal (nav bars, cookie banners, footers) that the
     within-doc ``dup_line_frac`` metric cannot see.
@@ -546,7 +513,7 @@ def cross_doc_dup_line_stats(
     lines = (
         docs.select(
             F.col(key_col).alias("__k"),
-            F.explode(F.split(F.col(text_col), "\n")).alias("__raw"),
+            F.explode(F.split(F.col("text"), "\n")).alias("__raw"),
         )
         .select("__k", F.trim(F.lower(F.col("__raw"))).alias("__line"))
         .filter(F.length("__line") >= min_line_chars)
@@ -571,38 +538,28 @@ def cross_doc_dup_line_stats(
     )
 
 
-def flag_cross_doc_dup_lines(
-    docs: DataFrame,
-    key_col: str = "url",
-    text_col: str = "text",
-    max_shared_frac: float = 0.6,
-    min_line_chars: int = 10,
-    hashed: bool = True,
-    flag_col: str = "low_pass_failing_qc",
-    tag: str = "cross_doc_dup_lines",
-) -> DataFrame:
-    """Flag docs whose shared-line fraction exceeds ``max_shared_frac``.
-    Row count and key set preserved (annotate-don't-drop); the comparison
-    is ``n_shared > frac · n_lines`` (no division — exact in both
-    engines)."""
-    st = cross_doc_dup_line_stats(docs, key_col, text_col, min_line_chars, hashed)
-    out = docs.join(st, key_col, "left")
+def flag_cross_doc_dup_lines(docs: DataFrame, max_shared_frac: float = 0.6) -> DataFrame:
+    """Flag docs whose shared-line fraction exceeds ``max_shared_frac`` as
+    ``cross_doc_dup_lines`` in ``low_pass_failing_qc``. Row count and key
+    set preserved (annotate-don't-drop); the comparison is
+    ``n_shared > frac · n_lines`` (no division — exact in both engines)."""
+    out = docs.join(cross_doc_dup_line_stats(docs), "url", "left")
     pred = F.coalesce(
         F.col("n_shared") > F.lit(max_shared_frac) * F.col("n_lines"), F.lit(False)
     )
-    return add_flags(out, flag_col, {tag: pred}).drop("n_lines", "n_shared")
+    return add_flags(out, "low_pass_failing_qc", {"cross_doc_dup_lines": pred}).drop(
+        "n_lines", "n_shared"
+    )
 
 
 def strip_boilerplate_lines(
     docs: DataFrame,
     key_col: str = "url",
-    text_col: str = "text",
     min_docs: int = 3,
     min_line_chars: int = 10,
     hashed: bool = True,
-    out_col: str = "text_clean",
 ) -> DataFrame:
-    """C4-style boilerplate REMOVAL: rewrite each doc's text with every
+    """C4-style boilerplate REMOVAL: ``text_clean`` is each doc's ``text`` with every
     line that occurs (normalized: trim+lower) in ≥ ``min_docs`` distinct
     documents stripped out, preserving the order and original bytes of
     the surviving lines. The surgical complement of
@@ -635,9 +592,9 @@ def strip_boilerplate_lines(
     for c in ("__k", "__pos", "__raw", "__norm", "__elig", "__nk", "__hit"):
         if c in docs.columns:
             raise ValueError(f"input already carries reserved column {c!r}")
-    lines = docs.filter(F.col(text_col).isNotNull()).select(
+    lines = docs.filter(F.col("text").isNotNull()).select(
         F.col(key_col).alias("__k"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("__pos", "__raw"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("__pos", "__raw"),
     )
     norm = F.trim(F.lower(F.col("__raw")))
     lines = lines.select(
@@ -679,7 +636,7 @@ def strip_boilerplate_lines(
                 F.array_sort(F.collect_list(F.struct("__pos", "__raw"))),
                 lambda s: s["__raw"],
             ),
-        ).alias(out_col)
+        ).alias("text_clean")
     )
     out = docs.join(rebuilt.withColumnRenamed("__k", key_col), key_col, "left")
     # all-lines-stripped docs vanish from `kept` — they are "", not NULL;
@@ -688,8 +645,8 @@ def strip_boilerplate_lines(
     # losing their text to the coalesce. `key_col` must be unique, as in
     # every per-key operator here — duplicate keys would merge texts.
     return out.withColumn(
-        out_col,
-        F.when(F.col(key_col).isNull(), F.col(text_col)).when(
-            F.col(text_col).isNotNull(), F.coalesce(F.col(out_col), F.lit(""))
+        "text_clean",
+        F.when(F.col(key_col).isNull(), F.col("text")).when(
+            F.col("text").isNotNull(), F.coalesce(F.col("text_clean"), F.lit(""))
         ),
     )

@@ -58,26 +58,17 @@ DEFAULT_EXT_N = 10_000
 _P_HIGH, _FREQ_HIGH, _P_MED = 0.99, 1e-3, 0.5
 
 
-def call_denovo_content(
-    docs: DataFrame,
-    panel_af: DataFrame,
-    *,
-    family_col: str = "family",
-    snapshot_col: str = "snapshot",
-    fingerprint_col: str = "fingerprint",
-    id_col: str = "doc_id",
-    child_snapshot: int = 2,
-    ext_n: int = DEFAULT_EXT_N,
-) -> DataFrame:
+def call_denovo_content(docs: DataFrame, panel_af: DataFrame) -> DataFrame:
     """Call de-novo (original) content per child doc.
 
-    ``docs`` needs (id, family, snapshot∈{0,1,child}, fingerprint) —
-    fingerprint rows with NULLs are ignored. ``panel_af`` is the
-    external reference-population table ``(fingerprint_col, panel_af)``;
+    ``docs`` needs (doc_id, family, snapshot∈{0,1,2}, fingerprint), the
+    child window being snapshot 2 — fingerprint rows with NULLs are
+    ignored. ``panel_af`` is the external reference-population table
+    ``(fingerprint, panel_af)``;
     fingerprints absent from it get panel_af = 0 (the reference's
     ``or_else(gnomad_af, 0)``). Returns one row per child-window doc
     whose fingerprint is a de-novo candidate, with
-    (id, family, fingerprint, n_copies, site_freq_n, prior, p_denovo,
+    (doc_id, family, fingerprint, n_copies, site_freq_n, prior, p_denovo,
     confidence).
 
     The per-family exposure table is never hinted for broadcast:
@@ -86,45 +77,45 @@ def call_denovo_content(
     (``decontaminate.py``), so AQE decides.
     """
     present = docs.filter(
-        F.col(family_col).isNotNull() & F.col(snapshot_col).isNotNull()
+        F.col("family").isNotNull() & F.col("snapshot").isNotNull()
     )
     # NULL fingerprints can't carry calls, but the docs still exist for
     # trio completeness / exposure (a parent with unusable text is still
     # a parent — the reference requires the parent GENOTYPE defined at
     # the site, which maps to fingerprint presence, handled in fam_fp).
-    d = present.filter(F.col(fingerprint_col).isNotNull())
-    is_child = F.col(snapshot_col) == F.lit(child_snapshot)
+    d = present.filter(F.col("fingerprint").isNotNull())
+    is_child = F.col("snapshot") == F.lit(2)
 
     # Per-(family, fingerprint) presence — ONE uniform-key shuffle.
-    fam_fp = d.groupBy(family_col, fingerprint_col).agg(
+    fam_fp = d.groupBy("family", "fingerprint").agg(
         F.sum(F.when(is_child, 1).otherwise(0)).alias("child_count"),
         F.sum(F.when(~is_child, 1).otherwise(0)).alias("parent_count"),
     )
 
     # Global fingerprint copy-count (site frequency numerator).
-    fp_counts = d.groupBy(fingerprint_col).agg(F.count(F.lit(1)).alias("n_copies"))
+    fp_counts = d.groupBy("fingerprint").agg(F.count(F.lit(1)).alias("n_copies"))
 
     # Corpus total: single-row broadcast cross-join (host_qc.py pattern).
     totals = d.agg(F.count(F.lit(1)).alias("total_docs"))
 
     # Trio completeness + parent exposure per family (tiny table).
-    fam_stats = present.groupBy(family_col).agg(
-        F.sum(F.when(F.col(snapshot_col) == 0, 1).otherwise(0)).alias("n_parent_a"),
-        F.sum(F.when(F.col(snapshot_col) == 1, 1).otherwise(0)).alias("n_parent_b"),
+    fam_stats = present.groupBy("family").agg(
+        F.sum(F.when(F.col("snapshot") == 0, 1).otherwise(0)).alias("n_parent_a"),
+        F.sum(F.when(F.col("snapshot") == 1, 1).otherwise(0)).alias("n_parent_b"),
     )
 
     candidates = (
         fam_fp.filter((F.col("child_count") > 0) & (F.col("parent_count") == 0))
-        .join(fam_stats, family_col)
+        .join(fam_stats, "family")
         .filter((F.col("n_parent_a") > 0) & (F.col("n_parent_b") > 0))
-        .join(fp_counts, fingerprint_col)
+        .join(fp_counts, "fingerprint")
         .crossJoin(F.broadcast(totals))
-        .join(panel_af, fingerprint_col, "left")
+        .join(panel_af, "fingerprint", "left")
         .withColumn("panel_af", F.coalesce(F.col("panel_af"), F.lit(0.0)))
     )
 
     site_freq_n = F.greatest(F.col("n_copies") - 1, F.lit(0)) / (
-        F.col("total_docs") + F.lit(ext_n)
+        F.col("total_docs") + F.lit(DEFAULT_EXT_N)
     )
     prior = F.greatest(F.col("panel_af"), F.col("site_freq_n"))
     exposure = F.col("n_parent_a") + F.col("n_parent_b")
@@ -149,17 +140,17 @@ def call_denovo_content(
     # One row per CHILD doc carrying the candidate fingerprint — joining
     # the rare candidate set back onto the child docs moves only hits.
     children = d.filter(is_child).select(
-        F.col(id_col), F.col(family_col), F.col(fingerprint_col)
+        F.col("doc_id"), F.col("family"), F.col("fingerprint")
     )
     return children.join(
         scored.select(
-            family_col,
-            fingerprint_col,
+            "family",
+            "fingerprint",
             "n_copies",
             "site_freq_n",
             "prior",
             "p_denovo",
             "confidence",
         ),
-        [family_col, fingerprint_col],
+        ["family", "fingerprint"],
     )

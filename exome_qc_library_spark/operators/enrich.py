@@ -23,15 +23,10 @@ from ..functions.flags import add_flags
 from ..functions.urltools import host_expr
 
 
-def enrich_with_host_metadata(
-    df: DataFrame,
-    host_metadata: DataFrame,
-    url_col: str = "url",
-    host_col: str = "host",
-) -> DataFrame:
-    """Left join of per-host metadata onto the pages table, with the
-    metadata hinted for broadcast (curated crawl-metadata tables are
-    dimension-sized).
+def enrich_with_host_metadata(df: DataFrame, host_metadata: DataFrame) -> DataFrame:
+    """Left join of per-host metadata onto the pages table on the ``host``
+    of each ``url``, with the metadata hinted for broadcast (curated
+    crawl-metadata tables are dimension-sized).
 
     Row count is preserved: each non-NULL host may appear at most once in
     ``host_metadata``, checked by one small job on that table before the
@@ -41,7 +36,7 @@ def enrich_with_host_metadata(
     # duplicate column names that die later as AMBIGUOUS_REFERENCE or
     # silently resolve to the stale copy); union_cols below enforces the
     # same rule for the generic column-union
-    clash = (set(df.columns) & set(host_metadata.columns)) - {host_col}
+    clash = (set(df.columns) & set(host_metadata.columns)) - {"host"}
     if clash:
         raise ValueError(
             f"enrich_with_host_metadata: metadata columns {sorted(clash)} "
@@ -52,11 +47,11 @@ def enrich_with_host_metadata(
     # on the driver
     repeated = sorted(
         r[0]
-        for r in host_metadata.filter(F.col(host_col).isNotNull())
-        .groupBy(host_col)
+        for r in host_metadata.filter(F.col("host").isNotNull())
+        .groupBy("host")
         .count()
         .filter(F.col("count") > 1)
-        .select(host_col)
+        .select("host")
         .collect()
     )
     if repeated:
@@ -64,20 +59,14 @@ def enrich_with_host_metadata(
             f"enrich_with_host_metadata: host_metadata repeats hosts {repeated}; "
             "each host must appear once, or the join repeats every doc on it"
         )
-    out = df.withColumn(host_col, host_expr(F.col(url_col)))
-    return out.join(F.broadcast(host_metadata), host_col, "left")
+    out = df.withColumn("host", host_expr(F.col("url")))
+    return out.join(F.broadcast(host_metadata), "host", "left")
 
 
-def union_cols(
-    a: DataFrame,
-    b: DataFrame,
-    key: str,
-    how: str = "inner",
-    suffix: str = "_r",
-) -> DataFrame:
+def union_cols(a: DataFrame, b: DataFrame, key: str) -> DataFrame:
     """J8 ``union_cols`` analog: combine two tables' column sets keyed by
-    the row key (Hail's column-wise MatrixTable union). Pure equi-join;
-    overlapping non-key columns from ``b`` get ``suffix``. Broadcast is
+    the row key (Hail's column-wise MatrixTable union). Pure inner
+    equi-join; overlapping non-key columns from ``b`` get ``_r``. Broadcast is
     left to AQE/statistics — either side may be the big one.
 
     Reference: ``mt.union_cols`` usage in the merged-callset flow
@@ -86,25 +75,28 @@ def union_cols(
     overlap = (set(a.columns) & set(b.columns)) - {key}
     renamed = b
     for c in overlap:
-        target = f"{c}{suffix}"
+        target = f"{c}_r"
         # the rename must not silently shadow an existing column — duplicate
         # names make every later by-name select ambiguous at a distance
         if target in a.columns or target in b.columns:
             raise ValueError(
                 f"union_cols: renaming overlapping column {c!r} to {target!r} "
-                f"collides with an existing column; pass a different suffix"
+                "collides with an existing column; rename it first"
             )
         renamed = renamed.withColumnRenamed(c, target)
-    return a.join(renamed, key, how)
+    return a.join(renamed, key)
 
 
-def flag_spam_hosts(
-    df: DataFrame,
-    max_spam_score: float = 0.8,
-    flag_col: str = "low_pass_failing_qc",
-) -> DataFrame:
-    """Flag docs on hosts whose metadata spam_score exceeds the threshold.
+# the host-metadata spam_score above which a host's docs are flagged
+MAX_SPAM_SCORE = 0.8
+
+
+def flag_spam_hosts(df: DataFrame) -> DataFrame:
+    """Flag docs on hosts whose metadata spam_score exceeds
+    ``MAX_SPAM_SCORE`` as ``spam_host`` in ``low_pass_failing_qc``.
     NULL score (host absent from metadata / 'NA' token) is NOT flagged —
     matching the reference's defined-guard joins, not the missing-metric
     rule (absence of optional metadata is normal)."""
-    return add_flags(df, flag_col, {"spam_host": F.col("spam_score") > max_spam_score})
+    return add_flags(
+        df, "low_pass_failing_qc", {"spam_host": F.col("spam_score") > MAX_SPAM_SCORE}
+    )

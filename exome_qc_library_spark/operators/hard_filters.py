@@ -82,16 +82,15 @@ def apply_hard_filters(
     df: DataFrame,
     flag_col: str = "low_pass_failing_qc",
     thresholds: QualityThresholds = LOW_PASS,
-    text_col: str = "text",
     compute_metrics: bool = True,
 ) -> DataFrame:
-    """Annotate metrics (if absent) + append one flag per violated rule.
+    """Annotate ``text``'s metrics (if absent) + append one flag per violated rule.
 
     Row count and key set are preserved; thresholds are recorded by the
     checkpoint manifest (the Hail-globals analog) by the pipeline runner.
     """
     if compute_metrics and not set(METRIC_NAMES).issubset(df.columns):
-        df = with_text_metrics(df, text_col=text_col)
+        df = with_text_metrics(df)
     df = with_flag_column(df, flag_col)
     return add_flags(df, flag_col, quality_rules(thresholds), _missing_inputs())
 

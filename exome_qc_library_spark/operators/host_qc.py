@@ -40,11 +40,10 @@ def host_metrics(
     url_col: str = "url",
     batch_col: str | None = None,
     measures: tuple[str, ...] = HOST_MEASURES,
-    salt_buckets: int = 16,
 ) -> DataFrame:
     """Per-host metric table via salted two-level aggregation.
 
-    Partial agg on (host, salt) — map-side combine bounds the skewed key —
+    Partial agg on (host, salt of 16) — map-side combine bounds the skewed key —
     then a tiny final agg on host recombines counts/sums exactly. When
     ``batch_col`` is given it is carried as a grouping key (hosts are
     batch-homogeneous in the crawl metadata model; a host appearing in two
@@ -62,7 +61,7 @@ def host_metrics(
     """
     keys = ["host"] + ([batch_col] if batch_col else [])
     base = df.withColumns(
-        {"host": host_expr(F.col(url_col)), "__salt": salt_expr(F.col(url_col), salt_buckets)}
+        {"host": host_expr(F.col(url_col)), "__salt": salt_expr(F.col(url_col), 16)}
     )
     partial = base.groupBy(*keys, "__salt").agg(
         F.count(F.lit(1)).alias("n"),

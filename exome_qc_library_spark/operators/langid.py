@@ -131,30 +131,25 @@ def _score_batch(texts: pd.Series) -> pd.DataFrame:
 # ------------------------------------------------------------------- flags
 
 
-def flag_lang_mismatch(
-    df: DataFrame,
-    flag_col: str = "final_failing_qc",
-    claimed_col: str = "lang",
-    min_conf: float = 0.0,
-) -> DataFrame:
-    """Append ``lang_mismatch`` when a confident prediction disagrees with a
-    non-NULL claimed label; ``missing_lang_mismatch`` when no prediction
+def flag_lang_mismatch(df: DataFrame) -> DataFrame:
+    """Append ``lang_mismatch`` to ``final_failing_qc`` when a confident
+    prediction disagrees with a non-NULL claimed ``lang``;
+    ``missing_lang_mismatch`` when no prediction
     exists (the ``missing_<tag>`` convention of
     :func:`~..functions.flags.add_flags`; mirrors imputed-vs-reported sex
     discordance flags, ``shared/samples_qc.py:548-562``).
 
-    The confidence gate is STRICT (``lang_conf > min_conf``): with no
+    The confidence gate is STRICT (``lang_conf > 0``): with no
     stopword evidence at all the argmax deterministically returns the
-    first lexicon language at conf 0.0, and ``>=`` at the 0.0 default
-    flagged every stopword-free doc (numbers, code) whose claimed lang
+    first lexicon language at conf 0.0, and ``>=`` flagged every stopword-free doc (numbers, code) whose claimed lang
     differed from that arbitrary pick — zero-evidence predictions must
     never fail a doc (round-6 review)."""
     pred = (
         F.col("lang_id").isNotNull()
-        & F.col(claimed_col).isNotNull()
-        & (F.col("lang_id") != F.col(claimed_col))
-        & (F.col("lang_conf") > min_conf)
+        & F.col("lang").isNotNull()
+        & (F.col("lang_id") != F.col("lang"))
+        & (F.col("lang_conf") > 0.0)
     )
     rules = {"lang_mismatch": pred}
     missing = {"lang_mismatch": [F.col("lang_id")]}
-    return add_flags(df, flag_col, rules, missing)
+    return add_flags(df, "final_failing_qc", rules, missing)

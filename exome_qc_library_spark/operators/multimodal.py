@@ -263,11 +263,10 @@ def jpeg_dims_from_hex(hx: Column, max_segments: int = 32) -> Column:
 def with_media_dims(
     df: DataFrame,
     bin_col: str = "html",
-    out_col: str = "media_dims",
     scan_bytes: int = 65536,
     max_segments: int = 32,
 ) -> DataFrame:
-    """Image dimensions as a ``struct<width,height>`` column — pure byte
+    """Image dimensions as a ``struct<width,height>`` column ``media_dims`` — pure byte
     expressions over the payload header, no codec libraries (round-3
     VERDICT #5): PNG via fixed IHDR offsets, GIF via fixed little-endian
     offsets, WebP via VP8X/VP8/VP8L header bit math, JPEG via the
@@ -303,16 +302,17 @@ def with_media_dims(
         .when(F.substring(hx, 1, 8) == "52494646", webp_dims_from_hex(hx))
         .when(F.substring(hx, 1, 6) == "FFD8FF", jpeg_dims_from_hex(hx, max_segments))
     )
-    return out.withColumn(out_col, dims).drop(tmp)
+    return out.withColumn("media_dims", dims).drop(tmp)
 
 
 # --------------------- audio/video container metadata (round-5 VERDICT #3)
 
 
-def wav_meta_from_hex(hx: Column, max_chunks: int = 16) -> Column:
+def wav_meta_from_hex(hx: Column) -> Column:
     """``struct<sample_rate, channels, bits_per_sample, duration_ms>`` from
-    a RIFF/WAVE header — a bounded chunk walk as ONE aggregate expression
-    (no UDF), the same pattern as the JPEG SOF marker walk.
+    a RIFF/WAVE header — a bounded walk of at most 16 chunks as ONE
+    aggregate expression (no UDF), the same pattern as the JPEG SOF marker
+    walk.
 
     RIFF layout: ``RIFF`` size ``WAVE``, then chunks ``id(4) | size(LE
     u32) | data`` starting at byte 13, word-aligned (odd sizes pad one
@@ -403,7 +403,7 @@ def wav_meta_from_hex(hx: Column, max_chunks: int = 16) -> Column:
             )
         )
 
-    st = F.aggregate(F.sequence(F.lit(1), F.lit(max_chunks)), init, step)
+    st = F.aggregate(F.sequence(F.lit(1), F.lit(16)), init, step)
     # full 5-field AV struct (timescale always NULL for WAV) so callers
     # evaluate the walk exactly ONCE — interpreted HOF expressions get no
     # common-subexpression elimination, so referencing st through two
@@ -423,9 +423,10 @@ def wav_meta_from_hex(hx: Column, max_chunks: int = 16) -> Column:
     )
 
 
-def mp4_meta_from_hex(hx: Column, max_boxes: int = 16) -> Column:
+def mp4_meta_from_hex(hx: Column) -> Column:
     """``struct<timescale, duration_ms>`` from an ISO-BMFF (MP4/MOV)
-    ``moov``→``mvhd`` box walk — one bounded aggregate expression.
+    ``moov``→``mvhd`` box walk — one aggregate expression bounded at 16
+    boxes.
 
     Top-level boxes are ``size(BE u32) | type(4) | payload``; the walk
     skips foreign boxes by their size field, DESCENDS into ``moov``
@@ -487,7 +488,7 @@ def mp4_meta_from_hex(hx: Column, max_boxes: int = 16) -> Column:
             .otherwise(F.struct((p + bsize).alias("pos"), acc["ts"], acc["dur"]))
         )
 
-    st = F.aggregate(F.sequence(F.lit(1), F.lit(max_boxes)), init, step)
+    st = F.aggregate(F.sequence(F.lit(1), F.lit(16)), init, step)
     # full 5-field AV struct (audio fields always NULL for MP4) — same
     # single-evaluation contract as wav_meta_from_hex
     return F.when(
@@ -508,16 +509,10 @@ def mp4_meta_from_hex(hx: Column, max_boxes: int = 16) -> Column:
     )
 
 
-def with_media_av(
-    df: DataFrame,
-    bin_col: str = "html",
-    out_col: str = "media_av",
-    scan_bytes: int = 4096,
-    max_chunks: int = 16,
-) -> DataFrame:
+def with_media_av(df: DataFrame, bin_col: str = "html") -> DataFrame:
     """Audio/video container metadata as a
     ``struct<sample_rate, channels, bits_per_sample, timescale,
-    duration_ms>`` column — pure byte expressions over the payload
+    duration_ms>`` column ``media_av`` — pure byte expressions over the payload
     header, no codec libraries (round-5 VERDICT #3: clip length /
     sample rate is what a multimodal training pipeline filters on, and
     it lives in the container header, not the encoded stream). WAV fills
@@ -527,7 +522,7 @@ def with_media_av(
     Same scale shape as :func:`with_media_dims`: the hex prefix is
     projected ONCE into a collision-safe temp column so the aggregate
     folds read a bound column reference, and only sniffed WAV/MP4 rows
-    hex the deep ``scan_bytes`` window (a ``moov`` after a multi-KB
+    hex the deep 4 KB window (a ``moov`` after a multi-KB
     ``free`` box, a LIST/INFO block before ``fmt ``) — other rows pay 16
     bytes."""
     tmp = "__avhx"
@@ -542,7 +537,7 @@ def with_media_av(
         tmp,
         F.hex(
             F.col(bin_col).substr(
-                F.lit(1), F.when(is_av, scan_bytes).otherwise(F.lit(16))
+                F.lit(1), F.when(is_av, 4096).otherwise(F.lit(16))
             )
         ),
     )
@@ -552,7 +547,7 @@ def with_media_av(
     av = F.when(
         (F.substring(hx, 1, 8) == "52494646")
         & (F.substring(hx, 17, 8) == "57415645"),
-        wav_meta_from_hex(hx, max_chunks),
-    ).when(F.substring(hx, 9, 8) == "66747970", mp4_meta_from_hex(hx, max_chunks))
-    return out.withColumn(out_col, av).drop(tmp)
+        wav_meta_from_hex(hx),
+    ).when(F.substring(hx, 9, 8) == "66747970", mp4_meta_from_hex(hx))
+    return out.withColumn("media_av", av).drop(tmp)
 

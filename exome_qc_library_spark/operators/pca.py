@@ -17,8 +17,8 @@ from pyspark.sql import functions as F
 from ..functions.arrays import dot_expr
 
 
-def fit_pca(df: DataFrame, vec_col: str = "embedding", k: int = 4) -> list[list[float]]:
-    """Fit PCA, return k principal axes as plain lists (driver-small,
+def fit_pca(df: DataFrame, k: int = 4) -> list[list[float]]:
+    """Fit PCA on ``embedding``, return k principal axes as plain lists (driver-small,
     broadcastable — the 'loadings' of the reference).
 
     NULL embeddings are excluded from the fit (pyspark.ml PCA NPEs on a
@@ -27,19 +27,17 @@ def fit_pca(df: DataFrame, vec_col: str = "embedding", k: int = 4) -> list[list[
     from pyspark.ml.feature import PCA
     from pyspark.ml.functions import array_to_vector
 
-    ml_df = df.filter(F.col(vec_col).isNotNull()).select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
+    ml_df = df.filter(F.col("embedding").isNotNull()).select(
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("features")
     )
     model = PCA(k=k, inputCol="features", outputCol="pcs").fit(ml_df)
     pc = model.pc.toArray()  # (dim, k)
     return [[float(pc[i][j]) for i in range(pc.shape[0])] for j in range(pc.shape[1])]
 
 
-def project_pcs(
-    df: DataFrame, loadings: list[list[float]], vec_col: str = "embedding", prefix: str = "pc"
-) -> DataFrame:
-    """pc_project analog: score_j = Σ_i x_i · loading_j_i, as expressions
-    (deterministic left fold, no UDF). NULL vectors score NULL.
+def project_pcs(df: DataFrame, loadings: list[list[float]]) -> DataFrame:
+    """pc_project analog: ``pc{j}`` = Σ_i embedding_i · loading_j_i, as
+    expressions (deterministic left fold, no UDF). NULL vectors score NULL.
 
     Scores are UNCENTERED — the raw vector is dotted with the axes, which
     is exactly ``pyspark.ml.feature.PCAModel.transform``'s semantics (it
@@ -52,9 +50,5 @@ def project_pcs(
     cols = {}
     for j, axis in enumerate(loadings):
         plane = F.array(*[F.lit(float(v)) for v in axis])
-        cols[f"{prefix}{j + 1}"] = dot_expr(F.col(vec_col), plane)
+        cols[f"pc{j + 1}"] = dot_expr(F.col("embedding"), plane)
     return df.withColumns(cols)
-
-
-def pca_scores(df: DataFrame, vec_col: str = "embedding", k: int = 4) -> DataFrame:
-    return project_pcs(df, fit_pca(df, vec_col, k), vec_col)

@@ -54,7 +54,11 @@ def _model() -> np.ndarray:
     return _MODEL
 
 
-def _ppl_batch(texts: pd.Series, max_bytes: int = 4000) -> pd.Series:
+# a doc is scored on its first 4000 UTF-8 bytes
+_MAX_BYTES = 4000
+
+
+def _ppl_batch(texts: pd.Series) -> pd.Series:
     logp = _model()
     out: list[float | None] = []
     for t in texts:
@@ -66,7 +70,7 @@ def _ppl_batch(texts: pd.Series, max_bytes: int = 4000) -> pd.Series:
         # round-6 review); a torn trailing codepoint is harmless, the
         # kernel buckets raw bytes
         b = np.frombuffer(
-            str(t)[:max_bytes].lower().encode("utf-8")[:max_bytes], dtype=np.uint8
+            str(t)[:_MAX_BYTES].lower().encode("utf-8")[:_MAX_BYTES], dtype=np.uint8
         )
         if len(b) < 3:
             out.append(None)
@@ -95,10 +99,10 @@ def score_text_udf() -> Column:
     return _udf
 
 
-def with_text_scores(df: DataFrame, text_col: str = "text") -> DataFrame:
+def with_text_scores(df: DataFrame) -> DataFrame:
     # the ArrowEvalPython scorer fuses into its input's stage, whose width the
     # caller owns (CheckpointStore.read is core-wide; raw scans use spread_scan)
-    s = score_text_udf()(F.col(text_col))
+    s = score_text_udf()(F.col("text"))
     cols = {
         "lang_id": F.col("__sc.lang_id"),
         "lang_conf": F.col("__sc.lang_conf"),
@@ -111,11 +115,10 @@ def flag_high_perplexity(
     df: DataFrame,
     max_perplexity: float,
     flag_col: str = "final_failing_qc",
-    ppl_col: str = "perplexity",
 ) -> DataFrame:
-    """Threshold into a flag; NULL perplexity → ``missing_perplexity``
-    (mirrors the two-threshold sex-imputation flags,
+    """Threshold ``perplexity`` into a flag; NULL perplexity →
+    ``missing_perplexity`` (mirrors the two-threshold sex-imputation flags,
     ``shared/samples_qc.py:548-562`` / ``parse_arguments.py:145-146``)."""
-    rules = {"perplexity": F.col(ppl_col) > max_perplexity}
-    missing = {"perplexity": [F.col(ppl_col)]}
+    rules = {"perplexity": F.col("perplexity") > max_perplexity}
+    missing = {"perplexity": [F.col("perplexity")]}
     return add_flags(df, flag_col, rules, missing)

@@ -35,6 +35,7 @@ _KNUTH = 2654435761
 _MASK31 = 2147483647
 _BPS = 10_000  # basis points: fractions quantized to 0.01% so the gate
 # compares integers — no float-threshold drift between engines
+_BUCKETS = 256  # hash buckets of the two-phase running-total kernel
 
 
 def _mix(key: Column) -> Column:
@@ -93,8 +94,6 @@ def sample_to_token_budget(
     budgets: Mapping[str, int],
     strata_col: str = "lang",
     weight_col: str = "n_tokens",
-    key_col: str = "doc_id",
-    buckets: int = 256,
     default_budget: int = 0,
 ) -> DataFrame:
     """Keep, per stratum, the maximal pseudo-random prefix of documents
@@ -103,9 +102,9 @@ def sample_to_token_budget(
     of a training-data pipeline.
 
     Documents are ordered by the deterministic total order
-    ``(bucket, h, key)`` where ``h`` is the same Knuth multiplicative
+    ``(bucket, h, doc_id)`` where ``h`` is the same Knuth multiplicative
     hash as :func:`hash_gate` (full-resolution, no modulus) and
-    ``bucket = h mod buckets`` — an RNG-free shuffle order that is
+    ``bucket = h mod _BUCKETS`` — an RNG-free shuffle order that is
     partition-layout-independent, resumable, and mirrorable verbatim in
     ANSI SQL. A row is kept iff its inclusive running total ≤ budget;
     weights are non-negative so the kept set is a true prefix (no
@@ -117,11 +116,11 @@ def sample_to_token_budget(
     skewed as its language mix, so this is the same trap
     :func:`flag_over_key_cap` avoids. Two phases instead:
 
-    1. per-(stratum, bucket) weight totals — a ``#strata × buckets``
+    1. per-(stratum, bucket) weight totals — a ``#strata × _BUCKETS``
        aggregate with map-side combine;
     2. exclusive running offsets over that tiny table (broadcast back),
        plus a local cumulative window inside each (stratum, bucket)
-       partition — bounded at ~1/``buckets`` of the stratum regardless
+       partition — bounded at ~1/``_BUCKETS`` of the stratum regardless
        of its popularity.
 
     Global cumsum = bucket offset + local cumsum, exactly equal to the
@@ -135,25 +134,19 @@ def sample_to_token_budget(
             budget
         )
     return (
-        _with_shuffle_cumsum(df, weight_col, key_col, strata_col, buckets)
+        _with_shuffle_cumsum(df, weight_col, strata_col)
         .filter(F.col("__cum") <= budget)
         .drop("__h", "__b", "__off", "__cum")
     )
 
 
-def _with_shuffle_cumsum(
-    df: DataFrame,
-    weight_col: str,
-    key_col: str,
-    strata_col: str | None,
-    buckets: int,
-) -> DataFrame:
+def _with_shuffle_cumsum(df: DataFrame, weight_col: str, strata_col: str | None) -> DataFrame:
     """Shared skew-aware running-total kernel: adds ``__cum`` = the
     inclusive cumulative ``weight_col`` in the deterministic
-    (bucket, h, key) hash-shuffle order, per stratum when ``strata_col``
+    (bucket, h, doc_id) hash-shuffle order, per stratum when ``strata_col``
     is given, global otherwise. Two phases (per-bucket totals → tiny
     broadcast offsets → bounded local windows) so no stratum — and in the
-    global case no single task — ever sees more than ~1/``buckets`` of
+    global case no single task — ever sees more than ~1/``_BUCKETS`` of
     the rows. Also leaves ``__h``/``__b``/``__off`` for the caller to
     drop."""
     from pyspark.sql import Window as W
@@ -164,10 +157,10 @@ def _with_shuffle_cumsum(
     part = [F.col(strata_col)] if strata_col else []
     keys = ([strata_col] if strata_col else []) + ["__b"]
     h = F.shiftright(
-        _mix(F.col(key_col)).bitwiseAND(F.lit(_MASK31)) * F.lit(_KNUTH), 16
+        _mix(F.col("doc_id")).bitwiseAND(F.lit(_MASK31)) * F.lit(_KNUTH), 16
     )
     w = F.coalesce(F.col(weight_col).cast("long"), F.lit(0))
-    base = df.withColumn("__h", h).withColumn("__b", F.pmod(F.col("__h"), F.lit(buckets)))
+    base = df.withColumn("__h", h).withColumn("__b", F.pmod(F.col("__h"), F.lit(_BUCKETS)))
     stats = base.groupBy(*keys).agg(F.sum(w).alias("__bw"))
     w_off = (
         W.partitionBy(*part).orderBy("__b").rowsBetween(W.unboundedPreceding, -1)
@@ -175,20 +168,13 @@ def _with_shuffle_cumsum(
     offsets = stats.select(
         *keys, F.coalesce(F.sum("__bw").over(w_off), F.lit(0)).alias("__off")
     )
-    w_loc = W.partitionBy(*part, "__b").orderBy("__h", key_col)
+    w_loc = W.partitionBy(*part, "__b").orderBy("__h", "doc_id")
     return base.join(F.broadcast(offsets), keys, "left").withColumn(
         "__cum", F.col("__off") + F.sum(w).over(w_loc)
     )
 
 
-def assign_packing_bins(
-    df: DataFrame,
-    seq_len: int,
-    weight_col: str = "n_tokens",
-    key_col: str = "doc_id",
-    strata_col: str | None = None,
-    buckets: int = 256,
-) -> DataFrame:
+def assign_packing_bins(df: DataFrame, seq_len: int, weight_col: str = "n_tokens") -> DataFrame:
     """Sequence packing: place documents end-to-end in the deterministic
     hash-shuffle order and assign each to its training bin of
     ``seq_len`` weight units — the "pack documents into context windows"
@@ -199,8 +185,8 @@ def assign_packing_bins(
     ``spans_boundary`` (True when the doc crosses into the next bin — a
     tokenizer either splits it there or re-pads, downstream's choice;
     this operator keeps the bookkeeping exact instead of hiding it).
-    With ``strata_col`` bins are per-stratum (pack each language
-    separately). Bin arithmetic subtracts the modulus before dividing
+    Documents are keyed by ``doc_id``; bins run over the whole input.
+    Bin arithmetic subtracts the modulus before dividing
     (``excl - excl mod L`` divides exactly), so the one double division
     is of exactly-divisible integers — exact for any total weight below
     2^53 ≈ 9 peta-units, an order of magnitude past a 10^12-doc corpus
@@ -211,7 +197,7 @@ def assign_packing_bins(
     per hash bucket plus a 256-row offset table, never a single-task
     global sort.
     """
-    out = _with_shuffle_cumsum(df, weight_col, key_col, strata_col, buckets)
+    out = _with_shuffle_cumsum(df, weight_col, None)
     w = F.coalesce(F.col(weight_col).cast("long"), F.lit(0))
     excl = F.col("__cum") - w
     L = F.lit(int(seq_len))
@@ -224,11 +210,11 @@ def assign_packing_bins(
     )
 
 
-def token_budget_sql_order(key_expr: str = "doc_id", buckets: int = 256) -> str:
+def token_budget_sql_order(key_expr: str = "doc_id") -> str:
     """DuckDB-verbatim mirror of the operator's total order (oracle
-    helper): ``h % buckets, h, key`` with the same full-resolution hash."""
+    helper): ``h % _BUCKETS, h, key`` with the same full-resolution hash."""
     h = f"((({_mix_sql(key_expr)} & {_MASK31}) * {_KNUTH}) >> 16)"
-    return f"{h} % {buckets}, {h}, {key_expr}"
+    return f"{h} % {_BUCKETS}, {h}, {key_expr}"
 
 
 def flag_over_key_cap(

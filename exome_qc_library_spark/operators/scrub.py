@@ -78,11 +78,12 @@ TOXICITY_RULES: tuple[ScrubRule, ...] = (
 DEFAULT_RULES: tuple[ScrubRule, ...] = PII_RULES + TOXICITY_RULES
 
 
-def scrub_expr(text: Column, rules: tuple[ScrubRule, ...] = DEFAULT_RULES) -> Column:
+def scrub_expr(text: Column) -> Column:
+    """``text`` with every ``DEFAULT_RULES`` span replaced, in rule order."""
     out = text
-    for r in rules:
+    for r in DEFAULT_RULES:
         out = F.regexp_replace(out, r.regex, r.replacement)
-    gates = [r.gate for r in rules]
+    gates = [r.gate for r in DEFAULT_RULES]
     if gates and all(g is not None for g in gates):
         # one cheap pass decides whether the whole fixed-order replace
         # chain can possibly fire; gating on the ORIGINAL text is exact
@@ -99,8 +100,8 @@ def scrub_expr(text: Column, rules: tuple[ScrubRule, ...] = DEFAULT_RULES) -> Co
     return out
 
 
-def pii_hits_expr(text: Column, rules: tuple[ScrubRule, ...] = DEFAULT_RULES) -> Column:
-    """Total count of scrubbable spans (metric column, pre-scrub).
+def pii_hits_expr(text: Column) -> Column:
+    """Total count of ``DEFAULT_RULES`` spans (metric column, pre-scrub).
 
     ``regexp_count`` rather than ``size(regexp_extract_all(...))``: the
     count of non-overlapping matches is identical, but the counting form
@@ -108,7 +109,7 @@ def pii_hits_expr(text: Column, rules: tuple[ScrubRule, ...] = DEFAULT_RULES) ->
     this column is computed over EVERY document (keepers and dropped), so
     per-match allocations are pure garbage at corpus scale."""
     total = F.lit(0)
-    for r in rules:
+    for r in DEFAULT_RULES:
         cnt = F.coalesce(F.regexp_count(text, F.lit(r.regex)), F.lit(0))
         if r.gate is not None:
             # per-rule gating is safe here (unlike scrub_expr's chain):
@@ -121,19 +122,14 @@ def pii_hits_expr(text: Column, rules: tuple[ScrubRule, ...] = DEFAULT_RULES) ->
     return F.when(text.isNotNull(), total.cast("long"))
 
 
-def apply_scrub(
-    df: DataFrame,
-    text_col: str = "text",
-    out_col: str = "scrubbed_text",
-    keep_col: str | None = "keep",
-    rules: tuple[ScrubRule, ...] = DEFAULT_RULES,
-) -> DataFrame:
-    """Scrub keepers only (survivor-gated, per north rule); annotate-don't-drop."""
-    scrubbed = scrub_expr(F.col(text_col), rules)
-    if keep_col is not None and keep_col in df.columns:
-        scrubbed = F.when(F.col(keep_col), scrubbed)
-    return df.withColumn(out_col, scrubbed)
+def apply_scrub(df: DataFrame) -> DataFrame:
+    """``scrubbed_text``: scrub ``text`` of keepers only when a ``keep``
+    column exists (survivor-gated, per north rule); annotate-don't-drop."""
+    scrubbed = scrub_expr(F.col("text"))
+    if "keep" in df.columns:
+        scrubbed = F.when(F.col("keep"), scrubbed)
+    return df.withColumn("scrubbed_text", scrubbed)
 
 
-def with_pii_hits(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("pii_hits", pii_hits_expr(F.col(text_col)))
+def with_pii_hits(df: DataFrame) -> DataFrame:
+    return df.withColumn("pii_hits", pii_hits_expr(F.col("text")))

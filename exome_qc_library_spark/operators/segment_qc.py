@@ -19,28 +19,26 @@ from ..functions.flags import add_flags
 
 
 def flag_segment_outliers(
-    df: DataFrame,
-    segment_col: str = "lang_id",
-    measure: str = "stopword_density",
-    k_sigma: float = 4.0,
-    min_segment_n: int = 20,
-    flag_col: str = "final_failing_qc",
-    tag: str = "segment_outlier",
+    df: DataFrame, k_sigma: float = 4.0, min_segment_n: int = 20
 ) -> DataFrame:
+    """Flag ``segment_outlier`` in ``final_failing_qc`` for docs whose
+    ``stopword_density`` lies more than ``k_sigma`` segment σ from their
+    ``lang_id`` segment's mean, in segments of at least ``min_segment_n``
+    docs."""
     seg = (
-        df.groupBy(segment_col)
+        df.groupBy("lang_id")
         .agg(
-            F.avg(measure).alias("__seg_mu"),
-            F.stddev_samp(measure).alias("__seg_sd"),
-            F.count(measure).alias("__seg_n"),
+            F.avg("stopword_density").alias("__seg_mu"),
+            F.stddev_samp("stopword_density").alias("__seg_sd"),
+            F.count("stopword_density").alias("__seg_n"),
         )
-        .filter(F.col(segment_col).isNotNull())
+        .filter(F.col("lang_id").isNotNull())
     )
-    out = df.join(F.broadcast(seg), segment_col, "left")
+    out = df.join(F.broadcast(seg), "lang_id", "left")
     pred = (
         (F.col("__seg_n") >= min_segment_n)
         & (F.col("__seg_sd") > 0)
-        & (F.abs(F.col(measure) - F.col("__seg_mu")) > k_sigma * F.col("__seg_sd"))
+        & (F.abs(F.col("stopword_density") - F.col("__seg_mu")) > k_sigma * F.col("__seg_sd"))
     )
     # missing_inputs: a NULL measure or NULL segment must yield the
     # missing_<tag> tag, not a silent pass (round-6 review — the same
@@ -48,6 +46,9 @@ def flag_segment_outliers(
     # NULL stats (segment below min_segment_n) are NOT missing inputs and
     # still pass
     out = add_flags(
-        out, flag_col, {tag: pred}, {tag: [F.col(measure), F.col(segment_col)]}
+        out,
+        "final_failing_qc",
+        {"segment_outlier": pred},
+        {"segment_outlier": [F.col("stopword_density"), F.col("lang_id")]},
     )
     return out.drop("__seg_mu", "__seg_sd", "__seg_n")

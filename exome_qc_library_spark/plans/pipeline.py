@@ -341,9 +341,7 @@ class Pipeline:
         }
         # only dir-backed stores have a local root to write next to; a
         # catalog-backed store's root may be empty or never created
-        if hasattr(self.store.fmt, "data_files") and os.path.isdir(
-            getattr(self.store, "root", "")
-        ):
+        if self.store.dir_backed and os.path.isdir(self.store.root):
             import json
 
             with open(os.path.join(self.store.root, "report.json"), "w") as fh:

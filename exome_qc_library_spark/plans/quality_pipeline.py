@@ -34,9 +34,10 @@ the language segment broadcast back.
 Every stage preserves row count and the url key set (README.md:51-53
 invariant); every stage writes a resumable checkpoint with manifest
 (the reference's checkpoint-per-step, ``exome_qc/exome_qc.py:113,...``).
-Terminal down-sampling (training-mix quotas) is an EXPORT option —
-``sources.sinks.write_final_table(sample_fractions=...)`` — so the
-pipeline itself stays row-count-preserving.
+The pipeline itself never down-samples: training-mix quotas and token
+budgets are the ``operators.sampling`` operators (registry queries
+``stratified_sample`` and ``token_budget_sample``), run on the final
+table.
 """
 
 from __future__ import annotations
@@ -47,14 +48,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.blocklist import flag_blocklisted, flag_substring_matches
-from ..operators.dedup import flag_exact_duplicates, flag_near_duplicates
-from ..operators.hard_filters import (
-    FINAL,
-    LOW_PASS,
-    QualityThresholds,
-    apply_hard_filters,
-    thresholds_metadata,
-)
+from ..operators.dedup import NEAR_DUP_THRESHOLD, flag_exact_duplicates, flag_near_duplicates
+from ..operators.hard_filters import FINAL, LOW_PASS, apply_hard_filters, thresholds_metadata
 from ..operators.ingest import ingest_pages
 from ..operators.langid import flag_lang_mismatch
 from ..operators.outliers import OUTLIER_MEASURES, flag_iterative_outliers
@@ -72,13 +67,8 @@ DEFAULT_MAX_PERPLEXITY = 5000.0
 def quality_stages(
     blocklist: DataFrame | None = None,
     host_metadata: DataFrame | None = None,
-    max_spam_score: float = 0.8,
     url_substrings: Sequence[str] = (),
-    low_pass: QualityThresholds = LOW_PASS,
-    final: QualityThresholds = FINAL,
     max_perplexity: float = DEFAULT_MAX_PERPLEXITY,
-    near_dup_threshold: float = 0.8,
-    keep_html: bool = False,
     outlier_k_sigma: float = 4.0,
     outlier_max_iter: int = 3,
     segment_k_sigma: float = 4.0,
@@ -103,31 +93,30 @@ def quality_stages(
     the optional stages are not marked (streaming runs the defaults).
     """
 
-    def _ingest(df: DataFrame) -> DataFrame:
-        out = ingest_pages(df)
-        # html is the dominant payload; downstream stages never read it and
-        # it stays recoverable from the source snapshot (lineage columns) —
-        # the reference's drop-heavy-fields pattern (P6, exome_qc.py:587)
-        return out if keep_html else out.drop("html")
-
     stages: list[Stage] = [
         Stage(
             "s0_ingest",
-            _ingest,
-            {"extractor": "body_p_v1", "keep_html": keep_html},
+            # html is the dominant payload; downstream stages never read it
+            # and it stays recoverable from the source snapshot (lineage
+            # columns) — the reference's drop-heavy-fields pattern (P6,
+            # exome_qc.py:587)
+            lambda df: ingest_pages(df).drop("html"),
+            {"extractor": "body_p_v1", "keep_html": False},
             stateless=True,
         ),
     ]
     if host_metadata is not None:
-        from ..operators.enrich import enrich_with_host_metadata, flag_spam_hosts
+        from ..operators.enrich import (
+            MAX_SPAM_SCORE,
+            enrich_with_host_metadata,
+            flag_spam_hosts,
+        )
 
         stages.append(
             Stage(
                 "s1_enrich",
-                lambda df: flag_spam_hosts(
-                    enrich_with_host_metadata(df, host_metadata), max_spam_score
-                ),
-                {"max_spam_score": max_spam_score},
+                lambda df: flag_spam_hosts(enrich_with_host_metadata(df, host_metadata)),
+                {"max_spam_score": MAX_SPAM_SCORE},
                 materialize=False,
             )
         )
@@ -192,20 +181,20 @@ def quality_stages(
     stages += [
         Stage(
             "s5_near_dedup",
-            lambda df: flag_near_duplicates(df, threshold=near_dup_threshold),
-            {"threshold": near_dup_threshold, "algo": "minhash"},
+            flag_near_duplicates,
+            {"threshold": NEAR_DUP_THRESHOLD, "algo": "minhash"},
             account_flags="final_failing_qc",
         ),
         Stage(
             "s3_hard_filters",
-            lambda df: apply_hard_filters(df, "low_pass_failing_qc", low_pass),
-            thresholds_metadata(low_pass),
+            apply_hard_filters,
+            thresholds_metadata(LOW_PASS),
             materialize=False,
             stateless=True,
         ),
         Stage(
             "s4_exact_dedup",
-            lambda df: flag_exact_duplicates(df),
+            flag_exact_duplicates,
             {},
             materialize=False,
         ),
@@ -267,13 +256,13 @@ def quality_stages(
                 apply_hard_filters(
                     flag_lang_mismatch(with_text_scores(df)),
                     "final_failing_qc",
-                    final,
+                    FINAL,
                     compute_metrics=False,
                 ),
                 max_perplexity,
             ),
             dict(
-                thresholds_metadata(final),
+                thresholds_metadata(FINAL),
                 max_perplexity=max_perplexity,
                 scorer="nb_trigram_v1",
             ),

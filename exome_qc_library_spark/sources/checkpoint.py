@@ -46,10 +46,11 @@ class CheckpointStore:
         self.spark = spark
         self.root = root
         self.fmt = fmt or default_format()
-        # directory creation is a local-FS (parquet+manifest) concern; a
+        # a parquet+manifest store lives in local dirs under root; a
         # catalog-backed format addresses tables, not paths — its "root"
         # may be empty (stage name = table name under the catalog)
-        if hasattr(self.fmt, "data_files"):
+        self.dir_backed = hasattr(self.fmt, "data_files")
+        if self.dir_backed:
             os.makedirs(root, exist_ok=True)
 
     def path(self, stage: str) -> str:
@@ -145,7 +146,7 @@ class CheckpointStore:
         handle previously read from this stage — re-``read`` after
         compacting. Run it between pipeline runs, not mid-plan.
         """
-        if not hasattr(self.fmt, "data_files"):
+        if not self.dir_backed:
             raise NotImplementedError(
                 "compact() is the parquet+manifest maintenance path; on an "
                 "Iceberg-backed store run the catalog's rewrite_data_files "
@@ -212,8 +213,8 @@ class CheckpointStore:
         checkpoints)."""
         removed: dict[str, list[str]] = {"torn": [], "scratch": [], "restored": []}
         # catalog-backed formats address tables, not dirs — there is nothing
-        # on the local FS to reclaim (and self.root may not exist at all)
-        if not hasattr(self.fmt, "data_files") or not os.path.isdir(self.root):
+        # on the local FS to reclaim
+        if not self.dir_backed or not os.path.isdir(self.root):
             return removed
         names = sorted(os.listdir(self.root))
         for name in names:

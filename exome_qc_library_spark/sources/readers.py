@@ -149,15 +149,9 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.table(path)
 
 
-def interval_join(
-    df: DataFrame,
-    intervals: DataFrame,
-    point: Column,
-    lo: str = "lo",
-    hi: str = "hi",
-    how: str = "left",
-) -> DataFrame:
-    """Point-in-interval annotation: broadcast non-equi join — small interval
-    sets make broadcast-nested-loop the correct physical plan (J5)."""
-    cond = (point >= intervals[lo]) & (point < intervals[hi])
-    return df.join(F.broadcast(intervals), cond, how)
+def interval_join(df: DataFrame, intervals: DataFrame, point: Column) -> DataFrame:
+    """Point-in-interval annotation, ``lo <= point < hi``: broadcast non-equi
+    left join — small interval sets make broadcast-nested-loop the correct
+    physical plan (J5)."""
+    cond = (point >= intervals["lo"]) & (point < intervals["hi"])
+    return df.join(F.broadcast(intervals), cond, "left")

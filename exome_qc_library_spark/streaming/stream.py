@@ -49,14 +49,13 @@ def streaming_quality_flags(pages: DataFrame) -> DataFrame:
     return pages
 
 
-def windowed_flag_counts(
-    flagged: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Per-crawl-window fail-reason accounting with late-data handling."""
+def windowed_flag_counts(flagged: DataFrame) -> DataFrame:
+    """Per-hour-of-crawl fail-reason accounting, folding in pages up to two
+    hours late."""
     return (
-        flagged.withWatermark("warc_ts", watermark)
+        flagged.withWatermark("warc_ts", "2 hours")
         .select(F.col("warc_ts"), F.explode_outer("low_pass_failing_qc").alias("flag"))
-        .groupBy(F.window("warc_ts", window), "flag")
+        .groupBy(F.window("warc_ts", "1 hour"), "flag")
         .agg(F.count(F.lit(1)).alias("n"))
     )
 

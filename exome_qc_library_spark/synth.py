@@ -98,13 +98,14 @@ def _base_words(key: Column, lang: Column, n_words: Column, seed: int, stop_pct:
     return F.transform(F.sequence(F.lit(1), n_words), word_at)
 
 
-def _to_lines(words: Column, per_line: int = 12) -> Column:
-    n_lines = F.ceil(F.size(words) / per_line).cast("int")
+def _to_lines(words: Column) -> Column:
+    """``words`` as lines of 12 words."""
+    n_lines = F.ceil(F.size(words) / 12).cast("int")
     return F.concat_ws(
         "\n",
         F.transform(
             F.sequence(F.lit(0), n_lines - 1),
-            lambda i: F.concat_ws(" ", F.slice(words, i * per_line + 1, per_line)),
+            lambda i: F.concat_ws(" ", F.slice(words, i * 12 + 1, 12)),
         ),
     )
 
@@ -112,19 +113,18 @@ def _to_lines(words: Column, per_line: int = 12) -> Column:
 def synthesize_pages(
     spark: SparkSession,
     n_docs: int = 10_000,
-    n_hosts: int = 100,
     seed: int = 42,
     with_edge_cases: bool = True,
-    partitions: int | None = None,
 ) -> DataFrame:
-    """The pages table: ~60% clean docs + labeled failure classes.
+    """The pages table: ~60% clean docs over 100 hosts + labeled failure
+    classes, in as many partitions as the default parallelism.
 
     Failure classes by ``pmod(hash, 20)``:
     0 too-short · 1 high-symbol · 2 repeated-lines · 3 low-stopword ·
     4 wrong-lang-label · 5 PII-laced · 6 exact-duplicate · 7 near-duplicate ·
     8-19 clean.
     """
-    df = spark.range(0, n_docs, 1, partitions or spark.sparkContext.defaultParallelism)
+    df = spark.range(0, n_docs, 1, spark.sparkContext.defaultParallelism)
     doc_id = F.col("id")
     # window ANCHORS (id % 7 == 0) are forced clean (round-6 review): a
     # dup-classed doc copies base_text(anchor), and an anchor whose own
@@ -183,7 +183,7 @@ def synthesize_pages(
 
     # skewed host distribution: cube of a uniform → host 0 is domain-heavy
     r = _u("host", doc_id, seed, 1000).cast("double") / 1000.0
-    host_id = F.floor(F.pow(r, F.lit(3.0)) * n_hosts).cast("int")
+    host_id = F.floor(F.pow(r, F.lit(3.0)) * 100).cast("int")
     url = F.concat(
         F.lit("https://h"), host_id.cast("string"), F.lit(".example.com/page/"), doc_id.cast("string")
     )

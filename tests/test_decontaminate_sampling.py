@@ -6,6 +6,7 @@ import pyspark.sql.functions as F
 from exome_qc_library_spark.operators.decontaminate import flag_contaminated
 from exome_qc_library_spark.operators.sampling import (
     _BPS,
+    _BUCKETS,
     _KNUTH,
     _MASK31,
     stratified_sample,
@@ -66,30 +67,24 @@ def test_decontaminate_broadcast_hits_gate(spark):
 
 
 def test_decontaminate_case_sensitivity_knob(spark):
-    # lowercase=True (default) folds case on both sides; lowercase=False
-    # demands byte-exact words — an upper-cased quote stops matching
+    # n-grams fold case on both sides: an upper-cased quote still matches
     shouted = spark.createDataFrame(
         [("d9", "THE LEAKED BENCHMARK ANSWER IS FORTY TWO EXACTLY")],
         "url string, text string",
     )
     folded = flag_contaminated(shouted, _bench(spark), n=5, flag_col="ff")
-    exact = flag_contaminated(shouted, _bench(spark), n=5, lowercase=False, flag_col="ff")
     assert "contaminated" in folded.collect()[0]["ff"]
-    assert "contaminated" not in exact.collect()[0]["ff"]
-    # hashed ≡ string-join for BOTH normalization settings (pin the mirror)
-    for lc in (True, False):
-        a = {
-            r["url"]: r["ff"]
-            for r in flag_contaminated(
-                _corpus(spark), _bench(spark), n=4, hashed=True, lowercase=lc, flag_col="ff"
-            ).collect()
-        }
-        b = {
-            r["url"]: r["ff"]
-            for r in flag_contaminated(
-                _corpus(spark), _bench(spark), n=4, hashed=False, lowercase=lc, flag_col="ff"
-            ).collect()
-        }
+    # hashed ≡ string-join on mixed-case input too (pin the mirror)
+    for docs in (_corpus(spark), shouted):
+        a, b = (
+            {
+                r["url"]: r["ff"]
+                for r in flag_contaminated(
+                    docs, _bench(spark), n=4, hashed=hashed, flag_col="ff"
+                ).collect()
+            }
+            for hashed in (True, False)
+        )
         assert a == b
 
 
@@ -196,14 +191,13 @@ def test_token_budget_matches_naive_window(spark):
     df = _budget_df(spark)
     budgets = {"en": 900, "de": 150}
     got = sample_to_token_budget(
-        df, budgets, strata_col="lang", weight_col="n", buckets=16,
-        default_budget=40,
+        df, budgets, strata_col="lang", weight_col="n", default_budget=40
     )
     mixed = F.shiftright(F.col("doc_id"), 31).bitwiseXOR(F.col("doc_id"))
     h = F.shiftright(mixed.bitwiseAND(F.lit(_MASK31)) * F.lit(_KNUTH), 16)
     naive = (
         df.withColumn("__h", h)
-        .withColumn("__b", F.pmod(F.col("__h"), F.lit(16)))
+        .withColumn("__b", F.pmod(F.col("__h"), F.lit(_BUCKETS)))
         .withColumn(
             "__cum",
             F.sum(F.coalesce(F.col("n").cast("long"), F.lit(0))).over(
@@ -276,9 +270,7 @@ def test_packing_bins_match_naive_window_and_properties(spark):
     )
 
     df = _budget_df(spark).withColumn("lang", F.lit("x"))  # single stratum input
-    out = assign_packing_bins(
-        df.select("doc_id", "n"), seq_len=100, weight_col="n", buckets=16
-    )
+    out = assign_packing_bins(df.select("doc_id", "n"), seq_len=100, weight_col="n")
     # naive: one global window in the same order
     from exome_qc_library_spark.operators.sampling import _KNUTH, _MASK31
 
@@ -288,7 +280,7 @@ def test_packing_bins_match_naive_window_and_properties(spark):
     naive = (
         df.select("doc_id", "n")
         .withColumn("__h", h)
-        .withColumn("__b", F.pmod(F.col("__h"), F.lit(16)))
+        .withColumn("__b", F.pmod(F.col("__h"), F.lit(_BUCKETS)))
         .withColumn("c", F.sum(w).over(W.orderBy("__b", "__h", "doc_id")))
         .withColumn("excl", F.col("c") - w)
         .select(
@@ -306,22 +298,8 @@ def test_packing_bins_match_naive_window_and_properties(spark):
     bins = sorted({bid for (bid, _o, _s) in a.values()})
     assert bins[0] == 0 and bins == list(range(bins[-1] + 1))
     assert len(a) == df.count()
-    # per-stratum packing restarts bins at 0 for every stratum
-    df2 = _budget_df(spark)
-    per = assign_packing_bins(
-        df2.filter(F.col("lang").isNotNull()).select("doc_id", "lang", "n"),
-        seq_len=100, weight_col="n", strata_col="lang", buckets=16,
-    )
-    starts = {
-        r["lang"]: r["m"]
-        for r in per.groupBy("lang").agg(F.min("bin_id").alias("m")).collect()
-    }
-    assert set(starts.values()) == {0}
     # layout independence
-    out2 = assign_packing_bins(
-        df.select("doc_id", "n").repartition(7), seq_len=100, weight_col="n",
-        buckets=16,
-    )
+    out2 = assign_packing_bins(df.select("doc_id", "n").repartition(7), seq_len=100, weight_col="n")
     assert {tuple(r) for r in out.collect()} == {tuple(r) for r in out2.collect()}
 
 

@@ -11,6 +11,7 @@ import pyspark.sql.functions as F
 
 from exome_qc_library_spark.functions.hashing import word_shingles
 from exome_qc_library_spark.operators.dedup import (
+    NEAR_DUP_THRESHOLD,
     connected_components_df,
     connected_components_driver,
     flag_exact_duplicates,
@@ -157,7 +158,7 @@ def test_minhash_batch_kernel_matches_naive_per_row():
 
 
 def test_flag_near_duplicates_earliest_representative(spark):
-    out = flag_near_duplicates(_docs(spark), threshold=0.5)
+    out = flag_near_duplicates(_docs(spark))
     flags = {r["url"]: r["final_failing_qc"] for r in out.collect()}
     # u3 has the earliest warc_ts in the cluster → representative
     assert flags["u3"] == []
@@ -166,30 +167,18 @@ def test_flag_near_duplicates_earliest_representative(spark):
     assert out.count() == 5
 
 
-def test_near_dup_pluggable_preference(spark):
-    # order_col on a derived -quality column keeps the highest-quality copy
-    # instead of the earliest
-    df = _docs(spark).withColumn(
-        "neg_q", -F.when(F.col("url") == "u2", 9.0).otherwise(1.0)
-    )
-    out = flag_near_duplicates(df, threshold=0.5, order_col="neg_q")
-    flags = {r["url"]: r["final_failing_qc"] for r in out.collect()}
-    assert flags["u2"] == []  # highest quality wins
-    assert flags["u1"] == ["near_duplicate"] and flags["u3"] == ["near_duplicate"]
-
-
 def test_kept_set_is_edgeless(spark):
     # the reference asserts its independent set induces no edges
     # (shared/samples_qc.py:656-664): no above-threshold pair may have
     # BOTH endpoints kept
-    out = flag_near_duplicates(_docs(spark), threshold=0.5)
+    out = flag_near_duplicates(_docs(spark))
     kept = {
         r["url"]
         for r in out.filter(~F.array_contains("final_failing_qc", "near_duplicate")).collect()
     }
     pairs = (
         minhash_candidate_pairs(_docs(spark))
-        .filter(F.col("jaccard_est") >= 0.5)
+        .filter(F.col("jaccard_est") >= NEAR_DUP_THRESHOLD)
         .collect()
     )
     assert pairs, "planted near-dups must produce pairs"
@@ -214,13 +203,11 @@ def test_distributed_cc_path_matches_driver_path(spark):
     # membership
     a = {
         r["url"]: (r["final_failing_qc"], r["dup_cluster_id"] is not None)
-        for r in flag_near_duplicates(_docs(spark), threshold=0.5).collect()
+        for r in flag_near_duplicates(_docs(spark)).collect()
     }
     b = {
         r["url"]: (r["final_failing_qc"], r["dup_cluster_id"] is not None)
-        for r in flag_near_duplicates(
-            _docs(spark), threshold=0.5, max_driver_pairs=0
-        ).collect()
+        for r in flag_near_duplicates(_docs(spark), max_driver_pairs=0).collect()
     }
     assert a == b
 
@@ -241,9 +228,7 @@ def test_near_dup_size_gate_auto_selects_path(spark, monkeypatch):
     )
     gated = {
         r["url"]: (r["final_failing_qc"], r["dup_cluster_id"] is not None)
-        for r in dd.flag_near_duplicates(
-            _docs(spark), threshold=0.5, max_driver_pairs=1
-        ).collect()
+        for r in dd.flag_near_duplicates(_docs(spark), max_driver_pairs=1).collect()
     }
     monkeypatch.undo()
 
@@ -255,7 +240,7 @@ def test_near_dup_size_gate_auto_selects_path(spark, monkeypatch):
     )
     default = {
         r["url"]: (r["final_failing_qc"], r["dup_cluster_id"] is not None)
-        for r in dd.flag_near_duplicates(_docs(spark), threshold=0.5).collect()
+        for r in dd.flag_near_duplicates(_docs(spark)).collect()
     }
     assert gated == default  # both paths agree on flags + membership
 
@@ -449,7 +434,7 @@ def test_near_dup_algo_knob_agreement(spark):
         ("u5", _ts(4), None),
     ]
     docs = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
-    out = flag_near_duplicates(docs, threshold=0.5)
+    out = flag_near_duplicates(docs)
     flags = {r["url"]: r["final_failing_qc"] for r in out.collect()}
     assert flags["u1"] == ["near_duplicate"]  # later than u3's crawl
     assert flags["u2"] == ["near_duplicate"]
@@ -472,8 +457,8 @@ def test_exact_dedup_null_order_col_never_wins(spark):
         ("u3", "same body text here", t1),  # true earliest crawl
     ]
     df = spark.createDataFrame(rows, "url string, text string, warc_ts timestamp")
-    out = flag_exact_duplicates(df, flag_col="ff")
-    dup = {r["url"]: "exact_duplicate" in r["ff"] for r in out.collect()}
+    out = flag_exact_duplicates(df)
+    dup = {r["url"]: "exact_duplicate" in r["low_pass_failing_qc"] for r in out.collect()}
     assert dup == {"u1": True, "u2": True, "u3": False}
 
 
@@ -481,14 +466,14 @@ def test_near_dup_null_prefer_value_never_wins(spark):
     """Same NULLS-LAST rule for the cluster-representative election."""
     import datetime
 
-    body = "the quick brown fox jumps over the lazy dog " * 6
+    body = " ".join(f"word{i}" for i in range(60)) + " "
     rows = [
         ("u1", body, None),
         ("u2", body + "extra tail words", datetime.datetime(2024, 1, 5)),
     ]
     df = spark.createDataFrame(rows, "url string, text string, warc_ts timestamp")
-    out = flag_near_duplicates(df, threshold=0.3, flag_col="ff")
-    dup = {r["url"]: "near_duplicate" in r["ff"] for r in out.collect()}
+    out = flag_near_duplicates(df)
+    dup = {r["url"]: "near_duplicate" in r["final_failing_qc"] for r in out.collect()}
     assert dup == {"u1": True, "u2": False}  # dated copy is the rep
 
 

@@ -6,7 +6,6 @@ posterior shrinkage with exposure, HIGH/MEDIUM/LOW tiers.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 from exome_qc_library_spark.operators.denovo import call_denovo_content
 
@@ -71,9 +70,7 @@ def test_prior_is_max_of_panel_and_site_freq(spark):
             (6, "h2", 2, "new"),
         ],
     )
-    out = call_denovo_content(
-        docs, _panel(spark, [("new", 0.25)]), ext_n=10_000
-    ).collect()
+    out = call_denovo_content(docs, _panel(spark, [("new", 0.25)])).collect()
     assert len(out) == 2
     for r in out:
         assert r.n_copies == 2

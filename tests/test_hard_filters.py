@@ -3,11 +3,7 @@
 
 import pyspark.sql.functions as F
 
-from exome_qc_library_spark.operators.hard_filters import (
-    LOW_PASS,
-    QualityThresholds,
-    apply_hard_filters,
-)
+from exome_qc_library_spark.operators.hard_filters import QualityThresholds, apply_hard_filters
 
 
 def test_rules_fire(spark):

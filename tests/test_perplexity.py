@@ -1,8 +1,6 @@
 """Perplexity, as scored by the fused s9 UDF: lexicon-like text scores
 lower than symbol noise."""
 
-import pyspark.sql.functions as F
-
 from exome_qc_library_spark.operators.perplexity import flag_high_perplexity, with_text_scores
 
 

@@ -92,7 +92,7 @@ def test_minhash_sketch_has_one_arrow_eval(spark):
         df.filter(F.col("text").isNotNull() & (F.length("text") > 0))
         .select(
             F.col("url").alias("k"),
-            _minhash_sig_udf(64, 42)(shingle_hashes(word_shingles(F.col("text"), 3))).alias(
+            _minhash_sig_udf(64)(shingle_hashes(word_shingles(F.col("text"), 3))).alias(
                 "sig"
             ),
         )

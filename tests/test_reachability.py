@@ -1,17 +1,28 @@
-"""Package code that no production entry point reaches is dead weight.
+"""Package code and options that no production entry point reaches are dead weight.
 
-A generated census over the source AST, no Spark needed. The defs are the
-package's top-level functions and classes, and its module-level constants:
-an assignment that binds only plain, non-dunder names. The roots are every
+Two generated censuses over the source AST, no Spark needed.
+
+The def census. The defs are the package's top-level functions and
+classes, the methods of those classes, and its module-level constants: an
+assignment that binds only plain, non-dunder names. The roots are every
 other module-level statement of the package (imports, ``__all__``, ...)
 plus the scripts that drive the engine: ``bench.py``, ``__spark_entry__.py``,
 ``perfbench/*.py`` and ``tools/*.py``. A reference is a ``Name``, an
 ``Attribute``, an import alias, or a ``str`` constant that is a single
 identifier (dict keys and ``getattr`` lookups); docstrings and comments
-never count. References are followed transitively through def bodies and
-constant values. Tests are not roots, so a def or constant that only
-``tests/`` use is flagged: delete it, move it into the test that uses it
-as a reference, or put it on ``ALLOWLIST`` with its reason.
+never count. A method is reached only through an attribute reference
+(``x.name``) once its class is reached; a dunder is reached with its
+class. References are followed transitively through def bodies and
+constant values. Tests are not roots, so a def, method or constant that
+only ``tests/`` use is flagged: delete it, move it into the test that uses
+it as a reference, or put it on ``ALLOWLIST`` with its reason.
+
+The option census. An option is a defaulted parameter of a package
+function or method. It is live if some root, the package included, passes
+it at a call to that def's name, by keyword or by position; keywords given
+to a def that forwards ``**kw`` count for the callee. An option no root
+passes is flagged: make it a constant with its default value, or put it on
+``OPTION_ALLOWLIST`` with one of the ``OPTION_REASONS``.
 """
 
 import ast
@@ -87,16 +98,50 @@ def _constant_names(stmt):
         if not all(isinstance(e, ast.Name) for e in elts):
             return []
         names += [e.id for e in elts]
-    if any(n.startswith("__") and n.endswith("__") for n in names):
+    if any(_is_dunder(n) for n in names):
         return []
     return names
 
 
+def _is_dunder(name):
+    return name.startswith("__") and name.endswith("__")
+
+
+def _class_nodes(cls):
+    """What defining ``cls`` runs: its decorators, bases, class-level
+    statements, and its methods' decorators and defaults, but not the
+    method bodies."""
+    nodes = [*cls.decorator_list, *cls.bases, *cls.keywords]
+    for stmt in cls.body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            nodes += [*stmt.decorator_list, *stmt.args.defaults]
+            nodes += [d for d in stmt.args.kw_defaults if d is not None]
+        else:
+            nodes.append(stmt)
+    return nodes
+
+
+def _attrs(nodes):
+    """Attribute names (``x.name``) referenced anywhere under ``nodes``."""
+    return {n.attr for top in nodes for n in ast.walk(top) if isinstance(n, ast.Attribute)}
+
+
 def _census(allowlist):
     """Return ``(defs, reached)``: every top-level package def and constant
-    as ``name -> [(relpath, line, node, docstrings)]`` and the names
-    reached from the roots, with the ``allowlist`` defs counted as roots."""
-    defs, frontier = {}, set(allowlist)
+    as ``name -> [(relpath, line, node, docstrings)]``, every method of a
+    top-level class as ``Class.method -> [...]``, and the keys reached from
+    the roots, with the ``allowlist`` defs counted as roots.
+
+    A top-level def or constant is reached by any reference to its name. A
+    method is reached once its class is, and then only through an
+    attribute reference (``x.name``), unless it is a dunder, which Python
+    calls itself."""
+    defs, names, attrs = {}, set(allowlist), set()
+    own_refs = {}  # key -> [(names, attrs)] the def references once reached
+
+    def add(key, nodes, docs):
+        own_refs.setdefault(key, []).append((_refs(nodes, docs), _attrs(nodes)))
+
     for path in sorted(PACKAGE.rglob("*.py")):
         tree = _parse(path)
         docs = _docstrings(tree)
@@ -105,26 +150,46 @@ def _census(allowlist):
             if isinstance(stmt, _DEFS):
                 defs.setdefault(stmt.name, []).append((rel, stmt.lineno, stmt, docs))
                 # decorators and default values run at import time
-                frontier |= _refs(stmt.decorator_list, docs)
-                if not isinstance(stmt, ast.ClassDef):
-                    frontier |= _refs(stmt.args.defaults + stmt.args.kw_defaults, docs)
-            elif names := _constant_names(stmt):
-                for name in names:
+                names |= _refs(stmt.decorator_list, docs)
+                if isinstance(stmt, ast.ClassDef):
+                    add(stmt.name, _class_nodes(stmt), docs)
+                    for fn in stmt.body:
+                        if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                            key = f"{stmt.name}.{fn.name}"
+                            defs.setdefault(key, []).append((rel, fn.lineno, fn, docs))
+                            add(key, [fn], docs)
+                else:
+                    names |= _refs(stmt.args.defaults + stmt.args.kw_defaults, docs)
+                    add(stmt.name, [stmt], docs)
+            elif names_bound := _constant_names(stmt):
+                for name in names_bound:
                     defs.setdefault(name, []).append((rel, stmt.lineno, stmt, docs))
+                    add(name, [stmt], docs)
             else:
-                frontier |= _refs([stmt], docs)
+                names |= _refs([stmt], docs)
+                attrs |= _attrs([stmt])
     for pattern in ROOT_SCRIPTS:
         for path in sorted(ROOT.glob(pattern)):
             tree = _parse(path)
-            frontier |= _refs([tree], _docstrings(tree))
-    reached = set()
-    while frontier:
-        name = frontier.pop()
-        if name in reached:
-            continue
-        reached.add(name)
-        for _rel, _line, node, docs in defs.get(name, ()):
-            frontier |= _refs([node], docs) - reached
+            names |= _refs([tree], _docstrings(tree))
+            attrs |= _attrs([tree])
+
+    def is_reached(key):
+        cls, _, meth = key.rpartition(".")
+        if not cls:
+            return key in names
+        return cls in reached and (_is_dunder(meth) or meth in attrs)
+
+    reached, grew = set(), True
+    while grew:
+        grew = False
+        for key in defs:
+            if key not in reached and is_reached(key):
+                reached.add(key)
+                grew = True
+                for key_names, key_attrs in own_refs[key]:
+                    names |= key_names
+                    attrs |= key_attrs
     return defs, reached
 
 
@@ -137,7 +202,7 @@ def test_every_package_def_is_reached_from_a_production_root():
         for rel, line, _node, _docs in sites
     )
     assert not unreached, (
-        f"{len(unreached)} package defs or constants are reached only from tests/ "
+        f"{len(unreached)} package defs, methods or constants are reached only from tests/ "
         "or not at all; "
         "delete them, move them into the test that uses them, or add them to ALLOWLIST "
         "with a reason:\n" + "\n".join(f"  {rel}:{line} {name}" for rel, line, name in unreached)
@@ -152,6 +217,212 @@ def test_allowlist_entries_are_live_and_needed():
     # An allowlisted def that a root reaches no longer needs its entry.
     needless = sorted(name for name in ALLOWLIST if name in reached)
     assert not needless, f"ALLOWLIST entries a production root already reaches: {needless}"
+
+
+# ------------------------------------------------------------ option census
+
+OPTION_REASONS = (
+    "deployment input",
+    "scale-path seam",
+    "interface of an ALLOWLIST def",
+    "configuration surface",
+)
+
+# ``def(param, ...)`` -> reason. The reason starts with one of
+# OPTION_REASONS; a scale-path seam names the test that lowers it as
+# ``tests/<file>.py::<test>``, and an interface entry names its ALLOWLIST def.
+OPTION_ALLOWLIST = {
+    "CheckpointStore(fmt)": "deployment input: the table format a deployment "
+    "stores checkpoints in; an Iceberg catalog replaces the parquet+manifest default",
+    "IcebergFormat(catalog)": "deployment input: the Spark catalog name of the "
+    "deployment's Iceberg tables",
+    "minhash_candidate_pairs(max_bucket)": "scale-path seam: the per-bucket cap only "
+    "a degenerate bucket of 200+ docs crosses; "
+    "tests/test_dedup.py::test_minhash_degenerate_bucket_capped lowers it to 5",
+    "connected_components_df(max_iter)": "scale-path seam: the round bound only a "
+    "component of diameter 20+ crosses; "
+    "tests/test_dedup.py::test_connected_components_df_raises_when_unconverged lowers it to 2",
+    "flag_near_duplicates(max_driver_pairs)": "scale-path seam: the size gate to the "
+    "distributed clustering path only 5M+ pairs cross; "
+    "tests/test_dedup.py::test_distributed_cc_path_matches_driver_path lowers it to 0",
+    "ivf_assign(max_inline)": "scale-path seam: the model-size gate to the pandas path "
+    "only a 50k-value centroid table crosses; "
+    "tests/test_similarity.py::test_ivf_assign_pandas_path_matches_inline lowers it to 1",
+    "flag_over_key_cap(salt_buckets)": "scale-path seam: the salt fan-out of the "
+    "two-phase top-N that a hot key spreads over; "
+    "tests/test_decontaminate_sampling.py::test_over_key_cap_matches_naive_window lowers it to 8",
+    "with_media_dims(scan_bytes)": "scale-path seam: the 64 KB header window only "
+    "real-world JPEGs reach into; "
+    "tests/test_tokenize_multimodal.py::test_jpeg_dims_behind_exif_app1 lowers it to 2 KB",
+    "with_media_dims(max_segments)": "scale-path seam: the JPEG marker-hop bound only "
+    "real-world JPEGs approach; "
+    "tests/test_tokenize_multimodal.py::test_jpeg_dims_marker_walk_is_bounded lowers it to 16",
+    "import_delimited(delimiter, header, impute, missing, key, schema)": "interface of an "
+    "ALLOWLIST def: operator S4 reads any delimited table",
+    "export_tsv(compress, single_file)": "interface of an ALLOWLIST def: operator S7 "
+    "exports any table",
+    "quality_stages(blocklist, host_metadata, url_substrings, decontamination_benchmark, "
+    "host_cap, cross_doc_dup_lines, strip_boilerplate_min_docs, decontamination_ngram, "
+    "max_shared_line_frac, outlier_k_sigma, outlier_max_iter, segment_k_sigma, "
+    "segment_min_n)": "configuration surface: the switches of the optional stages and "
+    "the thresholds tests/test_pipeline.py lowers are the pipeline's configuration; "
+    "they are decided together with the optional stages",
+}
+
+
+def _defaulted(fn):
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    out = [x.arg for x in pos[len(pos) - len(a.defaults) :]] if a.defaults else []
+    return out + [x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
+
+
+def _callables(path):
+    """``(label, callee, fn, bound)`` for every top-level function and every
+    method of a top-level class in ``path``. ``callee`` is the name a call
+    site uses: the function or method name, the class name for
+    ``__init__``. ``bound`` is how many leading parameters the call binds
+    itself (``self``/``cls``)."""
+    for stmt in _parse(path).body:
+        if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            yield stmt.name, stmt.name, stmt, 0
+        elif isinstance(stmt, ast.ClassDef):
+            for fn in stmt.body:
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    static = any(
+                        isinstance(d, ast.Name) and d.id == "staticmethod"
+                        for d in fn.decorator_list
+                    )
+                    init = fn.name == "__init__"
+                    label = stmt.name if init else f"{stmt.name}.{fn.name}"
+                    yield label, stmt.name if init else fn.name, fn, 0 if static else 1
+
+
+def _callee_name(call):
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else f.attr if isinstance(f, ast.Attribute) else None
+
+
+def _passed(call, fn, bound):
+    """The parameter names ``call`` passes to ``fn``, by keyword or by
+    position (a ``*args`` passes every parameter from its position on)."""
+    pos = [x.arg for x in fn.args.posonlyargs + fn.args.args][bound:]
+    out = {kw.arg for kw in call.keywords if kw.arg is not None}
+    for i, arg in enumerate(call.args):
+        if isinstance(arg, ast.Starred):
+            return out | set(pos[i:])
+        out |= set(pos[i : i + 1])
+    return out
+
+
+def _option_census():
+    """Return ``(options, live)``: every defaulted parameter of a package
+    function or method as ``(label, param) -> (relpath, line)``, and the set
+    of those some root passes. Keywords passed to a def that forwards
+    ``**kw`` count for every call in its body that passes ``**kw`` on."""
+    defs = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(ROOT).as_posix()
+        defs += [(rel, *c) for c in _callables(path)]
+    by_callee = {}
+    for rel, label, callee, fn, bound in defs:
+        by_callee.setdefault(callee, []).append((label, fn, bound))
+    passed = {}  # label -> names the roots pass, including ones **kw takes
+    roots = sorted(PACKAGE.rglob("*.py")) + [
+        p for pattern in ROOT_SCRIPTS for p in sorted(ROOT.glob(pattern))
+    ]
+    for path in roots:
+        for node in ast.walk(_parse(path)):
+            if isinstance(node, ast.Call):
+                for label, fn, bound in by_callee.get(_callee_name(node), ()):
+                    passed.setdefault(label, set()).update(_passed(node, fn, bound))
+    forwards = []  # (forwarder label, its named params, callee name)
+    for _rel, label, _callee, fn, _bound in defs:
+        kw = fn.args.kwarg
+        if kw is None:
+            continue
+        named = {x.arg for x in fn.args.posonlyargs + fn.args.args + fn.args.kwonlyargs}
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call) and any(
+                k.arg is None and isinstance(k.value, ast.Name) and k.value.id == kw.arg
+                for k in node.keywords
+            ):
+                forwards.append((label, named, _callee_name(node)))
+    grew = True
+    while grew:
+        grew = False
+        for label, named, callee in forwards:
+            extra = passed.get(label, set()) - named
+            for target, _fn, _bound in by_callee.get(callee, ()):
+                got = passed.setdefault(target, set())
+                if not extra <= got:
+                    got |= extra
+                    grew = True
+    options = {
+        (label, param): (rel, fn.lineno)
+        for rel, label, _callee, fn, _bound in defs
+        for param in _defaulted(fn)
+    }
+    live = {(label, param) for label, param in options if param in passed.get(label, ())}
+    return options, live
+
+
+def _allowlisted_options():
+    """``{(label, param): (entry, reason)}`` from ``OPTION_ALLOWLIST``."""
+    out = {}
+    for entry, reason in OPTION_ALLOWLIST.items():
+        label, _, params = entry.partition("(")
+        assert params.endswith(")"), f"OPTION_ALLOWLIST key is not def(param, ...): {entry!r}"
+        for param in params[:-1].split(","):
+            out[(label, param.strip())] = (entry, reason)
+    return out
+
+
+def test_every_option_is_set_by_a_production_root():
+    options, live = _option_census()
+    allowed = _allowlisted_options()
+    flagged = sorted(
+        (rel, line, label, param)
+        for (label, param), (rel, line) in options.items()
+        if (label, param) not in live and (label, param) not in allowed
+    )
+    assert not flagged, (
+        f"{len(flagged)} defaulted parameters that no production root ever passes; make "
+        "each one a constant with its default value, or add it to OPTION_ALLOWLIST with "
+        "a reason:\n"
+        + "\n".join(f"  {rel}:{line} {label}({param})" for rel, line, label, param in flagged)
+    )
+
+
+def test_option_allowlist_entries_exist_have_a_reason_and_are_needed():
+    options, live = _option_census()
+    for (label, param), (entry, reason) in _allowlisted_options().items():
+        assert (label, param) in options, f"{entry}: {label}({param}) is not a defaulted parameter"
+        assert (label, param) not in live, (
+            f"{entry}: a production root already passes {label}({param}); drop it from the entry"
+        )
+        kind = reason.split(":")[0]
+        assert kind in OPTION_REASONS, f"{entry}: reason must start with one of {OPTION_REASONS}"
+        if kind == "interface of an ALLOWLIST def":
+            assert label in ALLOWLIST, f"{entry}: {label} is not on ALLOWLIST"
+        if kind == "scale-path seam":
+            # the named test must pass the seam by keyword, or nothing
+            # shows that the other side of the gate still works
+            named = reason.split("tests/")[1].split()[0].rstrip(".,;)")
+            test_file, _, test_name = named.partition("::")
+            tree = _parse(ROOT / "tests" / test_file)
+            test_fn = next(
+                (n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == test_name),
+                None,
+            )
+            assert test_fn is not None, f"{entry}: no test tests/{test_file}::{test_name}"
+            callee = label.rpartition(".")[2]
+            assert any(
+                isinstance(n, ast.Call)
+                and _callee_name(n) == callee
+                and param in {k.arg for k in n.keywords}
+                for n in ast.walk(test_fn)
+            ), f"{entry}: tests/{test_file}::{test_name} never passes {param}= to {callee}"
 
 
 def _unused_imports(tree):
@@ -176,6 +447,15 @@ def test_no_package_module_has_an_unused_module_level_import():
     unused = [
         f"  {path.relative_to(ROOT).as_posix()}:{line} {name}"
         for path in sorted(PACKAGE.rglob("*.py"))
+        for line, name in _unused_imports(_parse(path))
+    ]
+    assert not unused, "module-level imports the module never uses:\n" + "\n".join(unused)
+
+
+def test_no_test_module_has_an_unused_module_level_import():
+    unused = [
+        f"  {path.relative_to(ROOT).as_posix()}:{line} {name}"
+        for path in sorted((ROOT / "tests").glob("*.py"))
         for line, name in _unused_imports(_parse(path))
     ]
     assert not unused, "module-level imports the module never uses:\n" + "\n".join(unused)

@@ -75,24 +75,24 @@ def test_phone_rule_never_matches_suffix_of_longer_digit_run(spark):
     assert "9555" in got["r5"] or got["r5"] == rows[4][1]
 
 
-def test_gate_inline_flags_stay_scoped_to_their_rule(spark):
+def test_gate_inline_flags_stay_scoped_to_their_rule(spark, monkeypatch):
     """An inline flag in one rule's gate must not leak into the other gates
     of the joined chain gate: a leading ``(?x)`` would otherwise strip the
     literal space from a later ``hello world`` gate, so a doc only that
     later rule matches skipped the whole chain unscrubbed."""
     from dataclasses import replace
 
-    from exome_qc_library_spark.operators.scrub import ScrubRule
+    from exome_qc_library_spark.operators import scrub
 
     rules = (
-        ScrubRule("num", r"\d+", "<N>", gate=r"(?x) \d"),
-        ScrubRule("greet", r"hello world", "<HI>", gate="hello world"),
+        scrub.ScrubRule("num", r"\d+", "<N>", gate=r"(?x) \d"),
+        scrub.ScrubRule("greet", r"hello world", "<HI>", gate="hello world"),
     )
     plain = tuple(replace(r, gate=None) for r in rules)
     df = spark.createDataFrame([("say hello world",)], "text string")
-    row = df.select(
-        scrub_expr(F.col("text"), rules).alias("gated"),
-        scrub_expr(F.col("text"), plain).alias("plain"),
-    ).collect()[0]
+    monkeypatch.setattr(scrub, "DEFAULT_RULES", rules)
+    gated = scrub_expr(F.col("text"))
+    monkeypatch.setattr(scrub, "DEFAULT_RULES", plain)
+    row = df.select(gated.alias("gated"), scrub_expr(F.col("text")).alias("plain")).collect()[0]
     assert row["plain"] == "say <HI>"
     assert row["gated"] == row["plain"]

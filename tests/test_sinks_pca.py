@@ -6,7 +6,7 @@ import os
 
 import pyspark.sql.functions as F
 
-from exome_qc_library_spark.operators.pca import fit_pca, pca_scores, project_pcs
+from exome_qc_library_spark.operators.pca import fit_pca, project_pcs
 from exome_qc_library_spark.sources.sinks import export_tsv, flatten_structs, write_final_table
 
 
@@ -80,35 +80,13 @@ def test_write_final_table_partitioned(spark, tmp_path):
     assert back.filter(F.col("lang_id") == "fr").count() == 1
 
 
-def test_write_final_table_stratified_sample_option(spark, tmp_path):
-    # terminal-export quota sampling (round-3 VERDICT #3): deterministic
-    # per-stratum down-sampling at write time, string keys hashed to int64
-    rows = [(f"https://h{i}.ex/p{i}", ["en", "de"][i % 2]) for i in range(400)]
-    df = spark.createDataFrame(rows, "url string, lang_id string")
-    p1 = write_final_table(
-        df, str(tmp_path / "a"), sample_fractions={"en": 0.5, "de": 0.1}
-    )
-    p2 = write_final_table(
-        df.repartition(7), str(tmp_path / "b"), sample_fractions={"en": 0.5, "de": 0.1}
-    )
-    a = {r["url"] for r in spark.read.parquet(p1).collect()}
-    b = {r["url"] for r in spark.read.parquet(p2).collect()}
-    assert a == b and 0 < len(a) < 400  # layout-independent, actually samples
-    en = sum(1 for u in a if spark is not None and u in {r[0] for r in rows if r[1] == "en"})
-    de = len(a) - en
-    assert en > de  # quota ordering respected (0.5 vs 0.1)
-    # without the option the export is a pure write (row count preserved)
-    p3 = write_final_table(df, str(tmp_path / "c"))
-    assert spark.read.parquet(p3).count() == 400
-
-
 def test_pca_projection_deterministic(spark):
     rows = [(i, [float(i % 7), float((i * 3) % 5), float(i % 2), 1.0]) for i in range(60)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     l1 = fit_pca(df, k=2)
     l2 = fit_pca(df, k=2)
     assert [[round(x, 9) for x in a] for a in l1] == [[round(x, 9) for x in a] for a in l2]
-    out = pca_scores(df, k=2)
+    out = project_pcs(df, l1)
     assert {"pc1", "pc2"} <= set(out.columns)
     # projection is linear: doubling the vector doubles the score
     one = project_pcs(
@@ -123,89 +101,6 @@ def test_sample_rows_seeded_deterministic(spark, pages):
     a = {r["url"] for r in pages.sample(fraction=0.2, seed=42).select("url").collect()}
     b = {r["url"] for r in pages.sample(fraction=0.2, seed=42).select("url").collect()}
     assert a == b and 0 < len(a) < pages.count()
-
-
-def test_write_final_table_token_budget_option(spark, tmp_path):
-    # terminal-export token-budget mixing: per-language cumulative weight
-    # caps, deterministic and layout-independent, composable with the
-    # stratified fractions option
-    rows = [
-        (f"https://h{i}.ex/p{i}", ["en", "de"][i % 2], (i % 23) + 1)
-        for i in range(400)
-    ]
-    df = spark.createDataFrame(rows, "url string, lang_id string, word_count long")
-    budgets = {"en": 300, "de": 120}
-    p1 = write_final_table(df, str(tmp_path / "tb_a"), token_budgets=budgets)
-    p2 = write_final_table(
-        df.repartition(5), str(tmp_path / "tb_b"), token_budgets=budgets
-    )
-    a = spark.read.parquet(p1)
-    b = spark.read.parquet(p2)
-    assert {r["url"] for r in a.collect()} == {r["url"] for r in b.collect()}
-    sums = {
-        r["lang_id"]: r["s"]
-        for r in a.groupBy("lang_id").agg(F.sum("word_count").alias("s")).collect()
-    }
-    assert sums["en"] <= 300 and sums["de"] <= 120 and len(sums) == 2
-    assert 0 < a.count() < 400
-    # composes with fractions: budgets apply to the fraction survivors
-    p3 = write_final_table(
-        df,
-        str(tmp_path / "tb_c"),
-        sample_fractions={"en": 0.5, "de": 0.5},
-        token_budgets=budgets,
-    )
-    c = spark.read.parquet(p3)
-    csums = {
-        r["lang_id"]: r["s"]
-        for r in c.groupBy("lang_id").agg(F.sum("word_count").alias("s")).collect()
-    }
-    assert all(v <= budgets[k] for k, v in csums.items())
-
-
-def test_export_jsonl_partitioned_keeps_contract_columns(spark, tmp_path):
-    """Round-6 review: partitionBy removed the partition key from every
-    record (and crashed when the key was outside the projected contract).
-    Shadow-column partitioning must keep every contract column in every
-    record while still laying out one directory per partition value."""
-    import glob
-    import os
-
-    from exome_qc_library_spark.sources.sinks import export_jsonl
-
-    df = spark.createDataFrame(
-        [("u1", "t1", "en"), ("u2", "t2", "de"), ("u3", "t3", "en")],
-        "url string, scrubbed_text string, lang_id string",
-    )
-    # key inside the contract
-    p1 = str(tmp_path / "in_contract")
-    export_jsonl(
-        df, p1, columns=("url", "scrubbed_text", "lang_id"), keep_col=None,
-        compress=False, partition_by=("lang_id",),
-    )
-    assert sorted(
-        os.path.basename(d) for d in glob.glob(os.path.join(p1, "__part_lang_id=*"))
-    ) == ["__part_lang_id=de", "__part_lang_id=en"]
-    back = spark.read.schema("url string, scrubbed_text string, lang_id string").json(
-        os.path.join(p1, "__part_lang_id=*", "*.json")
-    )
-    assert back.filter("lang_id IS NULL").count() == 0  # key survives in records
-    assert back.count() == 3
-    # key OUTSIDE the contract: previously an AnalysisException
-    p2 = str(tmp_path / "out_of_contract")
-    export_jsonl(
-        df, p2, columns=("url", "scrubbed_text"), keep_col=None,
-        compress=False, partition_by=("lang_id",),
-    )
-    back2 = spark.read.schema("url string, scrubbed_text string").json(
-        os.path.join(p2, "__part_lang_id=*", "*.json")
-    )
-    assert back2.count() == 3
-    # unknown partition key fails fast
-    import pytest
-
-    with pytest.raises(ValueError, match="partition columns"):
-        export_jsonl(df, str(tmp_path / "x"), keep_col=None, partition_by=("nope",))
 
 
 def test_flatten_structs_collision_raises(spark):
@@ -225,11 +120,9 @@ def test_flatten_structs_collision_raises(spark):
 def test_fit_pca_ignores_null_embeddings(spark):
     """Round-6 review: pyspark.ml PCA NPEs on a null vector; fit must
     exclude NULLs and projection must map them to NULL scores."""
-    from exome_qc_library_spark.operators.pca import pca_scores
-
     rows = [(i, [float(i), float(i % 3), 1.0, 0.5]) for i in range(20)] + [(99, None)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    out = pca_scores(df, k=2)
+    out = project_pcs(df, fit_pca(df, k=2))
     assert out.count() == 21
     nulls = out.filter("vec_id = 99").collect()[0]
     assert nulls["pc1"] is None and nulls["pc2"] is None

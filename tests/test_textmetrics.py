@@ -1,8 +1,6 @@
 """Hand-computed metric expectations, including NULL/empty/unicode cases
 (missing-value semantics per FIXTURES.md §7.3)."""
 
-import math
-
 import pyspark.sql.functions as F
 import pytest
 

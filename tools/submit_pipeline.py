@@ -11,6 +11,10 @@ Cluster usage (the north rule's deployment shape):
 In this sandbox ``--master local[N]`` stands in for the cluster; the
 job code is identical either way (SparkSession comes from the submit
 context, not from session.py).
+
+Prints one JSON line: the final table's rows, the wall seconds and the
+per-stage block of ``Pipeline.report()``, whose full report is written
+as ``report.json`` in the checkpoint directory.
 """
 
 from __future__ import annotations
@@ -52,15 +56,11 @@ def main() -> None:
     out = pipe.run(pages)
     write_final_table(out, args.output, partition_by=("lang_id",))
     n = spark.read.parquet(args.output).count()
-    report = {
-        "rows": n,
-        "seconds": round(time.monotonic() - t0, 2),
-        "stages": [
-            {"name": r.name, "resumed": r.resumed, "seconds": round(r.seconds, 2)}
-            for r in pipe.results
-        ],
-    }
-    print(json.dumps(report))
+    seconds = round(time.monotonic() - t0, 2)
+    # per-stage rows, resume state, timing and telemetry; also written as
+    # report.json next to the checkpoints
+    report = pipe.report()
+    print(json.dumps({"rows": n, "seconds": seconds, "stages": report["stages"]}))
     summarize_verdicts(out).show(20, truncate=False)
     spark.stop()
 
