@@ -1560,15 +1560,14 @@ SELECT query_id, neighbor_id, round(cosine, 4) AS cosine, rank FROM r WHERE rank
 
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: docs sharing a word n-gram with the eval
-    set (here: every 97th doc) are flagged. Runs the REAL operator in its
-    string-join form (``hashed=False``); the xxhash64 production path is
-    pinned equal in tests/test_decontaminate_sampling.py."""
+    set (here: every 97th doc) are flagged. Runs the REAL operator; its
+    join key is the gram string, which DuckDB mirrors verbatim."""
     from .operators.decontaminate import flag_contaminated
 
     docs = _t(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % 97 == 0)
     out = flag_contaminated(
-        docs, bench, key_col="doc_id", n=3, hashed=False, flag_col="decon_flags"
+        docs, bench, key_col="doc_id", n=3, flag_col="decon_flags"
     )
     return out.select(
         "doc_id", F.array_contains("decon_flags", "contaminated").alias("contaminated")
@@ -1615,15 +1614,12 @@ FROM documents d LEFT JOIN hits h USING (doc_id)
 
 def q_cross_doc_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicate-line (boilerplate) stats: distinct eligible
-    lines per doc and how many appear in ≥2 docs. String-join form
-    (``hashed=False``); the xxhash64 production path is pinned equal in
-    tests/test_dedup.py."""
+    lines per doc and how many appear in ≥2 docs. The operator shuffles
+    the line text, which DuckDB mirrors verbatim."""
     from .operators.dedup import cross_doc_dup_line_stats
 
     docs = _t(spark, sf_dir, "documents")
-    st = cross_doc_dup_line_stats(
-        docs, key_col="doc_id", min_line_chars=10, hashed=False
-    )
+    st = cross_doc_dup_line_stats(docs, key_col="doc_id", min_line_chars=10)
     out = docs.select("doc_id").join(st, "doc_id", "left")
     return out.select(
         "doc_id",
@@ -1656,8 +1652,8 @@ def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     every doc gets a shared long footer (stripped: ≥3 docs carry it) and
     a shared SHORT line (kept: under the eligibility floor) appended, so
     the oracle exercises strip + keep + byte-exact reassembly in one
-    query. String-join form (``hashed=False``); the xxhash64 production
-    path is pinned equal in tests/test_dedup.py."""
+    query. The operator joins on the line text, which DuckDB mirrors
+    verbatim."""
     from .operators.dedup import strip_boilerplate_lines
 
     docs = _t(spark, sf_dir, "documents")
@@ -1672,7 +1668,7 @@ def q_strip_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     out = strip_boilerplate_lines(
-        base, key_col="doc_id", min_docs=3, min_line_chars=10, hashed=False
+        base, key_col="doc_id", min_docs=3, min_line_chars=10
     )
     return out.select("doc_id", "text_clean")
 

@@ -20,11 +20,8 @@ Scale shape (10^12 docs vs a benchmark of 10^4–10^6 grams):
   the hit set actually fits (it is never hinted: the hit set is
   data-dependent and unbounded, so forcing it would OOM on a
   contamination-heavy corpus);
-* ``hashed=True`` (production default) joins on ``xxhash64(gram)``
-  instead of the gram string: 8 bytes/gram through the join regardless
-  of n. ``hashed=False`` keeps raw strings — the DuckDB-mirrorable form
-  used by the ``decontaminate`` oracle query; the two paths are pinned
-  equal in tests/test_decontaminate_sampling.py.
+* the join key is the gram string itself — exact (no hash collisions)
+  and the same form the ``decontaminate`` oracle query mirrors in DuckDB.
 """
 
 from __future__ import annotations
@@ -37,14 +34,13 @@ from ..functions.hashing import word_shingles
 from ..functions.textmetrics import words_expr
 
 
-def benchmark_ngrams(benchmark: DataFrame, n: int, hashed: bool) -> DataFrame:
+def benchmark_ngrams(benchmark: DataFrame, n: int) -> DataFrame:
     """Distinct n-gram set of the benchmark corpus's ``text`` (the
     broadcast side). Case folds, the same normalization the cross-doc-line
     operator applies."""
-    grams = benchmark.select(F.explode(word_shingles(F.col("text"), n)).alias("__gram"))
-    if hashed:
-        grams = grams.select(F.xxhash64("__gram").alias("__gram"))
-    return grams.distinct()
+    return benchmark.select(
+        F.explode(word_shingles(F.col("text"), n)).alias("__gram")
+    ).distinct()
 
 
 def flag_contaminated(
@@ -52,7 +48,6 @@ def flag_contaminated(
     benchmark: DataFrame,
     key_col: str = "url",
     n: int = 8,
-    hashed: bool = True,
     flag_col: str = "final_failing_qc",
 ) -> DataFrame:
     """Append ``contaminated`` to ``flag_col`` for every doc whose ``text``
@@ -67,7 +62,7 @@ def flag_contaminated(
     scale. The join key is the uniform doc key, so AQE broadcasts exactly
     when the hit set actually fits.
     """
-    bench = F.broadcast(benchmark_ngrams(benchmark, n, hashed))
+    bench = F.broadcast(benchmark_ngrams(benchmark, n))
     # benchmark items SHORTER than n words contribute one whole-text gram
     # of length < n (word_shingles' short-doc rule) — a gram the doc side's
     # n-shingling never emits, so a 6-word eval question quoted verbatim
@@ -92,8 +87,6 @@ def flag_contaminated(
         F.col(key_col).alias("__k"),
         F.explode(doc_gram_expr).alias("__gram"),
     )
-    if hashed:
-        doc_grams = doc_grams.select("__k", F.xxhash64("__gram").alias("__gram"))
     hits = (
         doc_grams.join(bench, "__gram")
         .select("__k")

@@ -487,7 +487,6 @@ def cross_doc_dup_line_stats(
     docs: DataFrame,
     key_col: str = "url",
     min_line_chars: int = 10,
-    hashed: bool = True,
 ) -> DataFrame:
     """Per-doc (n_lines, n_shared) over ``text``: how many of the doc's distinct eligible
     lines also appear in at least one OTHER document — the cross-corpus
@@ -505,10 +504,8 @@ def cross_doc_dup_line_stats(
     * the shared-line set joins back 1-row-per-(doc,line) — no fan-out;
       AQE handles residual partition skew.
 
-    ``hashed=True`` (production) carries ``xxhash64(line)`` (8 bytes)
-    through the shuffles instead of the line text; ``hashed=False`` is
-    the DuckDB-mirrorable form (oracle query ``cross_doc_lines``), pinned
-    equal in tests.
+    The shuffles carry the normalized line text — exact, and the form the
+    ``cross_doc_lines`` oracle query mirrors in DuckDB.
     """
     lines = (
         docs.select(
@@ -518,8 +515,6 @@ def cross_doc_dup_line_stats(
         .select("__k", F.trim(F.lower(F.col("__raw"))).alias("__line"))
         .filter(F.length("__line") >= min_line_chars)
     )
-    if hashed:
-        lines = lines.select("__k", F.xxhash64("__line").alias("__line"))
     pairs = lines.dropDuplicates(["__k", "__line"])
     shared = (
         pairs.groupBy("__line")
@@ -538,34 +533,18 @@ def cross_doc_dup_line_stats(
     )
 
 
-def flag_cross_doc_dup_lines(docs: DataFrame, max_shared_frac: float = 0.6) -> DataFrame:
-    """Flag docs whose shared-line fraction exceeds ``max_shared_frac`` as
-    ``cross_doc_dup_lines`` in ``low_pass_failing_qc``. Row count and key
-    set preserved (annotate-don't-drop); the comparison is
-    ``n_shared > frac · n_lines`` (no division — exact in both engines)."""
-    out = docs.join(cross_doc_dup_line_stats(docs), "url", "left")
-    pred = F.coalesce(
-        F.col("n_shared") > F.lit(max_shared_frac) * F.col("n_lines"), F.lit(False)
-    )
-    return add_flags(out, "low_pass_failing_qc", {"cross_doc_dup_lines": pred}).drop(
-        "n_lines", "n_shared"
-    )
-
-
 def strip_boilerplate_lines(
     docs: DataFrame,
     key_col: str = "url",
     min_docs: int = 3,
     min_line_chars: int = 10,
-    hashed: bool = True,
 ) -> DataFrame:
     """C4-style boilerplate REMOVAL: ``text_clean`` is each doc's ``text`` with every
     line that occurs (normalized: trim+lower) in ≥ ``min_docs`` distinct
     documents stripped out, preserving the order and original bytes of
-    the surviving lines. The surgical complement of
-    :func:`flag_cross_doc_dup_lines`, which only flags whole documents —
-    nav bars / cookie banners / footers pollute GOOD documents, and a
-    quality pipeline wants the page minus the chrome, not a dropped page.
+    the surviving lines. Nav bars / cookie banners / footers pollute GOOD
+    documents, and a quality pipeline wants the page minus the chrome, not
+    a dropped page.
 
     Lines shorter than ``min_line_chars`` after normalization are never
     stripped (too little evidence to be chrome, and C4 likewise bounds
@@ -578,16 +557,12 @@ def strip_boilerplate_lines(
     same uniform two-aggregate chain as
     :func:`cross_doc_dup_line_stats` (distinct (doc, line) → per-line
     doc counts with map-side combine); the hit set joins back onto the
-    1-row-per-(doc,pos,line) table on a uniform 16-byte dual-hash key
-    (two independently-seeded ``xxhash64`` values — a single 64-bit hash
-    would silently strip legitimate lines on birthday collisions at the
-    10^13-distinct-line design scale; AQE-decided join — the chrome
-    vocabulary of a 10^12-doc corpus is NOT assumed broadcastable);
-    reassembly is one ``collect_list`` window bounded by a single
-    document's line count. ``hashed=False`` carries the normalized line
-    text instead of the hashes through the shuffles — the
-    DuckDB-mirrorable twin (oracle query ``strip_boilerplate``), pinned
-    equal in tests.
+    1-row-per-(doc,pos,line) table on the normalized line text (exact: a
+    hash key could strip a legitimate line on a collision; AQE-decided
+    join — the chrome vocabulary of a 10^12-doc corpus is NOT assumed
+    broadcastable); reassembly is one ``collect_list`` window bounded by a
+    single document's line count. The ``strip_boilerplate`` oracle query
+    mirrors it in DuckDB.
     """
     for c in ("__k", "__pos", "__raw", "__norm", "__elig", "__nk", "__hit"):
         if c in docs.columns:
@@ -602,20 +577,7 @@ def strip_boilerplate_lines(
         "__pos",
         "__raw",
         (F.length(norm) >= min_line_chars).alias("__elig"),
-        # hashed path carries TWO independently-seeded 64-bit hashes
-        # (~128-bit effective key): this operator REWRITES text, so a
-        # single-64-bit birthday collision at the 10^13-distinct-line
-        # design scale would silently strip a legitimate line with no
-        # trace (round-5 ADVICE). Struct equality rides the same
-        # groupBy/join shape at +8 bytes per shuffled row.
-        (
-            F.struct(
-                F.xxhash64(norm).alias("h1"),
-                F.xxhash64(norm, F.lit(0x9E3779B9)).alias("h2"),
-            )
-            if hashed
-            else norm
-        ).alias("__nk"),
+        norm.alias("__nk"),
     )
     boiler = (
         lines.filter(F.col("__elig"))

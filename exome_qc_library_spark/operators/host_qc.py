@@ -176,8 +176,7 @@ def flag_host_outliers(
     # outlier keys use host_expr normalization, so a caller-supplied
     # `host` column (possibly normalized differently) must be neither
     # consulted nor clobbered, and the stage output schema must not
-    # silently gain a derived column (same restore rule as the s2c
-    # host-cap stage)
+    # silently gain a derived column
     withq = df.withColumn("__qc_host", host_expr(F.col(url_col)))
     bad2 = bad.withColumnRenamed("host", "__bad_host")
     cond = F.col("__qc_host") == F.col("__bad_host")

@@ -27,13 +27,15 @@ from pyspark.sql import functions as F
 from ..functions.flags import add_flags
 
 OUTLIER_MEASURES: tuple[str, ...] = ("word_count", "mean_word_len", "stopword_density")
+OUTLIER_K_SIGMA = 4.0
+OUTLIER_MAX_ITER = 3
 
 
 def flag_iterative_outliers(
     df: DataFrame,
     measures: tuple[str, ...] = OUTLIER_MEASURES,
-    k_sigma: float = 4.0,
-    max_iter: int = 3,
+    k_sigma: float = OUTLIER_K_SIGMA,
+    max_iter: int = OUTLIER_MAX_ITER,
     flag_col: str = "final_failing_qc",
     tag: str = "metric_outlier",
 ) -> DataFrame:

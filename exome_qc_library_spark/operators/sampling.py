@@ -225,11 +225,11 @@ def flag_over_key_cap(
     id_col: str,
     salt_buckets: int = 16,
     flag_col: str = "low_pass_failing_qc",
-    tag: str = "over_key_cap",
 ) -> DataFrame:
     """Cap rows per key (docs per host/domain): keep the first ``max_rows``
     by ``order_cols`` (ties broken by ``id_col`` — a total order), flag the
-    rest. Annotate-don't-drop; row count and id set preserved.
+    rest ``over_key_cap``. Annotate-don't-drop; row count and id set
+    preserved.
 
     Skew-aware two-phase top-N — a domain-heavy host must NOT funnel its
     10⁸ docs through one window partition:
@@ -266,5 +266,5 @@ def flag_over_key_cap(
     )
     out = df.join(kept, id_col, "left")
     return add_flags(
-        out, flag_col, {tag: ~F.coalesce(F.col("__kept"), F.lit(False))}
+        out, flag_col, {"over_key_cap": ~F.coalesce(F.col("__kept"), F.lit(False))}
     ).drop("__kept")

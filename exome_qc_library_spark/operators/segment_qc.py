@@ -17,14 +17,15 @@ from pyspark.sql import functions as F
 
 from ..functions.flags import add_flags
 
+SEGMENT_K_SIGMA = 4.0
+MIN_SEGMENT_N = 20
 
-def flag_segment_outliers(
-    df: DataFrame, k_sigma: float = 4.0, min_segment_n: int = 20
-) -> DataFrame:
+
+def flag_segment_outliers(df: DataFrame) -> DataFrame:
     """Flag ``segment_outlier`` in ``final_failing_qc`` for docs whose
-    ``stopword_density`` lies more than ``k_sigma`` segment σ from their
-    ``lang_id`` segment's mean, in segments of at least ``min_segment_n``
-    docs."""
+    ``stopword_density`` lies more than ``SEGMENT_K_SIGMA`` segment σ from
+    their ``lang_id`` segment's mean, in segments of at least
+    ``MIN_SEGMENT_N`` docs."""
     seg = (
         df.groupBy("lang_id")
         .agg(
@@ -36,9 +37,12 @@ def flag_segment_outliers(
     )
     out = df.join(F.broadcast(seg), "lang_id", "left")
     pred = (
-        (F.col("__seg_n") >= min_segment_n)
+        (F.col("__seg_n") >= MIN_SEGMENT_N)
         & (F.col("__seg_sd") > 0)
-        & (F.abs(F.col("stopword_density") - F.col("__seg_mu")) > k_sigma * F.col("__seg_sd"))
+        & (
+            F.abs(F.col("stopword_density") - F.col("__seg_mu"))
+            > SEGMENT_K_SIGMA * F.col("__seg_sd")
+        )
     )
     # missing_inputs: a NULL measure or NULL segment must yield the
     # missing_<tag> tag, not a silent pass (round-6 review — the same

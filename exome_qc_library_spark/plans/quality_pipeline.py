@@ -8,20 +8,19 @@ materialization):
   S0 ingest        html → extracted text (byte-identical), lineage cols  [ckpt]
   S1 enrich        host-metadata broadcast join + spam flags   [optional, lazy]
   S2 blocklist     url/host anti-list + substring flags        [optional, lazy]
-  S2b decontaminate benchmark n-gram overlap flags             [optional, lazy]
-  S2c host_cap     per-host doc quota (skew-safe top-N) flags  [optional, lazy]
   S5 near_dedup    MinHash-LSH → clusters → near_duplicate flags        [ckpt]
   S3 hard_filters  Gopher/C4 heuristics → low_pass_failing_qc            [lazy]
   S4 exact_dedup   sha2 content groups → exact_duplicate flags           [lazy]
-  S4b cross_doc_lines corpus-level boilerplate-line flags      [optional, lazy]
-  S4c strip_chrome  C4-style boilerplate-line REMOVAL (rewrites
-                    text post-dedup, pre-scoring)               [optional, lazy]
   S9 scoring       fused langid+perplexity UDF → mismatch/ppl flags
                    + strict thresholds → final_failing_qc               [ckpt]
   S6 iter_outliers iterative global mean±kσ trim on the metric columns   [lazy]
   S10 segment_qc   per-language-segment stopword-density outliers        [lazy]
   S8 host_qc       per-host batch-stratified outlier flags               [lazy]
   S11 verdict      keep = all flag arrays empty; scrub keepers          [ckpt]
+
+The map is the reference's, step for step. S1 and S2 run when a
+deployment supplies their data inputs (host metadata; a blocklist or URL
+substrings); every other stage runs on every invocation.
 
 S6/S10 complete the reference's 11-step map (round-2 VERDICT #1): the
 iterative PCA-outlier stage (``shared/samples_qc.py:131-257``, run on
@@ -52,10 +51,15 @@ from ..operators.dedup import NEAR_DUP_THRESHOLD, flag_exact_duplicates, flag_ne
 from ..operators.hard_filters import FINAL, LOW_PASS, apply_hard_filters, thresholds_metadata
 from ..operators.ingest import ingest_pages
 from ..operators.langid import flag_lang_mismatch
-from ..operators.outliers import OUTLIER_MEASURES, flag_iterative_outliers
+from ..operators.outliers import (
+    OUTLIER_K_SIGMA,
+    OUTLIER_MAX_ITER,
+    OUTLIER_MEASURES,
+    flag_iterative_outliers,
+)
 from ..operators.perplexity import flag_high_perplexity, with_text_scores
 from ..operators.host_qc import flag_host_outliers
-from ..operators.segment_qc import flag_segment_outliers
+from ..operators.segment_qc import MIN_SEGMENT_N, SEGMENT_K_SIGMA, flag_segment_outliers
 from ..operators.scrub import apply_scrub, with_pii_hits
 from ..operators.verdict import with_verdict
 from ..sources.checkpoint import CheckpointStore
@@ -69,16 +73,6 @@ def quality_stages(
     host_metadata: DataFrame | None = None,
     url_substrings: Sequence[str] = (),
     max_perplexity: float = DEFAULT_MAX_PERPLEXITY,
-    outlier_k_sigma: float = 4.0,
-    outlier_max_iter: int = 3,
-    segment_k_sigma: float = 4.0,
-    segment_min_n: int = 20,
-    decontamination_benchmark: DataFrame | None = None,
-    decontamination_ngram: int = 8,
-    host_cap: int | None = None,
-    cross_doc_dup_lines: bool = False,
-    max_shared_line_frac: float = 0.6,
-    strip_boilerplate_min_docs: int | None = None,
 ) -> list[Stage]:
     """The stage list that :func:`build_quality_pipeline` runs. Stage order
     puts the near-dup stage right after the ingest snapshot so its sketch
@@ -90,7 +84,7 @@ def quality_stages(
 
     The per-row stages s0, s3, s9 and s11 are ``stateless``, so streaming
     runs them too (:func:`~..streaming.stream.streaming_quality_flags`);
-    the optional stages are not marked (streaming runs the defaults).
+    S1 and S2 are not marked (streaming runs without them).
     """
 
     stages: list[Stage] = [
@@ -132,52 +126,6 @@ def quality_stages(
         stages.append(
             Stage("s2_blocklist", _blk, {"substrings": list(url_substrings)}, materialize=False)
         )
-    if decontamination_benchmark is not None:
-        from ..operators.decontaminate import flag_contaminated
-
-        stages.append(
-            Stage(
-                "s2b_decontaminate",
-                lambda df: flag_contaminated(
-                    df, decontamination_benchmark, n=decontamination_ngram
-                ),
-                {"n": decontamination_ngram},
-                materialize=False,
-            )
-        )
-
-    if host_cap is not None:
-        # per-host doc quota (round-3 VERDICT #3): the reference applies
-        # per-step membership filters inside its stage loop
-        # (/root/reference/exome_qc/exome_qc.py:119-161); here the
-        # curated-set rule is "at most host_cap docs per host", decided by
-        # the skew-safe two-phase top-N and recorded as a flag
-        from ..functions.urltools import host_expr
-        from ..operators.sampling import flag_over_key_cap
-
-        def _host_cap(df: DataFrame) -> DataFrame:
-            had_host = "host" in df.columns  # s1 enrich may have added it
-            if not had_host:
-                df = df.withColumn("host", host_expr(F.col("url")))
-            out = flag_over_key_cap(
-                df,
-                key_col="host",
-                max_rows=host_cap,
-                order_cols=("warc_ts",),
-                id_col="url",
-                tag="host_over_cap",
-            )
-            return out if had_host else out.drop("host")
-
-        stages.append(
-            Stage(
-                "s2c_host_cap",
-                _host_cap,
-                {"max_rows": host_cap, "key": "host", "order": ["warc_ts"]},
-                materialize=False,
-            )
-        )
-
     stages += [
         Stage(
             "s5_near_dedup",
@@ -199,56 +147,6 @@ def quality_stages(
             materialize=False,
         ),
     ]
-    if cross_doc_dup_lines:
-        # corpus-level boilerplate flags (round-3 VERDICT #3): the
-        # cross-document analog of the reference's batch-stratified
-        # metrics (/root/reference/shared/samples_qc.py:432-486) — a doc
-        # whose lines mostly appear in OTHER docs is template chrome
-        from ..operators.dedup import flag_cross_doc_dup_lines
-
-        stages.append(
-            Stage(
-                "s4b_cross_doc_lines",
-                lambda df: flag_cross_doc_dup_lines(
-                    df, max_shared_frac=max_shared_line_frac
-                ),
-                {"max_shared_frac": max_shared_line_frac},
-                materialize=False,
-            )
-        )
-    if strip_boilerplate_min_docs is not None:
-        # C4-style chrome REMOVAL (rewrites `text` in place, so s9 scores
-        # the content, not the nav bars). OPT-IN: with it on, the
-        # byte-identity-to-upstream invariant intentionally no longer
-        # holds for docs that carried chrome — that is the operator's
-        # purpose, mirroring how apply_scrub rewrites keeper text at s11.
-        # Runs AFTER both dedup stages so duplicates are detected on the
-        # raw bytes the crawler saw.
-        from ..functions.textmetrics import METRIC_NAMES, with_text_metrics
-        from ..operators.dedup import strip_boilerplate_lines
-
-        def _strip(df: DataFrame) -> DataFrame:
-            out = strip_boilerplate_lines(
-                df, min_docs=strip_boilerplate_min_docs
-            )
-            out = out.withColumn("text", F.col("text_clean")).drop("text_clean")
-            # the metric columns materialized at s3 describe the PRE-strip
-            # text; recompute them on the stripped content or s9's final
-            # threshold flags (and the s6/s10/s8 outlier stages) would
-            # score chrome that no longer exists (round-6 review)
-            stale = [c for c in METRIC_NAMES if c in out.columns]
-            if stale:
-                out = with_text_metrics(out.drop(*stale))
-            return out
-
-        stages.append(
-            Stage(
-                "s4c_strip_chrome",
-                _strip,
-                {"min_docs": strip_boilerplate_min_docs},
-                materialize=False,
-            )
-        )
     stages += [
         Stage(
             "s9_scoring",
@@ -271,26 +169,22 @@ def quality_stages(
         ),
         Stage(
             "s6_iterative_outliers",
-            lambda df: flag_iterative_outliers(
-                df, k_sigma=outlier_k_sigma, max_iter=outlier_max_iter
-            ),
+            flag_iterative_outliers,
             {
                 "measures": list(OUTLIER_MEASURES),
-                "k_sigma": outlier_k_sigma,
-                "max_iter": outlier_max_iter,
+                "k_sigma": OUTLIER_K_SIGMA,
+                "max_iter": OUTLIER_MAX_ITER,
             },
             materialize=False,
         ),
         Stage(
             "s10_segment_qc",
-            lambda df: flag_segment_outliers(
-                df, k_sigma=segment_k_sigma, min_segment_n=segment_min_n
-            ),
+            flag_segment_outliers,
             {
                 "segment_col": "lang_id",
                 "measure": "stopword_density",
-                "k_sigma": segment_k_sigma,
-                "min_segment_n": segment_min_n,
+                "k_sigma": SEGMENT_K_SIGMA,
+                "min_segment_n": MIN_SEGMENT_N,
             },
             materialize=False,
         ),

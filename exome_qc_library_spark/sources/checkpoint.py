@@ -75,7 +75,6 @@ class CheckpointStore:
         params: dict[str, Any] | None = None,
         parent: str | None = None,
         metrics: Callable[[DataFrame], dict[str, Any]] | None = None,
-        partition_by: list[str] | None = None,
     ) -> DataFrame:
         """Materialize + manifest, then return the re-read DataFrame
         (write-read barrier = lineage cut, exactly ``mt.checkpoint``).
@@ -98,7 +97,7 @@ class CheckpointStore:
                 "params": params or {},
                 "parent": parent,
                 # as read back: a resumed read uses it, so it sees exactly
-                # what this run's read-back saw (nullability, partition types)
+                # what this run's read-back saw (nullability)
                 "schema": out.schema.jsonValue(),
                 "rows": obs.get["rows"],
             }
@@ -110,7 +109,6 @@ class CheckpointStore:
             df.observe(obs, F.count(F.lit(1)).alias("rows")),
             path,
             metadata=manifest,
-            partition_by=partition_by,
         )
         return _core_wide(out)
 
@@ -127,8 +125,7 @@ class CheckpointStore:
         Iceberg deployment runs as ``rewrite_data_files``. Content is
         untouched: one balanced round-robin ``repartition`` (even output
         sizes — ``coalesce`` would both skew file sizes and throttle the
-        scan's parallelism to the target count), partition columns from
-        the original write preserved.
+        scan's parallelism to the target count).
 
         Commit protocol: the rewrite lands in a sibling temp dir WITHOUT
         a manifest, the directories swap, and the manifest (enriched with
@@ -167,19 +164,8 @@ class CheckpointStore:
                 "target_files": target_n,
             }
         df = self.fmt.read(self.spark, path)
-        part_cols = manifest.get("partition_by") or []
         tmp = path + ".compact_tmp"
-        writer = (
-            # hash-cluster on the partition columns so each Hive directory
-            # is written by one task (one file per live key); plain
-            # round-robin otherwise
-            df.repartition(target_n, *part_cols)
-            if part_cols
-            else df.repartition(target_n)
-        ).write.mode("overwrite")
-        if part_cols:
-            writer = writer.partitionBy(*part_cols)
-        writer.parquet(tmp)
+        df.repartition(target_n).write.mode("overwrite").parquet(tmp)
         bak = path + ".pre_compact"
         shutil.rmtree(bak, ignore_errors=True)  # crashed-prior-compact leftover
         os.rename(path, bak)

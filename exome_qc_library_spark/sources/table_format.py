@@ -38,29 +38,23 @@ class ParquetManifestFormat:
         df: DataFrame,
         path: str,
         metadata: Callable[[], dict[str, Any]],
-        partition_by: list[str] | None = None,
     ) -> dict[str, Any]:
         """Write the data, then resolve ``metadata()`` and commit it as the
         manifest. ``metadata`` runs after the data write and before the
         commit, so facts observed by the write job (row count, flag counts)
         land in the manifest's single write: manifest present ⇔ data
         complete and its facts recorded."""
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
+        df.write.mode("overwrite").parquet(path)
         manifest = dict(metadata())
         manifest.setdefault("format", "parquet+manifest")
         manifest["path"] = path
-        if partition_by:
-            manifest["partition_by"] = partition_by
         self.update_manifest(path, manifest)  # manifest presence == commit marker
         return manifest
 
     def update_manifest(self, path: str, manifest: dict[str, Any]) -> None:
         """Atomically (re)write the manifest. Callers rewriting a committed
         manifest (``CheckpointStore.compact``) pass the dict read back, so
-        the format-owned fields (format/path/partition_by) survive."""
+        the format-owned fields (format/path) survive."""
         tmp = os.path.join(path, MANIFEST_NAME + ".tmp")
         final = os.path.join(path, MANIFEST_NAME)
         with open(tmp, "w") as f:
@@ -91,17 +85,13 @@ class ParquetManifestFormat:
         return self.read_manifest(path) is not None
 
     def data_files(self, path: str) -> list[str]:
-        """All parquet data files of a snapshot (recursive: partitioned
-        tables nest ``key=value`` directories). The local-FS analog of what
+        """All parquet data files of a snapshot. The local-FS analog of what
         an Iceberg manifest lists; drives compaction planning."""
-        out: list[str] = []
-        for root, _dirs, files in os.walk(path):
-            out.extend(
-                os.path.join(root, f)
-                for f in files
-                if f.startswith("part-") and f.endswith(".parquet")
-            )
-        return sorted(out)
+        return sorted(
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if f.startswith("part-") and f.endswith(".parquet")
+        )
 
 
 class IcebergFormat:
@@ -122,7 +112,7 @@ class IcebergFormat:
     def _table(self, path: str) -> str:
         return path if "." in path else f"{self.catalog}.default.{path}"
 
-    def write(self, df, path, metadata, partition_by=None):
+    def write(self, df, path, metadata):
         """Two steps: ``createOrReplace`` commits the data, then the
         resolved ``metadata()`` (which may read the new table) lands as
         ``engine.*`` table properties via :meth:`update_manifest`."""

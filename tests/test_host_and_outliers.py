@@ -207,10 +207,10 @@ def test_iterative_outliers_narrow_state(spark):
 def test_segment_outliers(spark):
     rows = [(i, "en", 0.30 + (i % 5) * 0.001) for i in range(30)] + [
         (100, "en", 0.95),
-        (101, "fr", 0.31),  # too few fr docs → min_segment_n guard, no flag
+        (101, "fr", 0.31),  # too few fr docs → MIN_SEGMENT_N guard, no flag
     ]
     df = spark.createDataFrame(rows, "doc_id long, lang_id string, stopword_density double")
-    out = flag_segment_outliers(df, k_sigma=3.0, min_segment_n=10)
+    out = flag_segment_outliers(df)
     flagged = {r["doc_id"] for r in out.filter(F.size("final_failing_qc") > 0).collect()}
     assert flagged == {100}
 

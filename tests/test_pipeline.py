@@ -218,18 +218,26 @@ def test_s6_s10_stages_wired(pipeline_out):
     assert names[i9 + 1 : i9 + 3] == ["s6_iterative_outliers", "s10_segment_qc"]
 
 
-def test_s6_s10_flags_reach_final_accounting(spark, pages):
-    # aggressive thresholds so both new stages actually fire on the synth
+def test_s6_s10_flags_reach_final_accounting(spark, pages, monkeypatch):
+    # aggressive thresholds so both stages actually fire on the synth
     # fixture; their tags must land in final_failing_qc AND in the terminal
     # checkpoint manifest's flag counts
+    from exome_qc_library_spark.operators import segment_qc
+    from exome_qc_library_spark.plans import quality_pipeline
+
+    monkeypatch.setattr(
+        quality_pipeline,
+        "flag_iterative_outliers",
+        functools.partial(
+            quality_pipeline.flag_iterative_outliers, k_sigma=1.0, max_iter=2
+        ),
+    )
+    monkeypatch.setattr(segment_qc, "SEGMENT_K_SIGMA", 1.0)
+    monkeypatch.setattr(segment_qc, "MIN_SEGMENT_N", 5)
     root = tempfile.mkdtemp(prefix="ckpt_s6s10_")
     try:
         store = CheckpointStore(spark, root)
-        pipe = build_quality_pipeline(
-            store, outlier_k_sigma=1.0, outlier_max_iter=2,
-            segment_k_sigma=1.0, segment_min_n=5,
-        )
-        out = pipe.run(pages)
+        out = build_quality_pipeline(store).run(pages)
         fired = {
             r["flag"]
             for r in out.select(F.explode("final_failing_qc").alias("flag"))
@@ -246,58 +254,6 @@ def test_s6_s10_flags_reach_final_accounting(spark, pages):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_host_cap_and_cross_doc_line_stages_optional(spark, pages):
-    # round-3 VERDICT #3: the curation operators are wire-able as pipeline
-    # stages — with the knobs on, their tags land in the flag arrays AND
-    # in the terminal manifest's low_pass flag counts; row count holds
-    root = tempfile.mkdtemp(prefix="ckpt_curation_")
-    try:
-        store = CheckpointStore(spark, root)
-        pipe = build_quality_pipeline(
-            store, host_cap=2, cross_doc_dup_lines=True, max_shared_line_frac=0.5
-        )
-        names = [s.name for s in pipe.stages]
-        assert "s2c_host_cap" in names and "s4b_cross_doc_lines" in names
-        out = pipe.run(pages)
-        fired = {
-            r["flag"]
-            for r in out.select(F.explode("low_pass_failing_qc").alias("flag"))
-            .distinct()
-            .collect()
-        }
-        # synth pages: host 0 is domain-heavy (cap fires) and dup classes
-        # copy anchor content verbatim (cross-doc shared lines fire)
-        assert "host_over_cap" in fired
-        assert "cross_doc_dup_lines" in fired
-        acct_flags = set(
-            _recorded_counts(store, "s11_verdict", "low_pass_failing_qc")
-        )
-        assert {"host_over_cap", "cross_doc_dup_lines"} <= acct_flags
-        assert out.count() == pages.count()  # annotate-don't-drop
-        # off by default: the baseline pipeline has neither stage
-        base = build_quality_pipeline(CheckpointStore(spark, root))
-        assert {"s2c_host_cap", "s4b_cross_doc_lines"}.isdisjoint(
-            {s.name for s in base.stages}
-        )
-        # resume with the SAME knobs reproduces the cold run from its own
-        # checkpoints (the optional stages change the stage list, so their
-        # store must be self-consistent)
-        out2 = build_quality_pipeline(
-            CheckpointStore(spark, root),
-            host_cap=2,
-            cross_doc_dup_lines=True,
-            max_shared_line_frac=0.5,
-        ).run(pages.limit(0))
-        assert (
-            out.select("url", "keep", "low_pass_failing_qc")
-            .exceptAll(out2.select("url", "keep", "low_pass_failing_qc"))
-            .count()
-            == 0
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
 def test_stateless_stages_are_the_per_row_ones(spark, tmp_path):
     """The streaming chain runs the stages marked ``stateless``: a
     cross-record stage marked so would fail under ``readStream`` or judge
@@ -308,50 +264,14 @@ def test_stateless_stages_are_the_per_row_ones(spark, tmp_path):
         "host_metadata": table,
         "blocklist": table,
         "url_substrings": ("casino",),
-        "decontamination_benchmark": table,
-        "host_cap": 2,
-        "cross_doc_dup_lines": True,
-        "strip_boilerplate_min_docs": 3,
     }
     every = quality_stages(**optional)
-    assert {
-        "s1_enrich",
-        "s2_blocklist",
-        "s2b_decontaminate",
-        "s2c_host_cap",
-        "s4b_cross_doc_lines",
-        "s4c_strip_chrome",
-    } <= {s.name for s in every}
+    assert {"s1_enrich", "s2_blocklist"} <= {s.name for s in every}
     for stages in (quality_stages(), every):
         assert [s.name for s in stages if s.stateless] == per_row
     # build_quality_pipeline runs this same list
     pipe = build_quality_pipeline(CheckpointStore(spark, str(tmp_path)), **optional)
     assert [s.name for s in pipe.stages] == [s.name for s in every]
-
-
-def test_decontamination_stage_optional(spark, pages):
-    # with a benchmark supplied, s2b flags overlapping docs; row count and
-    # verdict conjunction still hold
-    root = tempfile.mkdtemp(prefix="ckpt_decon_")
-    try:
-        bench = pages.limit(3).select("text")
-        store = CheckpointStore(spark, root)
-        pipe = build_quality_pipeline(
-            store, decontamination_benchmark=bench, decontamination_ngram=5
-        )
-        assert "s2b_decontaminate" in [s.name for s in pipe.stages]
-        out = pipe.run(pages)
-        assert out.count() == pages.count()
-        n_contaminated = out.filter(
-            F.array_contains("final_failing_qc", "contaminated")
-        ).count()
-        assert n_contaminated >= 3  # at least the benchmark's own source docs
-        bad = out.filter(
-            F.col("keep") & F.array_contains("final_failing_qc", "contaminated")
-        ).count()
-        assert bad == 0  # contaminated docs never kept
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_from_stage_forces_recompute(pipeline_out):
@@ -446,60 +366,6 @@ def test_observation_accounting_matches_scan_and_falls_back(spark, pages):
     finally:
         shutil.rmtree(root, ignore_errors=True)
         shutil.rmtree(root + "_rogue", ignore_errors=True)
-
-
-def test_strip_chrome_stage_optional(spark, pages):
-    import pyspark.sql.functions as F
-
-    root = tempfile.mkdtemp(prefix="ckpt_strip_")
-    footer = "planted shared chrome footer line for the strip stage"
-    try:
-        # plant the same long footer into every page's upstream text — the
-        # working column the stage chain operates on
-        planted = pages.withColumn(
-            "text",
-            F.when(
-                F.col("text").isNotNull(),
-                F.concat(F.col("text"), F.lit("\n" + footer)),
-            ),
-        )
-        store = CheckpointStore(spark, root)
-        pipe = build_quality_pipeline(store, strip_boilerplate_min_docs=3)
-        assert "s4c_strip_chrome" in [s.name for s in pipe.stages]
-        out = pipe.run(planted).cache()
-        # the chrome never reaches the verdict/scrub output...
-        assert out.filter(F.col("scrubbed_text").contains(footer)).count() == 0
-        # round-6 review: the metric columns must describe the STRIPPED
-        # text, not the pre-strip chrome — s9's final flags and the
-        # outlier stages score these numbers
-        from exome_qc_library_spark.functions.textmetrics import words_expr
-
-        stale = out.filter(
-            F.col("text").isNotNull()
-            & (F.col("word_count") != F.size(words_expr(F.col("text"))))
-        ).count()
-        assert stale == 0
-        # ...but rows and keys are preserved (annotate-don't-drop)
-        assert out.count() == pages.count()
-        # the footer really was in the input (guard against a vacuous test)
-        assert planted.filter(F.col("text").contains(footer)).count() > 0
-        # off by default
-        assert "s4c_strip_chrome" not in [
-            s.name for s in build_quality_pipeline(CheckpointStore(spark, root)).stages
-        ]
-        # resume with the same knob reproduces the cold run
-        out2 = build_quality_pipeline(
-            CheckpointStore(spark, root), strip_boilerplate_min_docs=3
-        ).run(planted.limit(0))
-        assert (
-            out.select("url", "keep", "scrubbed_text")
-            .exceptAll(out2.select("url", "keep", "scrubbed_text"))
-            .count()
-            == 0
-        )
-        out.unpersist()
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
 
 
 def test_run_report_artifact(pipeline_out):

@@ -9,6 +9,7 @@ registry leg pins live here too: they run the same ``QUERIES`` entries.
 """
 
 import os
+import re
 
 import pyspark.sql.functions as F
 import pytest
@@ -217,3 +218,26 @@ def test_media_dims_registry_legs(spark, sf):
         assert legs[kind]["n"] > 0, kind
         for f in kind_fields:
             assert legs[kind][f] == legs[kind]["n"], (kind, f)
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01"])
+@pytest.mark.parametrize(
+    "name, scans, exchanges, broadcasts",
+    [
+        ("decontaminate", 3, 2, 2),
+        ("cross_doc_lines", 3, 4, 2),
+        ("strip_boilerplate", 3, 3, 2),
+        ("host_cap", 2, 2, 1),
+    ],
+)
+def test_line_and_gram_registry_plan_legs(spark, sf, name, scans, exchanges, broadcasts):
+    """The registry queries that join on a gram, a line or a kept-id set:
+    parquet scans, shuffle exchanges and broadcast exchanges of the
+    planned query. A new shuffle or a lost broadcast moves a count."""
+    plan = _plan(q(name, spark, os.path.join(os.path.dirname(SF), sf)))
+    got = (
+        plan.count("FileScan parquet"),
+        len(re.findall(r"(?<!Broadcast)Exchange ", plan)),
+        plan.count("BroadcastExchange "),
+    )
+    assert got == (scans, exchanges, broadcasts), plan

@@ -8,9 +8,9 @@ assignment that binds only plain, non-dunder names. The roots are every
 other module-level statement of the package (imports, ``__all__``, ...)
 plus the scripts that drive the engine: ``bench.py``, ``__spark_entry__.py``,
 ``perfbench/*.py`` and ``tools/*.py``. A reference is a ``Name``, an
-``Attribute``, an import alias, or a ``str`` constant that is a single
-identifier (dict keys and ``getattr`` lookups); docstrings and comments
-never count. A method is reached only through an attribute reference
+``Attribute`` or an import alias; strings, docstrings and comments never
+count, so a registry key does not keep a def of the same name alive. A
+method is reached only through an attribute reference
 (``x.name``) once its class is reached; a dunder is reached with its
 class. References are followed transitively through def bodies and
 constant values. Tests are not roots, so a def, method or constant that
@@ -19,10 +19,14 @@ it as a reference, or put it on ``ALLOWLIST`` with its reason.
 
 The option census. An option is a defaulted parameter of a package
 function or method. It is live if some root, the package included, passes
-it at a call to that def's name, by keyword or by position; keywords given
-to a def that forwards ``**kw`` count for the callee. An option no root
-passes is flagged: make it a constant with its default value, or put it on
-``OPTION_ALLOWLIST`` with one of the ``OPTION_REASONS``.
+it at a call to that def's name, by keyword or by position; a ``*args``
+forward passes no named parameter. Two kinds of call pass on only what
+reaches their def: keywords given to a def that forwards ``**kw`` count
+for the callee, and a keyword that relays one of the def's own parameters
+under its own name (``p=p``) counts only once that parameter is live. An
+option no root passes is flagged: make it a constant with its default
+value, or put it on ``OPTION_ALLOWLIST`` with one of the
+``OPTION_REASONS``.
 """
 
 import ast
@@ -47,18 +51,7 @@ def _parse(path):
     return ast.parse(path.read_text(), filename=str(path))
 
 
-def _docstrings(tree):
-    """The ids of every docstring constant in ``tree``."""
-    out = set()
-    for node in ast.walk(tree):
-        if isinstance(node, (ast.Module, ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-            body = node.body
-            if body and isinstance(body[0], ast.Expr) and isinstance(body[0].value, ast.Constant):
-                out.add(id(body[0].value))
-    return out
-
-
-def _refs(nodes, docstrings):
+def _refs(nodes):
     """Identifiers referenced anywhere under ``nodes``."""
     out = set()
     for top in nodes:
@@ -69,13 +62,6 @@ def _refs(nodes, docstrings):
                 out.add(node.attr)
             elif isinstance(node, ast.alias):
                 out.add(node.name.split(".")[-1])
-            elif (
-                isinstance(node, ast.Constant)
-                and isinstance(node.value, str)
-                and node.value.isidentifier()
-                and id(node) not in docstrings
-            ):
-                out.add(node.value)
     return out
 
 
@@ -128,7 +114,7 @@ def _attrs(nodes):
 
 def _census(allowlist):
     """Return ``(defs, reached)``: every top-level package def and constant
-    as ``name -> [(relpath, line, node, docstrings)]``, every method of a
+    as ``name -> [(relpath, line)]``, every method of a
     top-level class as ``Class.method -> [...]``, and the keys reached from
     the roots, with the ``allowlist`` defs counted as roots.
 
@@ -139,39 +125,37 @@ def _census(allowlist):
     defs, names, attrs = {}, set(allowlist), set()
     own_refs = {}  # key -> [(names, attrs)] the def references once reached
 
-    def add(key, nodes, docs):
-        own_refs.setdefault(key, []).append((_refs(nodes, docs), _attrs(nodes)))
+    def add(key, nodes):
+        own_refs.setdefault(key, []).append((_refs(nodes), _attrs(nodes)))
 
     for path in sorted(PACKAGE.rglob("*.py")):
-        tree = _parse(path)
-        docs = _docstrings(tree)
         rel = path.relative_to(ROOT).as_posix()
-        for stmt in tree.body:
+        for stmt in _parse(path).body:
             if isinstance(stmt, _DEFS):
-                defs.setdefault(stmt.name, []).append((rel, stmt.lineno, stmt, docs))
+                defs.setdefault(stmt.name, []).append((rel, stmt.lineno))
                 # decorators and default values run at import time
-                names |= _refs(stmt.decorator_list, docs)
+                names |= _refs(stmt.decorator_list)
                 if isinstance(stmt, ast.ClassDef):
-                    add(stmt.name, _class_nodes(stmt), docs)
+                    add(stmt.name, _class_nodes(stmt))
                     for fn in stmt.body:
                         if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                             key = f"{stmt.name}.{fn.name}"
-                            defs.setdefault(key, []).append((rel, fn.lineno, fn, docs))
-                            add(key, [fn], docs)
+                            defs.setdefault(key, []).append((rel, fn.lineno))
+                            add(key, [fn])
                 else:
-                    names |= _refs(stmt.args.defaults + stmt.args.kw_defaults, docs)
-                    add(stmt.name, [stmt], docs)
+                    names |= _refs(stmt.args.defaults + stmt.args.kw_defaults)
+                    add(stmt.name, [stmt])
             elif names_bound := _constant_names(stmt):
                 for name in names_bound:
-                    defs.setdefault(name, []).append((rel, stmt.lineno, stmt, docs))
-                    add(name, [stmt], docs)
+                    defs.setdefault(name, []).append((rel, stmt.lineno))
+                    add(name, [stmt])
             else:
-                names |= _refs([stmt], docs)
+                names |= _refs([stmt])
                 attrs |= _attrs([stmt])
     for pattern in ROOT_SCRIPTS:
         for path in sorted(ROOT.glob(pattern)):
             tree = _parse(path)
-            names |= _refs([tree], _docstrings(tree))
+            names |= _refs([tree])
             attrs |= _attrs([tree])
 
     def is_reached(key):
@@ -199,7 +183,7 @@ def test_every_package_def_is_reached_from_a_production_root():
         (rel, line, name)
         for name, sites in defs.items()
         if name not in reached
-        for rel, line, _node, _docs in sites
+        for rel, line in sites
     )
     assert not unreached, (
         f"{len(unreached)} package defs, methods or constants are reached only from tests/ "
@@ -225,7 +209,6 @@ OPTION_REASONS = (
     "deployment input",
     "scale-path seam",
     "interface of an ALLOWLIST def",
-    "configuration surface",
 )
 
 # ``def(param, ...)`` -> reason. The reason starts with one of
@@ -261,12 +244,9 @@ OPTION_ALLOWLIST = {
     "ALLOWLIST def: operator S4 reads any delimited table",
     "export_tsv(compress, single_file)": "interface of an ALLOWLIST def: operator S7 "
     "exports any table",
-    "quality_stages(blocklist, host_metadata, url_substrings, decontamination_benchmark, "
-    "host_cap, cross_doc_dup_lines, strip_boilerplate_min_docs, decontamination_ngram, "
-    "max_shared_line_frac, outlier_k_sigma, outlier_max_iter, segment_k_sigma, "
-    "segment_min_n)": "configuration surface: the switches of the optional stages and "
-    "the thresholds tests/test_pipeline.py lowers are the pipeline's configuration; "
-    "they are decided together with the optional stages",
+    "quality_stages(blocklist, host_metadata, url_substrings)": "deployment input: the "
+    "blocklist table, host-metadata table and URL substrings that switch on the S1 "
+    "enrich and S2 blocklist stages",
 }
 
 
@@ -277,13 +257,13 @@ def _defaulted(fn):
     return out + [x.arg for x, d in zip(a.kwonlyargs, a.kw_defaults) if d is not None]
 
 
-def _callables(path):
+def _callables(tree):
     """``(label, callee, fn, bound)`` for every top-level function and every
-    method of a top-level class in ``path``. ``callee`` is the name a call
+    method of a top-level class in the module ``tree``. ``callee`` is the name a call
     site uses: the function or method name, the class name for
     ``__init__``. ``bound`` is how many leading parameters the call binds
     itself (``self``/``cls``)."""
-    for stmt in _parse(path).body:
+    for stmt in tree.body:
         if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef)):
             yield stmt.name, stmt.name, stmt, 0
         elif isinstance(stmt, ast.ClassDef):
@@ -305,12 +285,12 @@ def _callee_name(call):
 
 def _passed(call, fn, bound):
     """The parameter names ``call`` passes to ``fn``, by keyword or by
-    position (a ``*args`` passes every parameter from its position on)."""
+    position (a ``*args`` passes none from its position on)."""
     pos = [x.arg for x in fn.args.posonlyargs + fn.args.args][bound:]
     out = {kw.arg for kw in call.keywords if kw.arg is not None}
     for i, arg in enumerate(call.args):
         if isinstance(arg, ast.Starred):
-            return out | set(pos[i:])
+            break
         out |= set(pos[i : i + 1])
     return out
 
@@ -319,23 +299,44 @@ def _option_census():
     """Return ``(options, live)``: every defaulted parameter of a package
     function or method as ``(label, param) -> (relpath, line)``, and the set
     of those some root passes. Keywords passed to a def that forwards
-    ``**kw`` count for every call in its body that passes ``**kw`` on."""
+    ``**kw`` count for every call in its body that passes ``**kw`` on; a
+    keyword ``p=p`` that relays the enclosing def's option ``p`` counts once
+    that option is live."""
+    trees = {path: _parse(path) for path in sorted(PACKAGE.rglob("*.py"))}
     defs = []
-    for path in sorted(PACKAGE.rglob("*.py")):
+    for path, tree in trees.items():
         rel = path.relative_to(ROOT).as_posix()
-        defs += [(rel, *c) for c in _callables(path)]
+        defs += [(rel, *c) for c in _callables(tree)]
     by_callee = {}
     for rel, label, callee, fn, bound in defs:
         by_callee.setdefault(callee, []).append((label, fn, bound))
+    # call node id -> (label, options) of the package def whose body holds it
+    enclosing = {
+        id(node): (label, set(_defaulted(fn)))
+        for _rel, label, _callee, fn, _bound in defs
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+    }
     passed = {}  # label -> names the roots pass, including ones **kw takes
-    roots = sorted(PACKAGE.rglob("*.py")) + [
-        p for pattern in ROOT_SCRIPTS for p in sorted(ROOT.glob(pattern))
+    relays = []  # (relaying def's label, the option it relays, callee name)
+    roots = list(trees.values()) + [
+        _parse(p) for pattern in ROOT_SCRIPTS for p in sorted(ROOT.glob(pattern))
     ]
-    for path in roots:
-        for node in ast.walk(_parse(path)):
-            if isinstance(node, ast.Call):
-                for label, fn, bound in by_callee.get(_callee_name(node), ()):
-                    passed.setdefault(label, set()).update(_passed(node, fn, bound))
+    for tree in roots:
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            outer, outer_options = enclosing.get(id(node), (None, set()))
+            relayed = {
+                k.arg
+                for k in node.keywords
+                if isinstance(k.value, ast.Name)
+                and k.value.id == k.arg
+                and k.arg in outer_options
+            }
+            relays += [(outer, param, _callee_name(node)) for param in relayed]
+            for label, fn, bound in by_callee.get(_callee_name(node), ()):
+                passed.setdefault(label, set()).update(_passed(node, fn, bound) - relayed)
     forwards = []  # (forwarder label, its named params, callee name)
     for _rel, label, _callee, fn, _bound in defs:
         kw = fn.args.kwarg
@@ -351,8 +352,9 @@ def _option_census():
     grew = True
     while grew:
         grew = False
-        for label, named, callee in forwards:
-            extra = passed.get(label, set()) - named
+        edges = [(passed.get(label, set()) - named, callee) for label, named, callee in forwards]
+        edges += [(passed.get(label, set()) & {param}, callee) for label, param, callee in relays]
+        for extra, callee in edges:
             for target, _fn, _bound in by_callee.get(callee, ()):
                 got = passed.setdefault(target, set())
                 if not extra <= got:

@@ -215,26 +215,6 @@ def test_compact_rewrites_small_files_and_preserves_content(spark):
     assert rec2["compacted"] is False and rec2["files"] == 1
 
 
-def test_compact_partitioned_stage_preserves_layout(spark):
-    root = tempfile.mkdtemp()
-    store = CheckpointStore(spark, root)
-    df = spark.range(600).select(
-        F.col("id"), (F.col("id") % 3).cast("string").alias("grp")
-    )
-    before = store.write(df.repartition(8), "stp", partition_by=["grp"])
-    before_rows = sorted(map(tuple, before.select("id", "grp").collect()))
-    assert len(store.fmt.data_files(store.path("stp"))) > 3
-    rec = store.compact("stp", target_file_bytes=1 << 30)
-    assert rec["compacted"] and rec["files_after"] <= 3  # ≤ one file per live key
-    # Hive layout preserved: partition dirs still present, content identical
-    dirs = {
-        d for d in os.listdir(store.path("stp")) if d.startswith("grp=")
-    }
-    assert dirs == {"grp=0", "grp=1", "grp=2"}
-    after_rows = sorted(map(tuple, store.read("stp").select("id", "grp").collect()))
-    assert after_rows == before_rows
-
-
 def test_compact_absent_stage_raises(spark):
     store = CheckpointStore(spark, tempfile.mkdtemp())
     try:
