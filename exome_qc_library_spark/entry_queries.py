@@ -1233,9 +1233,9 @@ def q_compact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-stage snapshots written by thousands of tasks need periodic
     file-count maintenance or scan planning degrades), and return what a
     downstream consumer reads from the compacted snapshot. The identity
-    oracle proves the rewrite preserves every value; the companion pytest
-    pins the mechanics (file counts, manifest enrichment, partitioned
-    layout, crash-window invariant)."""
+    oracle proves the rewrite preserves every value; the companion pytests
+    in test_sources pin the mechanics (file counts, manifest enrichment,
+    crash-window invariant) and test_plans pins the plan legs."""
     from .sources.checkpoint import CheckpointStore
 
     docs = _t(spark, sf_dir, "documents").select(

@@ -14,6 +14,7 @@ folded from the status store by :mod:`~exome_qc_library_spark.telemetry`
 
 from __future__ import annotations
 
+import json
 import os
 import time
 from collections.abc import Callable
@@ -256,9 +257,8 @@ class Pipeline:
         ``REPORT_METRIC_COLS`` that the terminal table lacks are skipped,
         so the report composes with any stage list.
 
-        Returns the report dict. A dir-backed store also gets it as
-        ``report.json`` in the store root, next to the stage dirs it
-        summarizes."""
+        Returns the report dict, and writes it as ``report.json`` in the
+        store root, next to the stage dirs it summarizes."""
         term = next((s.name for s in reversed(self.stages) if s.materialize), None)
         if term is None or not self.store.exists(term):
             raise ValueError("no terminal checkpoint — run() the pipeline first")
@@ -283,7 +283,7 @@ class Pipeline:
             if counts:
                 flag_counts[st.name] = counts
         # as written: the cube below starts with its own exchange
-        df = self.store.fmt.read(self.store.spark, self.store.path(term))
+        df = self.store.read_as_written(term)
         gcols = [c for c in REPORT_GROUP_COLS if c in df.columns]
         mcols = [c for c in REPORT_METRIC_COLS if c in df.columns]
         qs = list(REPORT_QUANTILES)
@@ -339,11 +339,6 @@ class Pipeline:
             "by": by,
             "metrics": metrics,
         }
-        # only dir-backed stores have a local root to write next to; a
-        # catalog-backed store's root may be empty or never created
-        if self.store.dir_backed and os.path.isdir(self.store.root):
-            import json
-
-            with open(os.path.join(self.store.root, "report.json"), "w") as fh:
-                json.dump(rep, fh, indent=2, sort_keys=True)
+        with open(os.path.join(self.store.root, "report.json"), "w") as fh:
+            json.dump(rep, fh, indent=2, sort_keys=True)
         return rep

@@ -1,1 +1,1 @@
-"""Sources/sinks: table formats, checkpoint store, delimited/interval readers."""
+"""Sources/sinks: checkpoint store, delimited/interval readers."""

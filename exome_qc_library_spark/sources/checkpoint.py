@@ -3,22 +3,27 @@
 The core engine feature (SURVEY.md §4 item 1). Mirrors the reference's
 pattern of (a) ``mt.checkpoint(path, overwrite=True)`` after every
 expensive step to cut lineage (``/root/reference/shared/variant_qc.py:
-218,386,517,633``), and (b) skipping a stage entirely when its output
-already exists (``exome_qc/exome_qc.py:73,116-117,124,169`` +
-``shared/utils.py:227-247``), so a killed run resumes from the last
-completed stage.
+218,386,517,633``; the reference's Hail-native ``.mt`` directories,
+``exome_qc/exome_qc.py:113`` and ~20 more sites, S6 in SURVEY.md §2.1),
+and (b) skipping a stage entirely when its output already exists
+(``exome_qc/exome_qc.py:73,116-117,124,169`` + ``shared/utils.py:227-247``),
+so a killed run resumes from the last completed stage.
 
-Each checkpoint carries a manifest with stage id, parameters, parent
-stage (lineage), row count and optional metrics such as the stage's
-per-flag counts — the Spark replacement for Hail globals
-(``shared/variant_qc.py:775-781``). All of them are observed by, or
-computed right after, the data write and committed with it in one
-manifest write, so a stage's recorded facts can never outlive or lag the
-data they describe.
+A checkpoint is a parquet directory plus a ``_manifest.json`` sidecar
+with stage id, parameters, parent stage (lineage), row count, the
+schema as written and optional metrics such as the stage's per-flag
+counts — the Spark replacement for Hail globals
+(``shared/variant_qc.py:775-781``), which DataFrames cannot carry
+in-band. All of them are observed by, or computed right after, the data
+write and committed with it in one atomic manifest write (tmp file, then
+rename), written last: manifest present ⇔ data complete and its facts
+recorded, so a stage's recorded facts can never outlive or lag the data
+they describe, and a data dir without a manifest is a torn write.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import shutil
@@ -27,46 +32,77 @@ from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from .readers import spread_scan
-from .table_format import ParquetManifestFormat, default_format
+
+MANIFEST_NAME = "_manifest.json"
 
 
 def _core_wide(df: DataFrame) -> DataFrame:
     return spread_scan(df, "url") if "url" in df.columns else df
 
 
+def _read_manifest(path: str) -> dict[str, Any] | None:
+    p = os.path.join(path, MANIFEST_NAME)
+    if not os.path.exists(p):
+        return None
+    with open(p) as f:
+        return json.load(f)
+
+
+def _commit_manifest(path: str, manifest: dict[str, Any]) -> None:
+    """Atomically (re)write the manifest: its presence is the commit marker."""
+    tmp = os.path.join(path, MANIFEST_NAME + ".tmp")
+    with open(tmp, "w") as f:
+        json.dump(manifest, f, indent=2, sort_keys=True, default=str)
+    os.replace(tmp, os.path.join(path, MANIFEST_NAME))
+
+
+def _data_files(path: str) -> list[str]:
+    """All parquet data files of a snapshot; drives compaction planning."""
+    return sorted(
+        os.path.join(path, f)
+        for f in os.listdir(path)
+        if f.startswith("part-") and f.endswith(".parquet")
+    )
+
+
 class CheckpointStore:
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        fmt: ParquetManifestFormat | None = None,
-    ) -> None:
+    def __init__(self, spark: SparkSession, root: str) -> None:
         self.spark = spark
         self.root = root
-        self.fmt = fmt or default_format()
-        # a parquet+manifest store lives in local dirs under root; a
-        # catalog-backed format addresses tables, not paths — its "root"
-        # may be empty (stage name = table name under the catalog)
-        self.dir_backed = hasattr(self.fmt, "data_files")
-        if self.dir_backed:
-            os.makedirs(root, exist_ok=True)
+        os.makedirs(root, exist_ok=True)
 
     def path(self, stage: str) -> str:
         return os.path.join(self.root, stage)
 
     def exists(self, stage: str) -> bool:
-        return self.fmt.exists(self.spark, self.path(stage))
+        """Existence probe gating each stage — mirror of the reference's
+        ``check_exists`` (``shared/utils.py:227-247``): the manifest is
+        present. A torn write counts as absent."""
+        return _read_manifest(self.path(stage)) is not None
 
     def read(self, stage: str) -> DataFrame:
         """The stage's snapshot at core width: the store owns scan width, so
         one written as fewer files than cores is hash-spread on ``url`` (the
         record key every stage keeps; a table without it comes back as read)."""
-        return _core_wide(self.fmt.read(self.spark, self.path(stage)))
+        return _core_wide(self.read_as_written(stage))
+
+    def read_as_written(self, stage: str) -> DataFrame:
+        """The stage's snapshot in its written layout, for a consumer that
+        starts with its own exchange. A committed snapshot is read with the
+        schema its manifest records, which skips Spark's footer-inference
+        job, so resuming a stage runs no Spark job."""
+        path = self.path(stage)
+        man = _read_manifest(path)
+        reader = self.spark.read
+        if man and "schema" in man:
+            reader = reader.schema(StructType.fromJson(man["schema"]))
+        return reader.parquet(path)
 
     def manifest(self, stage: str) -> dict[str, Any] | None:
-        return self.fmt.read_manifest(self.path(stage))
+        return _read_manifest(self.path(stage))
 
     def write(
         self,
@@ -87,29 +123,22 @@ class CheckpointStore:
         at core width as :meth:`read` returns it."""
         path = self.path(stage)
         obs = Observation()
-        out: DataFrame | None = None
-
-        def manifest() -> dict[str, Any]:
-            nonlocal out
-            out = self.fmt.read(self.spark, path)
-            meta: dict[str, Any] = {
-                "stage": stage,
-                "params": params or {},
-                "parent": parent,
-                # as read back: a resumed read uses it, so it sees exactly
-                # what this run's read-back saw (nullability)
-                "schema": out.schema.jsonValue(),
-                "rows": obs.get["rows"],
-            }
-            if metrics is not None:
-                meta["metrics"] = metrics(out)
-            return meta
-
-        self.fmt.write(
-            df.observe(obs, F.count(F.lit(1)).alias("rows")),
-            path,
-            metadata=manifest,
-        )
+        df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
+        out = self.read_as_written(stage)
+        manifest: dict[str, Any] = {
+            "stage": stage,
+            "params": params or {},
+            "parent": parent,
+            # as read back: a resumed read uses it, so it sees exactly
+            # what this run's read-back saw (nullability)
+            "schema": out.schema.jsonValue(),
+            "rows": obs.get["rows"],
+            "format": "parquet+manifest",
+            "path": path,
+        }
+        if metrics is not None:
+            manifest["metrics"] = metrics(out)
+        _commit_manifest(path, manifest)
         return _core_wide(out)
 
     def compact(
@@ -143,17 +172,11 @@ class CheckpointStore:
         handle previously read from this stage — re-``read`` after
         compacting. Run it between pipeline runs, not mid-plan.
         """
-        if not self.dir_backed:
-            raise NotImplementedError(
-                "compact() is the parquet+manifest maintenance path; on an "
-                "Iceberg-backed store run the catalog's rewrite_data_files "
-                "procedure instead"
-            )
         path = self.path(stage)
-        manifest = self.fmt.read_manifest(path)
+        manifest = _read_manifest(path)
         if manifest is None:
             raise ValueError(f"stage {stage!r} absent or torn — nothing to compact")
-        files = self.fmt.data_files(path)
+        files = _data_files(path)
         total = sum(os.path.getsize(f) for f in files)
         target_n = max(1, math.ceil(total / target_file_bytes))
         if len(files) <= target_n:
@@ -163,7 +186,7 @@ class CheckpointStore:
                 "bytes": total,
                 "target_files": target_n,
             }
-        df = self.fmt.read(self.spark, path)
+        df = self.read_as_written(stage)
         tmp = path + ".compact_tmp"
         df.repartition(target_n).write.mode("overwrite").parquet(tmp)
         bak = path + ".pre_compact"
@@ -173,12 +196,12 @@ class CheckpointStore:
         record = {
             "compacted": True,
             "files_before": len(files),
-            "files_after": len(self.fmt.data_files(path)),
+            "files_after": len(_data_files(path)),
             "bytes": total,
             "target_file_bytes": target_file_bytes,
         }
         manifest.setdefault("compactions", []).append(record)
-        self.fmt.update_manifest(path, manifest)
+        _commit_manifest(path, manifest)
         shutil.rmtree(bak)
         return record
 
@@ -198,12 +221,7 @@ class CheckpointStore:
         assume single-writer stage dirs (``overwrite=True``
         checkpoints)."""
         removed: dict[str, list[str]] = {"torn": [], "scratch": [], "restored": []}
-        # catalog-backed formats address tables, not dirs — there is nothing
-        # on the local FS to reclaim
-        if not self.dir_backed or not os.path.isdir(self.root):
-            return removed
-        names = sorted(os.listdir(self.root))
-        for name in names:
+        for name in sorted(os.listdir(self.root)):
             p = os.path.join(self.root, name)
             if not os.path.isdir(p):
                 continue
@@ -213,11 +231,11 @@ class CheckpointStore:
                 removed["scratch"].append(name)
             elif name.endswith(".pre_compact"):
                 stage_path = p[: -len(".pre_compact")]
-                if self.fmt.read_manifest(stage_path) is not None:
+                if _read_manifest(stage_path) is not None:
                     # compaction committed — backup is redundant
                     shutil.rmtree(p)
                     removed["scratch"].append(name)
-                elif self.fmt.read_manifest(p) is not None:
+                elif _read_manifest(p) is not None:
                     # crashed between compact()'s two renames: the backup
                     # is the only committed copy — restore, don't delete
                     if os.path.isdir(stage_path):
@@ -227,12 +245,12 @@ class CheckpointStore:
                 else:
                     shutil.rmtree(p)  # backup itself torn — unrecoverable
                     removed["scratch"].append(name)
-            elif self.fmt.read_manifest(p) is None:
+            elif _read_manifest(p) is None:
                 # a torn stage whose .pre_compact backup holds a valid
                 # manifest is handled by the restore branch above — don't
                 # delete it here (the restore reuses the dir name)
                 bak = p + ".pre_compact"
-                if not (os.path.isdir(bak) and self.fmt.read_manifest(bak) is not None):
+                if not (os.path.isdir(bak) and _read_manifest(bak) is not None):
                     shutil.rmtree(p)
                     removed["torn"].append(name)
         return removed

@@ -1,4 +1,4 @@
-"""External-resource readers: delimited files, pages tables, interval joins.
+"""External-resource readers: delimited files, scan spreading, interval joins.
 
 Parity targets (SURVEY.md §2.1):
 
@@ -6,8 +6,9 @@ Parity targets (SURVEY.md §2.1):
   missing=...)`` (``/root/reference/shared/samples_annotation.py:21``;
   no-header variant ``exome_qc/exome_qc.py:135``) →
   :func:`import_delimited`.
-* S1/S12 — pages-table scans with projection/filter pushdown →
-  :func:`read_pages`; :func:`spread_scan` spreads a scan to core width.
+* S1/S12 — the pages table is the caller's own scan
+  (``spark.read.parquet`` / ``spark.read.table``) handed to
+  ``Pipeline.run``; :func:`spread_scan` spreads a scan to core width.
 * S5 — locus-interval import + point-in-interval annotation
   (``find_denovo_variants.py:280-283``) → :func:`import_delimited` +
   :func:`interval_join` (broadcast range join — interval sets are small,
@@ -16,7 +17,6 @@ Parity targets (SURVEY.md §2.1):
 
 from __future__ import annotations
 
-import os
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -130,23 +130,6 @@ def spread_scan(df: DataFrame, *key_cols: str) -> DataFrame:
     except Exception:  # noqa: BLE001 — layout probing must never break a read
         return df
     return df.repartition(n, *[F.col(c) for c in key_cols]) if key_cols else df.repartition(n)
-
-
-def read_pages(spark: SparkSession, path: str) -> DataFrame:
-    """Scan of the pages table (url, warc_ts, html, text, lang) — parquet
-    path or catalog table name.
-
-    Anything path-shaped (contains a separator or a URI scheme, or exists
-    locally) is read as parquet; only bare identifiers go to the catalog.
-    ``os.path.isdir`` alone would misroute every REMOTE dataset URI
-    (``s3a://…/pages``) into ``spark.read.table`` (round-6 review)."""
-    looks_like_path = (
-        "/" in path or "\\" in path or "://" in path
-        or path.endswith(".parquet") or os.path.isdir(path)
-    )
-    if looks_like_path:
-        return spark.read.parquet(path)
-    return spark.read.table(path)
 
 
 def interval_join(df: DataFrame, intervals: DataFrame, point: Column) -> DataFrame:

@@ -18,7 +18,7 @@ from exome_qc_library_spark.plans.quality_pipeline import (
     quality_stages,
     summarize_verdicts,
 )
-from exome_qc_library_spark.sources.checkpoint import CheckpointStore
+from exome_qc_library_spark.sources.checkpoint import CheckpointStore, _data_files
 
 
 def _recorded_counts(store, stage, col):
@@ -164,7 +164,7 @@ def single_file_cold(spark, tmp_path_factory):
         "udf_rows": udf_rows,
         "s0_parts": s0.rdd.getNumPartitions(),
         "s5_parts": store.read("s5_near_dedup").rdd.getNumPartitions(),
-        "s5_files": len(store.fmt.data_files(store.path("s5_near_dedup"))),
+        "s5_files": len(_data_files(store.path("s5_near_dedup"))),
     }
 
 

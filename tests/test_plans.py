@@ -228,12 +228,15 @@ def test_media_dims_registry_legs(spark, sf):
         ("cross_doc_lines", 3, 4, 2),
         ("strip_boilerplate", 3, 3, 2),
         ("host_cap", 2, 2, 1),
+        ("compact_roundtrip", 1, 0, 0),
     ],
 )
 def test_line_and_gram_registry_plan_legs(spark, sf, name, scans, exchanges, broadcasts):
-    """The registry queries that join on a gram, a line or a kept-id set:
-    parquet scans, shuffle exchanges and broadcast exchanges of the
-    planned query. A new shuffle or a lost broadcast moves a count."""
+    """The registry queries that join on a gram, a line or a kept-id set,
+    and ``compact_roundtrip``, which goes through ``CheckpointStore``'s
+    write, compact, vacuum and read: parquet scans, shuffle exchanges and
+    broadcast exchanges of the planned query. A new shuffle or a lost
+    broadcast moves a count."""
     plan = _plan(q(name, spark, os.path.join(os.path.dirname(SF), sf)))
     got = (
         plan.count("FileScan parquet"),

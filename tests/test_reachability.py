@@ -37,10 +37,6 @@ PACKAGE = ROOT / "exome_qc_library_spark"
 ROOT_SCRIPTS = ["bench.py", "__spark_entry__.py", "perfbench/*.py", "tools/*.py"]
 
 ALLOWLIST = {
-    "IcebergFormat": "the only implementation of the Iceberg snapshots the north star "
-    "names; its contract test in test_sources is skipped where no Iceberg runtime is present",
-    "read_pages": "the pages-table reader of the input contract; it routes outside "
-    "input between a path and a catalog table",
     "import_delimited": "the only implementation of operator S4 (OPERATORS.md)",
     "export_tsv": "the only implementation of operator S7 (OPERATORS.md); "
     "_stringify_complex is reached through it",
@@ -215,10 +211,6 @@ OPTION_REASONS = (
 # OPTION_REASONS; a scale-path seam names the test that lowers it as
 # ``tests/<file>.py::<test>``, and an interface entry names its ALLOWLIST def.
 OPTION_ALLOWLIST = {
-    "CheckpointStore(fmt)": "deployment input: the table format a deployment "
-    "stores checkpoints in; an Iceberg catalog replaces the parquet+manifest default",
-    "IcebergFormat(catalog)": "deployment input: the Spark catalog name of the "
-    "deployment's Iceberg tables",
     "minhash_candidate_pairs(max_bucket)": "scale-path seam: the per-bucket cap only "
     "a degenerate bucket of 200+ docs crosses; "
     "tests/test_dedup.py::test_minhash_degenerate_bucket_capped lowers it to 5",
