@@ -1,10 +1,13 @@
-"""Generic staged pipeline runner with existence-gated checkpoint resume.
+"""Generic staged pipeline runner that resumes from the last completed checkpoint.
 
 The Spark re-expression of the reference's driver loop
 (``/root/reference/exome_qc/exome_qc.py:68-588``): stepcount 1..N, each
-stage gated on ``check_exists(stage_output)`` (``shared/utils.py:227-247``)
-— skip if present, else compute from the previous checkpoint and
-materialize. Stages are pure ``DataFrame → DataFrame`` functions;
+stage gated on ``check_exists(stage_output)`` (``shared/utils.py:227-247``),
+so a rerun resumes from the last completed step (``README.md:54-55``).
+Here that is one rule: a run starts at the last materialized stage whose
+checkpoint exists, reads only that snapshot, and computes and
+materializes every stage after it; the stages before it neither run nor
+read. Stages are pure ``DataFrame → DataFrame`` functions;
 the runner owns materialization, manifests (params/lineage/metrics),
 accounting and telemetry, so stage code stays declarative for Catalyst.
 Telemetry is the Spark work of the jobs between a stage's start and end,
@@ -141,23 +144,17 @@ class Pipeline:
         self.store = store
         self.results: list[StageResult] = []
 
-    def _next_checkpoint_resumes(self, i: int, force_idx: int) -> bool:
-        """True iff the next materialized stage at/after ``i`` will read its
-        checkpoint back (exists and not forced stale by ``from_stage``) —
-        in which case every lazy stage in between is discarded work."""
-        for j in range(i, len(self.stages)):
-            if self.stages[j].materialize:
-                return j < force_idx and self.store.exists(self.stages[j].name)
-        return False
-
     def run(self, df: DataFrame, from_stage: str | None = None) -> DataFrame:
-        """Run all stages; any stage whose checkpoint exists is read back
-        instead of recomputed (cold run ≡ resumed run, FIXTURES.md §7.4).
-
-        ``from_stage`` forces recomputation from that stage on: checkpoints
-        of stages at/after it are treated as STALE and rebuilt (the
-        reference's "rerun from step N" knob), while stages before it still
-        resume from their checkpoints as usual.
+        """Run from the last completed checkpoint (cold run ≡ resumed run,
+        FIXTURES.md §7.4): the last materialized stage before ``from_stage``
+        (or the end) whose checkpoint exists is read with
+        :meth:`CheckpointStore.read`, the stages before it neither run nor
+        read, and every stage after it runs (``df`` feeds the first stage
+        only when no checkpoint qualifies). ``from_stage`` is the one way to
+        force a recompute: checkpoints at/after it are STALE and rebuilt
+        (the reference's "rerun from step N" knob). A stage at or before
+        the resume point gets ``resumed=True``, its manifest's ``rows`` and
+        telemetry showing no job.
 
         Lazy (``materialize=False``) stage params fold into the NEXT
         checkpoint's manifest; a TRAILING lazy stage therefore has no
@@ -172,29 +169,22 @@ class Pipeline:
         names = [s.name for s in self.stages]
         if from_stage is not None and from_stage not in names:
             raise ValueError(f"unknown stage {from_stage!r}")
-        force_idx = names.index(from_stage) if from_stage is not None else len(names)
+        stop = names.index(from_stage) if from_stage is not None else len(names)
+        start = max(
+            (i for i in range(stop) if self.stages[i].materialize and self.store.exists(names[i])),
+            default=-1,
+        )
         prev_name = None
-        force = False
         pending_params: dict[str, Any] = {}
         spark = self.store.spark
         for i, st in enumerate(self.stages):
-            if i >= force_idx:
-                force = True
             t0 = time.monotonic()
             window = telemetry.mark(spark)
             tel: dict[str, Any] | None = None
-            resumed = True
-            if st.materialize and not force and self.store.exists(st.name):
+            resumed = i <= start
+            if i == start:
                 df = self.store.read(st.name)
-                pending_params = {}
-            elif not st.materialize and self._next_checkpoint_resumes(i, force_idx):
-                # a lazy stage feeding a checkpoint that will be read back is
-                # a guaranteed no-op — skip fn entirely (stage functions may
-                # fire driver-side jobs at build time, e.g. the iterative
-                # outlier loop's per-round stats)
-                pass
-            else:
-                resumed = False
+            elif not resumed:
                 out = st.fn(df)
                 if st.materialize:
                     acct_cols = tuple(ac for ac in st.account_flags if ac in out.columns)

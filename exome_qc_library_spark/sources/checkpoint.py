@@ -19,6 +19,10 @@ write and committed with it in one atomic manifest write (tmp file, then
 rename), written last: manifest present ⇔ data complete and its facts
 recorded, so a stage's recorded facts can never outlive or lag the data
 they describe, and a data dir without a manifest is a torn write.
+
+Every read carries a known schema, so none runs a footer-inference job:
+the write reads its snapshot back with the written DataFrame's schema and
+records it in the manifest, and every later read uses the manifest's.
 """
 
 from __future__ import annotations
@@ -90,16 +94,14 @@ class CheckpointStore:
         return _core_wide(self.read_as_written(stage))
 
     def read_as_written(self, stage: str) -> DataFrame:
-        """The stage's snapshot in its written layout, for a consumer that
-        starts with its own exchange. A committed snapshot is read with the
-        schema its manifest records, which skips Spark's footer-inference
-        job, so resuming a stage runs no Spark job."""
+        """The stage's committed snapshot in its written layout, for a
+        consumer that starts with its own exchange, read with its manifest's
+        schema (no Spark job). An absent or torn stage raises ``ValueError``."""
         path = self.path(stage)
         man = _read_manifest(path)
-        reader = self.spark.read
-        if man and "schema" in man:
-            reader = reader.schema(StructType.fromJson(man["schema"]))
-        return reader.parquet(path)
+        if man is None:
+            raise ValueError(f"stage {stage!r} absent or torn — no committed snapshot")
+        return self.spark.read.schema(StructType.fromJson(man["schema"])).parquet(path)
 
     def manifest(self, stage: str) -> dict[str, Any] | None:
         return _read_manifest(self.path(stage))
@@ -116,21 +118,21 @@ class CheckpointStore:
         (write-read barrier = lineage cut, exactly ``mt.checkpoint``).
 
         The row count is a ``count(1)`` observation on the write job itself
-        (no extra job). ``metrics(written_df)``, when given, runs after the
-        data write and before the manifest commit, on the table as read
-        back; the dict it returns is stored as the manifest's ``metrics``.
-        The returned DataFrame is that same read-back (one read per write),
-        at core width as :meth:`read` returns it."""
+        (no extra job). The read-back uses ``df``'s schema, which a file
+        source makes all-nullable: the footer schema, without an inference
+        job; the manifest records it. ``metrics(written_df)``, when given,
+        runs after the data write and before the manifest commit, on the
+        read-back; the dict it returns is stored as the manifest's
+        ``metrics``. The returned DataFrame is that same read-back, at core
+        width as :meth:`read` returns it."""
         path = self.path(stage)
         obs = Observation()
         df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite").parquet(path)
-        out = self.read_as_written(stage)
+        out = self.spark.read.schema(df.schema).parquet(path)
         manifest: dict[str, Any] = {
             "stage": stage,
             "params": params or {},
             "parent": parent,
-            # as read back: a resumed read uses it, so it sees exactly
-            # what this run's read-back saw (nullability)
             "schema": out.schema.jsonValue(),
             "rows": obs.get["rows"],
             "format": "parquet+manifest",
@@ -173,9 +175,8 @@ class CheckpointStore:
         compacting. Run it between pipeline runs, not mid-plan.
         """
         path = self.path(stage)
+        df = self.read_as_written(stage)  # raises for an absent or torn stage
         manifest = _read_manifest(path)
-        if manifest is None:
-            raise ValueError(f"stage {stage!r} absent or torn — nothing to compact")
         files = _data_files(path)
         total = sum(os.path.getsize(f) for f in files)
         target_n = max(1, math.ceil(total / target_file_bytes))
@@ -186,7 +187,6 @@ class CheckpointStore:
                 "bytes": total,
                 "target_files": target_n,
             }
-        df = self.read_as_written(stage)
         tmp = path + ".compact_tmp"
         df.repartition(target_n).write.mode("overwrite").parquet(tmp)
         bak = path + ".pre_compact"

@@ -79,24 +79,49 @@ def test_keep_is_flag_conjunction(pipeline_out):
     assert bad == 0
 
 
-def test_resume_reproduces_cold_run(pipeline_out):
-    out, root, spark, pages = (
-        pipeline_out["out"],
-        pipeline_out["root"],
-        pipeline_out["spark"],
-        pipeline_out["pages"],
-    )
-    store2 = CheckpointStore(spark, root)
-    pipe2 = build_quality_pipeline(store2)
-    # input deliberately empty: every materialized stage must come from its
-    # checkpoint (lazy stages re-chain but are superseded by the next read)
-    out2 = pipe2.run(pages.limit(0))
-    mat = {s.name for s in pipe2.stages if s.materialize}
-    assert all(r.resumed for r in pipe2.results if r.name in mat)
-    # resumed stages and the lazy stages they supersede run no Spark job
-    assert [r.telemetry["jobs"] for r in pipe2.results] == [0] * len(pipe2.stages)
-    cols = ["url", "keep", "low_pass_failing_qc", "final_failing_qc", "scrubbed_text"]
-    assert out.select(cols).exceptAll(out2.select(cols)).count() == 0
+VERDICT_COLS = ["url", "keep", "low_pass_failing_qc", "final_failing_qc", "scrubbed_text"]
+
+
+def _same_rows(a, b, cols):
+    a, b = a.select(cols), b.select(cols)
+    return a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_resume_reproduces_cold_run(pipeline_out, tmp_path):
+    """A run resumes from the last completed checkpoint (PAPER.md §0). Over
+    an empty input, a complete store and the same store with its s0
+    snapshot gone both resume by reading s11 alone, run no Spark job and
+    reproduce the cold run; s0 stays absent. Recomputing the missing s0
+    from that input would commit a 0-row s0 checkpoint, and a later rerun
+    from s5 would then return no rows. A rerun from s9 reads s5, the last
+    checkpoint before it, and reproduces the cold run's verdicts."""
+    spark, pages, cold = pipeline_out["spark"], pipeline_out["pages"], pipeline_out["out"]
+    root = str(tmp_path / "ckpt")
+    shutil.copytree(pipeline_out["root"], root)
+    store = CheckpointStore(spark, root)
+    reads = []
+    read = store.read
+    store.read = lambda stage: reads.append(stage) or read(stage)
+
+    for drop_s0 in (False, True):
+        if drop_s0:
+            shutil.rmtree(store.path("s0_ingest"))
+        reads.clear()
+        pipe = build_quality_pipeline(store)
+        out = pipe.run(pages.limit(0))
+        assert reads == ["s11_verdict"]
+        assert all(r.resumed for r in pipe.results)
+        assert [r.telemetry["jobs"] for r in pipe.results] == [0] * len(pipe.stages)
+        assert _same_rows(out, cold, VERDICT_COLS)
+    assert not os.path.exists(store.path("s0_ingest"))
+
+    reads.clear()
+    pipe = build_quality_pipeline(store)
+    out = pipe.run(pages.limit(0), from_stage="s9_scoring")
+    assert reads == ["s5_near_dedup"]
+    assert [r.name for r in pipe.results if r.resumed] == ["s0_ingest", "s5_near_dedup"]
+    assert _same_rows(out, cold, VERDICT_COLS)
+    assert not os.path.exists(store.path("s0_ingest"))
 
 
 def test_stage_telemetry_attributes_every_job(pipeline_out):
@@ -117,6 +142,86 @@ def test_stage_telemetry_attributes_every_job(pipeline_out):
             tel = pipe.store.manifest(st.name)["metrics"]["telemetry"]
             assert set(tel) == set(FIELDS), st.name
             assert tel["jobs"] >= 1 and tel["cpu_s"] > 0, st.name
+
+
+def test_cold_run_job_budget(pipeline_out):
+    """Every Spark job of a cold default run has a stated reason; a change
+    that adds or removes one changes this pin and says why. Jobs per stage
+    of the fixture's cold run (300 docs):
+
+    - s0 (1): the snapshot write. Reads carry a known schema, so no
+      footer-inference job follows a write.
+    - s5 (≤ 16): the sketch and pairs barriers (a ``localCheckpoint`` each,
+      plus their AQE query stages), the gate ``count``, ``toPandas`` of
+      the pairs (1) and the write's AQE query stages. An upper bound: AQE
+      plans a join as broadcast or shuffle from runtime sizes, so the
+      number of query stages moves with the input and its layout (13 at
+      ``local[4]``, 15–16 at ``local[8]``).
+    - s9 (≤ 5): the write, whose AQE query stages include the exchanges of
+      the lazy s3 and s4 stages fused into it; an upper bound for the same
+      reason (5 at ``local[4]``, 3 at ``local[8]``).
+    - s6 (7): the narrow ``localCheckpoint`` (1), then three rounds of 2
+      jobs, each the ``collect`` of a round's stats (``outliers.py``).
+    - s11 (10): one write of 10 AQE query stages; s10's and s8's stats are
+      query stages of it, not jobs of their own.
+    - s3, s4, s10, s8 (0): lazy; they fuse into the next write.
+    """
+    jobs = {r.name: r.telemetry["jobs"] for r in pipeline_out["cold_results"]}
+    exact = {
+        "s0_ingest": 1,
+        "s3_hard_filters": 0,
+        "s4_exact_dedup": 0,
+        "s6_iterative_outliers": 7,
+        "s10_segment_qc": 0,
+        "s8_host_qc": 0,
+        "s11_verdict": 10,
+    }
+    assert {k: jobs[k] for k in exact} == exact
+    assert 1 <= jobs["s5_near_dedup"] <= 16
+    assert 1 <= jobs["s9_scoring"] <= 5
+
+
+def test_manifest_schema_is_the_footer_schema(pipeline_out):
+    """Every read uses the manifest's schema, which the write took from the
+    DataFrame it wrote; it must equal what footer inference gives for the
+    snapshot, nullability and ``flag_vocab`` metadata included."""
+    spark, store = pipeline_out["spark"], pipeline_out["pipe"].store
+    for st in pipeline_out["pipe"].stages:
+        if st.materialize:
+            footer = spark.read.parquet(store.path(st.name)).schema.jsonValue()
+            assert store.manifest(st.name)["schema"] == footer, st.name
+
+
+def _stage_digests(store, stages):
+    """Row count and an order-free, overflow-safe hash sum of every column,
+    per stage snapshot (a plain ``sum(xxhash64)`` overflows under ANSI)."""
+    digests = {}
+    for stage in stages:
+        df = store.read(stage)
+        row_hash = F.xxhash64(*df.columns).cast("decimal(38,0)")
+        r = df.agg(F.count(F.lit(1)).alias("n"), F.sum(row_hash).alias("h")).first()
+        digests[stage] = (r["n"], r["h"])
+    return digests
+
+
+def test_output_is_identical_at_any_parallelism(spark, pages, tmp_path):
+    """The pipeline's checkpoints do not depend on the layout it runs at:
+    input at 1 vs 7 partitions with ``spark.sql.shuffle.partitions`` at 3
+    vs 16 give identical s0, s5, s9 and s11 snapshots."""
+    stages = ("s0_ingest", "s5_near_dedup", "s9_scoring", "s11_verdict")
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    digests = []
+    try:
+        for in_parts, shuffle_parts in ((1, 3), (7, 16)):
+            spark.conf.set(key, str(shuffle_parts))
+            store = CheckpointStore(spark, str(tmp_path / f"p{in_parts}"))
+            build_quality_pipeline(store).run(pages.repartition(in_parts))
+            digests.append(_stage_digests(store, stages))
+    finally:
+        spark.conf.set(key, saved)
+    assert digests[0] == digests[1]
+    assert digests[0]["s11_verdict"][0] == pages.count()
 
 
 @pytest.fixture(scope="module")
@@ -487,7 +592,8 @@ def test_accounting_and_row_counts_add_no_jobs(spark, pages):
     """Flag accounting and the manifest row count are observed by the
     checkpoint's write job: a stage with accounted flags runs as many
     Spark jobs as the same stage without, and ``store.write`` as many as a
-    plain parquet write plus the read back. The runner's stage telemetry
+    plain parquet write: its read-back carries the written schema, so no
+    footer-inference job runs. The runner's stage telemetry
     is read from the status store: a one-stage ``Pipeline.run`` runs as
     many jobs as ``store.write`` of the stage's output."""
     from exome_qc_library_spark.functions.flags import add_flags
@@ -513,12 +619,8 @@ def test_accounting_and_row_counts_add_no_jobs(spark, pages):
         store = CheckpointStore(spark, os.path.join(root, "store"))
         plain = os.path.join(root, "plain")
 
-        def write_read():
-            df.write.parquet(plain)
-            spark.read.parquet(plain)
-
         assert n_jobs("store_write", lambda: store.write(df, "x")) == n_jobs(
-            "plain_write", write_read
+            "plain_write", lambda: df.write.parquet(plain)
         )
 
         def one_stage_run():

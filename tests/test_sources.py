@@ -6,6 +6,7 @@ import os
 import tempfile
 
 import pyspark.sql.functions as F
+import pytest
 
 from exome_qc_library_spark.plans.pipeline import Pipeline, Stage
 from exome_qc_library_spark.sources.checkpoint import CheckpointStore, _data_files
@@ -185,6 +186,11 @@ def test_torn_write_counts_as_absent(spark):
     store.write(df, "st2")
     os.remove(os.path.join(root, "st2", "_manifest.json"))  # simulate torn write
     assert not store.exists("st2")
+    # a snapshot is read only with its committed schema: torn or absent
+    # stages raise instead of being read by footer inference
+    for stage in ("st2", "never_written"):
+        with pytest.raises(ValueError, match=stage):
+            store.read(stage)
 
 
 def test_compact_rewrites_small_files_and_preserves_content(spark):

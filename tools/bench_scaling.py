@@ -3,11 +3,11 @@
 Runs bench.py as a subprocess at two parallelism levels (default a
 quarter of the host's cores and all of them, e.g. 1 and 4 on a 4-core
 host) on identical input + seeds, reports throughput at both and the
-scaling efficiency  eff = (T_N / T_4N) / (4N / N), and verifies the
-determinism gate (pipeline output identical at both levels) separately
-in tests/test_pipeline.py.
+scaling efficiency  eff = (T_N / T_4N) / (4N / N). Its precondition,
+identical pipeline output whatever the layout, is a tier-1 test of its
+own: tests/test_pipeline.py::test_output_is_identical_at_any_parallelism.
 
-Usage: PYTHONPATH=/root/repo python tools/bench_scaling.py [out.md]
+Usage (from the repo root): PYTHONPATH=. python tools/bench_scaling.py [out.md]
 """
 
 from __future__ import annotations
