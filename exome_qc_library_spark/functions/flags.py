@@ -26,7 +26,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .memo import per_jvm
 
+
+@per_jvm
 def empty_flags() -> Column:
     """A typed empty ``array<string>`` accumulator (``hl.empty_array(hl.tstr)`` analog)."""
     return F.array().cast(T.ArrayType(T.StringType(), containsNull=False))
@@ -73,13 +76,16 @@ def flag_vocab(df: DataFrame, flag_col: str) -> list[str] | None:
     return list(vocab) if vocab is not None else None
 
 
-def add_flags(
-    df: DataFrame,
+def flag_update(
     flag_col: str,
     rules: dict[str, Column],
     missing_inputs: dict[str, list[Column]] | None = None,
-) -> DataFrame:
-    """Apply many flag rules in ONE projection (single codegen stage).
+) -> tuple[Column, tuple[str, ...]]:
+    """The expression half of :func:`add_flags`: the new value of
+    ``flag_col`` and every tag it can emit, in vocabulary order. It does
+    not depend on a DataFrame, so a stage whose rules are constants builds
+    it once (:func:`~.memo.per_jvm`) and applies it with
+    :func:`apply_flags`.
 
     ``rules`` maps tag → boolean predicate. ``missing_inputs`` optionally
     maps tag → the metric columns whose NULL-ness yields ``missing_<tag>``.
@@ -87,13 +93,7 @@ def add_flags(
     All rules are evaluated as independent nullable entries of a single
     array literal, NULLs filtered out, then concatenated onto the existing
     accumulator — O(rules) expression size, one ``withColumn``.
-
-    Every tag this call can emit (incl. the ``missing_*`` variants) is
-    appended to the column's ``flag_vocab`` metadata — the auditable rule
-    inventory that lets per-stage accounting run as observed metrics of
-    the materialization job itself (see :func:`flag_vocab`).
     """
-    df = with_flag_column(df, flag_col)
     missing_inputs = missing_inputs or {}
     entries = [flag_entry(t, p, missing_inputs.get(t)) for t, p in rules.items()]
     new_flags = F.filter(F.array(*entries), lambda x: x.isNotNull())
@@ -102,18 +102,41 @@ def add_flags(
     # concat, silently swallowing every flag appended from then on AND
     # making size(flags)==0 keep-checks evaluate NULL (round-6 review)
     acc = F.coalesce(F.col(flag_col), F.array().cast("array<string>"))
-    out = df.withColumn(flag_col, F.concat(acc, new_flags))
+    tags: list[str] = []
+    for t in rules:
+        tags.append(t)
+        if missing_inputs.get(t):
+            tags.append(f"missing_{t}")
+    return F.concat(acc, new_flags), tuple(tags)
+
+
+def apply_flags(df: DataFrame, flag_col: str, update: tuple[Column, tuple[str, ...]]) -> DataFrame:
+    """The per-DataFrame half of :func:`add_flags`: set ``flag_col`` to a
+    :func:`flag_update` and append its tags to the column's
+    ``flag_vocab`` metadata."""
+    expr, tags = update
+    df = with_flag_column(df, flag_col)
+    out = df.withColumn(flag_col, expr)
     md = dict(df.schema[flag_col].metadata)
     vocab = list(md.get(VOCAB_KEY, []))
-    for t in rules:
-        if t not in vocab:
-            vocab.append(t)
-        if missing_inputs.get(t) and f"missing_{t}" not in vocab:
-            vocab.append(f"missing_{t}")
+    vocab += [t for t in dict.fromkeys(tags) if t not in vocab]
     md[VOCAB_KEY] = vocab
     return out.withMetadata(flag_col, md)
 
 
+def add_flags(df: DataFrame, flag_col: str, rules: dict[str, Column]) -> DataFrame:
+    """Apply many flag rules in ONE projection (single codegen stage):
+    :func:`apply_flags` of :func:`flag_update`, for rules built per call.
+
+    Every tag this call can emit is appended to the column's
+    ``flag_vocab`` metadata — the auditable rule inventory that lets
+    per-stage accounting run as observed metrics of the materialization
+    job itself (see :func:`flag_vocab`).
+    """
+    return apply_flags(df, flag_col, flag_update(flag_col, rules))
+
+
+@per_jvm
 def keep_expr(*flag_cols: str) -> Column:
     """Final verdict: conjunction of empty flag arrays (README.md:51-53 invariant)."""
     out = F.lit(True)

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .memo import per_jvm
+
 # Small English stopword lexicon (public, standard closed-class words).
 EN_STOPWORDS: tuple[str, ...] = (
     "the", "be", "to", "of", "and", "a", "in", "that", "have", "i",
@@ -137,7 +139,13 @@ METRIC_NAMES: tuple[str, ...] = (
 )
 
 
+@per_jvm
+def _text_column_metrics() -> dict[str, Column]:
+    """:func:`text_metrics` of the ``text`` column."""
+    return text_metrics(F.col("text"))
+
+
 def with_text_metrics(df: DataFrame) -> DataFrame:
     """Annotate all metrics of ``text`` in ONE ``withColumns`` projection
     (annotate-don't-drop)."""
-    return df.withColumns(text_metrics(F.col("text")))
+    return df.withColumns(_text_column_metrics())

@@ -32,7 +32,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.flags import add_flags
+from ..functions.flags import add_flags, apply_flags, flag_update
+from ..functions.memo import per_jvm
 from ..functions.hashing import (
     exact_content_hash,
     lsh_band_keys,
@@ -57,36 +58,46 @@ def flag_exact_duplicates(df: DataFrame) -> DataFrame:
     ordering would otherwise put NULL first and a timestamp-less copy
     would beat every genuinely-dated crawl (round-6 review).
     """
-    h = exact_content_hash(F.col("text"))
+    h, winner, update = _exact_dup_exprs()
     with_h = df.withColumn("__chash", h)
     winners = (
         with_h.filter(F.col("text").isNotNull())
         .groupBy("__chash")
-        .agg(
-            F.min(
-                F.struct(
-                    F.col("warc_ts").isNull().alias("o_missing"),
-                    F.col("warc_ts"),
-                    F.col("url"),
-                )
-            ).alias("w"),
-            F.count(F.lit(1)).alias("n"),
-        )
+        .agg(*winner)
         .select("__chash", F.col("w")["url"].alias("__winner"), F.col("n").alias("__nsame"))
     )
     out = with_h.join(winners, "__chash", "left")
+    out = apply_flags(out, "low_pass_failing_qc", update)
+    return out.drop("__chash", "__winner", "__nsame")
+
+
+@per_jvm
+def _exact_dup_exprs():
+    """:func:`flag_exact_duplicates`' constant Columns: the content hash,
+    the per-group winner aggregates and the flag update."""
+    winner = (
+        F.min(
+            F.struct(
+                F.col("warc_ts").isNull().alias("o_missing"),
+                F.col("warc_ts"),
+                F.col("url"),
+            )
+        ).alias("w"),
+        F.count(F.lit(1)).alias("n"),
+    )
     is_dup = (
         F.col("text").isNotNull()
         & (F.col("__nsame") > 1)
         & (F.col("url") != F.col("__winner"))
     )
-    out = add_flags(out, "low_pass_failing_qc", {"exact_duplicate": is_dup})
-    return out.drop("__chash", "__winner", "__nsame")
+    update = flag_update("low_pass_failing_qc", {"exact_duplicate": is_dup})
+    return exact_content_hash(F.col("text")), winner, update
 
 
 # ----------------------------------------------------------- MinHash LSH
 
 
+@per_jvm
 def _minhash_sig_udf(num_perm: int):
     """Vectorized signature kernel: per Arrow batch, ALL rows' base hashes
     are flattened into one array, the affine permutation family
@@ -193,10 +204,15 @@ def minhash_sketch(df: DataFrame, key_col: str = "url", num_perm: int = 64) -> D
     key through Python both ways; an array<int> downcast of the hashes
     also LOST (the element-wise cast pass costs more than the bytes it
     saves). A/B in BENCH.md round 5."""
-    return df.filter(F.col("text").rlike(r"\S")).select(
-        F.col(key_col).alias("k"),
-        _minhash_sig_udf(num_perm)(shingle_hashes(word_shingles(F.col("text")))).alias("sig"),
-    )
+    has_shingle, k, sig = _sketch_exprs(key_col, num_perm)
+    return df.filter(has_shingle).select(k, sig)
+
+
+@per_jvm
+def _sketch_exprs(key_col: str, num_perm: int):
+    """:func:`minhash_sketch`'s filter and its two output columns."""
+    sig = _minhash_sig_udf(num_perm)(shingle_hashes(word_shingles(F.col("text"))))
+    return F.col("text").rlike(r"\S"), F.col(key_col).alias("k"), sig.alias("sig")
 
 
 def minhash_candidate_pairs(
@@ -264,36 +280,19 @@ def minhash_candidate_pairs(
     # through the bands-way exploded shuffle (at 50k docs that is ~450 MB of
     # shuffle for 26 MB of signatures; at 10^12 docs it is the bottleneck).
     # Signatures are joined back for the (rare) candidate pairs instead.
-    banded = sk.select(
-        "k",
-        F.explode(
-            lsh_band_keys(F.col("sig"), bands, rows_per_band, as_csv=arithmetic)
-        ).alias("bk"),
-    ).select("k", F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket"))
-    # cap degenerate buckets (80k-style guard): keep first max_bucket members
-    grouped = banded.groupBy("band", "bucket").agg(
-        F.slice(F.array_sort(F.collect_list("k")), 1, max_bucket).alias("ks")
+    band_key, bucket_members, pair, jaccard = _lsh_exprs(
+        bands, rows_per_band, max_bucket, arithmetic
     )
+    banded = sk.select("k", band_key).select(
+        "k", F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket")
+    )
+    # cap degenerate buckets (80k-style guard): keep first max_bucket members
+    grouped = banded.groupBy("band", "bucket").agg(bucket_members)
     # expand each capped bucket's sorted members into pairs (a, b), a < b;
     # a pair that shares several bands is emitted once
     cand = (
         grouped.filter(F.size("ks") > 1)
-        .select(
-            F.explode(
-                F.filter(
-                    F.flatten(
-                        F.transform(
-                            F.col("ks"),
-                            lambda x: F.transform(
-                                F.col("ks"),
-                                lambda y: F.struct(x.alias("x"), y.alias("y")),
-                            ),
-                        )
-                    ),
-                    lambda p: p["x"] < p["y"],
-                )
-            ).alias("p")
-        )
+        .select(pair)
         .select(F.col("p.x").alias("a"), F.col("p.y").alias("b"))
         .dropDuplicates(["a", "b"])
     )
@@ -302,16 +301,39 @@ def minhash_candidate_pairs(
     pairs = (
         cand.join(siga, "a")
         .join(sigb, "b")
-        .withColumn(
-            "jaccard_est",
-            F.size(
-                F.filter(F.zip_with(F.col("siga"), F.col("sigb"), lambda x, y: x == y), lambda e: e)
-            )
-            / F.size("siga").cast("double"),
-        )
+        .withColumn("jaccard_est", jaccard)
         .drop("siga", "sigb")
     )
     return pairs
+
+
+@per_jvm
+def _lsh_exprs(bands: int, rows_per_band: int, max_bucket: int, arithmetic: bool):
+    """:func:`minhash_candidate_pairs`' constant Columns: a doc's band keys
+    (exploded), a bucket's capped sorted members, a bucket's pairs
+    (exploded) and a pair's estimated Jaccard similarity."""
+    band_key = F.explode(
+        lsh_band_keys(F.col("sig"), bands, rows_per_band, as_csv=arithmetic)
+    ).alias("bk")
+    bucket_members = F.slice(F.array_sort(F.collect_list("k")), 1, max_bucket).alias("ks")
+    pair = F.explode(
+        F.filter(
+            F.flatten(
+                F.transform(
+                    F.col("ks"),
+                    lambda x: F.transform(
+                        F.col("ks"),
+                        lambda y: F.struct(x.alias("x"), y.alias("y")),
+                    ),
+                )
+            ),
+            lambda p: p["x"] < p["y"],
+        )
+    ).alias("p")
+    jaccard = F.size(
+        F.filter(F.zip_with(F.col("siga"), F.col("sigb"), lambda x, y: x == y), lambda e: e)
+    ) / F.size("siga").cast("double")
+    return band_key, bucket_members, pair, jaccard
 
 
 def connected_components_driver(pairs: DataFrame) -> dict[str, str]:
@@ -464,20 +486,25 @@ def flag_near_duplicates(df: DataFrame, max_driver_pairs: int = 5_000_000) -> Da
     # (the is-null flag precedes the order column in the struct): bare
     # struct ordering would put NULL first, letting e.g. a timestamp-less
     # copy beat every dated crawl
-    order = F.col("warc_ts")
+    rep, update = _near_dup_exprs()
     reps = (
         out.filter(F.col("dup_cluster_id").isNotNull())
         .groupBy("dup_cluster_id")
-        .agg(
-            F.min(
-                F.struct(order.isNull().alias("pn0"), order.alias("p0"), F.col("url"))
-            ).alias("w")
-        )
+        .agg(rep)
         .select("dup_cluster_id", F.col("w")["url"].alias("__rep"))
     )
     out = out.join(maybe_bcast(reps), "dup_cluster_id", "left")
+    return apply_flags(out, "final_failing_qc", update).drop("__rep")
+
+
+@per_jvm
+def _near_dup_exprs():
+    """:func:`flag_near_duplicates`' constant Columns: the per-cluster
+    representative aggregate and the ``near_duplicate`` flag update."""
+    order = F.col("warc_ts")
+    rep = F.min(F.struct(order.isNull().alias("pn0"), order.alias("p0"), F.col("url"))).alias("w")
     is_dup = F.col("dup_cluster_id").isNotNull() & (F.col("url") != F.col("__rep"))
-    return add_flags(out, "final_failing_qc", {"near_duplicate": is_dup}).drop("__rep")
+    return rep, flag_update("final_failing_qc", {"near_duplicate": is_dup})
 
 
 # ------------------------------------- cross-document duplicate lines

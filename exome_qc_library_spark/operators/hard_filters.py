@@ -18,7 +18,8 @@ from dataclasses import asdict, dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.flags import add_flags, with_flag_column
+from ..functions.flags import apply_flags, flag_update
+from ..functions.memo import per_jvm
 from ..functions.textmetrics import METRIC_NAMES, with_text_metrics
 
 
@@ -78,6 +79,12 @@ def _missing_inputs() -> dict[str, list]:
     return {tag: [F.col(tag)] for tag in quality_rules(LOW_PASS)}
 
 
+@per_jvm
+def _quality_flags(flag_col: str, t: QualityThresholds):
+    """The :func:`flag_update` of every rule at thresholds ``t``."""
+    return flag_update(flag_col, quality_rules(t), _missing_inputs())
+
+
 def apply_hard_filters(
     df: DataFrame,
     flag_col: str = "low_pass_failing_qc",
@@ -91,8 +98,7 @@ def apply_hard_filters(
     """
     if compute_metrics and not set(METRIC_NAMES).issubset(df.columns):
         df = with_text_metrics(df)
-    df = with_flag_column(df, flag_col)
-    return add_flags(df, flag_col, quality_rules(thresholds), _missing_inputs())
+    return apply_flags(df, flag_col, _quality_flags(flag_col, thresholds))
 
 
 def thresholds_metadata(t: QualityThresholds) -> dict:

@@ -29,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.flags import add_flags
+from ..functions.flags import apply_flags, flag_update
+from ..functions.memo import per_jvm
 from ..functions.urltools import host_expr, salt_expr
 
 HOST_MEASURES: tuple[str, ...] = ("word_count", "symbol_ratio", "stopword_density")
@@ -60,10 +61,18 @@ def host_metrics(
     clamped at 0 against float cancellation on near-constant measures.
     """
     keys = ["host"] + ([batch_col] if batch_col else [])
-    base = df.withColumns(
-        {"host": host_expr(F.col(url_col)), "__salt": salt_expr(F.col(url_col), 16)}
-    )
-    partial = base.groupBy(*keys, "__salt").agg(
+    salted, partial_aggs, final_aggs = _host_metric_exprs(url_col, tuple(measures))
+    partial = df.withColumns(salted).groupBy(*keys, "__salt").agg(*partial_aggs)
+    return partial.groupBy(*keys).agg(*final_aggs)
+
+
+@per_jvm
+def _host_metric_exprs(url_col: str, measures: tuple[str, ...]):
+    """:func:`host_metrics`' constant Columns: the ``host`` and ``__salt``
+    keys, the partial aggregates per (host, salt) and the final ones per
+    host."""
+    salted = {"host": host_expr(F.col(url_col)), "__salt": salt_expr(F.col(url_col), 16)}
+    partial = (
         F.count(F.lit(1)).alias("n"),
         *[F.sum(m).alias(f"sum_{m}") for m in measures],
         *[F.sum(F.col(m).cast("double") * F.col(m)).alias(f"ssq_{m}") for m in measures],
@@ -80,7 +89,7 @@ def host_metrics(
             n > 1, F.sqrt(F.greatest(q - s * s / n, F.lit(0.0)) / (n - 1))
         )
 
-    final = partial.groupBy(*keys).agg(
+    final = (
         F.sum("n").alias("n_docs"),
         *[
             (F.sum(f"sum_{m}") / F.sum(f"cnt_{m}")).alias(f"mean_{m}")
@@ -90,7 +99,7 @@ def host_metrics(
         *[F.min(f"pmin_{m}").alias(f"min_{m}") for m in measures],
         *[F.max(f"pmax_{m}").alias(f"max_{m}") for m in measures],
     )
-    return final
+    return salted, partial, final
 
 
 def host_outlier_stats(
@@ -100,15 +109,20 @@ def host_outlier_stats(
 ) -> DataFrame:
     """μ/σ of each host-mean measure, per batch (or globally): one grouped
     aggregation producing a #batches-row table — the broadcast side."""
-    # across-host σ is aliased sigma_ (not sd_): host_metrics now carries a
-    # WITHIN-host sd_{m} column, and the broadcast join back onto it must
-    # not collide
-    aggs = [F.avg(f"mean_{m}").alias(f"mu_{m}") for m in measures] + [
-        F.stddev_samp(f"mean_{m}").alias(f"sigma_{m}") for m in measures
-    ]
+    aggs = _host_stat_aggs(tuple(measures))
     if batch_col:
         return hm.groupBy(batch_col).agg(*aggs)
     return hm.agg(*aggs)
+
+
+@per_jvm
+def _host_stat_aggs(measures: tuple[str, ...]):
+    # across-host σ is aliased sigma_ (not sd_): host_metrics now carries a
+    # WITHIN-host sd_{m} column, and the broadcast join back onto it must
+    # not collide
+    return tuple(F.avg(f"mean_{m}").alias(f"mu_{m}") for m in measures) + tuple(
+        F.stddev_samp(f"mean_{m}").alias(f"sigma_{m}") for m in measures
+    )
 
 
 def flag_host_outliers(
@@ -151,19 +165,9 @@ def flag_host_outliers(
         ).drop("__stats_batch")
     else:
         scored = hm.crossJoin(F.broadcast(stats))
-    outlier_cond = None
-    for m in measures:
-        mu, sd = F.col(f"mu_{m}"), F.col(f"sigma_{m}")
-        # degenerate-σ guard: a measure that is (near-)constant across hosts
-        # has σ at float-noise scale, and ANY ulp-level difference between
-        # host means would flag — require σ meaningfully above the noise
-        # floor of the mean before the k·σ test applies
-        eps = F.lit(1e-9) * F.greatest(F.abs(mu), F.lit(1.0))
-        cond = F.coalesce(
-            (sd > eps) & (F.abs(F.col(f"mean_{m}") - mu) > k_sigma * sd),
-            F.lit(False),
-        )
-        outlier_cond = cond if outlier_cond is None else (outlier_cond | cond)
+    outlier_cond, qc_host, join_cond, update = _host_outlier_exprs(
+        url_col, batch_col, tuple(measures), k_sigma, flag_col
+    )
     bad_keys = ["host"] + ([batch_col] if batch_col else [])
     bad_hosts = (
         scored.withColumn("__bad", outlier_cond)
@@ -177,15 +181,40 @@ def flag_host_outliers(
     # `host` column (possibly normalized differently) must be neither
     # consulted nor clobbered, and the stage output schema must not
     # silently gain a derived column
-    withq = df.withColumn("__qc_host", host_expr(F.col(url_col)))
+    withq = df.withColumn("__qc_host", qc_host)
     bad2 = bad.withColumnRenamed("host", "__bad_host")
-    cond = F.col("__qc_host") == F.col("__bad_host")
     if batch_col:
         bad2 = bad2.withColumnRenamed(batch_col, "__bad_batch")
-        # NULL-safe on the batch key, same rationale as the stats join
-        cond = cond & F.col(batch_col).eqNullSafe(F.col("__bad_batch"))
-    out = withq.join(bad2, cond, "left")
-    out = add_flags(
-        out, flag_col, {"host_outlier": F.coalesce(F.col("__host_outlier"), F.lit(False))}
-    )
+    out = withq.join(bad2, join_cond, "left")
+    out = apply_flags(out, flag_col, update)
     return out.drop("__host_outlier", "__qc_host", "__bad_host", "__bad_batch")
+
+
+@per_jvm
+def _host_outlier_exprs(
+    url_col: str, batch_col: str | None, measures: tuple[str, ...], k_sigma: float, flag_col: str
+):
+    """:func:`flag_host_outliers`' constant Columns: the outlier test of a
+    scored host row, the docs' derived host, the join condition onto the
+    outlier keys and the flag update."""
+    outlier_cond = None
+    for m in measures:
+        mu, sd = F.col(f"mu_{m}"), F.col(f"sigma_{m}")
+        # degenerate-σ guard: a measure that is (near-)constant across hosts
+        # has σ at float-noise scale, and ANY ulp-level difference between
+        # host means would flag — require σ meaningfully above the noise
+        # floor of the mean before the k·σ test applies
+        eps = F.lit(1e-9) * F.greatest(F.abs(mu), F.lit(1.0))
+        cond = F.coalesce(
+            (sd > eps) & (F.abs(F.col(f"mean_{m}") - mu) > k_sigma * sd),
+            F.lit(False),
+        )
+        outlier_cond = cond if outlier_cond is None else (outlier_cond | cond)
+    join_cond = F.col("__qc_host") == F.col("__bad_host")
+    if batch_col:
+        # NULL-safe on the batch key, same rationale as the stats join
+        join_cond = join_cond & F.col(batch_col).eqNullSafe(F.col("__bad_batch"))
+    update = flag_update(
+        flag_col, {"host_outlier": F.coalesce(F.col("__host_outlier"), F.lit(False))}
+    )
+    return outlier_cond, host_expr(F.col(url_col)), join_cond, update

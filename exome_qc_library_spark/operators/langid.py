@@ -24,18 +24,19 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.flags import add_flags
+from ..functions.flags import apply_flags, flag_update
 from ..functions.lexicons import LANGS, LEXICONS
+from ..functions.memo import per_jvm
 from ..functions.textmetrics import words_expr
 
 # ---------------------------------------------------------------- expression
 
 
-def lang_density_expr(text: Column, lang: str) -> Column:
-    """Fraction of words that are in ``lang``'s stopword lexicon."""
-    ws = F.transform(words_expr(text), lambda w: F.lower(w))
-    n = F.size(ws)
-    hits = F.size(F.filter(ws, lambda w: w.isin(*LEXICONS[lang])))
+def lang_density_expr(lower_words: Column, lang: str) -> Column:
+    """Fraction of ``lower_words`` (a doc's lower-cased words) that are in
+    ``lang``'s stopword lexicon."""
+    n = F.size(lower_words)
+    hits = F.size(F.filter(lower_words, lambda w: w.isin(*LEXICONS[lang])))
     return F.when(n > 0, hits / n.cast("double"))
 
 
@@ -50,13 +51,18 @@ def langid_expr(text: Column) -> Column:
     is the NB pandas UDF anyway (3.4× faster than either, see perplexity
     module); this expression form exists for the SQL oracle and small data.
     """
+    # one lower-cased word array for every language: the densities share
+    # one subtree, lambda variable included, so codegen's subexpression
+    # elimination may evaluate it once per row (a copy built per language
+    # would carry its own lambda variable, so no two copies would be equal)
+    lower_words = F.transform(words_expr(text), lambda w: F.lower(w))
     # max of (density, -position) is the argmax with earlier-wins ties;
     # each density appears once, so the tree is linear in len(LANGS)
     best = F.array_max(
         F.array(
             *[
                 F.struct(
-                    lang_density_expr(text, lang).alias("lang_conf"),
+                    lang_density_expr(lower_words, lang).alias("lang_conf"),
                     F.lit(-i).alias("rank"),
                     F.lit(lang).alias("lang_id"),
                 )
@@ -131,6 +137,20 @@ def _score_batch(texts: pd.Series) -> pd.DataFrame:
 # ------------------------------------------------------------------- flags
 
 
+@per_jvm
+def _lang_mismatch_flags():
+    """The :func:`~..functions.flags.flag_update` of :func:`flag_lang_mismatch`."""
+    pred = (
+        F.col("lang_id").isNotNull()
+        & F.col("lang").isNotNull()
+        & (F.col("lang_id") != F.col("lang"))
+        & (F.col("lang_conf") > 0.0)
+    )
+    rules = {"lang_mismatch": pred}
+    missing = {"lang_mismatch": [F.col("lang_id")]}
+    return flag_update("final_failing_qc", rules, missing)
+
+
 def flag_lang_mismatch(df: DataFrame) -> DataFrame:
     """Append ``lang_mismatch`` to ``final_failing_qc`` when a confident
     prediction disagrees with a non-NULL claimed ``lang``;
@@ -144,12 +164,4 @@ def flag_lang_mismatch(df: DataFrame) -> DataFrame:
     first lexicon language at conf 0.0, and ``>=`` flagged every stopword-free doc (numbers, code) whose claimed lang
     differed from that arbitrary pick — zero-evidence predictions must
     never fail a doc (round-6 review)."""
-    pred = (
-        F.col("lang_id").isNotNull()
-        & F.col("lang").isNotNull()
-        & (F.col("lang_id") != F.col("lang"))
-        & (F.col("lang_conf") > 0.0)
-    )
-    rules = {"lang_mismatch": pred}
-    missing = {"lang_mismatch": [F.col("lang_id")]}
-    return add_flags(df, "final_failing_qc", rules, missing)
+    return apply_flags(df, "final_failing_qc", _lang_mismatch_flags())

@@ -22,8 +22,9 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.flags import add_flags
+from ..functions.flags import apply_flags, flag_update
 from ..functions.lexicons import LEXICONS
+from ..functions.memo import per_jvm
 
 _N_BUCKETS = 1 << 15
 _MODEL: np.ndarray | None = None
@@ -80,11 +81,13 @@ def _ppl_batch(texts: pd.Series) -> pd.Series:
     return pd.Series(out, dtype="float64")
 
 
+@per_jvm
 def score_text_udf() -> Column:
     """Combined model-scoring kernel: ONE Arrow transport of ``text`` for
     both language-ID (NB trigram, :func:`~.langid._score_batch`) and
     perplexity (:func:`_ppl_batch`). At 50k docs two separate UDFs cost
-    two full text shipments (~10s); combined, one (~7s)."""
+    two full text shipments (~10s); combined, one (~7s). Built, and its
+    function pickled, once per JVM."""
     from .langid import _model as _lid_model, _score_batch as _lid_score
 
     @F.pandas_udf("lang_id string, lang_conf double, perplexity double")
@@ -99,16 +102,30 @@ def score_text_udf() -> Column:
     return _udf
 
 
-def with_text_scores(df: DataFrame) -> DataFrame:
-    # the ArrowEvalPython scorer fuses into its input's stage, whose width the
-    # caller owns (CheckpointStore.read is core-wide; raw scans use spread_scan)
-    s = score_text_udf()(F.col("text"))
+@per_jvm
+def _text_score_cols() -> tuple[Column, dict[str, Column]]:
+    """The scorer's struct over ``text`` and the three columns taken from it."""
     cols = {
         "lang_id": F.col("__sc.lang_id"),
         "lang_conf": F.col("__sc.lang_conf"),
         "perplexity": F.col("__sc.perplexity"),
     }
+    return score_text_udf()(F.col("text")), cols
+
+
+def with_text_scores(df: DataFrame) -> DataFrame:
+    # the ArrowEvalPython scorer fuses into its input's stage, whose width the
+    # caller owns (CheckpointStore.read is core-wide; raw scans use spread_scan)
+    s, cols = _text_score_cols()
     return df.withColumn("__sc", s).withColumns(cols).drop("__sc")
+
+
+@per_jvm
+def _perplexity_flags(max_perplexity: float, flag_col: str):
+    """The :func:`~..functions.flags.flag_update` of :func:`flag_high_perplexity`."""
+    rules = {"perplexity": F.col("perplexity") > max_perplexity}
+    missing = {"perplexity": [F.col("perplexity")]}
+    return flag_update(flag_col, rules, missing)
 
 
 def flag_high_perplexity(
@@ -119,6 +136,4 @@ def flag_high_perplexity(
     """Threshold ``perplexity`` into a flag; NULL perplexity →
     ``missing_perplexity`` (mirrors the two-threshold sex-imputation flags,
     ``shared/samples_qc.py:548-562`` / ``parse_arguments.py:145-146``)."""
-    rules = {"perplexity": F.col("perplexity") > max_perplexity}
-    missing = {"perplexity": [F.col("perplexity")]}
-    return add_flags(df, flag_col, rules, missing)
+    return apply_flags(df, flag_col, _perplexity_flags(max_perplexity, flag_col))

@@ -23,6 +23,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.memo import per_jvm
+
 
 @dataclass(frozen=True)
 class ScrubRule:
@@ -80,10 +82,14 @@ DEFAULT_RULES: tuple[ScrubRule, ...] = PII_RULES + TOXICITY_RULES
 
 def scrub_expr(text: Column) -> Column:
     """``text`` with every ``DEFAULT_RULES`` span replaced, in rule order."""
+    return _scrub_chain(text, DEFAULT_RULES)
+
+
+def _scrub_chain(text: Column, rules: tuple[ScrubRule, ...]) -> Column:
     out = text
-    for r in DEFAULT_RULES:
+    for r in rules:
         out = F.regexp_replace(out, r.regex, r.replacement)
-    gates = [r.gate for r in DEFAULT_RULES]
+    gates = [r.gate for r in rules]
     if gates and all(g is not None for g in gates):
         # one cheap pass decides whether the whole fixed-order replace
         # chain can possibly fire; gating on the ORIGINAL text is exact
@@ -108,8 +114,12 @@ def pii_hits_expr(text: Column) -> Column:
     never materializes the matched substrings or the array holding them —
     this column is computed over EVERY document (keepers and dropped), so
     per-match allocations are pure garbage at corpus scale."""
+    return _pii_count(text, DEFAULT_RULES)
+
+
+def _pii_count(text: Column, rules: tuple[ScrubRule, ...]) -> Column:
     total = F.lit(0)
-    for r in DEFAULT_RULES:
+    for r in rules:
         cnt = F.coalesce(F.regexp_count(text, F.lit(r.regex)), F.lit(0))
         if r.gate is not None:
             # per-rule gating is safe here (unlike scrub_expr's chain):
@@ -122,14 +132,20 @@ def pii_hits_expr(text: Column) -> Column:
     return F.when(text.isNotNull(), total.cast("long"))
 
 
+@per_jvm
+def _text_scrub_cols(rules: tuple[ScrubRule, ...]) -> tuple[Column, Column, Column]:
+    """Over ``text`` under ``rules``: the scrub, the scrub of keepers only,
+    and the span count."""
+    scrubbed = _scrub_chain(F.col("text"), rules)
+    return scrubbed, F.when(F.col("keep"), scrubbed), _pii_count(F.col("text"), rules)
+
+
 def apply_scrub(df: DataFrame) -> DataFrame:
     """``scrubbed_text``: scrub ``text`` of keepers only when a ``keep``
     column exists (survivor-gated, per north rule); annotate-don't-drop."""
-    scrubbed = scrub_expr(F.col("text"))
-    if "keep" in df.columns:
-        scrubbed = F.when(F.col("keep"), scrubbed)
-    return df.withColumn("scrubbed_text", scrubbed)
+    scrubbed, keepers, _ = _text_scrub_cols(DEFAULT_RULES)
+    return df.withColumn("scrubbed_text", keepers if "keep" in df.columns else scrubbed)
 
 
 def with_pii_hits(df: DataFrame) -> DataFrame:
-    return df.withColumn("pii_hits", pii_hits_expr(F.col("text")))
+    return df.withColumn("pii_hits", _text_scrub_cols(DEFAULT_RULES)[2])

@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from .. import telemetry
 from ..functions.flags import flag_count_df, flag_vocab
+from ..functions.memo import per_jvm
 from ..sources.checkpoint import CheckpointStore
 
 # What Pipeline.report breaks keep-rates down by and which metric
@@ -57,27 +58,38 @@ def _attach_accounting_observation(out: DataFrame, acct_cols: tuple[str, ...]):
     """
     from pyspark.sql import Observation
 
-    def _eq(tag):
-        # a (x, _t=tag) default-arg lambda would be read by F.filter as the
-        # two-arg (element, index) form — close over the tag instead
-        return lambda x: x == F.lit(tag)
-
     aggs, plan = [], {}
     for ci, ac in enumerate(acct_cols):
         vocab = flag_vocab(out, ac)
         if vocab is None:
             return out, None, {}
-        sz = F.coalesce(F.size(F.col(ac)), F.lit(0))
-        tag_alias = {}
-        for ti, t in enumerate(vocab):
-            a = f"c{ci}_t{ti}"
-            tag_alias[t] = a
-            aggs.append(F.sum(F.size(F.filter(F.col(ac), _eq(t)))).alias(a))
-        aggs.append(F.count_if(sz == 0).alias(f"c{ci}_empty"))
-        aggs.append(F.sum(sz).alias(f"c{ci}_total"))
+        col_aggs, tag_alias = _accounting_aggs(ci, ac, tuple(vocab))
+        aggs += col_aggs
         plan[ac] = (ci, tag_alias)
     obs = Observation()
     return out.observe(obs, *aggs), obs, plan
+
+
+@per_jvm
+def _accounting_aggs(ci: int, ac: str, vocab: tuple[str, ...]):
+    """The observed aggregates of flag column ``ac`` (the ``ci``-th
+    accounted column): one occurrence count per ``vocab`` tag, the
+    flagless rows and the occurrence total; and the tag → alias table."""
+
+    def _eq(tag):
+        # a (x, _t=tag) default-arg lambda would be read by F.filter as the
+        # two-arg (element, index) form — close over the tag instead
+        return lambda x: x == F.lit(tag)
+
+    sz = F.coalesce(F.size(F.col(ac)), F.lit(0))
+    aggs, tag_alias = [], {}
+    for ti, t in enumerate(vocab):
+        a = f"c{ci}_t{ti}"
+        tag_alias[t] = a
+        aggs.append(F.sum(F.size(F.filter(F.col(ac), _eq(t)))).alias(a))
+    aggs.append(F.count_if(sz == 0).alias(f"c{ci}_empty"))
+    aggs.append(F.sum(sz).alias(f"c{ci}_total"))
+    return tuple(aggs), tag_alias
 
 
 def _flag_counts(written: DataFrame, col: str, obs, plan: dict) -> dict[str, int]:
@@ -136,6 +148,9 @@ class StageResult:
     rows: int | None
     # the Spark work of the stage's window of jobs (telemetry.FIELDS)
     telemetry: dict[str, Any] | None = None
+    # a lazy stage: the next materialized stage, whose window holds this
+    # stage's Spark work (None for a materialized or a trailing lazy stage)
+    fused_into: str | None = None
 
 
 class Pipeline:
@@ -164,7 +179,9 @@ class Pipeline:
 
         ``StageResult.telemetry`` covers a window of job ids; the runner
         sets no job group, so callers' groups stay intact. A computed lazy
-        stage reports only the jobs its ``fn`` fires at build time.
+        stage reports only the jobs its ``fn`` fires at build time; its
+        ``fused_into`` names the materialized stage whose window holds the
+        rest of its Spark work.
         """
         names = [s.name for s in self.stages]
         if from_stage is not None and from_stage not in names:
@@ -174,6 +191,13 @@ class Pipeline:
             (i for i in range(stop) if self.stages[i].materialize and self.store.exists(names[i])),
             default=-1,
         )
+        fused_into: dict[str, str | None] = {}
+        nxt = None
+        for st in reversed(self.stages):
+            if st.materialize:
+                nxt = st.name
+            else:
+                fused_into[st.name] = nxt
         prev_name = None
         pending_params: dict[str, Any] = {}
         spark = self.store.spark
@@ -223,7 +247,9 @@ class Pipeline:
             if tel is None:
                 tel = telemetry.since(spark, window)
             self.results.append(
-                StageResult(st.name, resumed, time.monotonic() - t0, rows, tel)
+                StageResult(
+                    st.name, resumed, time.monotonic() - t0, rows, tel, fused_into.get(st.name)
+                )
             )
         return df
 
@@ -239,7 +265,9 @@ class Pipeline:
         checkpoint manifests, where :meth:`run` committed them with each
         stage's data; per-stage ``telemetry`` is this run's
         :attr:`StageResult.telemetry` from the status store (no scan, no
-        job; ``None`` for a stage that did not run); keep-rates by group
+        job; ``None`` for a stage that did not run), and a lazy stage's
+        ``fused_into``, the stage whose telemetry holds its Spark work;
+        keep-rates by group
         and metric quantiles from ONE bounded ``cube`` aggregation over
         the terminal checkpoint (``grouping_id`` disambiguates cube margins
         from genuinely-NULL group values, e.g. the NULL ``lang_id`` of
@@ -267,6 +295,7 @@ class Pipeline:
                     "resumed": res.resumed if res else None,
                     "seconds": round(res.seconds, 3) if res else None,
                     "telemetry": res.telemetry if res else None,
+                    "fused_into": res.fused_into if res else None,
                 }
             )
             counts = (man.get("metrics") or {}).get("flag_counts")

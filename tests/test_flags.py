@@ -8,7 +8,9 @@ import pyspark.sql.functions as F
 
 from exome_qc_library_spark.functions.flags import (
     add_flags,
+    apply_flags,
     flag_count_df,
+    flag_update,
     keep_expr,
     with_flag_column,
 )
@@ -22,11 +24,15 @@ def _df(spark):
 
 
 def test_add_flags_basic_and_missing(spark):
-    df = add_flags(
+    # missing_* tagging lives on the expression half, flag_update
+    df = apply_flags(
         _df(spark),
         "fl",
-        {"too_big": F.col("metric") > 50, "bad_label": F.col("label") == "b"},
-        missing_inputs={"too_big": [F.col("metric")]},
+        flag_update(
+            "fl",
+            {"too_big": F.col("metric") > 50, "bad_label": F.col("label") == "b"},
+            {"too_big": [F.col("metric")]},
+        ),
     )
     got = {r["id"]: sorted(r["fl"]) for r in df.collect()}
     assert got == {
@@ -76,15 +82,15 @@ def test_flag_count_df_grouped(spark):
 
 
 def test_flag_vocab_metadata_accumulates_and_survives_parquet(spark, tmp_path):
-    # add_flags records every emittable tag (incl. missing_* variants) as
-    # column metadata; a second call extends it; parquet round-trips keep it
+    # apply_flags records every tag its update can emit (incl. missing_*
+    # variants) as column metadata; a second call extends it; parquet
+    # round-trips keep it
     from exome_qc_library_spark.functions.flags import flag_vocab
 
-    df = add_flags(
+    df = apply_flags(
         _df(spark),
         "fl",
-        {"too_big": F.col("metric") > 50},
-        missing_inputs={"too_big": [F.col("metric")]},
+        flag_update("fl", {"too_big": F.col("metric") > 50}, {"too_big": [F.col("metric")]}),
     )
     assert flag_vocab(df, "fl") == ["too_big", "missing_too_big"]
     df = add_flags(df, "fl", {"bad_label": F.col("label") == "b"})

@@ -404,6 +404,89 @@ def test_from_stage_forces_recompute(pipeline_out):
         pipe.run(pages, from_stage="nope")
 
 
+class _StandInGateway:
+    """Another py4j gateway object for the same JVM: a stage expression
+    cache keyed on the gateway treats it as a restarted JVM."""
+
+    def __init__(self, gateway):
+        self.gateway = gateway
+
+    def __getattr__(self, name):
+        return getattr(self.gateway, name)
+
+
+def test_stage_build_budget(pipeline_out, monkeypatch):
+    """Constant stage expressions are built once per JVM
+    (``functions.memo.per_jvm``). Building s3, s9 and s11 over one s5
+    read, each materialized stage with its accounting observation, makes
+    at most a quarter of the py4j round trips the second time. The first
+    build runs under a stand-in gateway, so it rebuilds every entry
+    whatever earlier tests cached. A changed ``max_perplexity`` or
+    ``QualityThresholds`` gets its own entry, and a new gateway rebuilds
+    an entry."""
+    import dataclasses
+
+    import py4j.java_gateway as jg
+    from pyspark import SparkContext
+
+    from exome_qc_library_spark.operators import hard_filters, perplexity
+    from exome_qc_library_spark.plans.pipeline import _attach_accounting_observation
+
+    pipe = pipeline_out["pipe"]
+    stages = {st.name: st for st in pipe.stages}
+    s5 = pipe.store.read("s5_near_dedup")
+    calls = [0]
+    call = jg.JavaMember.__call__
+
+    def counted(self, *args):
+        calls[0] += 1
+        return call(self, *args)
+
+    def build() -> int:
+        before = calls[0]
+        s9 = stages["s9_scoring"].fn(stages["s3_hard_filters"].fn(s5))
+        _attach_accounting_observation(s9, stages["s9_scoring"].account_flags)
+        s11 = stages["s11_verdict"].fn(s9)
+        _attach_accounting_observation(s11, stages["s11_verdict"].account_flags)
+        return calls[0] - before
+
+    real = SparkContext._gateway
+    monkeypatch.setattr(SparkContext, "_gateway", _StandInGateway(real))
+    monkeypatch.setattr(jg.JavaMember, "__call__", counted)
+    cold = build()
+    warm = build()
+    assert warm <= 0.25 * cold, (cold, warm)
+
+    flags = perplexity._perplexity_flags
+    assert flags(5000.0, "final_failing_qc") is flags(5000.0, "final_failing_qc")
+    loose, strict = flags(5000.0, "final_failing_qc"), flags(1500.0, "final_failing_qc")
+    assert str(loose[0]) != str(strict[0])
+    rules = hard_filters._quality_flags
+    final = hard_filters.FINAL
+    stricter = dataclasses.replace(final, min_word_count=final.min_word_count + 1)
+    assert rules("final_failing_qc", final) is rules("final_failing_qc", final)
+    assert str(rules("final_failing_qc", stricter)[0]) != str(rules("final_failing_qc", final)[0])
+
+    monkeypatch.setattr(SparkContext, "_gateway", _StandInGateway(real))
+    assert flags(5000.0, "final_failing_qc") is not loose
+
+
+def test_lazy_stages_name_the_stage_they_fuse_into(pipeline_out):
+    """A lazy stage's result and report entry name the next materialized
+    stage, whose telemetry window holds its Spark work."""
+    want = {
+        "s3_hard_filters": "s9_scoring",
+        "s4_exact_dedup": "s9_scoring",
+        "s6_iterative_outliers": "s11_verdict",
+        "s10_segment_qc": "s11_verdict",
+        "s8_host_qc": "s11_verdict",
+    }
+    got = {r.name: r.fused_into for r in pipeline_out["cold_results"]}
+    assert got == {st.name: want.get(st.name) for st in pipeline_out["pipe"].stages}
+    stages = pipeline_out["pipe"].report()["stages"]
+    assert {s["name"]: s["fused_into"] for s in stages} == got
+
+
 def test_observation_accounting_matches_scan_and_falls_back(spark, pages):
     # round-5: per-stage flag accounting rides the checkpoint-write job as
     # observed metrics when the column carries a flag_vocab (no second

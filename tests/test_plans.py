@@ -229,14 +229,23 @@ def test_media_dims_registry_legs(spark, sf):
         ("strip_boilerplate", 3, 3, 2),
         ("host_cap", 2, 2, 1),
         ("compact_roundtrip", 1, 0, 0),
+        # customers with no orders: the orders key side is broadcast, and
+        # nothing shuffles
+        ("anti_join", 2, 0, 1),
+        # the filtered customer side is broadcast; one exchange for the
+        # per-status count
+        ("semi_join", 2, 1, 1),
+        # one documents scan against the broadcast in-memory bands table;
+        # one exchange for the per-band count
+        ("interval_join", 1, 1, 1),
     ],
 )
 def test_line_and_gram_registry_plan_legs(spark, sf, name, scans, exchanges, broadcasts):
-    """The registry queries that join on a gram, a line or a kept-id set,
-    and ``compact_roundtrip``, which goes through ``CheckpointStore``'s
-    write, compact, vacuum and read: parquet scans, shuffle exchanges and
-    broadcast exchanges of the planned query. A new shuffle or a lost
-    broadcast moves a count."""
+    """The registry queries that join on a gram, a line, a key or an
+    interval, and ``compact_roundtrip``, which goes through
+    ``CheckpointStore``'s write, compact, vacuum and read: parquet scans,
+    shuffle exchanges and broadcast exchanges of the planned query. A new
+    shuffle or a lost broadcast moves a count."""
     plan = _plan(q(name, spark, os.path.join(os.path.dirname(SF), sf)))
     got = (
         plan.count("FileScan parquet"),
