@@ -839,28 +839,47 @@ FROM fl
 
 
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K4/J6 MinHash-LSH candidate pairs, ORACLE-CHECKED: same banding /
-    bucket-cap / pairing code path as production ``flag_near_duplicates``,
-    with the SQL-reproducible polynomial base hash (``arithmetic=True``)
-    so DuckDB mirrors every signature slot verbatim. The xxhash64+numpy
-    production kernel is pinned against exact Jaccard in tests/test_dedup.
-    """
-    from .operators.dedup import minhash_candidate_pairs
+    """K4/J6 MinHash-LSH candidate pairs, ORACLE-CHECKED: production's
+    :func:`~.operators.dedup.sketch_pairs` over a polynomial-hash sketch
+    (:func:`_poly_minhash_sketch`), so DuckDB mirrors every signature slot
+    verbatim. The mirror keys buckets on the band slice instead of its
+    xxhash64: equal slice ⇔ equal key, so the pairs are the same."""
+    from .operators.dedup import sketch_pairs
 
-    docs = _t(spark, sf_dir, "documents")
-    return minhash_candidate_pairs(
-        docs, key_col="doc_id", num_perm=_MH_ORACLE_PERM, bands=_MH_ORACLE_BANDS,
-        arithmetic=True,
-    ).select("a", "b", F.round("jaccard_est", 6).alias("jaccard_est"))
+    sk = _poly_minhash_sketch(_t(spark, sf_dir, "documents"), "doc_id", _MH_ORACLE_PERM)
+    pairs = sketch_pairs(sk, num_perm=_MH_ORACLE_PERM, bands=_MH_ORACLE_BANDS)
+    return pairs.select("a", "b", F.round("jaccard_est", 6).alias("jaccard_est"))
+
+
+def _poly_minhash_sketch(docs: DataFrame, key_col: str, num_perm: int) -> DataFrame:
+    """The sketch table ``(k, sig)`` from the polynomial base hash and the
+    expression-only signature, which DuckDB both reproduce; eager barriers."""
+    from .functions.hashing import minhash_signature, poly_shingle_hashes
+
+    # barrier BEFORE the num_perm-way signature fan-out: interpreted HOFs
+    # get no common-subexpression elimination, so the shingle fold would
+    # re-run num_perm times per row (measured 62s → ~3s at 500 docs)
+    hs = (
+        docs.filter(F.col("text").isNotNull() & (F.length("text") > 0))
+        .select(
+            F.col(key_col).alias("k"),
+            poly_shingle_hashes(word_shingles(F.col("text"))).alias("hs"),
+        )
+        .localCheckpoint()
+    )
+    # shingle-less docs yield an array of NULL slots here
+    sig = minhash_signature(F.col("hs"), num_perm).alias("sig")
+    return hs.select("k", sig).filter(F.col("sig")[0].isNotNull()).localCheckpoint()
 
 
 _MH_ORACLE_PERM, _MH_ORACLE_BANDS = 32, 8
 
 
 def _minhash_sql() -> str:
-    """DuckDB mirror of the arithmetic MinHash-LSH pipeline over word
-    3-shingles with buckets capped at 200 keys, generated from the SAME
-    permutation constants (``_mh_params``) the Spark side uses."""
+    """DuckDB mirror of :func:`q_minhash_pairs` over word 3-shingles, its
+    buckets keyed on the comma-joined band slice and capped at 200 keys,
+    generated from the SAME permutation constants (``_mh_params``) the
+    Spark side uses."""
     from .functions.hashing import _MH_PRIME, _mh_params, POLY_BASE, POLY_MOD
 
     num_perm, bands, shingle_n, max_bucket = _MH_ORACLE_PERM, _MH_ORACLE_BANDS, 3, 200

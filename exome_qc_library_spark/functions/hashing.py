@@ -85,29 +85,28 @@ def minhash_signature(base_hashes: Column, num_perm: int = 64) -> Column:
     )
 
 
-def lsh_band_keys(
-    signature: Column, bands: int, rows_per_band: int, as_csv: bool = False
-) -> Column:
+def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
     """Band the signature: array of (band_id, bucket-key) structs.
 
     Two docs sharing ANY band key are candidate pairs — the classic
     MinHash-LSH banding scheme; ``bands × rows_per_band`` must equal the
-    signature length. Default bucket key is xxhash64 of the band slice
-    (8-byte shuffle key — the scale path); ``as_csv=True`` keeps the raw
-    comma-joined slice as the key, which DuckDB reproduces verbatim (the
-    oracle path — slightly wider keys, identical pair semantics).
+    signature length. The bucket key is xxhash64 of the comma-joined band
+    slice (an 8-byte shuffle key). The ``minhash_pairs`` oracle keys its
+    buckets on the comma-joined slice itself: barring a 64-bit hash
+    collision, equal slice ⇔ equal key, so its buckets and pairs are the
+    same.
 
     Bands whose slice runs past the signature end are DROPPED per row
     (round-6 review): an out-of-range slice yields an empty join key
     shared by every document, which would silently co-bucket the whole
     corpus in that band — an O(n²) cross product at scale. Misconfigured
     direct callers now just lose the uncovered bands' recall;
-    ``minhash_candidate_pairs`` rejects such configs outright.
+    ``sketch_pairs`` rejects such configs outright.
     """
 
     def bucket(b: int) -> Column:
-        joined = F.concat_ws(",", F.slice(signature, b * rows_per_band + 1, rows_per_band))
-        return joined if as_csv else F.xxhash64(joined)
+        band_slice = F.slice(signature, b * rows_per_band + 1, rows_per_band)
+        return F.xxhash64(F.concat_ws(",", band_slice))
 
     keys = F.array(
         *[

@@ -20,7 +20,9 @@ Scale design (10^12 docs):
   exactly the reference's to_pandas→networkx boundary
   (``shared/samples_qc.py:805-808``), bounded by #pairs not #docs; an
   iterative DataFrame connected-components is provided for the case
-  where pairs do not fit on the driver.
+  where pairs do not fit on the driver;
+* near-dup flagging is sketch → pairs → cluster table → one left join,
+  so the input is scanned once.
 """
 
 from __future__ import annotations
@@ -32,12 +34,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.flags import add_flags, apply_flags, flag_update
+from ..functions.flags import apply_flags, flag_update
 from ..functions.memo import per_jvm
 from ..functions.hashing import (
     exact_content_hash,
     lsh_band_keys,
-    minhash_signature,
     shingle_hashes,
     word_shingles,
 )
@@ -95,6 +96,9 @@ def _exact_dup_exprs():
 
 
 # ----------------------------------------------------------- MinHash LSH
+
+# signature slots of the production sketch
+NUM_PERM = 64
 
 
 @per_jvm
@@ -184,13 +188,12 @@ def _minhash_sig_batch(vals, a, b, chunk_hashes: int) -> list:
     return out
 
 
-def minhash_sketch(df: DataFrame, key_col: str = "url", num_perm: int = 64) -> DataFrame:
-    """The MinHash sketch table ``(k, sig)``: word 3-shingles of ``text`` →
-    xxhash64 base hashes → vectorized signature UDF, one row per doc with
-    at least one shingle (NULL, empty and ASCII-whitespace-only text is
-    dropped). The one sketch definition, called by s5's
-    :func:`minhash_candidate_pairs`. No materialization barrier here — the
-    caller owns it.
+def minhash_sketch(df: DataFrame) -> DataFrame:
+    """The MinHash sketch table ``(k, sig)`` of ``url``: word 3-shingles of
+    ``text`` → xxhash64 base hashes → vectorized signature UDF, one row per
+    doc with at least one shingle (NULL, empty and ASCII-whitespace-only
+    text is dropped); s5 builds it from :func:`_sketch_exprs` plus
+    ``warc_ts``. No materialization barrier here — the caller owns it.
 
     The filter runs BEFORE the UDF, on the text: ``words_expr`` splits on
     Java ``\\s+``, so a doc has a shingle iff its text has a non-``\\s``
@@ -204,85 +207,53 @@ def minhash_sketch(df: DataFrame, key_col: str = "url", num_perm: int = 64) -> D
     key through Python both ways; an array<int> downcast of the hashes
     also LOST (the element-wise cast pass costs more than the bytes it
     saves). A/B in BENCH.md round 5."""
-    has_shingle, k, sig = _sketch_exprs(key_col, num_perm)
+    has_shingle, k, sig = _sketch_exprs()
     return df.filter(has_shingle).select(k, sig)
 
 
 @per_jvm
-def _sketch_exprs(key_col: str, num_perm: int):
-    """:func:`minhash_sketch`'s filter and its two output columns."""
-    sig = _minhash_sig_udf(num_perm)(shingle_hashes(word_shingles(F.col("text"))))
-    return F.col("text").rlike(r"\S"), F.col(key_col).alias("k"), sig.alias("sig")
+def _sketch_exprs():
+    """The sketch's filter and its ``k`` and ``sig`` columns."""
+    sig = _minhash_sig_udf(NUM_PERM)(shingle_hashes(word_shingles(F.col("text"))))
+    return F.col("text").rlike(r"\S"), F.col("url").alias("k"), sig.alias("sig")
 
 
-def minhash_candidate_pairs(
-    df: DataFrame,
-    key_col: str = "url",
-    num_perm: int = 64,
-    bands: int = 16,
-    max_bucket: int = 200,
-    arithmetic: bool = False,
+def minhash_candidate_pairs(df: DataFrame) -> DataFrame:
+    """Candidate near-dup pairs ``(a, b, jaccard_est)`` of ``df``'s urls:
+    :func:`minhash_sketch` behind one eager barrier, split into
+    :func:`sketch_pairs`."""
+    return sketch_pairs(minhash_sketch(df).localCheckpoint())
+
+
+def sketch_pairs(
+    sk: DataFrame, num_perm: int = NUM_PERM, bands: int = 16, max_bucket: int = 200
 ) -> DataFrame:
-    """Candidate near-dup pairs via banded MinHash over word 3-shingles of
-    ``text``.
+    """Candidate near-dup pairs of a sketch table ``(k, sig)`` by banded
+    MinHash: band keys, buckets capped at their ``max_bucket`` smallest
+    keys, pairs within a bucket, and the estimated Jaccard similarity.
 
     Returns (a, b, jaccard_est) with a < b, deduplicated across bands.
     ``jaccard_est`` = fraction of matching signature slots.
 
-    ``arithmetic=True`` switches the base hash from xxhash64 (+ vectorized
-    numpy signature UDF) to the SQL-reproducible polynomial primitive with
-    an expression-only signature and raw-csv band keys — same banding,
-    capping and pairing code path, but every number is mirrorable verbatim
-    in the DuckDB oracle (VERDICT.md round-1 next-step #3). Production
-    keeps the default: xxhash64 mixes better and the numpy kernel is ~100×
-    the interpreted HOF path on long docs.
+    ``sk`` must be materialized (an eager ``localCheckpoint``, as both
+    callers do): it is read three times (banding + the two signature
+    join-backs), and WITHOUT the barrier Catalyst's CollapseProject would
+    inline the signature into every consumer — multiplicative recompute
+    on long docs. EAGER: AQE runs the banding and both join-back shuffles
+    as concurrent jobs, and each would compute a lazy barrier.
+    localCheckpoint == the reference's checkpoint-after-expensive-step (a
+    parquet snapshot of the sketch table at cluster scale).
     """
     if num_perm % bands != 0:
         # banding covers bands·rows_per_band slots; a remainder would mean
         # computed-but-never-banded permutations silently degrading recall
         # while jaccard_est still divides by num_perm (round-6 review)
         raise ValueError(f"num_perm ({num_perm}) must be divisible by bands ({bands})")
-    rows_per_band = num_perm // bands
-    # ONE materialization barrier: the sketch table is reused three times
-    # (banding + the two signature join-backs); WITHOUT the barrier
-    # Catalyst's CollapseProject would inline the signature into every
-    # consumer — multiplicative recompute on long docs. EAGER: AQE runs the
-    # banding and both join-back shuffles as concurrent jobs, and each would
-    # compute a lazy barrier. The shingle-hash array needs no barrier of its
-    # own: the signature UDF consumes it exactly once. localCheckpoint ==
-    # the reference's checkpoint-after-expensive-step (a parquet snapshot of
-    # the sketch table at cluster scale).
-    if arithmetic:
-        from ..functions.hashing import poly_shingle_hashes
-
-        # materialize the base-hash array BEFORE the num_perm-way signature
-        # fan-out: each of the num_perm array_min branches references the
-        # same subtree, and interpreted HOFs get no common-subexpression
-        # elimination — without the barrier the shingle fold re-runs
-        # num_perm times per row (measured 62s → ~3s at 500 docs); eager
-        # for the same concurrent-job reason as the sketch barrier below
-        hs = (
-            df.filter(F.col("text").isNotNull() & (F.length("text") > 0))
-            .select(
-                F.col(key_col).alias("k"),
-                poly_shingle_hashes(word_shingles(F.col("text"))).alias("hs"),
-            )
-            .localCheckpoint()
-        )
-        # shingle-less docs yield an array of NULL slots here
-        sk = hs.select("k", minhash_signature(F.col("hs"), num_perm).alias("sig")).filter(
-            F.col("sig")[0].isNotNull()
-        )
-    else:
-        sk = minhash_sketch(df, key_col, num_perm)
-    sk = sk.localCheckpoint()
     # Band on the KEY only — the 8·num_perm-byte signature must not ride
     # through the bands-way exploded shuffle (at 50k docs that is ~450 MB of
     # shuffle for 26 MB of signatures; at 10^12 docs it is the bottleneck).
     # Signatures are joined back for the (rare) candidate pairs instead.
-    band_key, bucket_members, pair, jaccard = _lsh_exprs(
-        bands, rows_per_band, max_bucket, arithmetic
-    )
+    band_key, bucket_members, pair, jaccard = _lsh_exprs(bands, num_perm // bands, max_bucket)
     banded = sk.select("k", band_key).select(
         "k", F.col("bk.band").alias("band"), F.col("bk.bucket").alias("bucket")
     )
@@ -298,23 +269,20 @@ def minhash_candidate_pairs(
     )
     siga = sk.select(F.col("k").alias("a"), F.col("sig").alias("siga"))
     sigb = sk.select(F.col("k").alias("b"), F.col("sig").alias("sigb"))
-    pairs = (
+    return (
         cand.join(siga, "a")
         .join(sigb, "b")
         .withColumn("jaccard_est", jaccard)
         .drop("siga", "sigb")
     )
-    return pairs
 
 
 @per_jvm
-def _lsh_exprs(bands: int, rows_per_band: int, max_bucket: int, arithmetic: bool):
-    """:func:`minhash_candidate_pairs`' constant Columns: a doc's band keys
+def _lsh_exprs(bands: int, rows_per_band: int, max_bucket: int):
+    """:func:`sketch_pairs`' constant Columns: a doc's band keys
     (exploded), a bucket's capped sorted members, a bucket's pairs
     (exploded) and a pair's estimated Jaccard similarity."""
-    band_key = F.explode(
-        lsh_band_keys(F.col("sig"), bands, rows_per_band, as_csv=arithmetic)
-    ).alias("bk")
+    band_key = F.explode(lsh_band_keys(F.col("sig"), bands, rows_per_band)).alias("bk")
     bucket_members = F.slice(F.array_sort(F.collect_list("k")), 1, max_bucket).alias("ks")
     pair = F.explode(
         F.filter(
@@ -415,10 +383,11 @@ NEAR_DUP_THRESHOLD = 0.8
 
 
 def flag_near_duplicates(df: DataFrame, max_driver_pairs: int = 5_000_000) -> DataFrame:
-    """Full near-dup stage: banded MinHash-LSH pairs over ``text`` →
-    ``NEAR_DUP_THRESHOLD`` → components → representative per cluster →
-    ``near_duplicate`` flags in ``final_failing_qc``, ``dup_cluster_id``
-    annotation. Row count preserved.
+    """Full near-dup stage in one line: MinHash sketch of ``text`` →
+    :func:`sketch_pairs` at ``NEAR_DUP_THRESHOLD`` → cluster table
+    ``(url, dup_cluster_id, __rep)`` → one left join onto ``df`` that flags
+    ``near_duplicate`` in ``final_failing_qc``. Row count preserved;
+    ``dup_cluster_id`` (NULL when unclustered) is always the first column.
 
     The clustering path is SIZE-GATED, never chosen by the caller
     (round-4 VERDICT #1): the thresholded pair set is localCheckpoint'd
@@ -427,12 +396,14 @@ def flag_near_duplicates(df: DataFrame, max_driver_pairs: int = 5_000_000) -> Da
     fits ``max_driver_pairs``; above it the distributed min-label
     propagation (:func:`connected_components_df`) runs instead. The bound
     mirrors the reference's own driver-boundary cap on its
-    to_pandas→networkx step (``shared/samples_qc.py:805-808``).
+    to_pandas→networkx step (``shared/samples_qc.py:805-808``). Both paths
+    give the same ``(url, dup_cluster_id)`` table.
 
     The representative of a cluster is its smallest ``(warc_ts, url)``
     (the reference's preferring independent set,
-    ``shared/samples_qc.py:691-713``): earliest crawl wins, and a NULL
-    ``warc_ts`` never does.
+    ``shared/samples_qc.py:691-713``): earliest crawl wins, a NULL
+    ``warc_ts`` never does, a tie goes to the smallest url. It is elected
+    from the cluster table and the sketch, so ``df`` is scanned once.
     Keeping exactly one representative per connected component guarantees
     the kept set induces an edgeless subgraph (every above-threshold pair
     lies within one component — the reference's nx-independent-set sanity
@@ -447,62 +418,57 @@ def flag_near_duplicates(df: DataFrame, max_driver_pairs: int = 5_000_000) -> Da
                 f"input already carries reserved column {reserved!r}; "
                 "drop or rename it before re-running near-dup flagging"
             )
-    pairs = minhash_candidate_pairs(df).filter(F.col("jaccard_est") >= NEAR_DUP_THRESHOLD)
+    has_shingle, k, sig = _sketch_exprs()
+    sk = df.filter(has_shingle).select(k, F.col("warc_ts").alias("ts"), sig).localCheckpoint()
+    pairs = sketch_pairs(sk).filter(F.col("jaccard_est") >= NEAR_DUP_THRESHOLD)
     # materialize once so the gate count and the chosen CC path share the
-    # LSH work instead of recomputing the sketch pipeline twice
+    # LSH work instead of recomputing it
     pairs = pairs.localCheckpoint()
     on_driver = pairs.count() <= max_driver_pairs
     if on_driver:
         mapping = connected_components_driver(pairs)
-        if not mapping:
-            return add_flags(
-                df.withColumn("dup_cluster_id", F.lit(None).cast("string")),
-                "final_failing_qc",
-                {"near_duplicate": F.lit(False)},
-            )
-        spark = df.sparkSession
         # pandas + Arrow ship the mapping in columnar batches — the
         # list-of-tuples path pickles row-by-row and is a measurable
         # DRIVER-SERIAL cost at web-scale pair counts (Amdahl: serial
         # driver work is what caps the N→4N scaling efficiency)
-        cdf = spark.createDataFrame(
-            pd.DataFrame({"url": list(mapping.keys()), "dup_cluster_id": list(mapping.values())}),
+        clusters = df.sparkSession.createDataFrame(
+            pd.DataFrame(
+                {"url": list(mapping), "dup_cluster_id": list(mapping.values())}, dtype=object
+            ),
             schema="url string, dup_cluster_id string",
         )
     else:
-        cdf = connected_components_df(pairs).withColumnsRenamed(
-            {"k": "url", "dup_cluster_id": "dup_cluster_id"}
-        )
-    # broadcast ONLY on the driver path (the mapping already fit in driver
-    # memory, so it broadcasts by construction); the distributed-CC path
-    # exists precisely because the cluster mapping may NOT fit — there the
-    # join is left to AQE, which shuffles or broadcasts on actual size
-    maybe_bcast = F.broadcast if on_driver else (lambda d: d)
-    out = df.join(maybe_bcast(cdf), "url", "left")
-    # representative = (warc_ts, url) min per cluster, computed on the
-    # TINY clustered subset and joined back — NOT a window over the full
-    # table (a window with NULL cluster for 99% of rows funnels the whole
-    # table into one straggler partition). NULL order values sort LAST
-    # (the is-null flag precedes the order column in the struct): bare
-    # struct ordering would put NULL first, letting e.g. a timestamp-less
-    # copy beat every dated crawl
+        clusters = connected_components_df(pairs).withColumnRenamed("k", "url")
+    # representative = (warc_ts, url) min per cluster, over the clustered
+    # docs only — NOT a window over the full table (a window with NULL
+    # cluster for 99% of rows funnels the whole table into one straggler
+    # partition)
     rep, update = _near_dup_exprs()
     reps = (
-        out.filter(F.col("dup_cluster_id").isNotNull())
+        clusters.join(sk.select(F.col("k").alias("url"), "ts"), "url")
         .groupBy("dup_cluster_id")
         .agg(rep)
         .select("dup_cluster_id", F.col("w")["url"].alias("__rep"))
     )
-    out = out.join(maybe_bcast(reps), "dup_cluster_id", "left")
+    clusters = clusters.join(reps, "dup_cluster_id")
+    # broadcast ONLY on the driver path (the mapping already fit in driver
+    # memory, so it broadcasts by construction); the distributed-CC path
+    # exists precisely because the cluster mapping may NOT fit — there the
+    # join is left to AQE, which shuffles or broadcasts on actual size
+    out = df.join(F.broadcast(clusters) if on_driver else clusters, "url", "left")
+    out = out.select("dup_cluster_id", *[c for c in out.columns if c != "dup_cluster_id"])
     return apply_flags(out, "final_failing_qc", update).drop("__rep")
 
 
 @per_jvm
 def _near_dup_exprs():
     """:func:`flag_near_duplicates`' constant Columns: the per-cluster
-    representative aggregate and the ``near_duplicate`` flag update."""
-    order = F.col("warc_ts")
-    rep = F.min(F.struct(order.isNull().alias("pn0"), order.alias("p0"), F.col("url"))).alias("w")
+    representative aggregate and the ``near_duplicate`` flag update. NULL
+    ``ts`` sorts LAST (the is-null flag precedes it in the struct): bare
+    struct ordering would put NULL first, letting a timestamp-less copy
+    beat every dated crawl."""
+    ts = F.col("ts")
+    rep = F.min(F.struct(ts.isNull().alias("pn0"), ts.alias("p0"), F.col("url"))).alias("w")
     is_dup = F.col("dup_cluster_id").isNotNull() & (F.col("url") != F.col("__rep"))
     return rep, flag_update("final_failing_qc", {"near_duplicate": is_dup})
 

@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 from .. import telemetry
 from ..functions.flags import flag_count_df, flag_vocab
 from ..functions.memo import per_jvm
-from ..sources.checkpoint import CheckpointStore
+from ..sources.checkpoint import CheckpointStore, core_wide
 
 # What Pipeline.report breaks keep-rates down by and which metric
 # quantiles it reports; columns the terminal table lacks are skipped.
@@ -165,9 +165,11 @@ class Pipeline:
         (or the end) whose checkpoint exists is read with
         :meth:`CheckpointStore.read`, the stages before it neither run nor
         read, and every stage after it runs (``df`` feeds the first stage
-        only when no checkpoint qualifies). ``from_stage`` is the one way to
-        force a recompute: checkpoints at/after it are STALE and rebuilt
-        (the reference's "rerun from step N" knob). A stage at or before
+        only when no checkpoint qualifies, at core width like a checkpoint
+        read: :func:`~exome_qc_library_spark.sources.checkpoint.core_wide`).
+        ``from_stage`` is the one way to force a recompute: checkpoints
+        at/after it are STALE and rebuilt (the reference's "rerun from
+        step N" knob). A stage at or before
         the resume point gets ``resumed=True``, its manifest's ``rows`` and
         telemetry showing no job.
 
@@ -209,7 +211,7 @@ class Pipeline:
             if i == start:
                 df = self.store.read(st.name)
             elif not resumed:
-                out = st.fn(df)
+                out = st.fn(core_wide(df) if i == 0 else df)
                 if st.materialize:
                     acct_cols = tuple(ac for ac in st.account_flags if ac in out.columns)
                     if acct_cols:

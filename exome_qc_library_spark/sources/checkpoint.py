@@ -43,7 +43,9 @@ from .readers import spread_scan
 MANIFEST_NAME = "_manifest.json"
 
 
-def _core_wide(df: DataFrame) -> DataFrame:
+def core_wide(df: DataFrame) -> DataFrame:
+    """Every stage input at core width (the runner's first input and each
+    checkpoint read); :meth:`CheckpointStore.read` says how."""
     return spread_scan(df, "url") if "url" in df.columns else df
 
 
@@ -91,7 +93,7 @@ class CheckpointStore:
         """The stage's snapshot at core width: the store owns scan width, so
         one written as fewer files than cores is hash-spread on ``url`` (the
         record key every stage keeps; a table without it comes back as read)."""
-        return _core_wide(self.read_as_written(stage))
+        return core_wide(self.read_as_written(stage))
 
     def read_as_written(self, stage: str) -> DataFrame:
         """The stage's committed snapshot in its written layout, for a
@@ -141,7 +143,7 @@ class CheckpointStore:
         if metrics is not None:
             manifest["metrics"] = metrics(out)
         _commit_manifest(path, manifest)
-        return _core_wide(out)
+        return core_wide(out)
 
     def compact(
         self, stage: str, target_file_bytes: int = 128 * 1024 * 1024

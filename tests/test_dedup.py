@@ -8,7 +8,9 @@ independent-set preference (earliest wins)."""
 import datetime
 
 import pyspark.sql.functions as F
+import pytest
 
+from exome_qc_library_spark.functions.flags import flag_vocab
 from exome_qc_library_spark.functions.hashing import word_shingles
 from exome_qc_library_spark.operators.dedup import (
     NEAR_DUP_THRESHOLD,
@@ -17,6 +19,8 @@ from exome_qc_library_spark.operators.dedup import (
     flag_exact_duplicates,
     flag_near_duplicates,
     minhash_candidate_pairs,
+    minhash_sketch,
+    sketch_pairs,
 )
 
 
@@ -101,23 +105,26 @@ def test_minhash_degenerate_bucket_capped(spark):
         [(f"u{i:03d}", "the same page body repeated verbatim") for i in range(m)],
         "url string, text string",
     )
-    pairs = minhash_candidate_pairs(df, max_bucket=cap).collect()
+    pairs = sketch_pairs(minhash_sketch(df).localCheckpoint(), max_bucket=cap).collect()
     assert len(pairs) == cap * (cap - 1) // 2  # C(cap,2), not C(m,2)
     kept = {r["a"] for r in pairs} | {r["b"] for r in pairs}
     assert kept == {f"u{i:03d}" for i in range(cap)}  # deterministic (sorted) subset
 
 
 def test_arithmetic_minhash_agrees_with_production(spark):
-    # the oracle-checked arithmetic mode shares the banding/pairing code
-    # path with the xxhash64+numpy production mode — both must surface the
-    # planted exact pair with jaccard_est 1.0 and agree on the near pair
+    # the registry's oracle-checked polynomial sketch goes through the same
+    # pair builder as the xxhash64+numpy production sketch — both must
+    # surface the planted exact pair with jaccard_est 1.0 and agree on the
+    # near pair
+    from exome_qc_library_spark.entry_queries import _poly_minhash_sketch
+
     prod = {
         (r["a"], r["b"]): r["jaccard_est"]
         for r in minhash_candidate_pairs(_docs(spark)).collect()
     }
     arith = {
         (r["a"], r["b"]): r["jaccard_est"]
-        for r in minhash_candidate_pairs(_docs(spark), arithmetic=True).collect()
+        for r in sketch_pairs(_poly_minhash_sketch(_docs(spark), "url", 64)).collect()
     }
     assert prod[("u1", "u2")] == 1.0 and arith[("u1", "u2")] == 1.0
     assert any("u3" in p for p in prod) and any("u3" in p for p in arith)
@@ -165,6 +172,25 @@ def test_flag_near_duplicates_earliest_representative(spark):
     assert flags["u1"] == ["near_duplicate"] and flags["u2"] == ["near_duplicate"]
     assert flags["u4"] == [] and flags["u5"] == []
     assert out.count() == 5
+    assert out.columns[0] == "dup_cluster_id"
+
+
+@pytest.mark.parametrize("n_docs", [2, 0])
+def test_near_dup_output_shape_without_pairs(spark, n_docs):
+    """A table with no near-dup pair, or no row at all, has the shape of
+    one with pairs: ``dup_cluster_id`` first and NULL, no
+    ``near_duplicate`` tag, and ``near_duplicate`` in the flag vocabulary."""
+    rows = [
+        ("u1", _ts(1), "the quick brown fox jumps over the lazy dog"),
+        ("u2", _ts(2), "completely different content about spark query engines"),
+    ][:n_docs]
+    df = spark.createDataFrame(rows, "url string, warc_ts timestamp, text string")
+    out = flag_near_duplicates(df)
+    assert out.columns == ["dup_cluster_id", "url", "warc_ts", "text", "final_failing_qc"]
+    assert [(r["dup_cluster_id"], r["final_failing_qc"]) for r in out.collect()] == [
+        (None, [])
+    ] * n_docs
+    assert "near_duplicate" in flag_vocab(out, "final_failing_qc")
 
 
 def test_kept_set_is_edgeless(spark):
@@ -187,8 +213,6 @@ def test_kept_set_is_edgeless(spark):
 
 
 def test_connected_components_df_raises_when_unconverged(spark):
-    import pytest
-
     # a 5-hop chain cannot converge in 2 min-label rounds
     chain = spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(5)], "a string, b string"
@@ -199,17 +223,20 @@ def test_connected_components_df_raises_when_unconverged(spark):
 
 def test_distributed_cc_path_matches_driver_path(spark):
     # max_driver_pairs=0 forces the does-not-fit-on-driver scale path (no
-    # forced broadcast); it must produce identical flags and cluster
-    # membership
+    # forced broadcast); it must produce identical flags and cluster ids
     a = {
-        r["url"]: (r["final_failing_qc"], r["dup_cluster_id"] is not None)
+        r["url"]: (r["final_failing_qc"], r["dup_cluster_id"])
         for r in flag_near_duplicates(_docs(spark)).collect()
     }
     b = {
-        r["url"]: (r["final_failing_qc"], r["dup_cluster_id"] is not None)
+        r["url"]: (r["final_failing_qc"], r["dup_cluster_id"])
         for r in flag_near_duplicates(_docs(spark), max_driver_pairs=0).collect()
     }
     assert a == b
+    # the cluster id is the cluster's smallest url
+    assert {u: c for u, (_f, c) in a.items()} == {
+        "u1": "u1", "u2": "u1", "u3": "u1", "u4": None, "u5": None
+    }
 
 
 def test_near_dup_size_gate_auto_selects_path(spark, monkeypatch):
@@ -283,8 +310,6 @@ def test_cross_doc_dup_line_flagging(spark):
 
 
 def test_exact_jaccard_unblocked_requires_opt_in(spark):
-    import pytest
-
     with pytest.raises(ValueError, match="block_col"):
         jaccard_pairs_exact(_docs(spark), "url", "text")
 
@@ -431,25 +456,34 @@ def test_exact_dedup_null_order_col_never_wins(spark):
 
 
 def test_near_dup_null_prefer_value_never_wins(spark):
-    """Same NULLS-LAST rule for the cluster-representative election."""
+    """Same NULLS-LAST rule for the cluster-representative election; a
+    cluster whose ``warc_ts`` are all NULL, or tied, elects its smallest
+    url."""
     import datetime
 
-    body = " ".join(f"word{i}" for i in range(60)) + " "
+    def body(w):
+        return " ".join(f"{w}{i}" for i in range(60)) + " "
+
+    t = datetime.datetime(2024, 1, 5)
     rows = [
-        ("u1", body, None),
-        ("u2", body + "extra tail words", datetime.datetime(2024, 1, 5)),
+        ("u1", body("word"), None),
+        ("u2", body("word") + "extra tail words", t),  # dated copy u2 is the rep
+        ("v2", body("alpha"), None),  # all NULL: smallest url v1 is the rep
+        ("v1", body("alpha") + "extra tail words", None),
+        ("w2", body("beta"), t),  # tied: smallest url w1 is the rep
+        ("w1", body("beta") + "extra tail words", t),
     ]
     df = spark.createDataFrame(rows, "url string, text string, warc_ts timestamp")
     out = flag_near_duplicates(df)
     dup = {r["url"]: "near_duplicate" in r["final_failing_qc"] for r in out.collect()}
-    assert dup == {"u1": True, "u2": False}  # dated copy is the rep
+    assert dup == {
+        "u1": True, "u2": False, "v1": False, "v2": True, "w1": False, "w2": True
+    }
 
 
 def test_near_dup_reserved_column_guard(spark):
     """Round-6 review: re-running on an already-annotated table must fail
     fast with a clear error, not AMBIGUOUS_REFERENCE mid-plan."""
-    import pytest
-
     df = spark.createDataFrame(
         [("u1", "text", "c0")], "url string, text string, dup_cluster_id string"
     )
@@ -460,11 +494,9 @@ def test_near_dup_reserved_column_guard(spark):
 def test_pair_generator_parameter_guards(spark):
     """num_perm must divide into bands — a remainder would compute
     permutations no band ever uses, so it must raise."""
-    import pytest
-
-    df = spark.createDataFrame([("u1", "some text")], "url string, text string")
+    sk = spark.createDataFrame([("u1", [1] * 64)], "k string, sig array<long>")
     with pytest.raises(ValueError, match="divisible"):
-        minhash_candidate_pairs(df, num_perm=64, bands=10)
+        sketch_pairs(sk, num_perm=64, bands=10)
 
 
 def test_lsh_band_keys_drops_underfilled_bands(spark):

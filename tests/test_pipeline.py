@@ -150,13 +150,16 @@ def test_cold_run_job_budget(pipeline_out):
     of the fixture's cold run (300 docs):
 
     - s0 (1): the snapshot write. Reads carry a known schema, so no
-      footer-inference job follows a write.
+      footer-inference job follows a write. The fixture is an in-memory
+      table, not a file scan, so the runner's core-width rule leaves it as
+      is; a one-file input adds the spread's query stage (2).
     - s5 (≤ 16): the sketch and pairs barriers (a ``localCheckpoint`` each,
       plus their AQE query stages), the gate ``count``, ``toPandas`` of
-      the pairs (1) and the write's AQE query stages. An upper bound: AQE
-      plans a join as broadcast or shuffle from runtime sizes, so the
-      number of query stages moves with the input and its layout (13 at
-      ``local[4]``, 15–16 at ``local[8]``).
+      the pairs (1) and the write's AQE query stages, among them the
+      representatives' join of the cluster table to the sketch. An upper
+      bound: AQE plans a join as broadcast or shuffle from runtime sizes,
+      so the number of query stages moves with the input and its layout
+      (14 at ``local[4]``, 15–16 at ``local[8]``).
     - s9 (≤ 5): the write, whose AQE query stages include the exchanges of
       the lazy s3 and s4 stages fused into it; an upper bound for the same
       reason (5 at ``local[4]``, 3 at ``local[8]``).
@@ -265,6 +268,7 @@ def single_file_cold(spark, tmp_path_factory):
                         udf_rows.append(int(v.get()) if v.isDefined() else None)
     s0 = store.read("s0_ingest")
     return {
+        "s0_files": len(_data_files(store.path("s0_ingest"))),
         "non_blank_rows": s0.filter(F.col("text").rlike(r"\S")).count(),
         "udf_rows": udf_rows,
         "s0_parts": s0.rdd.getNumPartitions(),
@@ -284,12 +288,14 @@ def test_s5_computes_sketch_once(single_file_cold):
 
 
 def test_checkpoint_reads_are_core_wide(spark, single_file_cold):
-    """A one-file input gives one-file s0 and s5 snapshots; the store reads
-    every snapshot back at core width, so the stages fused into a scan of
-    it run on every core, and s5, written from the wide s0 read, is written
-    as that many files."""
+    """Every stage input is core-wide: the caller's one-file input reaches
+    s0 spread over the cores, so s0's extraction runs in that many tasks
+    and is written as that many files; the store reads every snapshot back
+    at core width, so the stages fused into a scan of it run on every
+    core, and s5 is written as that many files."""
     run = single_file_cold
     n = spark.sparkContext.defaultParallelism
+    assert run["s0_files"] == n
     assert run["s0_parts"] == n
     assert run["s5_parts"] == n
     assert run["s5_files"] == n

@@ -103,6 +103,22 @@ def test_minhash_sketch_has_one_arrow_eval(spark):
     assert [k for k, _ in got] == [4, 5, 6, 7, 8, 9, 10]
 
 
+def test_near_dup_write_plan_scans_its_input_once(spark, pages, tmp_path):
+    # s5's sketch carries warc_ts, so the representatives are elected from
+    # the cluster table and the sketch; only the one left join reads s0. A
+    # representatives branch over the input table would scan s0 again
+    from exome_qc_library_spark.operators.dedup import flag_near_duplicates
+    from exome_qc_library_spark.plans.quality_pipeline import quality_stages
+    from exome_qc_library_spark.sources.checkpoint import CheckpointStore
+
+    store = CheckpointStore(spark, str(tmp_path))
+    s0 = quality_stages()[0]
+    store.write(s0.fn(pages), s0.name)
+    out = flag_near_duplicates(store.read(s0.name))
+    assert _plan(out).count("FileScan parquet") == 1
+    assert out.filter(F.col("dup_cluster_id").isNotNull()).count() > 0  # pairs were found
+
+
 def test_exact_dedup_pipeline_form_is_aggregate_not_window(spark):
     # the PIPELINE exact-dedup (sha2 groupBy min-struct) — scale shape
     from exome_qc_library_spark.operators.dedup import flag_exact_duplicates
@@ -238,6 +254,13 @@ def test_media_dims_registry_legs(spark, sf):
         # one documents scan against the broadcast in-memory bands table;
         # one exchange for the per-band count
         ("interval_join", 1, 1, 1),
+        # the sketch is a local checkpoint, so no parquet scan; one
+        # exchange for the bucket groupBy and one for the pairs' dedup; the
+        # pairs and one signature side are broadcast
+        ("minhash_pairs", 0, 2, 2),
+        # a self-join of the shingle table on the source block: one side
+        # is broadcast, and nothing shuffles
+        ("jaccard_pairs", 2, 0, 1),
     ],
 )
 def test_line_and_gram_registry_plan_legs(spark, sf, name, scans, exchanges, broadcasts):

@@ -211,7 +211,7 @@ OPTION_REASONS = (
 # OPTION_REASONS; a scale-path seam names the test that lowers it as
 # ``tests/<file>.py::<test>``, and an interface entry names its ALLOWLIST def.
 OPTION_ALLOWLIST = {
-    "minhash_candidate_pairs(max_bucket)": "scale-path seam: the per-bucket cap only "
+    "sketch_pairs(max_bucket)": "scale-path seam: the per-bucket cap only "
     "a degenerate bucket of 200+ docs crosses; "
     "tests/test_dedup.py::test_minhash_degenerate_bucket_capped lowers it to 5",
     "connected_components_df(max_iter)": "scale-path seam: the round bound only a "
